@@ -8,10 +8,7 @@ import graft.operators.Extraction
   * faithful N-core-node emulation).
   * args: cores rawPath warmupPath samples [mode] [numPartitions]
   * modes: full (default) = scan→exchange→sort→FSM→noop;
-  *        shuffle = scan→exchange→sort→count (no FSM);
-  *        scan = scan→count;
-  *        fsm = scan→FSM without exchange (wrong conv boundaries — perf
-  *              shape probe only, never correctness)
+  *        bucketed = exchange-free extraction over a bucketed table
   * Prints: BENCHONE <samples-csv> */
 object BenchOne {
   def main(args: Array[String]): Unit = {
@@ -41,27 +38,13 @@ object BenchOne {
         Extraction.extract(spark.read.parquet(path).as[graft.core.Turn],
           Extraction.Config(numPartitions = parts))
           .write.format("noop").mode("overwrite").save()
-      case "shuffle" =>
-        spark.read.parquet(path)
-          .select("conv_id", "turn_idx", "text")
-          .repartition(parts, org.apache.spark.sql.functions.col("conv_id"))
-          .sortWithinPartitions("conv_id", "turn_idx")
-          .write.format("noop").mode("overwrite").save()
-      case "scan" =>
-        spark.read.parquet(path).select("conv_id", "turn_idx", "text")
-          .write.format("noop").mode("overwrite").save()
-      case "fsm" =>
-        spark.read.parquet(path)
-          .select("conv_id", "turn_idx", "text").as[graft.core.TurnSlim]
-          .mapPartitions(Extraction.parsePartitionForProfiling _)
-          .write.format("noop").mode("overwrite").save()
       case "bucketed" =>
         Extraction.extractBucketed(spark, ensureBucketed(path),
           Extraction.Config(numPartitions = parts))
           .write.format("noop").mode("overwrite").save()
       case other =>
         throw new IllegalArgumentException(
-          s"unknown mode '$other' — valid modes: full|shuffle|scan|fsm|bucketed")
+          s"unknown mode '$other' — valid modes: full|bucketed")
     }
     /* Bucketed-plane table for `path`: reuses already-bucketed files across
      * JVMs via external-table DDL (the in-memory catalog forgets tables at
@@ -91,31 +74,6 @@ object BenchOne {
       }
       tbl
     }
-    // Optional stage-level diagnostics (BENCHONE_STAGES=1): per-stage wall,
-    // task-time spread, and wave tail — identifies the non-scaling stage.
-    if (sys.env.get("BENCHONE_STAGES").contains("1"))
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        private val t0 = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-        private val durs = new java.util.concurrent.ConcurrentHashMap[Int, java.util.concurrent.ConcurrentLinkedQueue[Long]]()
-        override def onStageSubmitted(e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit = {
-          t0.put(e.stageInfo.stageId, System.nanoTime())
-          durs.put(e.stageInfo.stageId, new java.util.concurrent.ConcurrentLinkedQueue[Long]())
-        }
-        override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val q = durs.get(e.stageId); if (q != null) q.add(e.taskInfo.duration)
-        }
-        override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val id = e.stageInfo.stageId
-          val wall = (System.nanoTime() - t0.getOrDefault(id, System.nanoTime())) / 1e9
-          import scala.jdk.CollectionConverters._
-          val ds = durs.getOrDefault(id, new java.util.concurrent.ConcurrentLinkedQueue[Long]()).asScala.toSeq.sorted
-          val (n, sum) = (ds.size, ds.sum / 1e3)
-          val med = if (n > 0) ds(n / 2) / 1e3 else 0.0
-          val mx = if (n > 0) ds.last / 1e3 else 0.0
-          System.err.println(f"BENCHSTAGE id=$id name=${e.stageInfo.name.takeWhile(_ != ' ')} " +
-            f"tasks=$n wall=$wall%.2f taskSum=$sum%.2f taskMed=$med%.3f taskMax=$mx%.3f")
-        }
-      })
     jobOn(warmupPath)
     // bucketize the measured table OUTSIDE the timed loop (one-time build)
     if (mode == "bucketed") ensureBucketed(rawPath)

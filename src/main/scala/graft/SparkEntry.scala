@@ -33,9 +33,8 @@ object SparkEntry {
     * first (spark.sql.execution.sortBeforeRepartition, default on), and
     * every declared query's output is key-deterministic regardless of
     * partitioning (stable tiebreaks / exact aggregates — the r1-r5 oracle
-    * design rule). Kill switch: SPARK_GRAFT_SPREAD=off. */
+    * design rule). */
   private def spread(s: SparkSession, df: DataFrame, path: String): DataFrame = {
-    if (sys.env.get("SPARK_GRAFT_SPREAD").contains("off")) return df
     val n = s.sparkContext.defaultParallelism
     if (n <= 1) return df
     val bytes = try {
@@ -365,10 +364,7 @@ object SparkEntry {
     // SQL embeds the fixture path, so the input must not vary with sf)
     "q_fsm_records" -> ((s, d) => {
       import s.implicits._
-      val turns = s.read.parquet(fixtureFsmParquet(s, "fsmrec60",
-          FixtureGen.Profile(numConvs = 60, monsterEvery = 23,
-            monsterTurns = 300, invalidEvery = 17)))
-        .as[graft.core.Turn]
+      val turns = s.read.parquet(fsmRec60(s)).as[graft.core.Turn]
       Extraction.records(Extraction.extractSkewAware(turns,
         Extraction.Config(numPartitions = 16, monsterThreshold = 200))).toDF
     }),
@@ -379,10 +375,7 @@ object SparkEntry {
     // is output-invisible at the driver gate, not just in a unit test
     "q_fsm_capped_route" -> ((s, d) => {
       import s.implicits._
-      val turns = s.read.parquet(fixtureFsmParquet(s, "fsmrec60",
-          FixtureGen.Profile(numConvs = 60, monsterEvery = 23,
-            monsterTurns = 300, invalidEvery = 17)))
-        .as[graft.core.Turn]
+      val turns = s.read.parquet(fsmRec60(s)).as[graft.core.Turn]
       Extraction.records(Extraction.extractSkewAware(turns,
         Extraction.Config(numPartitions = 16, monsterThreshold = 1,
           maxMonsters = 2))).toDF
@@ -394,20 +387,13 @@ object SparkEntry {
     // q_fsm_records (content-identical input, plan-different execution).
     "q_fsm_bucketed" -> ((s, d) => {
       import s.implicits._
-      val fix = fixtureFsmParquet(s, "fsmrec60",
-        FixtureGen.Profile(numConvs = 60, monsterEvery = 23,
-          monsterTurns = 300, invalidEvery = 17))
       // once per JVM like every other constant fixture: an unconditional
       // writeBucketed would pay the full DROP+sort+write per invocation
       // (inflating the query's bench time) and its DROP TABLE could yank
       // the table from under a concurrent Verify thread's read
-      SparkEntry.synchronized {
-        if (!fixtureWritten.contains("bucketed:fsmrec60")) {
-          val turns = s.read.parquet(fix).as[graft.core.Turn]
-          Extraction.writeBucketed(turns, "graft_q_fsm_bucketed",
-            s"$FixtureDir/fsmrec60_bucketed", buckets = 8)
-          fixtureWritten += "bucketed:fsmrec60"
-        }
+      materialize("fsmrec60_bucketed") { path =>
+        Extraction.writeBucketed(s.read.parquet(fsmRec60(s)).as[graft.core.Turn],
+          "graft_q_fsm_bucketed", path, buckets = 8)
       }
       Extraction.records(Extraction.extractBucketed(s, "graft_q_fsm_bucketed",
         Extraction.Config())).toDF
@@ -417,10 +403,7 @@ object SparkEntry {
     // bridge from the transcript table to every document-level operator
     "q_conv_docs" -> ((s, d) => {
       import s.implicits._
-      val fix = fixtureFsmParquet(s, "fsmrec60",
-        FixtureGen.Profile(numConvs = 60, monsterEvery = 23,
-          monsterTurns = 300, invalidEvery = 17))
-      Extraction.conversationDocs(s.read.parquet(fix).as[graft.core.Turn])
+      Extraction.conversationDocs(s.read.parquet(fsmRec60(s)).as[graft.core.Turn])
     }),
 
     // loss-mask spans: per-turn [start,end) offsets inside the
@@ -428,20 +411,13 @@ object SparkEntry {
     // cumulative-sum window on the stable (conv_id, turn_idx) order
     "q_loss_mask" -> ((s, d) => {
       import s.implicits._
-      val fix = fixtureFsmParquet(s, "fsmrec60",
-        FixtureGen.Profile(numConvs = 60, monsterEvery = 23,
-          monsterTurns = 300, invalidEvery = 17))
-      Extraction.lossMaskSpans(s.read.parquet(fix).as[graft.core.Turn])
+      Extraction.lossMaskSpans(s.read.parquet(fsmRec60(s)).as[graft.core.Turn])
     }),
 
     // SFT pair construction: (last-K-turn context, assistant response) —
     // bounded window frame, one shuffle, O(K) state per row
-    "q_sft_pairs" -> ((s, d) => {
-      val fix = fixtureFsmParquet(s, "fsmrec60",
-        FixtureGen.Profile(numConvs = 60, monsterEvery = 23,
-          monsterTurns = 300, invalidEvery = 17))
-      TrainingData.sftPairs(s.read.parquet(fix), contextTurns = 4)
-    }),
+    "q_sft_pairs" -> ((s, d) =>
+      TrainingData.sftPairs(s.read.parquet(fsmRec60(s)), contextTurns = 4)),
 
     // conversation-level near-dup: Jaccard over turn-hash sets, blocked on
     // a shared exact turn, df-capped stop-shingles, integer threshold
@@ -1019,21 +995,14 @@ object SparkEntry {
 
     // per-conversation tool-usage profile (role counts, distinct tools,
     // time span) — single partial-aggregatable hash-agg
-    "q_tool_stats" -> ((s, d) => {
-      val fix = fixtureFsmParquet(s, "fsmrec60",
-        FixtureGen.Profile(numConvs = 60, monsterEvery = 23,
-          monsterTurns = 300, invalidEvery = 17))
-      TrainingData.toolStats(s.read.parquet(fix))
-    }),
+    "q_tool_stats" -> ((s, d) =>
+      TrainingData.toolStats(s.read.parquet(fsmRec60(s)))),
 
     // salted equi-join on the skewed conv_id key (the remedy q_skew_profile
     // decides on): right side replicated saltFactor×, hot keys split across
     // tasks; output row-identical to the plain join, which IS the oracle
     "q_salted_join" -> ((s, d) => {
-      val fix = fixtureFsmParquet(s, "fsmrec60",
-        FixtureGen.Profile(numConvs = 60, monsterEvery = 23,
-          monsterTurns = 300, invalidEvery = 17))
-      val turns = s.read.parquet(fix)
+      val turns = s.read.parquet(fsmRec60(s))
       val dim = turns.groupBy("conv_id").agg(count(lit(1)).as("conv_turns"))
       Matching.saltedJoin(turns.select("conv_id", "turn_idx", "role"), dim,
         "conv_id", saltFactor = 8,
@@ -1043,12 +1012,8 @@ object SparkEntry {
     // key-skew profile of the heavy-tailed transcript fixture on conv_id —
     // the salt-factor decision input; count-of-counts histogram, no global
     // key sort anywhere
-    "q_skew_profile" -> ((s, d) => {
-      val fix = fixtureFsmParquet(s, "fsmrec60",
-        FixtureGen.Profile(numConvs = 60, monsterEvery = 23,
-          monsterTurns = 300, invalidEvery = 17))
-      graft.operators.Diagnostics.keySkewProfile(s.read.parquet(fix), "conv_id")
-    }),
+    "q_skew_profile" -> ((s, d) =>
+      graft.operators.Diagnostics.keySkewProfile(s.read.parquet(fsmRec60(s)), "conv_id")),
 
     // per-conversation well-formedness profile over a fixture with PLANTED
     // violations (dup turn_idx, index gaps, blank turns, role repeats,
@@ -1617,114 +1582,105 @@ object SparkEntry {
     })
   }
   private val fixtureWritten = scala.collection.mutable.Set[String]()
-  private def fixtureParquet(s: SparkSession, convs: Int): String = synchronized {
-    val path = s"$FixtureDir/slim$convs"
+  /** Writes fixture `name` under [[FixtureDir]] once per JVM and returns its
+    * path. The path is built on every call, never cached, so a caller that
+    * points FixtureDir elsewhere gets fresh fixtures there. The lock is held
+    * across the write (concurrent Verify threads must not read a half-written
+    * fixture), and a fixture counts as written only once `write` returns. */
+  private def materialize(name: String)(write: String => Unit): String = synchronized {
+    val path = s"$FixtureDir/$name"
     if (!fixtureWritten.contains(path)) {
-      fixtureSlim(s, convs).toDF.write.mode("overwrite").parquet(path)
+      write(path)
       fixtureWritten += path
     }
     path
+  }
+  private def fixtureParquet(s: SparkSession, convs: Int): String = materialize(s"slim$convs") { path =>
+    fixtureSlim(s, convs).toDF.write.mode("overwrite").parquet(path)
   }
   private def fixtureTable(s: SparkSession, convs: Int): DataFrame = {
     val path = fixtureParquet(s, convs)
     spread(s, s.read.parquet(path), path)
   }
 
-  /** Transcript fixture for the FSM queries, materialized once per profile. */
+  /** Transcript fixture for the FSM queries, materialized once per name. */
   private def fixtureFsmParquet(s: SparkSession, name: String,
-                                profile: FixtureGen.Profile): String = synchronized {
-    val path = s"$FixtureDir/$name"
-    if (!fixtureWritten.contains(path)) {
-      // session-width generation parallelism (was 8) — same set-identical
-      // contract as fixtureSlim above
-      graft.sources.TranscriptGen.generate(s, profile,
-          math.max(8, s.sparkContext.defaultParallelism))
-        .toDF.write.mode("overwrite").parquet(path)
-      fixtureWritten += path
-    }
-    path
+                                profile: FixtureGen.Profile): String = materialize(name) { path =>
+    // session-width generation parallelism (was 8) — same set-identical
+    // contract as fixtureSlim above
+    graft.sources.TranscriptGen.generate(s, profile,
+        math.max(8, s.sparkContext.defaultParallelism))
+      .toDF.write.mode("overwrite").parquet(path)
   }
+
+  /** The 60-conversation FSM transcript fixture (every 23rd conversation a
+    * 300-turn monster, every 17th invalid) that most transcript queries read. */
+  private def fsmRec60(s: SparkSession): String = fixtureFsmParquet(s, "fsmrec60",
+    FixtureGen.Profile(numConvs = 60, monsterEvery = 23, monsterTurns = 300, invalidEvery = 17))
 
   /** Deterministic web-corpus URL fixture: 200 docs whose text embeds 0–4
     * absolute URLs (mixed-case hosts, `www.` variants, ports, fragments)
     * inside word soup — exercises every canonicalization branch of
     * `TrainingData.urlHostStats`. */
-  private def fixtureUrlsParquet(s: SparkSession): String = synchronized {
-    val path = s"$FixtureDir/urls200"
-    if (!fixtureWritten.contains(path)) {
-      val r = new java.util.Random(20260817L)
-      val hosts = Array("example.com", "Example.COM", "www.example.com",
-        "docs.foo.org", "foo.org", "WWW.Foo.org", "cdn.bar.net", "bar.net:8080",
-        "a.b.example.com")
-      val paths = Array("", "/", "/a/b", "/a/b#frag", "/index.html",
-        "/x/y/z#top", "/q", "/a/b/")
-      val words = Array("lorem", "ipsum", "dolor", "sit", "amet", "crawl",
-        "corpus", "robots", "sitemap", "anchor")
-      val rows = (0 until 200).map { i =>
-        val sb = new StringBuilder
-        val nUrls = r.nextInt(5)
-        val nWords = 3 + r.nextInt(8)
-        for (_ <- 0 until nWords) sb.append(words(r.nextInt(words.length))).append(' ')
-        for (_ <- 0 until nUrls) {
-          sb.append("http").append(if (r.nextBoolean()) "s" else "")
-            .append("://").append(hosts(r.nextInt(hosts.length)))
-            .append(paths(r.nextInt(paths.length))).append(' ')
-          for (_ <- 0 until 1 + r.nextInt(4))
-            sb.append(words(r.nextInt(words.length))).append(' ')
-        }
-        (i.toLong, sb.toString.trim)
+  private def fixtureUrlsParquet(s: SparkSession): String = materialize("urls200") { path =>
+    val r = new java.util.Random(20260817L)
+    val hosts = Array("example.com", "Example.COM", "www.example.com",
+      "docs.foo.org", "foo.org", "WWW.Foo.org", "cdn.bar.net", "bar.net:8080",
+      "a.b.example.com")
+    val paths = Array("", "/", "/a/b", "/a/b#frag", "/index.html",
+      "/x/y/z#top", "/q", "/a/b/")
+    val words = Array("lorem", "ipsum", "dolor", "sit", "amet", "crawl",
+      "corpus", "robots", "sitemap", "anchor")
+    val rows = (0 until 200).map { i =>
+      val sb = new StringBuilder
+      val nUrls = r.nextInt(5)
+      val nWords = 3 + r.nextInt(8)
+      for (_ <- 0 until nWords) sb.append(words(r.nextInt(words.length))).append(' ')
+      for (_ <- 0 until nUrls) {
+        sb.append("http").append(if (r.nextBoolean()) "s" else "")
+          .append("://").append(hosts(r.nextInt(hosts.length)))
+          .append(paths(r.nextInt(paths.length))).append(' ')
+        for (_ <- 0 until 1 + r.nextInt(4))
+          sb.append(words(r.nextInt(words.length))).append(' ')
       }
-      import s.implicits._
-      rows.toDF("doc_id", "text").repartition(4).write.mode("overwrite").parquet(path)
-      fixtureWritten += path
+      (i.toLong, sb.toString.trim)
     }
-    path
+    import s.implicits._
+    rows.toDF("doc_id", "text").repartition(4).write.mode("overwrite").parquet(path)
   }
 
   /** Deterministic preference-candidate fixture: 70 prompts × 1–5 scored
     * candidate responses (ties included), for `TrainingData.preferencePairs`. */
-  private def fixturePrefsParquet(s: SparkSession): String = synchronized {
-    val path = s"$FixtureDir/pref300"
-    if (!fixtureWritten.contains(path)) {
-      val r = new java.util.Random(99173L)
-      val verbs = Array("explain", "summarize", "harden", "audit", "configure")
-      val nouns = Array("sshd", "kernel", "firewall", "logging", "accounts",
-        "sudoers", "umask")
-      val rows = (0 until 70).flatMap { p =>
-        val prompt = s"${verbs(r.nextInt(verbs.length))} the ${nouns(r.nextInt(nouns.length))} policy #$p"
-        val n = 1 + r.nextInt(5)
-        (0 until n).map { c =>
-          val score = 10L + r.nextInt(8) // narrow range → frequent ties
-          (prompt, f"cand$p%03d_$c", s"response $c to prompt $p: ${nouns(r.nextInt(nouns.length))}", score)
-        }
+  private def fixturePrefsParquet(s: SparkSession): String = materialize("pref300") { path =>
+    val r = new java.util.Random(99173L)
+    val verbs = Array("explain", "summarize", "harden", "audit", "configure")
+    val nouns = Array("sshd", "kernel", "firewall", "logging", "accounts",
+      "sudoers", "umask")
+    val rows = (0 until 70).flatMap { p =>
+      val prompt = s"${verbs(r.nextInt(verbs.length))} the ${nouns(r.nextInt(nouns.length))} policy #$p"
+      val n = 1 + r.nextInt(5)
+      (0 until n).map { c =>
+        val score = 10L + r.nextInt(8) // narrow range → frequent ties
+        (prompt, f"cand$p%03d_$c", s"response $c to prompt $p: ${nouns(r.nextInt(nouns.length))}", score)
       }
-      import s.implicits._
-      rows.toDF("prompt", "cand_id", "response", "score")
-        .repartition(4).write.mode("overwrite").parquet(path)
-      fixtureWritten += path
     }
-    path
+    import s.implicits._
+    rows.toDF("prompt", "cand_id", "response", "score")
+      .repartition(4).write.mode("overwrite").parquet(path)
   }
 
   /** Conversation near-dup fixture: the fsmrec60 transcripts plus a mutated
     * clone (suffix `_b`, one turn in seven dropped) of every third
     * conversation — deterministic re-rolled-conversation pairs at Jaccard
     * ≈ 6/7 over turn-hash sets. */
-  private def fixtureConvDupParquet(s: SparkSession): String = synchronized {
-    val path = s"$FixtureDir/convdup"
-    if (!fixtureWritten.contains(path)) {
-      val base = s.read.parquet(fixtureFsmParquet(s, "fsmrec60",
-        FixtureGen.Profile(numConvs = 60, monsterEvery = 23,
-          monsterTurns = 300, invalidEvery = 17)))
-      val clones = base
-        .filter(substring(col("conv_id"), -2, 2).cast("int") % 3 === 0)
-        .filter(col("turn_idx") % 7 =!= 3)
-        .withColumn("conv_id", concat(col("conv_id"), lit("_b")))
-      base.unionByName(clones).repartition(8)
-        .write.mode("overwrite").parquet(path)
-      fixtureWritten += path
-    }
-    path
+  private def fixtureConvDupParquet(s: SparkSession): String = materialize("convdup") { path =>
+    val base = s.read.parquet(fsmRec60(s))
+    val clones = base
+      .filter(substring(col("conv_id"), -2, 2).cast("int") % 3 === 0)
+      .filter(col("turn_idx") % 7 =!= 3)
+      .withColumn("conv_id", concat(col("conv_id"), lit("_b")))
+    base.unionByName(clones).repartition(8)
+      .write.mode("overwrite").parquet(path)
   }
 
   /** Transcript fixture with PLANTED well-formedness violations, keyed off
@@ -1736,32 +1692,25 @@ object SparkEntry {
     * u/a/t role cycle also means every 'tool' turn is an orphan (previous
     * turn carries no tool call) — deliberate: the oracle must agree on the
     * natural violations too, not just the planted ones. */
-  private def fixtureMessyParquet(s: SparkSession): String = synchronized {
-    val path = s"$FixtureDir/messy60"
-    if (!fixtureWritten.contains(path)) {
-      val base = s.read.parquet(fixtureFsmParquet(s, "fsmrec60",
-        FixtureGen.Profile(numConvs = 60, monsterEvery = 23,
-          monsterTurns = 300, invalidEvery = 17)))
-      val idn = substring(col("conv_id"), -2, 2).cast("int")
-      val mutated = base
-        .filter(!(idn % 7 === 0 && col("turn_idx") === 2))
-        .withColumn("text",
-          when(idn % 11 === 0 && col("turn_idx") === 1, lit("  "))
-            .otherwise(col("text")))
-        .withColumn("ts",
-          when(idn % 13 === 0 && col("turn_idx") === 3,
-            col("ts") - expr("INTERVAL 1000000 SECONDS"))
-            .otherwise(col("ts")))
-        .withColumn("role",
-          when(idn % 3 === 0 && col("turn_idx").isin(1, 2), lit("assistant"))
-            .otherwise(col("role")))
-      val dups = base.filter(idn % 5 === 0 && col("turn_idx") === 6)
-        .withColumn("text", concat(col("text"), lit(" [dup-idx clone]")))
-      mutated.unionByName(dups).repartition(8)
-        .write.mode("overwrite").parquet(path)
-      fixtureWritten += path
-    }
-    path
+  private def fixtureMessyParquet(s: SparkSession): String = materialize("messy60") { path =>
+    val base = s.read.parquet(fsmRec60(s))
+    val idn = substring(col("conv_id"), -2, 2).cast("int")
+    val mutated = base
+      .filter(!(idn % 7 === 0 && col("turn_idx") === 2))
+      .withColumn("text",
+        when(idn % 11 === 0 && col("turn_idx") === 1, lit("  "))
+          .otherwise(col("text")))
+      .withColumn("ts",
+        when(idn % 13 === 0 && col("turn_idx") === 3,
+          col("ts") - expr("INTERVAL 1000000 SECONDS"))
+          .otherwise(col("ts")))
+      .withColumn("role",
+        when(idn % 3 === 0 && col("turn_idx").isin(1, 2), lit("assistant"))
+          .otherwise(col("role")))
+    val dups = base.filter(idn % 5 === 0 && col("turn_idx") === 6)
+      .withColumn("text", concat(col("text"), lit(" [dup-idx clone]")))
+    mutated.unionByName(dups).repartition(8)
+      .write.mode("overwrite").parquet(path)
   }
 
   /** Transcript fixture with re-rolled conversations for branch detection:
@@ -1769,31 +1718,22 @@ object SparkEntry {
     * regenerated), every 6th an additional clone diverging after turn 2,
     * every 10th an exact full duplicate — known prefix families of size
     * 2-4 at known depths, plus untouched singleton conversations. */
-  private def fixtureBranchParquet(s: SparkSession): String = synchronized {
-    val path = s"$FixtureDir/branch60"
-    if (!fixtureWritten.contains(path)) {
-      val base = s.read.parquet(fixtureFsmParquet(s, "fsmrec60",
-        FixtureGen.Profile(numConvs = 60, monsterEvery = 23,
-          monsterTurns = 300, invalidEvery = 17)))
-      val idn = substring(col("conv_id"), -2, 2).cast("int")
-      def reroll(mod: Int, fromTurn: Int, tag: String) = base
-        .filter(idn % mod === 0)
-        .withColumn("text",
-          when(col("turn_idx") >= fromTurn,
-            concat(col("text"), lit(s" [$tag]"))).otherwise(col("text")))
-        .withColumn("conv_id", concat(col("conv_id"), lit(s"_$tag")))
-      val dup = base.filter(idn % 10 === 0)
-        .withColumn("conv_id", concat(col("conv_id"), lit("_dup")))
-      base.unionByName(reroll(3, 4, "r1")).unionByName(reroll(6, 2, "r2"))
-        .unionByName(dup).repartition(8)
-        .write.mode("overwrite").parquet(path)
-      fixtureWritten += path
-    }
-    path
+  private def fixtureBranchParquet(s: SparkSession): String = materialize("branch60") { path =>
+    val base = s.read.parquet(fsmRec60(s))
+    val idn = substring(col("conv_id"), -2, 2).cast("int")
+    def reroll(mod: Int, fromTurn: Int, tag: String) = base
+      .filter(idn % mod === 0)
+      .withColumn("text",
+        when(col("turn_idx") >= fromTurn,
+          concat(col("text"), lit(s" [$tag]"))).otherwise(col("text")))
+      .withColumn("conv_id", concat(col("conv_id"), lit(s"_$tag")))
+    val dup = base.filter(idn % 10 === 0)
+      .withColumn("conv_id", concat(col("conv_id"), lit("_dup")))
+    base.unionByName(reroll(3, 4, "r1")).unionByName(reroll(6, 2, "r2"))
+      .unionByName(dup).repartition(8)
+      .write.mode("overwrite").parquet(path)
   }
 
-  /** Synthetic media fixture (fake-header payloads) materialized once, so
-    * the stub-decode oracle can re-parse the same blobs. */
   /** Adversarial MARKER-SOUP fixture for the variant sectionizers (X4/X5
     * fuzz, round-3 verdict #8): seeded compositions of header-soup lines —
     * canonical and mangled section names, multi-keyword lines, colon soup,
@@ -1806,192 +1746,144 @@ object SparkEntry {
     * loop emits, and the oracle's '\n+$' strip covers trailing runs. ASCII
     * only; whitespace limited to space/tab/newline (PyStr.strip strips
     * unicode whitespace the SQL trim set does not). */
-  private def fixtureMarkerSoupParquet(s: SparkSession): String = synchronized {
-    val path = s"$FixtureDir/soup160"
-    if (!fixtureWritten.contains(path)) {
-      import s.implicits._
-      val rnd = new java.util.Random(0x50DA5071L)
-      val names = Seq("Description", "Rationale", "Impact", "Audit",
-        "Remediation", "CIS Controls", "Impact Audit", "Pre Description",
-        "description", "AUDIT", "Audit Remediation", "CIS Controls Impact")
-      val tails = Seq("", ":", ": tail", ": a:b:c", " no colon here",
-        "::::", ":\t tabbed ", " rationale impact", " (v8)")
-      val fillers = Seq("ensure the daemon is masked", "see above",
-        "a:b:c", "x | y | z", "", "  indented tail  ",
-        "cis control (1.2) and more", "CIS  Control ( 3 )",
-        "remediation steps: do: twice", "impact:none", "::",
-        "description audit remediation", "tail without colon",
-        "audit impact audit", "cis control (unclosed", ")stray paren(",
-        "\tdescription rationale impact audit remediation cis control (x)")
-      val rows = (0 until 160).flatMap { c =>
-        val turns = 1 + rnd.nextInt(6)
-        (0 until turns).map { t =>
-          val nLines = 1 + rnd.nextInt(11)
-          val body = (0 until nLines).map { _ =>
-            rnd.nextInt(3) match {
-              case 0 => names(rnd.nextInt(names.size)) + tails(rnd.nextInt(tails.size))
-              case 1 => fillers(rnd.nextInt(fillers.size))
-              case _ => (if (rnd.nextBoolean()) "  " else "") +
-                names(rnd.nextInt(names.size)) + " " +
-                fillers(rnd.nextInt(fillers.size)) + tails(rnd.nextInt(tails.size))
-            }
+  private def fixtureMarkerSoupParquet(s: SparkSession): String = materialize("soup160") { path =>
+    import s.implicits._
+    val rnd = new java.util.Random(0x50DA5071L)
+    val names = Seq("Description", "Rationale", "Impact", "Audit",
+      "Remediation", "CIS Controls", "Impact Audit", "Pre Description",
+      "description", "AUDIT", "Audit Remediation", "CIS Controls Impact")
+    val tails = Seq("", ":", ": tail", ": a:b:c", " no colon here",
+      "::::", ":\t tabbed ", " rationale impact", " (v8)")
+    val fillers = Seq("ensure the daemon is masked", "see above",
+      "a:b:c", "x | y | z", "", "  indented tail  ",
+      "cis control (1.2) and more", "CIS  Control ( 3 )",
+      "remediation steps: do: twice", "impact:none", "::",
+      "description audit remediation", "tail without colon",
+      "audit impact audit", "cis control (unclosed", ")stray paren(",
+      "\tdescription rationale impact audit remediation cis control (x)")
+    val rows = (0 until 160).flatMap { c =>
+      val turns = 1 + rnd.nextInt(6)
+      (0 until turns).map { t =>
+        val nLines = 1 + rnd.nextInt(11)
+        val body = (0 until nLines).map { _ =>
+          rnd.nextInt(3) match {
+            case 0 => names(rnd.nextInt(names.size)) + tails(rnd.nextInt(tails.size))
+            case 1 => fillers(rnd.nextInt(fillers.size))
+            case _ => (if (rnd.nextBoolean()) "  " else "") +
+              names(rnd.nextInt(names.size)) + " " +
+              fillers(rnd.nextInt(fillers.size)) + tails(rnd.nextInt(tails.size))
           }
-          val text = (s"soup page $c.$t" +: body).mkString("\n") +
-            (if (rnd.nextInt(4) == 0) "\n\n" else "")
-          (s"soup-$c", t, text)
         }
+        val text = (s"soup page $c.$t" +: body).mkString("\n") +
+          (if (rnd.nextInt(4) == 0) "\n\n" else "")
+        (s"soup-$c", t, text)
       }
-      rows.toDF("conv_id", "turn_idx", "text")
-        .repartition(8).write.mode("overwrite").parquet(path)
-      fixtureWritten += path
     }
-    path
+    rows.toDF("conv_id", "turn_idx", "text")
+      .repartition(8).write.mode("overwrite").parquet(path)
   }
 
   /** Stored-deflate PNG fixture (media_id, payload) materialized once, so
     * the image oracles read the same blobs the Spark queries decode. */
-  private def fixtureImages(s: SparkSession): org.apache.spark.sql.Dataset[graft.operators.Multimodal.ImageRow] = {
+  private def fixtureImages(s: SparkSession): org.apache.spark.sql.Dataset[Multimodal.ImageRow] = {
     import s.implicits._
-    val path = s"$FixtureDir/img300"
-    synchronized {
-      if (!fixtureWritten.contains(path)) {
-        Multimodal.synthImages(s, 300).toDF.write.mode("overwrite").parquet(path)
-        fixtureWritten += path
-      }
-    }
-    s.read.parquet(path).as[graft.operators.Multimodal.ImageRow]
+    val path = materialize("img300")(Multimodal.synthImages(s, 300).toDF.write.mode("overwrite").parquet(_))
+    s.read.parquet(path).as[Multimodal.ImageRow]
   }
 
   /** WAV fixture (media_id, payload): real RIFF/PCM16 blobs, so the audio
     * oracle re-decodes the exact bytes with LE byte arithmetic. */
-  private def fixtureAudio(s: SparkSession): org.apache.spark.sql.Dataset[graft.operators.Multimodal.AudioRow] = {
+  private def fixtureAudio(s: SparkSession): org.apache.spark.sql.Dataset[Multimodal.AudioRow] = {
     import s.implicits._
-    val path = s"$FixtureDir/wav200"
-    synchronized {
-      if (!fixtureWritten.contains(path)) {
-        Multimodal.synthAudio(s, 200).toDF.write.mode("overwrite").parquet(path)
-        fixtureWritten += path
-      }
-    }
-    s.read.parquet(path).as[graft.operators.Multimodal.AudioRow]
+    val path = materialize("wav200")(Multimodal.synthAudio(s, 200).toDF.write.mode("overwrite").parquet(_))
+    s.read.parquet(path).as[Multimodal.AudioRow]
   }
 
   /** Y4M fixture (media_id, payload): real YUV4MPEG2 C444 blobs — ASCII
     * header + raw planes, re-decodable by the oracle with byte math. */
-  private def fixtureVideos(s: SparkSession): org.apache.spark.sql.Dataset[graft.operators.Multimodal.VideoRow] = {
+  private def fixtureVideos(s: SparkSession): org.apache.spark.sql.Dataset[Multimodal.VideoRow] = {
     import s.implicits._
-    val path = s"$FixtureDir/y4m60"
-    synchronized {
-      if (!fixtureWritten.contains(path)) {
-        Multimodal.synthVideos(s, 60).toDF.write.mode("overwrite").parquet(path)
-        fixtureWritten += path
-      }
-    }
-    s.read.parquet(path).as[graft.operators.Multimodal.VideoRow]
+    val path = materialize("y4m60")(Multimodal.synthVideos(s, 60).toDF.write.mode("overwrite").parquet(_))
+    s.read.parquet(path).as[Multimodal.VideoRow]
   }
 
   /** Mixed binary-payload fixture for container sniffing: the three real
     * media fixtures (id-offset so they never collide) plus crafted
     * PDF/HTML/plain-text blobs and a RIFF/AVI near-miss that must NOT sniff
     * as WAV. */
-  private def fixtureMimeParquet(s: SparkSession): String = synchronized {
-    val path = s"$FixtureDir/mime600"
-    if (!fixtureWritten.contains(path)) {
-      import s.implicits._
-      val img = fixtureImages(s).toDF.select(col("media_id"), col("payload"))
-      val wav = fixtureAudio(s).toDF
-        .select((col("media_id") + 10000).as("media_id"), col("payload"))
-      val y4m = fixtureVideos(s).toDF
-        .select((col("media_id") + 20000).as("media_id"), col("payload"))
-      val crafted = Seq(
-        (30000L, "%PDF-1.7\n%fixture".getBytes("UTF-8")),
-        (30001L, "<!DOCTYPE html><p>x</p>".getBytes("UTF-8")),
-        (30002L, "<html><body>y</body></html>".getBytes("UTF-8")),
-        (30003L, "plain text payload".getBytes("UTF-8")),
-        (30004L, Array[Byte](0x52, 0x49, 0x46, 0x46, 1, 2, 3, 4,
-          0x41, 0x56, 0x49, 0x20))
-      ).toDF("media_id", "payload")
-      img.unionByName(wav).unionByName(y4m).unionByName(crafted)
-        .repartition(4).write.mode("overwrite").parquet(path)
-      fixtureWritten += path
-    }
-    path
+  private def fixtureMimeParquet(s: SparkSession): String = materialize("mime600") { path =>
+    import s.implicits._
+    val img = fixtureImages(s).toDF.select(col("media_id"), col("payload"))
+    val wav = fixtureAudio(s).toDF
+      .select((col("media_id") + 10000).as("media_id"), col("payload"))
+    val y4m = fixtureVideos(s).toDF
+      .select((col("media_id") + 20000).as("media_id"), col("payload"))
+    val crafted = Seq(
+      (30000L, "%PDF-1.7\n%fixture".getBytes("UTF-8")),
+      (30001L, "<!DOCTYPE html><p>x</p>".getBytes("UTF-8")),
+      (30002L, "<html><body>y</body></html>".getBytes("UTF-8")),
+      (30003L, "plain text payload".getBytes("UTF-8")),
+      (30004L, Array[Byte](0x52, 0x49, 0x46, 0x46, 1, 2, 3, 4,
+        0x41, 0x56, 0x49, 0x20))
+    ).toDF("media_id", "payload")
+    img.unionByName(wav).unionByName(y4m).unionByName(crafted)
+      .repartition(4).write.mode("overwrite").parquet(path)
   }
 
   /** Gzip fixture: 300 deterministic ASCII texts wrapped as stored-deflate
     * gzip members (single final stored block, asserted by gzipStored), so
     * the DuckDB oracle re-extracts the bytes with fixed-offset arithmetic. */
-  private def fixtureGzipParquet(s: SparkSession): String = synchronized {
-    val path = s"$FixtureDir/gz300"
-    if (!fixtureWritten.contains(path)) {
-      val r = new java.util.Random(20260817L)
-      val words = Array("gzip", "stored", "deflate", "corpus", "shard",
-        "wet", "page", "crawl", "ingest", "byte")
-      val rows = (0 until 300).map { i =>
-        val n = 20 + r.nextInt(400)
-        val sb = new StringBuilder
-        for (_ <- 0 until n) sb.append(words(r.nextInt(words.length))).append(' ')
-        (i.toLong, graft.sources.BinaryPayloads.gzipStored(sb.toString.trim))
-      }
-      import s.implicits._
-      rows.toDF("doc_id", "payload").repartition(4)
-        .write.mode("overwrite").parquet(path)
-      fixtureWritten += path
+  private def fixtureGzipParquet(s: SparkSession): String = materialize("gz300") { path =>
+    val r = new java.util.Random(20260817L)
+    val words = Array("gzip", "stored", "deflate", "corpus", "shard",
+      "wet", "page", "crawl", "ingest", "byte")
+    val rows = (0 until 300).map { i =>
+      val n = 20 + r.nextInt(400)
+      val sb = new StringBuilder
+      for (_ <- 0 until n) sb.append(words(r.nextInt(words.length))).append(' ')
+      (i.toLong, graft.sources.BinaryPayloads.gzipStored(sb.toString.trim))
     }
-    path
+    import s.implicits._
+    rows.toDF("doc_id", "payload").repartition(4)
+      .write.mode("overwrite").parquet(path)
   }
 
   /** Hive-partitioned layout of the sf documents table (partition column =
     * lang), sf-keyed: the q_partition_pruned input demonstrating directory
     * pruning on the partition predicate. */
-  private def fixturePartitionedDocs(s: SparkSession, d: String): String = synchronized {
-    val path = s"$FixtureDir/docs_bylang_${java.lang.Integer.toHexString(d.hashCode)}"
-    if (!fixtureWritten.contains(path)) {
-      s.read.parquet(s"$d/documents.parquet")
-        .write.mode("overwrite").partitionBy("lang").parquet(path)
-      fixtureWritten += path
-    }
-    path
+  private def fixturePartitionedDocs(s: SparkSession, d: String): String = materialize(s"docs_bylang_${java.lang.Integer.toHexString(d.hashCode)}") { path =>
+    s.read.parquet(s"$d/documents.parquet")
+      .write.mode("overwrite").partitionBy("lang").parquet(path)
   }
 
   /** Multi-block gzip fixture: 240 deterministic texts sized 20–1500 chars,
     * wrapped via [[graft.sources.BinaryPayloads.gzipStoredBlocks]] with a
     * 97-byte block cap (deliberately unaligned, 1–16 stored blocks per
     * member) — the oracle walks the chain with a recursive CTE. */
-  private def fixtureGzipMultiParquet(s: SparkSession): String = synchronized {
-    val path = s"$FixtureDir/gzmulti240"
-    if (!fixtureWritten.contains(path)) {
-      val r = new java.util.Random(20260818L)
-      val words = Array("multi", "block", "stored", "deflate", "chain",
-        "walk", "recursive", "member", "shard", "byte")
-      val rows = (0 until 240).map { i =>
-        val n = 3 + r.nextInt(220)
-        val sb = new StringBuilder
-        for (_ <- 0 until n) sb.append(words(r.nextInt(words.length))).append(' ')
-        (i.toLong,
-          graft.sources.BinaryPayloads.gzipStoredBlocks(sb.toString.trim, 97))
-      }
-      import s.implicits._
-      rows.toDF("doc_id", "payload").repartition(4)
-        .write.mode("overwrite").parquet(path)
-      fixtureWritten += path
+  private def fixtureGzipMultiParquet(s: SparkSession): String = materialize("gzmulti240") { path =>
+    val r = new java.util.Random(20260818L)
+    val words = Array("multi", "block", "stored", "deflate", "chain",
+      "walk", "recursive", "member", "shard", "byte")
+    val rows = (0 until 240).map { i =>
+      val n = 3 + r.nextInt(220)
+      val sb = new StringBuilder
+      for (_ <- 0 until n) sb.append(words(r.nextInt(words.length))).append(' ')
+      (i.toLong,
+        graft.sources.BinaryPayloads.gzipStoredBlocks(sb.toString.trim, 97))
     }
-    path
+    import s.implicits._
+    rows.toDF("doc_id", "payload").repartition(4)
+      .write.mode("overwrite").parquet(path)
   }
 
   /** HTML-payload fixture (q_boilerplate's input) materialized like the slim
     * fixtures, so the DuckDB oracle can replay `Boilerplate.stripHtml` over
     * the exact rows the Spark query consumed. */
-  private def fixtureHtmlParquet(s: SparkSession): String = synchronized {
-    val path = s"$FixtureDir/html120"
-    if (!fixtureWritten.contains(path)) {
-      graft.sources.TranscriptGen.generate(s,
-        FixtureGen.Profile(numConvs = 120, monsterEvery = 0, invalidEvery = 0), 4)
-        .select(col("conv_id"), col("turn_idx"), col("text"))
-        .write.mode("overwrite").parquet(path)
-      fixtureWritten += path
-    }
-    path
+  private def fixtureHtmlParquet(s: SparkSession): String = materialize("html120") { path =>
+    graft.sources.TranscriptGen.generate(s,
+      FixtureGen.Profile(numConvs = 120, monsterEvery = 0, invalidEvery = 0), 4)
+      .select(col("conv_id"), col("turn_idx"), col("text"))
+      .write.mode("overwrite").parquet(path)
   }
 
   /** DuckDB-SQL generators replicating `TextStats`' 64-bit hash chain in

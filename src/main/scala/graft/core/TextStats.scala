@@ -30,16 +30,6 @@ object TextStats {
     if (t.isEmpty) Array.empty else t.split("\\s+")
   }
 
-  /** BPE-ish sub-word regex tokenizer: letter runs, digit runs, single
-    * punctuation marks — a deterministic stand-in for a real BPE vocab. */
-  private val BpeIsh = java.util.regex.Pattern.compile("[A-Za-z]+|\\d+|[^\\sA-Za-z\\d]")
-  def bpeIshTokens(s: String): Array[String] = {
-    val m = BpeIsh.matcher(s)
-    val b = Array.newBuilder[String]
-    while (m.find()) b += m.group()
-    b.result()
-  }
-
   /** The published NLTK English stopword list (179 entries, public corpus
     * data) — pinned verbatim so F3 `Clean.stopwordFiltered` matches the
     * reference's `stopwords.words('english')` (Text_preprocessing.py:31-36)
@@ -489,16 +479,12 @@ object TextStats {
 
   def hamming64(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
 
-  /** Sorted distinct 64-bit hashes of the lowercased whitespace token set.
-    * The set-similarity operators compare these instead of string arrays:
-    * |A∩B| over 64-bit token hashes equals the string-set intersection except
-    * on hash collisions (probability ≈ |vocab|²/2⁶⁵ — negligible), and a
-    * sorted-array merge intersect is O(n) with zero per-pair allocation. */
-  def tokenHashes(s: String): Array[Long] = shingleHashes(s, 1)
-
   /** Sorted distinct 64-bit hashes of the word k-shingle set (k=1 ≡ the token
     * set) — the same set MinHash signatures are built from, so LSH candidate
-    * generation and exact verify use ONE similarity measure. */
+    * generation and exact verify use ONE similarity measure. |A∩B| over
+    * these equals the string-set intersection except on hash collisions
+    * (probability ≈ |vocab|²/2⁶⁵), and a sorted-array merge intersect is
+    * O(n) with zero per-pair allocation. */
   def shingleHashes(s: String, k: Int): Array[Long] = {
     require(k >= 1, s"shingle k must be >= 1, got $k")
     val sh = if (k == 1) wsTokens(s.toLowerCase(java.util.Locale.ROOT)) else shingles(s, k)

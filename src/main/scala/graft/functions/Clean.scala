@@ -8,11 +8,6 @@ import org.apache.spark.sql.functions._
   * Each cites the reference site whose semantics it reproduces. */
 object Clean {
 
-  /** F1: char-class scrub — runs of disallowed chars → single space
-    * (cis_pdf_parser.py:138 profile variant, :189 cis-controls variant). */
-  def scrubProfile(c: Column): Column = regexp_replace(c, "[^a-zA-Z0-9\\n-]+", " ")
-  def scrubCis(c: Column): Column = regexp_replace(c, "[^a-zA-Z0-9\\n.-]+", " ")
-
   /** F2: lower + non-alpha strip (Text_preprocessing.py:28-30). (?U): the
     * reference's Python `\s` is Unicode (keeps NBSP — ubiquitous in
     * PDF-extracted text — as a separator); Java's ASCII default would
@@ -21,19 +16,6 @@ object Clean {
     * fixtures. */
   def lowerAlpha(c: Column): Column =
     regexp_replace(lower(c), "(?U)[^a-z\\s]", "")
-
-  /** F2 variant (Text_preprocessing_New.py:5-15), the reference's EXACT
-    * stage order: page-furniture removal FIRST (digits still present,
-    * case-sensitive lowercase 'page', replaced with '' not ' '), then the
-    * case-KEEPING `[^a-zA-Z\s]` strip, then lower + strip. (Running the
-    * furniture pass after lowerAlpha would be dead code — the digits it
-    * keys on are already gone.) */
-  def lowerAlphaNoFurniture(c: Column): Column =
-    regexp_replace(
-      lower(regexp_replace(
-        regexp_replace(c, "page \\d+ internal only general \\d+", ""),
-        "(?U)[^a-zA-Z\\s]", "")),
-      "^\\s+|\\s+$", "")
 
   /** F4: keep from the first case-insensitive 'Ensure'; else strip leading
     * number junk (Text_Preprocessing_V1.py:24-30). */
@@ -47,9 +29,6 @@ object Clean {
   def stripLeadingPageNum(c: Column): Column =
     regexp_replace(c, "(?i)^(Page\\s*\\d+(\\.\\d+)?\\s*|\\d+(\\.\\d+)*\\s*|(\\.\\d+)+\\s*)", "")
 
-  /** F6: trailing-colon strip + trim (Text_Preprocessing_V1.py:14). */
-  def stripTrailingColon(c: Column): Column = trim(regexp_replace(c, ":$", ""))
-
   /** F8: combined-text concat (Similarity.py:10). */
   def combined(a: Column, b: Column): Column = concat_ws(" ", a, b)
 
@@ -61,10 +40,6 @@ object Clean {
     * (Text_preprocessing.py:41-42). */
   def applyToAllColumns(df: DataFrame, cleaner: Column => Column): DataFrame =
     df.columns.foldLeft(df)((d, c) => d.withColumn(c, cleaner(col(c))))
-
-  /** X10: first-N-lines key (cis_benchmarks.py:32-33) — 1-based slice. */
-  def firstLinesKey(c: Column, n: Int): Column =
-    concat_ws(" ", transform(slice(split(c, "\n"), 1, n), l => trim(l)))
 
   /** F3 (Text_preprocessing.py:31-36): tokenize + english stopword filter +
     * rejoin. Uses the FULL published NLTK English stopword list pinned in

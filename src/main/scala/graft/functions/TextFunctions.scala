@@ -39,9 +39,6 @@ object TextFunctions {
   def alphaRatio(c: Column): Column =
     when(length(c) === 0, 0.0)
       .otherwise(length(regexp_replace(c, "[^a-zA-Z]", "")).cast("double") / length(c))
-  def digitRatio(c: Column): Column =
-    when(length(c) === 0, 0.0)
-      .otherwise(length(regexp_replace(c, "[^0-9]", "")).cast("double") / length(c))
   def punctRatio(c: Column): Column =
     when(length(c) === 0, 0.0)
       .otherwise(length(regexp_replace(c, "[a-zA-Z0-9\\s]", "")).cast("double") / length(c))
@@ -93,24 +90,6 @@ object TextFunctions {
       .when(n < k, array(array_join(toks, " ")))
       .otherwise(transform(sequence(lit(0), n - k),
         i => array_join(slice(toks, i + 1, lit(k)), " ")))
-  }
-
-  /** MinHash signature: per seed, min over xxhash64(shingle, seed-salt) —
-    * pure expression tree (array ops + xxhash64), fully codegen'd. */
-  def minHashSignature(shinglesCol: Column, numHashes: Int): Column = {
-    // sequence(0, -1) would silently produce the DESCENDING array [0, -1]
-    require(numHashes >= 1, s"numHashes must be >= 1, got $numHashes")
-    transform(sequence(lit(0), lit(numHashes - 1)), seed =>
-      when(size(shinglesCol) === 0, lit(Long.MaxValue))
-        .otherwise(array_min(transform(shinglesCol, s => xxhash64(s, seed)))))
-  }
-
-  /** LSH band keys from a minhash signature: hash of each band's slice. */
-  def lshBandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column = {
-    require(bands >= 1 && rowsPerBand >= 1,
-      s"bands/rowsPerBand must be >= 1, got $bands/$rowsPerBand")
-    transform(sequence(lit(0), lit(bands - 1)), b =>
-      xxhash64(b, array_join(slice(sig, b * rowsPerBand + 1, lit(rowsPerBand)), ",")))
   }
 
   /** 64-bit SimHash over tokens as an expression tree: per-bit vote counts via

@@ -23,18 +23,6 @@ object VectorFunctions {
     when(na === 0.0 || nb === 0.0, 0.0).otherwise(dot(a, b) / (na * nb))
   }
 
-  /** A5 mean-pool (`BERT_Batching.py:23-27` last_hidden_state.mean(dim=1)):
-    * elementwise mean of an array of equal-length float vectors. Exact decimal
-    * accumulation → deterministic under any aggregation order. */
-  def meanPool(vecs: Column): Column = {
-    val n = size(vecs)
-    val dims = size(element_at(vecs, 1))
-    transform(sequence(lit(1), dims), d =>
-      (aggregate(vecs, lit(0).cast("decimal(28,10)"),
-        (acc, v) => (acc + element_at(v, d).cast("decimal(28,10)")).cast("decimal(28,10)"))
-        / n.cast("decimal(28,10)")).cast("double"))
-  }
-
   // NOTE: LSH bucketing lives ONLY in VectorExpressions.HyperplaneBucket
   // (splitmix64 planes, pinned by the bucket oracles). A HOF lookalike that
   // derived planes from xxhash64 under the same name/signature used to sit

@@ -72,12 +72,6 @@ object Extraction {
       ConvParser.parse(cid, cleaned)
     }
 
-  /** Dev-profiling hooks (graft.tools.Scratch). */
-  def parsePartitionForProfiling(it: Iterator[TurnSlim]): Iterator[TurnResult] =
-    parsePartition(Config())(it)
-  def groupedForProfiling(it: Iterator[TurnSlim]): Iterator[(String, IndexedSeq[TurnSlim])] =
-    groupedByConv(it)
-
   /** Default path: declarative exchange on conv_id; the FSM is the single
     * non-codegen stage in the middle. The partition count is EXPLICIT
     * (cfg.numPartitions) — AQE does not coalesce a user-specified

@@ -28,7 +28,7 @@ object LineSections {
       .repartition(numPartitions, col("conv_id"))
       .sortWithinPartitions(col("conv_id"), col("turn_idx"))
       .mapPartitions { it =>
-        Extraction.groupedForProfiling(it).flatMap { case (cid, ts) =>
+        Extraction.groupedByConv(it).flatMap { case (cid, ts) =>
           val texts = ts.map(t => if (t.text == null) "" else t.text) // null ≡ empty page
           val parsed = LineFsm.parseDocument(texts)
           val title = texts.head.split('\n').headOption.getOrElse("")

@@ -950,14 +950,6 @@ object TrainingData {
     merges.toSeq
   }
 
-  /** [[bpeTrainMerges]] as a DataFrame (rank, l_sym, r_sym, merged, n). */
-  def bpeTrain(df: DataFrame, textCol: String, numMerges: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    bpeTrainMerges(df, textCol, numMerges)
-      .toDF("rank", "l_sym", "r_sym", "merged", "n")
-  }
-
   /** Tokenizer application: encode each document with a trained merge
     * table, applying merges sequentially in rank order (each rank is one
     * literal `replace` over the whole doc string in the double-delimited

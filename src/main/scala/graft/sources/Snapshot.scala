@@ -158,8 +158,11 @@ object Snapshot {
     tagVersion(table, tag).map(manifestMetrics(table, _))
   }
 
-  /** Highest committed version whose manifest carries `tag`, if any. */
+  /** Highest committed version whose manifest carries `tag`, if any. A table
+    * directory that does not exist yet carries no tags (a tagged first
+    * commit to a new table path). */
   private def tagVersion(table: Path, tag: String): Option[Int] = {
+    if (!Files.exists(table)) return None
     val re = "\"tag\"\\s*:\\s*\"([^\"]*)\"".r
     // FULL-name match: a leftover manifest-v<k>.json.tmp from a killed
     // atomicWrite must never resolve a tag to an uncommitted version

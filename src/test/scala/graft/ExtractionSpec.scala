@@ -190,6 +190,23 @@ class ExtractionSpec extends AnyFunSuite {
     assert(graft.sources.Snapshot.metricsOfTag(table, "nosuch").isEmpty)
   }
 
+  test("incrementalCommit: a tagged first commit creates a new table; its replay is a no-op") {
+    val p = FixtureGen.Profile(numConvs = 12, monsterEvery = 0, invalidEvery = 5)
+    val turns = TranscriptGen.generate(spark, p, parallelism = 4)
+    val table = java.nio.file.Files.createTempDirectory("inc-tagged")
+      .resolve("fresh").toString // the table directory does not exist yet
+    val cfg = Extraction.Config(numPartitions = 4)
+    val committed = Extraction.incrementalCommit(turns, table, cfg,
+      numChunks = 2, batchTag = "b0")
+    assert(graft.sources.Snapshot.committedVersion(table).contains(0))
+    assert(committed("turns") == turns.count())
+    val replay = Extraction.incrementalCommit(turns, table, cfg,
+      numChunks = 2, batchTag = "b0")
+    assert(replay == committed, "a replayed tag must return the committed metrics")
+    assert(graft.sources.Snapshot.committedVersion(table).contains(0),
+      "a replayed tag must not add a version")
+  }
+
   test("stripHtml stage: pipeline on raw == oracle on stripped turns") {
     val turns = TranscriptGen.generate(spark, profile, parallelism = 4)
     val got = sortedResults(Extraction.extract(turns,

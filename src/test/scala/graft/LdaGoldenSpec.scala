@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Value-pinning for the Spark ML LDA matcher — the one operator whose
   * driver check is rows-only (`q_topic_match`: an online-variational LDA
   * fit has no ANSI-SQL replay). The golden was produced by
-  * [[graft.tools.LdaGoldenGen]] under the SAME session config as TestSpark
+  * [[graft.tools.LdaGoldenGen]], which runs in the TestSpark session itself
   * (seed 42, fixed sf0.001 input partitioning); this spec re-runs the fit
   * and requires identical (left_id, right_id, score_ppm) rows, plus a
   * second in-session run to pin run-to-run determinism itself. */
@@ -21,7 +21,8 @@ class LdaGoldenSpec extends AnyFunSuite {
       val firstDiff = g.zipAll(e, "<missing>", "<missing>")
         .zipWithIndex.find { case ((a, b), _) => a != b }
       s"LDA fit drifted from golden at $firstDiff (${g.size} vs ${e.size} lines) — " +
-        "if Spark/partitioning legitimately changed, regen via graft.tools.LdaGoldenGen"
+        "if Spark/partitioning legitimately changed, regen via " +
+        "sbt -batch \"Test/runMain graft.tools.LdaGoldenGen\""
     })
     // determinism within a session: the seed-fixed fit must replay exactly
     assert(graft.tools.LdaGoldenGen.compute(spark) == got)

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * DuckDB oracle (`q_learned_match`) replays the whole inference plane from
   * the exported model, so the one unreplayable piece is the Spark ML
   * LogisticRegression fit itself; this golden (produced by
-  * [[graft.tools.LearnedGoldenGen]] under the TestSpark config) pins it,
+  * [[graft.tools.LearnedGoldenGen]] in the TestSpark session) pins it,
   * plus a second in-session run pins run-to-run determinism. */
 class LearnedMatchGoldenSpec extends AnyFunSuite {
 
@@ -20,7 +20,8 @@ class LearnedMatchGoldenSpec extends AnyFunSuite {
       val firstDiff = g.zipAll(e, "<missing>", "<missing>")
         .zipWithIndex.find { case ((a, b), _) => a != b }
       s"LR fit drifted from golden at $firstDiff (${g.size} vs ${e.size} lines) — " +
-        "if Spark/partitioning legitimately changed, regen via graft.tools.LearnedGoldenGen"
+        "if Spark/partitioning legitimately changed, regen via " +
+        "sbt -batch \"Test/runMain graft.tools.LearnedGoldenGen\""
     })
     // determinism within a session: the fit must replay exactly
     assert(graft.tools.LearnedGoldenGen.compute(spark) == got)

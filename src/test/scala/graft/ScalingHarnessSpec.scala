@@ -33,10 +33,10 @@ class ScalingHarnessSpec extends AnyFunSuite {
   test("quiet gating: contended probes, steal, implausible ratios all disqualify") {
     assert(pair(2, 8, 90, 25).quiet)
     assert(!pair(2, 8, 90, 25, pQuiet = false).quiet, "loud probes")
-    assert(!pair(2, 8, 90, 25, steal = 0.05).quiet, "steal over 1%")
+    assert(!pair(2, 8, 90, 25, steal = 0.05).quiet, "steal 5% over the 1% gate")
     // round-5 tightening: 1.45% steal marked the DRAM-neighbor window the
     // cache-resident CPU probe could not see (eff 0.391 on a 0.89 dim)
-    assert(!pair(2, 8, 90, 25, steal = 0.0145).quiet, "steal over 1%")
+    assert(!pair(2, 8, 90, 25, steal = 0.0145).quiet, "steal 1.45% over the 1% gate (round-5 tightening)")
     assert(pair(2, 8, 90, 25, steal = 0.007).quiet, "steal at the trail's quiet ceiling stays clean")
     assert(!pair(2, 8, 120, 25).quiet, "eff > 1.1 implausible")
     assert(!pair(2, 8, -1.0, 25).quiet, "single-side salvage is never a quiet pair")

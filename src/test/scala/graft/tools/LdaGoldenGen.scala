@@ -9,24 +9,16 @@ import org.apache.spark.sql.functions._
   * ONE query DuckDB cannot replay (an ML fit is not ANSI SQL), so its hard
   * check is this checked-in golden instead (round-3 verdict, Missing #2).
   *
-  * The session config MUST mirror graft.TestSpark exactly (local[4],
-  * shuffle=8, AQE on, UTC): Spark ML's online-variational LDA is
-  * deterministic for a fixed seed AND fixed input partitioning, and the
-  * spec replays under TestSpark. Run once:
-  *   sbt -batch "runMain graft.tools.LdaGoldenGen"
+  * It runs in the graft.TestSpark session the spec replays under: Spark
+  * ML's online-variational LDA is deterministic for a fixed seed AND fixed
+  * input partitioning, so the generator and the spec must share one
+  * session config. Run once:
+  *   sbt -batch "Test/runMain graft.tools.LdaGoldenGen"
   * → src/test/resources/golden/lda_topic_match.csv, compared forever after
   * by LdaGoldenSpec (which also asserts run-to-run determinism). */
 object LdaGoldenGen {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-lda-golden")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.TestSpark.spark
     val csv = compute(spark)
     val out = Paths.get("src/test/resources/golden/lda_topic_match.csv")
     Files.createDirectories(out.getParent)

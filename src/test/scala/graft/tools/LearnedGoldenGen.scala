@@ -9,23 +9,15 @@ import org.apache.spark.sql.functions._
   * Same split of hard checks as the LDA matcher: the DuckDB oracle replays
   * the full INFERENCE plane from the exported model each round, and this
   * golden pins the iterative LR FIT itself (coefficients → readout) against
-  * drift. Config mirrors graft.TestSpark (local[4], shuffle=8, AQE, UTC) —
+  * drift. It runs in the graft.TestSpark session the spec replays under —
   * the r6 driver-local LBFGS fit is deterministic, period (one pinned
   * collect order; pure sequential arithmetic after that). Run once:
-  *   sbt -batch "runMain graft.tools.LearnedGoldenGen"
+  *   sbt -batch "Test/runMain graft.tools.LearnedGoldenGen"
   * → src/test/resources/golden/learned_match.csv, compared forever after by
   * LearnedMatchGoldenSpec (which also asserts run-to-run determinism). */
 object LearnedGoldenGen {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-learned-golden")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.TestSpark.spark
     val csv = compute(spark)
     val out = Paths.get("src/test/resources/golden/learned_match.csv")
     Files.createDirectories(out.getParent)
