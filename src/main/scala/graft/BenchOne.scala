@@ -11,16 +11,12 @@ import graft.operators.Extraction
   *        bucketed = exchange-free extraction over a bucketed table
   * Prints: BENCHONE <samples-csv> */
 object BenchOne {
-  def main(args: Array[String]): Unit = {
-    val cores = args(0)
-    val rawPath = args(1)
-    val warmupPath = args(2)
-    val samples = args(3).toInt
-    val mode = if (args.length > 4) args(4) else "full"
-    val parts = if (args.length > 5) args(5).toInt else 128
+  /** The `local[cores]` extraction session of the scaling children (this
+    * and [[BenchShard]]), quiet at ERROR level. */
+  private[graft] def session(cores: String, appName: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
-      .appName(s"graft-benchone-$cores")
+      .appName(appName)
       .config("spark.sql.shuffle.partitions", cores)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.local.dir", "/dev/shm/spark-local")
@@ -32,6 +28,17 @@ object BenchOne {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
+
+  def main(args: Array[String]): Unit = {
+    val cores = args(0)
+    val rawPath = args(1)
+    val warmupPath = args(2)
+    val samples = args(3).toInt
+    val mode = if (args.length > 4) args(4) else "full"
+    val parts = if (args.length > 5) args(5).toInt else 128
+    val spark = session(cores, s"graft-benchone-$cores")
     import spark.implicits._
     def jobOn(path: String): Unit = mode match {
       case "full" =>

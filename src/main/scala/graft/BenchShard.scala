@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.operators.Extraction
 
 /** One EXECUTOR-SHAPED process of the multi-process scaling sample
@@ -16,20 +15,7 @@ object BenchShard {
   def main(args: Array[String]): Unit = {
     val Array(cores, rawPath, warmupPath, shardIdxS, shardCountS, partsS) = args
     val (shardIdx, shardCount, parts) = (shardIdxS.toInt, shardCountS.toInt, partsS.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-shard-$shardIdx-of-$shardCount")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.local.dir", "/dev/shm/spark-local")
-      .config("spark.shuffle.file.buffer", "1m")
-      .config("spark.shuffle.unsafe.file.output.buffer", "1m")
-      .config("spark.shuffle.spill.diskWriteBufferSize", "1m")
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = BenchOne.session(cores, s"graft-shard-$shardIdx-of-$shardCount")
     import spark.implicits._
 
     def shardFiles(path: String): Seq[String] = {

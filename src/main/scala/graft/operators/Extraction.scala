@@ -177,13 +177,8 @@ object Extraction {
       .select(col("conv_id"), col("turn_idx"), col("text"))
       .as[TurnSlim]
       .groupBy(col("conv_id")).as[String, TurnSlim]
-      .flatMapGroups { (cid: String, it: Iterator[TurnSlim]) =>
-        val ts = it.toIndexedSeq.sortBy(_.turn_idx)
-          .map(t => if (t.text == null) t.copy(text = "") else t) // null ≡ empty page
-        val cleaned =
-          if (cfg.stripHtml) ts.map(t => t.copy(text = Boilerplate.stripHtml(t.text)))
-          else ts
-        ConvParser.parse(cid, cleaned)
+      .flatMapGroups { (_: String, it: Iterator[TurnSlim]) =>
+        parsePartition(cfg)(it.toIndexedSeq.sortBy(_.turn_idx).iterator)
       }
   }
 

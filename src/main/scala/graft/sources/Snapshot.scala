@@ -48,17 +48,15 @@ object Snapshot {
   def committedVersion(tablePath: String): Option[Int] =
     recoverCommitted(Paths.get(tablePath))
 
-  private def recoverCommitted(table: Path): Option[Int] = {
-    if (!Files.exists(table)) return None
-    // FULL-name match (pattern, not findFirstMatchIn): a leftover
-    // manifest-v<k>.json.tmp-* from a writer killed mid-claim must never
-    // count as a committed version — a phantom max here wedges every read
-    val verRe = "manifest-v(\\d+)\\.json".r
-    val ks = listDir(table).flatMap(p => p.getFileName.toString match {
-      case verRe(k) => Some(k.toInt); case _ => None })
-    if (ks.isEmpty) None
-    else { val k = ks.max; finishCommitted(table, k); Some(k) }
-  }
+  private def recoverCommitted(table: Path): Option[Int] =
+    versions(table).lastOption.map { k => finishCommitted(table, k); k }
+
+  /** The committed tip, or `version` when it is given (>= 0). A table with
+    * no committed snapshot is a named error, not a bare `None.get`. */
+  private def versionOrTip(tablePath: String, version: Int = -1): Int =
+    if (version >= 0) version
+    else recoverCommitted(Paths.get(tablePath)).getOrElse(
+      throw new IllegalStateException(s"no committed snapshot at $tablePath"))
 
   /** Eager directory listing that CLOSES the underlying stream — a bare
     * `Files.list(...).iterator()` leaks one directory handle per call,
@@ -68,19 +66,28 @@ object Snapshot {
     try s.iterator().asScala.toSeq finally s.close()
   }
 
-  /** Manifest tags are stored in builder-authored JSON and recovered by
-    * regex; restrict them to characters that can never collide with the
-    * framing so the exactly-once tag check is airtight. */
+  private def chunkDirs(dir: Path): Seq[Path] =
+    listDir(dir).filter(_.getFileName.toString.startsWith("_chunk="))
+
+  private def chunkId(chunkDir: Path): Long =
+    chunkDir.getFileName.toString.stripPrefix("_chunk=").toLong
+
+  private def parquetFiles(chunkDir: Path): Seq[Path] =
+    listDir(chunkDir).filter(_.getFileName.toString.endsWith(".parquet"))
+
+  /** Tags are caller input that also rides the `_STAGED` marker's framing
+    * and names batches in the exactly-once handshake; restrict them to
+    * characters that can never collide with any framing. */
   private def requireSafeTag(tag: String): Unit =
     require(tag.matches("[A-Za-z0-9._-]*"),
       s"snapshot tag must match [A-Za-z0-9._-]*: '$tag'")
 
   /** Observed metric keys travel through two builder-authored framings —
-    * the `_STAGED` marker's "k=v" lines and the manifest's regex-recovered
-    * `"metrics"` object — so keys carrying framing characters are REJECTED
-    * up front (requireSafeTag's fail-loud approach; the old silent `=`→`_`
-    * fold let two distinct Observation names collide and lose a value on a
-    * resumed commit, and a `}` in a key garbled the manifest regex). */
+    * the `_STAGED` marker's "k=v" lines and the manifest's `"metrics"`
+    * object — so keys carrying framing characters are REJECTED up front
+    * (requireSafeTag's fail-loud approach; the old silent `=`→`_` fold let
+    * two distinct Observation names collide and lose a value on a resumed
+    * commit). */
   private def requireSafeMetricKeys(m: Map[String, Long]): Unit =
     m.keys.foreach { k =>
       require(!k.exists(c => c == '=' || c == '\n' || c == '\r' || c == '"' ||
@@ -108,44 +115,111 @@ object Snapshot {
         l.substring(i + 1).toLongOption.map(l.substring(0, i) -> _)
       }.toMap
 
-  /** Bounded-prefix manifest read: snapshot/parent/op fields, tag, metrics
-    * and num_chunks all render BEFORE the table-sized `filestats` body
-    * (commitManifest keeps them at the head by construction), so head-field
-    * readers — per-micro-batch [[committedTags]], [[readByTag]],
-    * [[metricsHistory]], [[manifestMetrics]] — grow a byte prefix only
-    * until `"filestats"` is visible instead of paying a metadata read that
-    * scales with table file count (the readAppended probe's approach).
-    * Bytes accumulate raw and decode ONCE, so a chunk boundary can never
-    * split a multi-byte character. */
-  private def manifestHead(p: Path): String = {
+  // ------------------------------------------------------------- manifest
+  // The one decoder of the manifest format: [[versions]] is the only match
+  // on manifest file names, [[head]] the bounded-prefix read of the fields
+  // [[commitManifest]] renders before the table-sized `filestats` body, and
+  // [[manifest]] the full parse. Every reader below goes through them.
+
+  private def manifestPath(table: Path, k: Int): Path =
+    table.resolve(s"manifest-v$k.json")
+
+  private val ManifestName = "manifest-v(\\d+)\\.json".r
+
+  /** Committed versions of `table`, ascending; none for a directory that
+    * does not exist yet. FULL-name match: a leftover
+    * `manifest-v<k>.json.tmp-*` from a writer killed mid-claim must never
+    * count as committed — a phantom max here wedges every read. */
+  private def versions(table: Path): Seq[Int] =
+    if (!Files.exists(table)) Nil
+    else listDir(table).map(_.getFileName.toString)
+      .collect { case ManifestName(k) => k.toInt }.sorted
+
+  /** Manifest fields that render BEFORE `filestats`. `chunkKey`/`numChunks`
+    * are None only on a manifest that predates them. */
+  private case class ManifestHead(append: Boolean, tag: String,
+                                  chunkKey: Option[String], numChunks: Option[Int],
+                                  metrics: Map[String, Long],
+                                  rewrittenChunks: Seq[Long]) {
+    /** The table's chunking, required by every rewrite of it. */
+    def chunking: (String, Int) =
+      (chunkKey.getOrElse(throw new IllegalStateException("manifest missing chunk_key")),
+       numChunks.getOrElse(throw new IllegalStateException("manifest missing num_chunks")))
+  }
+
+  /** A whole manifest: its head, the per-file stat entries grouped by file
+    * key (`<chunk>/<filename>`, entry order preserved), and the per-chunk
+    * lineage's row total and file keys. */
+  private case class Manifest(head: ManifestHead,
+                              fileStats: Map[String, Seq[Map[String, String]]],
+                              rows: Long, fileKeys: Set[String])
+
+  private def jsonObj(v: Any): Map[String, Any] = v match {
+    case m: Map[_, _] => m.asInstanceOf[Map[String, Any]]
+    case other => throw new IllegalArgumentException(s"manifest: expected an object, got $other")
+  }
+
+  private def jsonArr(v: Any): Vector[Any] = v match {
+    case a: Vector[_] => a
+    case other => throw new IllegalArgumentException(s"manifest: expected an array, got $other")
+  }
+
+  /** A flat stat entry: every value a string (or number text). */
+  private def jsonStrObj(v: Any): Map[String, String] = {
+    val m = jsonObj(v)
+    require(m.valuesIterator.forall(_.isInstanceOf[String]),
+      s"manifest: expected a flat string object, got $m")
+    m.asInstanceOf[Map[String, String]]
+  }
+
+  private def headOf(f: Map[String, Any]): ManifestHead = {
+    def text(key: String) = f.get(key).collect { case s: String => s }
+    ManifestHead(
+      append = f.get("append").contains(true),
+      tag = text("tag").getOrElse(""),
+      chunkKey = text("chunk_key"),
+      numChunks = text("num_chunks").map(_.toInt),
+      metrics = f.get("metrics").fold(Map.empty[String, Long])(m =>
+        jsonObj(m).map { case (key, v) => key -> v.toString.toLong }),
+      rewrittenChunks = f.get("rewritten_chunks").fold(Seq.empty[Long])(a =>
+        jsonArr(a).map(_.toString.toLong)))
+  }
+
+  /** Head of manifest `k` from a bounded byte prefix, grown (8 KB,
+    * doubling) only until the top-level `filestats` key is reached:
+    * per-micro-batch readers ([[committedTags]], [[metricsOfTag]],
+    * [[metricsHistory]], the readAppended probe) never pay a read that
+    * scales with the table's file count. Bytes accumulate raw and decode
+    * whole, so a read boundary can never split a multi-byte character. */
+  private def head(table: Path, k: Int): ManifestHead = {
+    val p = manifestPath(table, k)
     val in = Files.newInputStream(p)
     try {
       val buf = new java.io.ByteArrayOutputStream(8192)
       var n = 8192
-      var done = false
-      while (!done) {
+      var fields = Option.empty[Map[String, Any]]
+      while (fields.isEmpty) {
         val chunk = in.readNBytes(n)
         buf.write(chunk)
-        done = chunk.length < n ||
-          buf.toString(java.nio.charset.StandardCharsets.UTF_8)
-            .contains("\"filestats\"")
+        fields = Json.parsePrefix(
+          buf.toString(java.nio.charset.StandardCharsets.UTF_8), "filestats")
+        require(fields.isDefined || chunk.length == n, s"truncated manifest $p")
         n = math.min(n * 2, 1 << 22)
       }
-      buf.toString(java.nio.charset.StandardCharsets.UTF_8)
+      headOf(fields.get)
     } finally in.close()
   }
 
-  /** Metrics of an already-committed snapshot, recovered from its manifest:
-    * the return value of a commit retried in the post-manifest window
-    * (manifest landed, staging — and its marker — already cleaned) must
-    * still honor the "returns observed metrics" contract. */
-  private def manifestMetrics(table: Path, k: Int): Map[String, Long] = {
-    val metRe = "\"metrics\"\\s*:\\s*\\{([^}]*)\\}".r
-    val kvRe = "\"([^\"]+)\"\\s*:\\s*\"?(-?\\d+)\"?".r
-    metRe.findFirstMatchIn(manifestHead(table.resolve(s"manifest-v$k.json")))
-      .map(m => kvRe.findAllMatchIn(m.group(1))
-        .map(kv => kv.group(1) -> kv.group(2).toLong).toMap)
-      .getOrElse(Map.empty)
+  private def manifest(table: Path, k: Int): Manifest = {
+    val f = jsonObj(Json.parse(Files.readString(manifestPath(table, k))))
+    val chunks = f.get("chunks").fold(Map.empty[String, Any])(jsonObj)
+      .map { case (c, v) => c -> jsonObj(v) }
+    Manifest(headOf(f),
+      f.get("filestats").fold(Vector.empty[Any])(jsonArr).map(jsonStrObj)
+        .groupBy(_("file")),
+      chunks.valuesIterator.map(_("rows").toString.toLong).sum,
+      chunks.iterator.flatMap { case (c, m) =>
+        jsonArr(m("files")).map(name => s"$c/$name") }.toSet)
   }
 
   /** Committed metrics of the snapshot carrying `tag`, if any — the
@@ -155,40 +229,22 @@ object Snapshot {
     * as the run that committed. Pure head-prefix metadata reads. */
   def metricsOfTag(tablePath: String, tag: String): Option[Map[String, Long]] = {
     val table = Paths.get(tablePath)
-    tagVersion(table, tag).map(manifestMetrics(table, _))
+    tagVersion(table, tag).map(head(table, _).metrics)
   }
 
   /** Highest committed version whose manifest carries `tag`, if any. A table
     * directory that does not exist yet carries no tags (a tagged first
     * commit to a new table path). */
-  private def tagVersion(table: Path, tag: String): Option[Int] = {
-    if (!Files.exists(table)) return None
-    val re = "\"tag\"\\s*:\\s*\"([^\"]*)\"".r
-    // FULL-name match: a leftover manifest-v<k>.json.tmp from a killed
-    // atomicWrite must never resolve a tag to an uncommitted version
-    val verRe = "manifest-v(\\d+)\\.json".r
-    listDir(table)
-      .flatMap { p =>
-        p.getFileName.toString match {
-          case verRe(v) if re.findFirstMatchIn(manifestHead(p))
-            .exists(_.group(1) == tag) => Some(v.toInt)
-          case _ => None
-        }
-      }.sorted.lastOption
-  }
+  private def tagVersion(table: Path, tag: String): Option[Int] =
+    versions(table).reverseIterator.find(head(table, _).tag == tag)
 
   /** Lineage parent of a new snapshot `k`: the highest committed version
     * BELOW it, from the manifests — never the raw CURRENT pointer, which
     * under-reports on a wedged table (kill between manifest and pointer
     * swap) and would record a lineage chain that skips the wedged
     * version. */
-  private def parentOf(table: Path, k: Int): Int = {
-    val verRe = "manifest-v(\\d+)\\.json".r
-    listDir(table)
-      .flatMap(p => p.getFileName.toString match {
-        case verRe(v) => Some(v.toInt); case _ => None })   // full-name match (tmp litter)
-      .filter(_ < k).sorted.lastOption.getOrElse(-1)
-  }
+  private def parentOf(table: Path, k: Int): Int =
+    versions(table).filter(_ < k).lastOption.getOrElse(-1)
 
   // ---------------------------------------------------------------- stats
   // Per-FILE column statistics, Iceberg-style: rows + min/max/null-count per
@@ -361,47 +417,6 @@ object Snapshot {
         (if (s.approx) Seq("ap" -> Json.str("1")) else Nil)): _*)
     }
 
-  /** Balanced `"filestats":[...]` slice of a manifest (escape-aware; the
-    * stat values of string columns may contain any character). Empty array
-    * for pre-stats manifests. */
-  private def fileStatsArrayText(manifestText: String): String = {
-    // anchor on the ARRAY form: an Observation metric named "filestats"
-    // renders earlier as "filestats":<number> and must not hijack the scan
-    val idx = manifestText.indexOf("\"filestats\":[")
-    if (idx < 0) return "[]"
-    var i = idx + "\"filestats\":".length
-    val start = i
-    var depth = 0; var inStr = false; var esc = false
-    while (i < manifestText.length) {
-      val c = manifestText(i)
-      if (inStr) {
-        if (esc) esc = false
-        else if (c == '\\') esc = true
-        else if (c == '"') inStr = false
-      } else c match {
-        case '"' => inStr = true
-        case '[' => depth += 1
-        case ']' =>
-          depth -= 1
-          if (depth == 0) return manifestText.substring(start, i + 1)
-        case _ =>
-      }
-      i += 1
-    }
-    "[]"
-  }
-
-  /** Parsed filestats of a committed manifest, grouped per file key
-    * (`<chunk>/<filename>`), entry order preserved. */
-  private def parsedFileStats(table: Path, k: Int): Map[String, Seq[Map[String, String]]] = {
-    val mf = table.resolve(s"manifest-v$k.json")
-    if (!Files.exists(mf)) return Map.empty
-    parsedFileStatsOf(Files.readString(mf))
-  }
-
-  private def parsedFileStatsOf(manifestText: String): Map[String, Seq[Map[String, String]]] =
-    Json.parseFlatObjects(fileStatsArrayText(manifestText)).groupBy(_("file"))
-
   private def atomicWrite(target: Path, content: String): Unit = {
     // writer-unique tmp: wedged-table repair (finishCommitted) runs from
     // every reader's recovery path, so concurrent parties must not collide
@@ -426,9 +441,9 @@ object Snapshot {
     * contract, and this claim turns a violated contract into an error
     * rather than a corrupted table. */
   private[graft] def claimManifest(table: Path, k: Int, content: String): Unit = {
-    val target = table.resolve(s"manifest-v$k.json")
+    val target = manifestPath(table, k)
     val tmp = target.resolveSibling(
-      s"manifest-v$k.json.tmp-${ProcessHandle.current().pid()}-${System.nanoTime()}")
+      s"${target.getFileName}.tmp-${ProcessHandle.current().pid()}-${System.nanoTime()}")
     Files.writeString(tmp, content)
     try { Files.createLink(target, tmp); Files.delete(tmp) }
     catch { case _: java.nio.file.FileAlreadyExistsException =>
@@ -447,14 +462,14 @@ object Snapshot {
     * k, sees the manifest, and returns — CURRENT never advances, all future
     * commits silently no-op). Finish the swap + staging cleanup here. */
   private def finishCommitted(table: Path, k: Int): Boolean = {
-    val manifest = table.resolve(s"manifest-v$k.json")
-    if (!Files.exists(manifest)) return false
+    val mf = manifestPath(table, k)
+    if (!Files.exists(mf)) return false
     if (currentVersion(table).getOrElse(-1) < k)
       atomicWrite(table.resolve("CURRENT"), k.toString)
     deleteRecursively(table.resolve(s"_staging-v$k"))
     // a kill between claimManifest's link() and its tmp delete leaves
     // harmless (full-name-match-ignored) litter: sweep it here
-    listDir(table).filter(_.getFileName.toString.startsWith(s"manifest-v$k.json.tmp-"))
+    listDir(table).filter(_.getFileName.toString.startsWith(s"${mf.getFileName}.tmp-"))
       .foreach(p => try Files.deleteIfExists(p) catch { case _: java.io.IOException => () })
     true
   }
@@ -475,17 +490,14 @@ object Snapshot {
                              observed: Map[String, Long],
                              tag: String,
                              extraFields: Seq[(String, String)]): Unit = {
-    requireSafeMetricKeys(observed) // fail-loud before any regex framing
+    requireSafeMetricKeys(observed) // fail-loud before any framing
     val dataDir = table.resolve(s"v$k")
     val parentStats =
-      if (parent >= 0) parsedFileStats(table, parent) else Map.empty[String, Seq[Map[String, String]]]
-    val chunkIds = listDir(dataDir).map(_.getFileName.toString)
-      .filter(_.startsWith("_chunk=")).map(_.stripPrefix("_chunk=").toLong).sorted
+      if (parent >= 0) manifest(table, parent).fileStats
+      else Map.empty[String, Seq[Map[String, String]]]
     val statEntryOrder = Seq("file", "rows", "col", "t", "pt", "lk", "min", "max", "nulls", "nn", "ap")
-    val chunkFiles: Seq[(Long, Seq[String])] = chunkIds.map { c =>
-      c -> listDir(dataDir.resolve(s"_chunk=$c")).map(_.getFileName.toString)
-        .filter(_.endsWith(".parquet")).sorted
-    }
+    val chunkFiles: Seq[(Long, Seq[String])] = chunkDirs(dataDir).map(chunkId).sorted
+      .map(c => c -> parquetFiles(dataDir.resolve(s"_chunk=$c")).map(_.getFileName.toString).sorted)
     // reuse only current-format parent entries (pt present; long stats
     // carry their logical kind): pre-upgrade entries re-derive from the
     // footer ONCE here, so old tables self-heal instead of carrying
@@ -624,11 +636,7 @@ object Snapshot {
             observation: Option[org.apache.spark.sql.Observation] = None,
             tag: String = "", clusterBy: Seq[String] = Nil,
             rowsPerFile: Long = 0): Map[String, Long] = {
-    requireSafeTag(tag)
-    require(!df.columns.contains("_chunk"),
-      "_chunk is the table's reserved layout column: write/append/upsert " +
-      "would silently overwrite it and reads drop it — rename the column")
-    val spark = df.sparkSession
+    requireCommittable(df, tag)
     val table = Paths.get(tablePath)
     Files.createDirectories(table)
     // auto-id from the committed tip (manifest scan), not CURRENT: on a
@@ -638,37 +646,16 @@ object Snapshot {
             else recoverCommitted(table).getOrElse(-1) + 1
     // already committed: the staging marker is gone, but the manifest still
     // knows the metrics — honor the return contract on replays too
-    if (finishCommitted(table, k)) return manifestMetrics(table, k)
+    if (finishCommitted(table, k)) return head(table, k).metrics
 
-    val staging = table.resolve(s"_staging-v$k")
-    val stagedMarker = staging.resolve("_STAGED")
-
-    // 1. stage (restart from scratch if the marker never landed)
-    if (!Files.exists(stagedMarker)) {
-      if (Files.exists(staging)) deleteRecursively(staging)
-      val staged = stageClustered(
-        df.withColumn("_chunk", pmod(xxhash64(col(chunkKey)), lit(numChunks))),
-        numChunks, clusterBy, rowsPerFile)
-      val w = staged.write.partitionBy("_chunk").mode("overwrite")
-      (if (rowsPerFile > 0) w.option("maxRecordsPerFile", rowsPerFile) else w)
-        .parquet(staging.resolve("data").toString)
-      val m = observation.map(_.get.collect {
-        case (key, v: Long) => key -> v
-        case (key, v: Int) => key -> v.toLong
-      }).getOrElse(Map.empty[String, Long])
-      atomicWrite(stagedMarker, metricsMarker(m))
-    }
-    // metrics from the marker, not the Observation: on a resumed commit the
-    // write job never re-runs, so only the marker still knows them
-    val observed = markerMetrics(stagedMarker)
+    // 1. stage
+    val observed = stage(df, table, k, chunkKey, numChunks, observation,
+      clusterBy, rowsPerFile)
 
     // 2. promote chunk dirs (idempotent)
     val dataDir = table.resolve(s"v$k")
     Files.createDirectories(dataDir)
-    val stagedData = staging.resolve("data")
-    val chunkDirs = listDir(stagedData)
-      .filter(p => p.getFileName.toString.startsWith("_chunk=")).sortBy(_.toString)
-    chunkDirs.foreach { cd =>
+    chunkDirs(stagedData(table, k)).sortBy(_.toString).foreach { cd =>
       val dst = dataDir.resolve(cd.getFileName.toString)
       if (!Files.exists(dst))
         Files.move(cd, dst, StandardCopyOption.ATOMIC_MOVE)
@@ -681,6 +668,74 @@ object Snapshot {
     observed
   }
 
+  /** Caller-input checks every commit makes before touching the table. */
+  private def requireCommittable(df: DataFrame, tag: String): Unit = {
+    requireSafeTag(tag)
+    require(!df.columns.contains("_chunk"),
+      "_chunk is the table's reserved layout column: write/append/upsert " +
+      "would silently overwrite it and reads drop it — rename the column")
+  }
+
+  private def stagedData(table: Path, k: Int): Path =
+    table.resolve(s"_staging-v$k").resolve("data")
+
+  /** Stage step of write/append: one Spark job writes every chunk of `df`
+    * under `_staging-v<k>/data`, then the `_STAGED` marker lands carrying
+    * the observed metrics — restarted from scratch if the marker never
+    * landed. Returns the metrics from the marker, not the Observation: on a
+    * resumed commit the write job never re-runs, so only the marker still
+    * knows them. */
+  private def stage(df: DataFrame, table: Path, k: Int, chunkKey: String,
+                    numChunks: Int,
+                    observation: Option[org.apache.spark.sql.Observation],
+                    clusterBy: Seq[String], rowsPerFile: Long): Map[String, Long] = {
+    val staging = table.resolve(s"_staging-v$k")
+    val stagedMarker = staging.resolve("_STAGED")
+    if (!Files.exists(stagedMarker)) {
+      if (Files.exists(staging)) deleteRecursively(staging)
+      val staged = stageClustered(
+        df.withColumn("_chunk", pmod(xxhash64(col(chunkKey)), lit(numChunks))),
+        numChunks, clusterBy, rowsPerFile)
+      val w = staged.write.partitionBy("_chunk").mode("overwrite")
+      (if (rowsPerFile > 0) w.option("maxRecordsPerFile", rowsPerFile) else w)
+        .parquet(stagedData(table, k).toString)
+      val m = observation.map(_.get.collect {
+        case (key, v: Long) => key -> v
+        case (key, v: Int) => key -> v.toLong
+      }).getOrElse(Map.empty[String, Long])
+      atomicWrite(stagedMarker, metricsMarker(m))
+    }
+    markerMetrics(stagedMarker)
+  }
+
+  /** Promote step of append and copy-on-write: hard-link the parquet files
+    * of every parent chunk `relink` accepts into `v<k>` (metadata-only
+    * reuse), then move each staged file in as `<prefix><k>-<name>`, so it
+    * never collides with a linked one. Idempotent: links and moves already
+    * made are skipped on a rerun. */
+  private def linkAndPromote(table: Path, parent: Int, k: Int, prefix: String,
+                             relink: Long => Boolean): Path = {
+    val dataDir = table.resolve(s"v$k")
+    Files.createDirectories(dataDir)
+    def into(cd: Path)(place: (Path, Path) => Unit): Unit = {
+      val dst = dataDir.resolve(cd.getFileName.toString)
+      Files.createDirectories(dst)
+      parquetFiles(cd).foreach(f => place(f, dst))
+    }
+    chunkDirs(table.resolve(s"v$parent")).filter(cd => relink(chunkId(cd)))
+      .foreach(into(_) { (f, dst) =>
+        val lnk = dst.resolve(f.getFileName.toString)
+        if (!Files.exists(lnk)) Files.createLink(lnk, f)
+      })
+    val staged = stagedData(table, k)
+    if (Files.exists(staged))
+      chunkDirs(staged).foreach(into(_) { (f, dst) =>
+        val moved = dst.resolve(s"$prefix$k-${f.getFileName}")
+        if (!Files.exists(moved)) Files.move(f, moved, StandardCopyOption.ATOMIC_MOVE)
+      })
+    dataDir
+  }
+
   /** Read the CURRENT snapshot (or an explicit version) of a table.
     * `mergeSchema = true` reconciles per-file schemas — needed to read a
     * version whose delta-appended files added a column (schema evolution:
@@ -688,15 +743,12 @@ object Snapshot {
     * merged-footer scan costs one footer read per file. */
   def read(spark: SparkSession, tablePath: String, version: Int = -1,
            mergeSchema: Boolean = false): DataFrame = {
-    val table = Paths.get(tablePath)
     // tip from the manifests (repairing a wedged CURRENT on the way), never
     // the raw pointer: a kill between manifest write and pointer swap must
     // not make the default read disagree with readByTag on the same table
-    val k = if (version >= 0) version
-      else recoverCommitted(table).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot at $tablePath"))
+    val k = versionOrTip(tablePath, version)
     spark.read.option("mergeSchema", mergeSchema.toString)
-      .parquet(table.resolve(s"v$k").toString).drop("_chunk")
+      .parquet(Paths.get(tablePath).resolve(s"v$k").toString).drop("_chunk")
   }
 
   /** Read with manifest-level data skipping: whole FILES are pruned against
@@ -714,9 +766,7 @@ object Snapshot {
                 predicate: org.apache.spark.sql.Column, version: Int = -1,
                 mergeSchema: Boolean = false): DataFrame = {
     val table = Paths.get(tablePath)
-    val k = if (version >= 0) version
-      else recoverCommitted(table).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot at $tablePath"))
+    val k = versionOrTip(tablePath, version)
     val dataDir = table.resolve(s"v$k")
     val expr = org.apache.spark.sql.GraftColumnBridge.catalystExpression(predicate)
     val (kept, total) = pruneFilesExpr(table, k, expr)
@@ -768,25 +818,16 @@ object Snapshot {
 
   private def pruneFilesExpr(table: Path, k: Int,
       expr: org.apache.spark.sql.catalyst.expressions.Expression): (Seq[Path], Int) = {
-    // ONE manifest read feeds both the stats parse and the chunk metadata
-    val m = Files.readString(table.resolve(s"manifest-v$k.json"))
-    val stats = parsedFileStatsOf(m)
-    val dataDir = table.resolve(s"v$k")
-    val all = listDir(dataDir)
-      .filter(_.getFileName.toString.startsWith("_chunk=")).sortBy(_.toString)
-      .flatMap { cd =>
-        val c = cd.getFileName.toString.stripPrefix("_chunk=")
-        listDir(cd).filter(_.getFileName.toString.endsWith(".parquet"))
-          .sortBy(_.toString).map(f => (s"$c/${f.getFileName}", f))
-      }
+    val mf = manifest(table, k)
+    val all = chunkDirs(table.resolve(s"v$k")).sortBy(_.toString).flatMap { cd =>
+      parquetFiles(cd).sortBy(_.toString).map(f => (s"${chunkId(cd)}/${f.getFileName}", f))
+    }
     // chunk-hash pruning: an equality/IN predicate on the table's chunk key
     // pins the chunks those values hash to — every other chunk's files drop
     // without a stat comparison. Hashed per (physical, logical) type pair,
     // memoized.
-    val chunkKeyCol = "\"chunk_key\"\\s*:\\s*\"([^\"]+)\"".r
-      .findFirstMatchIn(m).map(_.group(1))
-    val numChunks = "\"num_chunks\"\\s*:\\s*\"?(\\d+)\"?".r
-      .findFirstMatchIn(m).map(_.group(1).toInt)
+    val chunkKeyCol = mf.head.chunkKey
+    val numChunks = mf.head.numChunks
     val chunkSetCache = scala.collection.mutable.Map[(String, String), Option[Set[Long]]]()
     def allowedFor(pt: String, lk: String): Option[Set[Long]] =
       chunkSetCache.getOrElseUpdate((pt, lk), (chunkKeyCol, numChunks) match {
@@ -795,7 +836,7 @@ object Snapshot {
       })
     val kept = all.collect {
       case (key, f) if {
-        val cs = stats.get(key).map(colStatsFor)
+        val cs = mf.fileStats.get(key).map(colStatsFor)
         val chunkOk = cs.flatMap(c => chunkKeyCol.flatMap(c.get)) match {
           case Some(st) =>
             allowedFor(st.pt, st.lk).forall(_.contains(key.takeWhile(_ != '/').toLong))
@@ -1073,33 +1114,8 @@ object Snapshot {
         from.join(to, keyCols, "left_anti").withColumn("change", lit("removed")))
   }
 
-  def manifestJson(tablePath: String, version: Int = -1): String = {
-    val table = Paths.get(tablePath)
-    val k = if (version >= 0) version else recoverCommitted(table).get
-    Files.readString(table.resolve(s"manifest-v$k.json"))
-  }
-
-  /** `<chunk>/<file>` keys of every data file a manifest references —
-    * straight from the escape-aware filestats parse (every file carries a
-    * rows entry), with the chunks-object scan as the pre-stats fallback.
-    * Fails loudly if a manifest that plainly lists files parses to zero
-    * keys: a silent empty set would make [[readAppended]] report the WHOLE
-    * table as newly added. */
-  private def manifestFileKeysOf(m: String): Set[String] = {
-    val viaStats = parsedFileStatsOf(m).keySet
-    val keys =
-      if (viaStats.nonEmpty) viaStats
-      else "\"(\\d+)\"\\s*:\\s*\\{\\s*\"rows\"\\s*:\\s*\\d+\\s*,\\s*\"files\"\\s*:\\s*\\[([^\\]]*)\\]".r
-        .findAllMatchIn(m).flatMap { g =>
-          g.group(2).split(",").iterator
-            .map(_.trim.stripPrefix("\"").stripSuffix("\""))
-            .filter(_.nonEmpty).map(f => s"${g.group(1)}/$f")
-        }.toSet
-    require(keys.nonEmpty || !m.contains("\"files\":[\""),
-      "manifest lists data files but none parsed — format drift, refusing " +
-      "to mis-report an incremental read")
-    keys
-  }
+  def manifestJson(tablePath: String, version: Int = -1): String =
+    Files.readString(manifestPath(Paths.get(tablePath), versionOrTip(tablePath, version)))
 
   /** Incremental consumption of an APPEND-ONLY table: the rows versions
     * `(fromVersion, toVersion]` added, read from exactly the files those
@@ -1119,37 +1135,28 @@ object Snapshot {
   def readAppended(spark: SparkSession, tablePath: String, fromVersion: Int,
                    toVersion: Int = -1, mergeSchema: Boolean = false): DataFrame = {
     val table = Paths.get(tablePath)
-    val tip = recoverCommitted(table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $tablePath"))
+    val tip = versionOrTip(tablePath)
     val to = if (toVersion >= 0) toVersion else tip
     require(to <= tip,
       s"toVersion $to does not exist at $tablePath: committed tip is $tip")
     require(fromVersion <= to, s"fromVersion $fromVersion > toVersion $to")
     if (fromVersion < 0)
       return read(spark, tablePath, to, mergeSchema)
-    def expired(v: Int) = new IllegalStateException(
-      s"version $v of $tablePath has been expired: cannot prove the range " +
-      "is append-only — re-bootstrap from a full read or use diff()")
-    def manifestTextOf(v: Int): String = {
-      val mf = table.resolve(s"manifest-v$v.json")
-      if (!Files.exists(mf)) throw expired(v)
-      Files.readString(mf)
-    }
-    // append-only probe: the marker renders at the manifest HEAD (see
+    def unexpired(v: Int): Int =
+      if (Files.exists(manifestPath(table, v))) v
+      else throw new IllegalStateException(
+        s"version $v of $tablePath has been expired: cannot prove the range " +
+        "is append-only — re-bootstrap from a full read or use diff()")
+    // append-only probe: the op flag renders at the manifest HEAD (see
     // commitManifest), so each range version costs a bounded prefix read,
     // never its table-sized filestats body
     ((fromVersion + 1) to to).foreach { v =>
-      val mf = table.resolve(s"manifest-v$v.json")
-      if (!Files.exists(mf)) throw expired(v)
-      val in = Files.newInputStream(mf)
-      val head = try new String(in.readNBytes(512),
-        java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-      require(head.contains("\"append\":true"),
+      require(head(table, unexpired(v)).append,
         s"version $v of $tablePath is not an append commit: rewritten files " +
         "would surface old rows as new — use diff() for this range")
     }
-    val toKeys = manifestFileKeysOf(manifestTextOf(to))
-    val added = (toKeys -- manifestFileKeysOf(manifestTextOf(fromVersion))).toSeq.sorted
+    val toKeys = manifest(table, unexpired(to)).fileKeys
+    val added = (toKeys -- manifest(table, unexpired(fromVersion)).fileKeys).toSeq.sorted
     val dataDir = table.resolve(s"v$to")
     def filePath(key: String): String = {
       val Array(c, f) = key.split("/", 2)
@@ -1185,14 +1192,8 @@ object Snapshot {
   def compact(spark: SparkSession, tablePath: String,
               clusterBy: Seq[String] = Nil,
               rowsPerFile: Long = 0): Map[String, Long] = {
-    val table = Paths.get(tablePath)
-    val k = recoverCommitted(table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $tablePath"))
-    val m = manifestJson(tablePath, k)
-    val chunkKey = "\"chunk_key\":\\s*\"([^\"]+)\"".r.findFirstMatchIn(m)
-      .map(_.group(1)).getOrElse(throw new IllegalStateException("manifest missing chunk_key"))
-    val numChunks = "\"num_chunks\":\\s*(\\d+)".r.findFirstMatchIn(m)
-      .map(_.group(1).toInt).getOrElse(throw new IllegalStateException("manifest missing num_chunks"))
+    val k = versionOrTip(tablePath)
+    val (chunkKey, numChunks) = head(Paths.get(tablePath), k).chunking
     // mergeSchema: a delta append may have evolved the schema — a plain
     // read would pick one footer's columns and the rewrite would silently
     // DROP the evolved ones from the table forever
@@ -1227,11 +1228,7 @@ object Snapshot {
              observation: Option[org.apache.spark.sql.Observation] = None,
              tag: String = "", clusterBy: Seq[String] = Nil,
              rowsPerFile: Long = 0): Map[String, Long] = {
-    requireSafeTag(tag)
-    require(!df.columns.contains("_chunk"),
-      "_chunk is the table's reserved layout column: write/append/upsert " +
-      "would silently overwrite it and reads drop it — rename the column")
-    val spark = df.sparkSession
+    requireCommittable(df, tag)
     val table = Paths.get(tablePath)
     // committed tip from manifests (repairing a wedged CURRENT): falling
     // through to write() is only correct when NOTHING has ever committed
@@ -1242,62 +1239,17 @@ object Snapshot {
     // chunking is a TABLE property: an append under a different key/modulus
     // would hard-link parent files into dirs the new scheme disagrees with,
     // and chunk-hash pruning would then silently drop their rows
-    val pm = Files.readString(table.resolve(s"manifest-v$parentVersion.json"))
-    val pKey = "\"chunk_key\":\\s*\"([^\"]+)\"".r.findFirstMatchIn(pm).map(_.group(1))
-    val pN = "\"num_chunks\":\\s*(\\d+)".r.findFirstMatchIn(pm).map(_.group(1).toInt)
-    require(pKey.forall(_ == chunkKey) && pN.forall(_ == numChunks),
+    val ph = head(table, parentVersion)
+    require(ph.chunkKey.forall(_ == chunkKey) && ph.numChunks.forall(_ == numChunks),
       s"append chunking ($chunkKey, $numChunks) contradicts the parent manifest " +
-      s"(${pKey.getOrElse("?")}, ${pN.getOrElse("?")}); re-chunk via write/compact")
+      s"(${ph.chunkKey.getOrElse("?")}, ${ph.numChunks.getOrElse("?")}); re-chunk via write/compact")
     val k = parentVersion + 1
-    if (finishCommitted(table, k)) return manifestMetrics(table, k)
+    if (finishCommitted(table, k)) return head(table, k).metrics
 
-    val staging = table.resolve(s"_staging-v$k")
-    val stagedMarker = staging.resolve("_STAGED")
-    if (!Files.exists(stagedMarker)) {
-      if (Files.exists(staging)) deleteRecursively(staging)
-      val staged = stageClustered(
-        df.withColumn("_chunk", pmod(xxhash64(col(chunkKey)), lit(numChunks))),
-        numChunks, clusterBy, rowsPerFile)
-      val w = staged.write.partitionBy("_chunk").mode("overwrite")
-      (if (rowsPerFile > 0) w.option("maxRecordsPerFile", rowsPerFile) else w)
-        .parquet(staging.resolve("data").toString)
-      val m = observation.map(_.get.collect {
-        case (key, v: Long) => key -> v
-        case (key, v: Int) => key -> v.toLong
-      }).getOrElse(Map.empty[String, Long])
-      atomicWrite(stagedMarker, metricsMarker(m))
-    }
-    // see write(): resumed commits recover metrics from the marker
-    val observed = markerMetrics(stagedMarker)
-
-    // link every parent data file into v<k> (idempotent)
-    val parentDir = table.resolve(s"v$parentVersion")
-    val dataDir = table.resolve(s"v$k")
-    listDir(parentDir)
-      .filter(_.getFileName.toString.startsWith("_chunk=")).foreach { cd =>
-        val dst = dataDir.resolve(cd.getFileName.toString)
-        Files.createDirectories(dst)
-        listDir(cd)
-          .filter(_.getFileName.toString.endsWith(".parquet")).foreach { f =>
-            val lnk = dst.resolve(f.getFileName.toString)
-            if (!Files.exists(lnk)) Files.createLink(lnk, f)
-          }
-      }
-    // promote staged files under an s<k>- prefix (idempotent)
-    val stagedData = staging.resolve("data")
-    if (Files.exists(stagedData))
-      listDir(stagedData)
-        .filter(_.getFileName.toString.startsWith("_chunk=")).foreach { cd =>
-          val dst = dataDir.resolve(cd.getFileName.toString)
-          Files.createDirectories(dst)
-          listDir(cd)
-            .filter(_.getFileName.toString.endsWith(".parquet")).foreach { f =>
-              val moved = dst.resolve(s"s$k-${f.getFileName.toString}")
-              if (!Files.exists(moved))
-                Files.move(f, moved, StandardCopyOption.ATOMIC_MOVE)
-            }
-        }
-
+    val observed = stage(df, table, k, chunkKey, numChunks, observation,
+      clusterBy, rowsPerFile)
+    // every parent file is reused; staged files land as s<k>-<name>
+    linkAndPromote(table, parentVersion, k, "s", _ => true)
     commitManifest(table, k, parentVersion, chunkKey, numChunks,
       observed, tag, Seq("append" -> "true"))
     observed
@@ -1338,10 +1290,7 @@ object Snapshot {
     * upsert), staged-rewrite those chunks, hard-link the rest. */
   private def cowRewrite(df: DataFrame, tablePath: String, tag: String,
                          opName: String, keepBatch: Boolean): Map[String, Long] = {
-    requireSafeTag(tag)
-    require(!df.columns.contains("_chunk"),
-      "_chunk is the table's reserved layout column: write/append/upsert " +
-      "would silently overwrite it and reads drop it — rename the column")
+    requireCommittable(df, tag)
     val spark = df.sparkSession
     val table = Paths.get(tablePath)
     val parentVersion = recoverCommitted(table).getOrElse(
@@ -1350,20 +1299,11 @@ object Snapshot {
     if (finishCommitted(table, k)) {
       // replay of a completed commit: recover the return contract's chunk
       // counts from the manifest it committed
-      val m = Files.readString(table.resolve(s"manifest-v$k.json"))
-      val rewritten = "\"rewritten_chunks\"\\s*:\\s*\\[([^\\]]*)\\]".r
-        .findFirstMatchIn(m).map(_.group(1).split(",").count(_.trim.nonEmpty))
-        .getOrElse(0)
-      val total = listDir(table.resolve(s"v$k"))
-        .count(_.getFileName.toString.startsWith("_chunk=")).toLong
-      return Map("rewritten_chunks" -> rewritten.toLong, "total_chunks" -> total)
+      return Map("rewritten_chunks" -> head(table, k).rewrittenChunks.size.toLong,
+        "total_chunks" -> chunkDirs(table.resolve(s"v$k")).size.toLong)
     }
 
-    val m = manifestJson(tablePath, parentVersion)
-    val chunkKey = "\"chunk_key\":\\s*\"([^\"]+)\"".r.findFirstMatchIn(m)
-      .map(_.group(1)).getOrElse(throw new IllegalStateException("manifest missing chunk_key"))
-    val numChunks = "\"num_chunks\":\\s*(\\d+)".r.findFirstMatchIn(m)
-      .map(_.group(1).toInt).getOrElse(throw new IllegalStateException("manifest missing num_chunks"))
+    val (chunkKey, numChunks) = head(table, parentVersion).chunking
     def chunkOf(c: org.apache.spark.sql.Column) = pmod(xxhash64(c), lit(numChunks))
 
     val staging = table.resolve(s"_staging-v$k")
@@ -1419,7 +1359,7 @@ object Snapshot {
           // one file) per rewritten chunk regardless of upstream width
           .repartition(numChunks, col("_chunk"))
           .write.partitionBy("_chunk").mode("overwrite")
-          .parquet(staging.resolve("data").toString)
+          .parquet(stagedData(table, k).toString)
         Files.writeString(touchedFile, touched.mkString(","))
         // marker lands atomically and strictly after _TOUCHED: a kill at any
         // point either leaves no marker (rerun restages from scratch) or a
@@ -1431,44 +1371,12 @@ object Snapshot {
       .filter(_.nonEmpty).map(_.toLong).toSet
 
     // promote: link parent files of UNTOUCHED chunks, move staged rewrites
-    val parentDir = table.resolve(s"v$parentVersion")
-    val dataDir = table.resolve(s"v$k")
-    Files.createDirectories(dataDir)
-    listDir(parentDir)
-      .filter { cd =>
-        val n = cd.getFileName.toString
-        n.startsWith("_chunk=") && !touched.contains(n.stripPrefix("_chunk=").toLong)
-      }
-      .foreach { cd =>
-        val dst = dataDir.resolve(cd.getFileName.toString)
-        Files.createDirectories(dst)
-        listDir(cd).filter(_.getFileName.toString.endsWith(".parquet"))
-          .foreach { f =>
-            val lnk = dst.resolve(f.getFileName.toString)
-            if (!Files.exists(lnk)) Files.createLink(lnk, f)
-          }
-      }
-    val stagedData = staging.resolve("data")
-    if (Files.exists(stagedData))
-      listDir(stagedData)
-        .filter(_.getFileName.toString.startsWith("_chunk=")).foreach { cd =>
-          val dst = dataDir.resolve(cd.getFileName.toString)
-          Files.createDirectories(dst)
-          listDir(cd).filter(_.getFileName.toString.endsWith(".parquet"))
-            .foreach { f =>
-              val moved = dst.resolve(s"u$k-${f.getFileName.toString}")
-              if (!Files.exists(moved))
-                Files.move(f, moved, StandardCopyOption.ATOMIC_MOVE)
-            }
-        }
-
+    val dataDir = linkAndPromote(table, parentVersion, k, "u", c => !touched.contains(c))
     commitManifest(table, k, parentVersion, chunkKey, numChunks,
       Map.empty, tag, Seq(opName -> "true",
         "rewritten_chunks" -> Json.arr(touched.toSeq.sorted.map(_.toString))))
-    val totalChunks = listDir(dataDir)
-      .count(_.getFileName.toString.startsWith("_chunk=")).toLong
     Map("rewritten_chunks" -> touched.size.toLong,
-      "total_chunks" -> totalChunks)
+      "total_chunks" -> chunkDirs(dataDir).size.toLong)
   }
 
   /** Tags of every committed snapshot (empty tags excluded). The
@@ -1477,14 +1385,8 @@ object Snapshot {
     * committed and skips — see `streaming.StreamingSnapshot`. */
   def committedTags(tablePath: String): Set[String] = {
     val table = Paths.get(tablePath)
-    if (!Files.exists(table)) return Set.empty
-    val re = "\"tag\"\\s*:\\s*\"([^\"]+)\"".r
-    // head-prefix reads: this runs per streaming micro-batch, and the
-    // manifest body grew table-sized with the filestats array
-    listDir(table)
-      .filter(_.getFileName.toString.matches("manifest-v\\d+\\.json"))
-      .flatMap(p => re.findFirstMatchIn(manifestHead(p)).map(_.group(1)))
-      .toSet
+    // head reads: this runs per streaming micro-batch
+    versions(table).map(head(table, _).tag).filter(_.nonEmpty).toSet
   }
 
   /** Exact table-level column statistic from [[tableStats]]: min/max are
@@ -1502,20 +1404,12 @@ object Snapshot {
     * so it is exact on any manifest version, including pre-stats ones. */
   def tableStats(tablePath: String, version: Int = -1)
       : (Long, Map[String, ColumnStats]) = {
-    val table = Paths.get(tablePath)
-    val k = if (version >= 0) version
-      else recoverCommitted(table).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot at $tablePath"))
-    val m = Files.readString(table.resolve(s"manifest-v$k.json"))
-    val rows = "\"rows\":(\\d+),\"files\":\\[".r
-      .findAllMatchIn(m).map(_.group(1).toLong).sum
-    val fileCount = "\"files\":\\[([^\\]]*)\\]".r.findAllMatchIn(m)
-      .map(g => if (g.group(1).trim.isEmpty) 0 else g.group(1).count(_ == ',') + 1)
-      .sum
-    val colMaps = parsedFileStats(table, k).values.map(colStatsFor).toSeq
+    val mf = manifest(Paths.get(tablePath), versionOrTip(tablePath, version))
+    val rows = mf.rows
+    val colMaps = mf.fileStats.values.map(colStatsFor).toSeq
     // every file must contribute: a file without stats (pre-stats commit)
     // disqualifies column reporting, never mis-reports it
-    if (colMaps.size != fileCount || colMaps.isEmpty) return (rows, Map.empty)
+    if (colMaps.size != mf.fileKeys.size || colMaps.isEmpty) return (rows, Map.empty)
     val shared = colMaps.map(_.keySet).reduce(_ intersect _)
     val byteOrd = java.util.Arrays.compareUnsigned(_: Array[Byte], _: Array[Byte])
     val cols = shared.iterator.flatMap { c =>
@@ -1561,26 +1455,10 @@ object Snapshot {
   def metricsHistory(spark: SparkSession, tablePath: String): DataFrame = {
     import spark.implicits._
     val table = Paths.get(tablePath)
-    val verRe = "manifest-v(\\d+)\\.json".r
-    val tagRe = "\"tag\"\\s*:\\s*\"([^\"]*)\"".r
-    val metRe = "\"metrics\"\\s*:\\s*\\{([^}]*)\\}".r
-    val kvRe = "\"([^\"]+)\"\\s*:\\s*\"?(-?\\d+)\"?".r
-    val rows =
-      if (!Files.exists(table)) Seq.empty[(Int, String, String, Long)]
-      else listDir(table)
-        .flatMap { p =>
-          // full-name match: skip tmp litter from killed claims
-          (p.getFileName.toString match {
-            case verRe(v) => Some(v.toInt); case _ => None })
-            .toSeq.flatMap { v =>
-              val txt = manifestHead(p) // tag+metrics render at the head
-              val tag = tagRe.findFirstMatchIn(txt).map(_.group(1)).getOrElse("")
-              metRe.findFirstMatchIn(txt).toSeq.flatMap(m =>
-                kvRe.findAllMatchIn(m.group(1)).map(kv =>
-                  (v, tag, kv.group(1), kv.group(2).toLong)))
-            }
-        }.sortBy(r => (r._1, r._3))
-    rows.toDF("version", "tag", "metric", "value")
+    versions(table).flatMap { v =>
+      val h = head(table, v)
+      h.metrics.toSeq.sortBy(_._1).map { case (m, x) => (v, h.tag, m, x) }
+    }.toDF("version", "tag", "metric", "value")
   }
 
   /** Snapshot expiry (Iceberg `expire_snapshots`): drop all but the last
@@ -1589,20 +1467,15 @@ object Snapshot {
   def expireSnapshots(tablePath: String, keep: Int = 2): Seq[Int] = {
     require(keep >= 1, "must keep at least the current snapshot")
     val table = Paths.get(tablePath)
-    if (!Files.exists(table)) return Nil // sibling APIs no-op on absent tables
-    val versions = listDir(table)
-      .map(_.getFileName.toString)
-      .collect { case s if s.startsWith("manifest-v") && s.endsWith(".json") =>
-        s.stripPrefix("manifest-v").stripSuffix(".json").toInt }
-      .toSeq.sorted
+    val vs = versions(table) // none on an absent table: sibling APIs no-op
     // committed tip from the manifests: on a wedged table the raw CURRENT
     // under-reports, and expiry keyed off it would DELETE the newest
     // committed-but-unpointed snapshot (repair first, then protect it)
     val cur = recoverCommitted(table).getOrElse(return Seq.empty)
-    val expire = versions.filter(_ != cur).dropRight(math.max(0, keep - 1))
+    val expire = vs.filter(_ != cur).dropRight(math.max(0, keep - 1))
     expire.foreach { v =>
       deleteRecursively(table.resolve(s"v$v"))
-      Files.deleteIfExists(table.resolve(s"manifest-v$v.json"))
+      Files.deleteIfExists(manifestPath(table, v))
     }
     expire
   }

@@ -192,4 +192,31 @@ class CoreSpec extends AnyFunSuite {
     // determinism: parse twice → identical
     assert(results == ConvParser.parseAll(turns))
   }
+
+  test("Json reader: decodes what the writer escapes; prefix reads stop or ask for more") {
+    val nasty = "k\"x\\y\n\t\u0001/é"
+    val doc = Json.obj("tag" -> Json.str(nasty), "n" -> "12", "neg" -> "-3",
+      "ok" -> "true", "none" -> "null",
+      "m" -> Json.obj("filestats" -> "5"), // a NESTED key never stops a prefix read
+      "filestats" -> Json.arr(Seq(Json.obj("file" -> Json.str("0/a")))),
+      "tail" -> Json.str("t"))
+    val all = Json.parse(doc).asInstanceOf[Map[String, Any]]
+    assert(all("tag") == nasty && all("n") == "12" && all("neg") == "-3")
+    assert(all("ok") == true && all("none") == null)
+    assert(all("m") == Map("filestats" -> "5"))
+    assert(all("filestats") == Vector(Map("file" -> "0/a")))
+    assert(Json.parse(" [ 1 , \"\\u0041\" ] ") == Vector("1", "A"))
+    // every cut before the top-level key is a truncated prefix: None, never
+    // a short answer; from the key on, the head is complete
+    val keyEnd = doc.indexOf("\"filestats\":[") + "\"filestats\"".length
+    val head = all -- Seq("filestats", "tail")
+    (0 to doc.length).foreach { cut =>
+      val got = Json.parsePrefix(doc.substring(0, cut), "filestats")
+      assert(got == (if (cut < keyEnd) None else Some(head)), s"cut $cut")
+    }
+    assert(Json.parsePrefix(doc.substring(0, keyEnd + 2) + "{garbage", "filestats")
+      .contains(head))
+    for (bad <- Seq("[1,]", "{\"a\":1} x", "{\"a\" 1}", "\"\\q\"", "[1", "{\"a\":tru}"))
+      intercept[IllegalArgumentException](Json.parse(bad))
+  }
 }

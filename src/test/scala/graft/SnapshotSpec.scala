@@ -1031,6 +1031,61 @@ class SnapshotSpec extends AnyFunSuite {
     val bad = Seq(("a", 1L)).toDF("k", "_chunk")
     intercept[IllegalArgumentException] { Snapshot.write(bad, table, "k", 2) }
     assert(Snapshot.expireSnapshots(table + "/never-written") == Nil)
+    val e = intercept[IllegalStateException] {
+      Snapshot.manifestJson(table + "/never-written")
+    }
+    assert(e.getMessage.contains("no committed snapshot"))
+  }
+
+  test("chunk keys needing JSON escapes survive append, upsert, compact and readWhere") {
+    import spark.implicits._
+    // (full content, readWhere rows, files kept by the chunk-key prune, total)
+    def run(key: String) = {
+      val table = freshDir("esckey") + "/t"
+      def batch(rows: Seq[(String, Long, String)]) = rows.toDF(key, "n", "src")
+      Snapshot.write(batch((0 until 20).map(i => (s"c$i", i.toLong, "w"))), table, key, 4)
+      Snapshot.append(batch((20 until 30).map(i => (s"c$i", i.toLong, "a"))),
+        table, key, 4, tag = "a1")
+      Snapshot.upsert(batch(Seq(("c3", 300L, "u"), ("c40", 40L, "u"))), table, tag = "u1")
+      Snapshot.compact(spark, table)
+      assert(Snapshot.committedTags(table) == Set("a1", "u1"))
+      val hit = col(key) === "c3" || col(key) === "c25"
+      val (kept, total) = Snapshot.pruneFiles(Paths.get(table), 3, col(key) === "c3")
+      (Snapshot.read(spark, table).as[(String, Long, String)].collect().sorted.toSeq,
+        Snapshot.readWhere(spark, table, hit).as[(String, Long, String)].collect().sorted.toSeq,
+        kept.size, total)
+    }
+    val plain = run("k")
+    assert(plain._2 == Seq(("c25", 25L, "a"), ("c3", 300L, "u")))
+    assert(plain._3 < plain._4, s"chunk-key prune kept every file: $plain")
+    for (key <- Seq("k\"x", "k\\x")) assert(run(key) == plain, s"chunk key $key")
+  }
+
+  test("head readers never parse the manifest body") {
+    import spark.implicits._
+    val table = freshDir("headonly") + "/t"
+    def commit(n: Int): Unit = {
+      val obs = org.apache.spark.sql.Observation(s"head$n")
+      val df = (0 until n).map(i => (s"c$n-$i", i.toLong)).toDF("conv_id", "v")
+        .observe(obs, count(lit(1)).as("rows_in"))
+      Snapshot.append(df, table, "conv_id", 2, observation = Some(obs), tag = s"b$n")
+    }
+    commit(5); commit(6); commit(7) // v0..v2
+    // everything after v1's "filestats":[ becomes bytes that do not parse
+    val mf = Paths.get(table, "manifest-v1.json")
+    val txt = Files.readString(mf)
+    val body = txt.indexOf("\"filestats\":[")
+    assert(body > 0)
+    Files.writeString(mf, txt.substring(0, body + "\"filestats\":[".length) + "{not json\u0000")
+    intercept[IllegalArgumentException] { Snapshot.tableStats(table, 1) }
+    assert(Snapshot.committedTags(table) == Set("b5", "b6", "b7"))
+    assert(Snapshot.metricsOfTag(table, "b6") == Some(Map("rows_in" -> 6L)))
+    assert(Snapshot.metricsHistory(spark, table).as[(Int, String, String, Long)]
+      .collect().toSeq == Seq((0, "b5", "rows_in", 5L), (1, "b6", "rows_in", 6L),
+        (2, "b7", "rows_in", 7L)))
+    // v1 is interior to (0, 2]: only its head is probed for the append flag
+    assert(Snapshot.readAppended(spark, table, 0, 2).select("conv_id").as[String]
+      .collect().toSet == ((0 until 6).map(i => s"c6-$i") ++ (0 until 7).map(i => s"c7-$i")).toSet)
   }
 
   test("stat soundness: parquet-omitted large-binary bounds never read as all-null") {
