@@ -9,13 +9,15 @@ import graft.sources.{Snapshot, TranscriptGen}
   * synthesize (or read) the transcript table → salted/skew-aware extraction →
   * checkpointed snapshot write with per-chunk lineage + extraction metrics.
   *
-  * Usage: ExtractJob <workDir> [numConvs] [cores] [numChunks]
+  * Usage: ExtractJob <workDir> [numConvs] [cores] [numChunks]; `cores`
+  * defaults to the available processors.
   */
 object ExtractJob {
   def main(args: Array[String]): Unit = {
     val workDir = if (args.length > 0) args(0) else "target/extract-job"
     val numConvs = if (args.length > 1) args(1).toInt else 2000
-    val cores = if (args.length > 2) args(2) else "32"
+    val cores = if (args.length > 2) args(2)
+                else Runtime.getRuntime.availableProcessors.toString
     val numChunks = if (args.length > 3) args(3).toInt else 32
 
     val spark = SparkSession.builder()

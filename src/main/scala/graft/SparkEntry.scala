@@ -1,63 +1,16 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.core.FixtureGen
-import graft.functions.{Clean, TextFunctions => TF, VectorFunctions => VF}
-import graft.operators.{Dedup, Extraction, Matching, Multimodal, QLearning, SimilaritySearch, TfIdfMatch, TrainingData, Transcripts}
+import graft.operators.Extraction
+import graft.queries._
 
 /** Driver contract: one `queries` entry per implemented operator family
-  * (SURVEY.md §2), with DuckDB-checkable `oracleSql` wherever the semantics
-  * are ANSI-SQL-expressible. Column names are aliased identically on both
-  * sides; float-valued outputs are scaled to exact integers (…_ppm/…_cents)
-  * computed from bit-identical double pipelines so hashes match across
-  * engines. Non-SQL-expressible operators (FSM extraction, minhash/simhash,
-  * LSH ANN, multimodal) are rows-only checked here and pinned instead by the
-  * golden-equality ScalaTests. */
+  * (SURVEY.md §2), each with a DuckDB `oracleSql` that replays it. Every
+  * query is declared once, as a [[graft.queries.QuerySpec]] in its family
+  * module under `graft.queries`; the two maps here are derived from those
+  * specs on every call. */
 object SparkEntry {
-
-  /** Scale-adaptive scan spread (optimization guide §2.5: "one huge
-    * unsplittable file … repartition immediately after the read"). The
-    * bench fixtures are SINGLE parquet files with ONE row group each, so
-    * every scan stage — and with partial aggregation, the whole heavy half
-    * of a query — otherwise runs as ONE task while 31 cores idle. When the
-    * input cannot fill the session's cores (total bytes < cores ×
-    * maxPartitionBytes, i.e. the scan would get fewer splits than cores
-    * even before the one-row-group collapse), a round-robin repartition to
-    * `defaultParallelism` moves the tiny bytes once and parallelizes all
-    * downstream per-row work. At warehouse scale the gate never fires
-    * (inputs are many files ≥ the split size), so the plan is unchanged
-    * exactly where the extra exchange would actually cost something.
-    * Deterministic: round-robin repartition sorts each input partition
-    * first (spark.sql.execution.sortBeforeRepartition, default on), and
-    * every declared query's output is key-deterministic regardless of
-    * partitioning (stable tiebreaks / exact aggregates — the r1-r5 oracle
-    * design rule). */
-  private def spread(s: SparkSession, df: DataFrame, path: String): DataFrame = {
-    val n = s.sparkContext.defaultParallelism
-    if (n <= 1) return df
-    val bytes = try {
-      val p = java.nio.file.Paths.get(path)
-      if (java.nio.file.Files.isRegularFile(p)) java.nio.file.Files.size(p)
-      else {
-        val st = java.nio.file.Files.walk(p)
-        try st.filter(java.nio.file.Files.isRegularFile(_))
-          .mapToLong(java.nio.file.Files.size(_)).sum()
-        finally st.close()
-      }
-    } catch { case _: Exception => Long.MaxValue } // unknown → leave alone
-    val maxPart = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      s.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
-    // < 64 KB: broadcast-sized dimension tables — a shuffle buys nothing
-    if (bytes >= 64L * 1024 && bytes < n.toLong * maxPart) df.repartition(n)
-    else df
-  }
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    spread(s, s.read.parquet(path), path)
-  }
 
   /** Flagship query on sf=0.001: full extraction pipeline over synthesized
     * transcripts → assembled records (driver smoke-checks rows>0). */
@@ -70,1473 +23,21 @@ object SparkEntry {
       Extraction.Config(numPartitions = 8))).toDF
   }
 
-  // ---- shared helpers ----------------------------------------------------
-  private def ppm(c: Column): Column = floor(c * 1000000L).cast("long")
-
-  /** The repo's ONE whitespace tokenizer expression (control-strip → lower →
-    * \s+ split → drop empties). Parity-sensitive: controls become spaces
-    * BEFORE the split because Java `\s` includes \x0B while RE2's does not,
-    * and `$` differs on trailing \r — every DuckDB oracle replays exactly
-    * `list_filter(string_split_regex(lower(regexp_replace(text,
-    * '[\x00-\x1F]', ' ', 'g')), '\s+'), x -> len(x) > 0)`. Keep the copies
-    * from drifting: change it here and in every oracle together. */
-  private def wsToks(text: Column): Column =
-    filter(split(
-      regexp_replace(lower(text), "[\\x00-\\x1F]", " "), "\\s+"),
-      x => length(x) > 0)
-  private val centsSum: Column => Column = c =>
-    floor(sum(c.cast("decimal(18,4)")) * 100).cast("long")
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // A1/A2: hash aggregation with exact-integer outputs
-    "q_agg_pricing" -> ((s, d) => t(s, d, "lineitem")
-      .groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(sum(col("l_quantity")).cast("long").as("sum_qty"),
-        count(lit(1)).as("cnt"),
-        floor(sum(col("l_extendedprice").cast("decimal(18,4)") *
-          (lit(1).cast("decimal(18,4)") - col("l_discount").cast("decimal(18,4)"))) * 100)
-          .cast("long").as("revenue_cents"))),
-
-    // partition pruning: documents laid out Hive-partitioned by lang; the
-    // lang predicate becomes a PartitionFilter — non-matching directories
-    // are never listed, the 100-TB-scan primitive for partitioned lakes
-    "q_partition_pruned" -> ((s, d) => s.read
-      .parquet(fixturePartitionedDocs(s, d))
-      .filter(col("lang") === "en")
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_chars")).as("sum_chars"))),
-
-    // OLAP rollup: subtotal lattice over (returnflag, linestatus) with
-    // grouping_id to disambiguate the NULL subtotal rows — one pass, the
-    // same partial-aggregatable shape as the flat agg
-    "q_rollup_pricing" -> ((s, d) => t(s, d, "lineitem")
-      .rollup(col("l_returnflag"), col("l_linestatus"))
-      .agg(sum(col("l_quantity")).cast("long").as("sum_qty"),
-        count(lit(1)).as("cnt"),
-        grouping_id().cast("long").as("gid"))),
-
-    // OLAP pivot: per-source language mix as columns — expressed as
-    // conditional aggregation (the portable, engine-neutral plan: one
-    // hash-agg, no transpose operator needed)
-    "q_pivot_lang" -> ((s, d) => t(s, d, "documents")
-      .groupBy(col("source"))
-      .agg(
-        sum(when(col("lang") === "en", 1L).otherwise(0L)).as("n_en"),
-        sum(when(col("lang") === "de", 1L).otherwise(0L)).as("n_de"),
-        sum(when(col("lang") === "fr", 1L).otherwise(0L)).as("n_fr"),
-        sum(when(!col("lang").isin("en", "de", "fr"), 1L).otherwise(0L)).as("n_other"),
-        count(lit(1)).as("n_docs"))),
-
-    // P1/P4/P7: predicate + projection (pushed to the parquet scan)
-    "q_filter_project" -> ((s, d) => t(s, d, "documents")
-      .filter(col("text").contains("spark") && col("n_chars") > 200)
-      .select(col("doc_id"), col("lang"), col("n_chars"))),
-
-    // J2: best match per key (window argmax, deterministic tiebreak)
-    "q_bestmatch_window" -> ((s, d) => {
-      val e = t(s, d, "events")
-      e.withColumn("rn", row_number().over(
-          Window.partitionBy(col("user_id")).orderBy(desc("value"), col("event_id"))))
-        .filter(col("rn") === 1)
-        .select(col("user_id"), col("event_id").as("best_event"), col("value"))
-    }),
-
-    // J4: top-k per key (k=2, Top2_Matches.py semantics)
-    "q_topk_per_key" -> ((s, d) => Matching.topKPerKey(
-        t(s, d, "events").withColumn("score", col("value")),
-        col("user_id"), 2, col("event_id"))
-      .select(col("user_id"), col("event_id"), col("value"), col("rn"))),
-
-    // X9/O3: first-match-and-stop → row_number over event time
-    "q_first_event_per_user" -> ((s, d) => t(s, d, "events")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))))
-      .filter(col("rn") === 1)
-      .select(col("user_id"), col("event_id").as("first_event"),
-        col("ts").cast("timestamp").cast("long").as("ts_epoch"))),
-
-    // Sessionization (gaps-and-islands): per-user sessions split at >30-min
-    // gaps, summarized per session — one window pass + one hash agg
-    "q_sessionize" -> ((s, d) => graft.operators.Sessionize
-      .sessionSummary(t(s, d, "events"), "user_id", "ts", "event_id", 1800L)
-      .select(col("user_id"), col("session_idx"), col("n_events"),
-        col("t_start").cast("timestamp").cast("long").as("start_epoch"),
-        col("t_end").cast("timestamp").cast("long").as("end_epoch"))),
-
-    // Sessionization (native session_window agg — same code path in
-    // Structured Streaming); windows merge at <= gap, split strictly > gap
-    "q_session_window" -> ((s, d) => graft.operators.Sessionize
-      .sessionWindows(t(s, d, "events"), "user_id", "ts", 1800L)
-      .select(col("user_id"),
-        col("w_start").cast("timestamp").cast("long").as("w_start_epoch"),
-        col("w_end").cast("timestamp").cast("long").as("w_end_epoch"),
-        col("n_events"))),
-
-    // X11: stateful capture flag as running-max window
-    "q_capture_flag" -> ((s, d) => t(s, d, "events")
-      .withColumn("flag", max(when(col("event_type") === "purchase", 1).otherwise(0))
-        .over(Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .filter(col("flag") === 1)
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("events_after_first_purchase"))),
-
-    // O4: union-by-name concat
-    "q_union_concat" -> ((s, d) => {
-      val doc = t(s, d, "documents")
-      doc.filter(col("lang") === "en").select(col("doc_id"), col("lang"), col("source"))
-        .unionByName(doc.filter(col("lang") === "fr")
-          .select(col("doc_id"), col("lang"), col("source")))
-    }),
-
-    // Dedup (exact): canonical representative per identical text
-    "q_dedup_exact" -> ((s, d) => Dedup.exact(t(s, d, "documents"), "text", "doc_id")
-      .select(col("keep_id"), col("dup_count"), length(col("text")).as("text_len"))),
-
-    // Dedup (exact substring): corpus-duplicated spans of length >= 32,
-    // hashed-gram shuffle (scale path); oracle recomputes with raw grams
-    "q_dup_substrings" -> ((s, d) => Dedup.duplicateSpans(
-      t(s, d, "documents"), "doc_id", "text", k = 32, hashGrams = true)),
-
-    // apply side of q_dup_substrings: rebuild docs with duplicated spans cut
-    "q_dup_substrings_removed" -> ((s, d) => Dedup.removeDuplicateSpans(
-      t(s, d, "documents"), "doc_id", "text", k = 32, hashGrams = true)),
-
-    // O1/O2: global top-k with unique tiebreak
-    "q_global_topk" -> ((s, d) => t(s, d, "events")
-      .orderBy(desc("value"), col("event_id")).limit(10)
-      .select(col("event_id"), col("user_id"), col("value"))),
-
-    // J3-ish equi join + aggregation
-    "q_join_agg" -> ((s, d) => t(s, d, "orders")
-      .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-      .groupBy(col("c_mktsegment"))
-      .agg(count(lit(1)).as("n_orders"), centsSum(col("o_totalprice")).as("total_cents"))),
-
-    // broadcast dim join (small side explicitly broadcast)
-    "q_dim_join_count" -> ((s, d) => t(s, d, "lineitem")
-      .join(broadcast(t(s, d, "part").filter(col("p_size") < 10)),
-        col("l_partkey") === col("p_partkey"))
-      .groupBy(col("p_brand")).agg(count(lit(1)).as("n_lines"),
-        sum(col("l_quantity")).cast("long").as("sum_qty"))),
-
-    // J1: cross join + score + threshold (theta join)
-    "q_cross_join_score" -> ((s, d) => {
-      val score = lit(1.0) / (lit(1.0) + abs(length(col("n_name")) - length(col("r_name"))))
-      Matching.crossScore(t(s, d, "nation"), t(s, d, "region"), score)
-        .filter(col("score") > 0.2)
-        .select(col("n_name"), col("r_name"), ppm(col("score")).as("score_ppm"))
-    }),
-
-    // J1 with the reference's REAL scorer (fuzzy.py:13-45): cross join two
-    // slices, TWO fuzz.token_sort_ratio score columns per pair (name vs
-    // name, type vs type), exactly the nested-iterrows result frame —
-    // broadcast-NL plus a codegen kernel instead of 820×29k Python loops.
-    // Scores are ints 0..100, directly hashable; the DuckDB oracle re-runs
-    // Ratcliff-Obershelp itself via a recursive segment CTE.
-    "q_token_sort_pairs" -> ((s, d) => {
-      val p = t(s, d, "part")
-      val l = p.filter(col("p_partkey") < 40)
-        .select(col("p_partkey").as("cis_index"),
-          col("p_name").as("l_name"), col("p_type").as("l_type"))
-      val r = p.filter(col("p_partkey") >= 100 && col("p_partkey") < 140)
-        .select(col("p_partkey").as("master_index"),
-          col("p_name").as("r_name"), col("p_type").as("r_type"))
-      l.crossJoin(broadcast(r))
-        .select(col("cis_index"), col("master_index"),
-          graft.expressions.StringSimilarity
-            .token_sort_ratio(col("l_name"), col("r_name"))
-            .cast("long").as("name_sim"),
-          graft.expressions.StringSimilarity
-            .token_sort_ratio(col("l_type"), col("r_type"))
-            .cast("long").as("type_sim"))
-    }),
-
-    // J2 with the reference's REAL scorer (bestmatch.py:19-44): argmax of
-    // difflib SequenceMatcher.ratio per rule, first-in-file-order ties,
-    // match columns nulled at `score > 0.8` — every rule row emitted. The
-    // ' kit' suffix manufactures over-threshold matches for overlapping
-    // keys so both branches carry rows.
-    "q_seqmatch_best" -> ((s, d) => {
-      val p = t(s, d, "part")
-      val rules = p.filter(col("p_partkey") < 30)
-        .select(col("p_partkey").as("rule_id"), col("p_name").as("rule"))
-      val controls = p.filter(col("p_partkey") >= 15 && col("p_partkey") < 45)
-        .select(col("p_partkey").as("control_id"),
-          concat(col("p_name"), lit(" kit")).as("control"))
-      val pairs = Matching.crossScore(rules, controls,
-        graft.expressions.StringSimilarity.seq_ratio(col("rule"), col("control")))
-      Matching.bestMatchNullBelow(pairs, col("rule_id"), col("control_id"),
-          0.8, Seq("control_id", "control"))
-        .select(col("rule_id"), col("rule"), col("control_id"), col("control"),
-          ppm(col("score")).as("score_ppm"))
-    }),
-
-    // X1-ish: first regex extraction per row
-    "q_regex_extract_first" -> ((s, d) => t(s, d, "documents")
-      .select(col("doc_id"), regexp_extract(col("text"), "\\b(b[a-z]+)\\b", 1).as("first_b"))),
-
-    // X5/X6: findall count per row
-    "q_regex_count_hits" -> ((s, d) => t(s, d, "documents")
-      .select(col("doc_id"),
-        size(regexp_extract_all(col("text"), lit("\\b(data|join)\\b"), lit(1))).as("n_hits"))),
-
-    // X2-ish: marker-delimited slice via split_part (first piece before marker)
-    "q_split_slice" -> ((s, d) => t(s, d, "documents")
-      .select(col("doc_id"),
-        substring(expr("split_part(text, ' scan ', 1)"), 1, 40).as("head40"))),
-
-    // X10: first-N-words key
-    "q_first_words_key" -> ((s, d) => t(s, d, "documents")
-      .select(col("doc_id"), concat_ws(" ",
-        expr("split_part(text, ' ', 1)"), expr("split_part(text, ' ', 2)")).as("key2"))),
-
-    // F1/F2/F6: cleaning chain
-    "q_clean_scrub" -> ((s, d) => t(s, d, "documents")
-      .select(col("doc_id"),
-        substring(trim(TF.wsTokens(Clean.lowerAlpha(col("text"))).getItem(0)), 1, 20).as("w0"),
-        substring(trim(Clean.lowerAlpha(col("text"))), 1, 40).as("cleaned40"))),
-
-    // web-corpus text normalization (ftfy-lite): a deterministic messy
-    // suffix is appended so every rule (control drop, punctuation
-    // canonicalization, ellipsis, whitespace collapse) fires on every row
-    "q_normalize_text" -> ((s, d) => {
-      val mess = "  \u2018q\u2019 \u201Cw\u201D \u2013 \u2014 \u00A0x\u2026 " +
-        "\u0001\u0007ok\ttab  end\n\n\n\ntail  "
-      t(s, d, "documents").select(col("doc_id"),
-        Clean.normalizeText(concat(col("text"), lit(mess))).as("normalized"))
-    }),
-
-    // text analysis: token counting (ws + BPE-ish)
-    "q_tokens" -> ((s, d) => t(s, d, "documents")
-      .filter(length(trim(col("text"))) > 0)
-      .select(col("doc_id"), TF.tokenCount(col("text")).as("n_tokens"),
-        TF.bpeIshTokenCount(col("text")).as("n_bpeish"))),
-
-    // text analysis: quality-score components as exact integers
-    "q_quality_ratios" -> ((s, d) => t(s, d, "documents")
-      .select(col("doc_id"),
-        ppm(TF.alphaRatio(col("text"))).as("alpha_ppm"),
-        ppm(TF.punctRatio(col("text"))).as("punct_ppm"),
-        TF.stopwordHits(col("text"), "en").as("stop_en"),
-        ppm(TF.qualityScore(col("text"))).as("quality_ppm"))),
-
-    // curation calibration: percent_rank CDF of the quality score within
-    // each source stratum (ppm-quantized for cross-engine bit equality)
-    "q_score_percentile" -> ((s, d) => {
-      val base = t(s, d, "documents").filter(length(col("text")) > 0)
-        .select(col("doc_id"), col("source"),
-          ppm(TF.qualityScore(col("text"))).as("quality_ppm"))
-      graft.operators.TrainingData
-        .percentileNormalize(base, "source", col("quality_ppm"))
-        .select(col("doc_id"), col("source"), col("quality_ppm"),
-          floor(col("pctl") * 1000000).cast("long").as("pctl_ppm"))
-    }),
-
-    // text analysis: language ID (stopword-hit argmax)
-    "q_langid" -> ((s, d) => t(s, d, "documents")
-      .select(col("doc_id"), TF.langId(col("text")).as("lang_pred"))),
-
-    // dedup (n-gram Jaccard within blocks): exact-integer similarity output
-    "q_jaccard_pairs" -> ((s, d) => Dedup.ngramJaccardPairs(
-        t(s, d, "documents"), "text", "doc_id", "source", 0.35)
-      .select(col("left_id"), col("right_id"), ppm(col("jaccard")).as("jaccard_ppm"))),
-
-    // similarity search: brute-force cosine top-3 (exact baseline)
-    "q_embedding_top3" -> ((s, d) => {
-      val emb = t(s, d, "embeddings").select(col("vec_id").as("id"), col("embedding").as("vec"))
-      SimilaritySearch.bruteForceTopK(emb.filter(col("id") < 20), emb, 3)
-        .select(col("query_id"), col("corpus_id"), ppm(col("score")).as("score_ppm"), col("rn"))
-    }),
-
-    // JSON prop extraction (events.props is a JSON string)
-    "q_json_props" -> ((s, d) => t(s, d, "events")
-      .select(col("event_id"),
-        get_json_object(col("props"), "$.k").cast("long").as("k"))),
-
-    // ---- rows-only (non-SQL-expressible; pinned by ScalaTest goldens) ----
-
-    // flagship FSM over synthesized transcripts (north-rule operator)
-    // flagship FSM, both planes, reading MATERIALIZED fixture transcripts so
-    // the DuckDB oracle replays the same rows (fixed profiles — the oracle
-    // SQL embeds the fixture path, so the input must not vary with sf)
-    "q_fsm_records" -> ((s, d) => {
-      import s.implicits._
-      val turns = s.read.parquet(fsmRec60(s)).as[graft.core.Turn]
-      Extraction.records(Extraction.extractSkewAware(turns,
-        Extraction.Config(numPartitions = 16, monsterThreshold = 200))).toDF
-    }),
-    // adversarial routing config: threshold 1 makes (nearly) every
-    // conversation a "monster", maxMonsters 2 lets only the two heaviest
-    // take dedicated partitions — the driver map stays 2 entries on ANY
-    // corpus, and the oracle (identical to q_fsm_records) proves the cap
-    // is output-invisible at the driver gate, not just in a unit test
-    "q_fsm_capped_route" -> ((s, d) => {
-      import s.implicits._
-      val turns = s.read.parquet(fsmRec60(s)).as[graft.core.Turn]
-      Extraction.records(Extraction.extractSkewAware(turns,
-        Extraction.Config(numPartitions = 16, monsterThreshold = 1,
-          maxMonsters = 2))).toDF
-    }),
-    // same records through the bucketed plane: the FSM's
-    // ClusteredDistribution(conv_id) is satisfied by the bucketed scan, so
-    // the plan has NO shuffle exchange (ExtractionSpec asserts) — the layout
-    // that makes 100 TB re-extraction shuffle-free. Same oracle as
-    // q_fsm_records (content-identical input, plan-different execution).
-    "q_fsm_bucketed" -> ((s, d) => {
-      import s.implicits._
-      // once per JVM like every other constant fixture: an unconditional
-      // writeBucketed would pay the full DROP+sort+write per invocation
-      // (inflating the query's bench time) and its DROP TABLE could yank
-      // the table from under a concurrent Verify thread's read
-      materialize("fsmrec60_bucketed") { path =>
-        Extraction.writeBucketed(s.read.parquet(fsmRec60(s)).as[graft.core.Turn],
-          "graft_q_fsm_bucketed", path, buckets = 8)
-      }
-      Extraction.records(Extraction.extractBucketed(s, "graft_q_fsm_bucketed",
-        Extraction.Config())).toDF
-    }),
-
-    // turns -> per-conversation document view (stable turn order), the
-    // bridge from the transcript table to every document-level operator
-    "q_conv_docs" -> ((s, d) => {
-      import s.implicits._
-      Extraction.conversationDocs(s.read.parquet(fsmRec60(s)).as[graft.core.Turn])
-    }),
-
-    // loss-mask spans: per-turn [start,end) offsets inside the
-    // conversation-doc concatenation + assistant-loss flag — one
-    // cumulative-sum window on the stable (conv_id, turn_idx) order
-    "q_loss_mask" -> ((s, d) => {
-      import s.implicits._
-      Extraction.lossMaskSpans(s.read.parquet(fsmRec60(s)).as[graft.core.Turn])
-    }),
-
-    // SFT pair construction: (last-K-turn context, assistant response) —
-    // bounded window frame, one shuffle, O(K) state per row
-    "q_sft_pairs" -> ((s, d) =>
-      TrainingData.sftPairs(s.read.parquet(fsmRec60(s)), contextTurns = 4)),
-
-    // conversation-level near-dup: Jaccard over turn-hash sets, blocked on
-    // a shared exact turn, df-capped stop-shingles, integer threshold
-    "q_conv_neardup" -> ((s, d) =>
-      Dedup.convNearDup(s.read.parquet(fixtureConvDupParquet(s)),
-        thrPpm = 600000L, dfCap = 40)),
-
-    // BPE merge-candidate counting (tokenizer-induction step 1): global
-    // top-50 adjacent char pairs — HOF tree + one tiny-key hash-agg
-    "q_bpe_pairs" -> ((s, d) =>
-      TrainingData.bpePairCounts(t(s, d, "documents"), "text", 50)),
-
-    // context-length histogram per source: integer bit-length buckets
-    // (no float log2 at bucket boundaries) — one hash-agg
-    "q_length_hist" -> ((s, d) =>
-      TrainingData.lengthHistogram(t(s, d, "documents"), "source",
-        col("n_chars"))),
-
-    // web-corpus URL lineage: extract + canonicalize URLs, aggregate per
-    // host — regex scan + one partial-aggregatable hash-agg
-    "q_url_hosts" -> ((s, d) =>
-      TrainingData.urlHostStats(
-        s.read.parquet(fixtureUrlsParquet(s)), "doc_id", "text")),
-
-    // C4 heuristic cleaning (line filter + doc rules) over documents with a
-    // deterministic multi-line suffix so every rule fires: a keepable tail
-    // sentence, a short line, javascript/policy marker lines, and
-    // id-derived lorem-ipsum / curly-brace doc-drop triggers
-    "q_c4_clean" -> ((s, d) => TrainingData.c4Clean(
-      t(s, d, "documents").select(col("doc_id"), concat(col("text"),
-        lit("\nThis tail sentence is long enough to keep.\nshort line\n" +
-          "Please enable javascript to continue!\n" +
-          "Read our privacy policy today okay."),
-        when(col("doc_id") % 7 === 0, lit("\nlorem ipsum dolor sit amet."))
-          .otherwise(lit("")),
-        when(col("doc_id") % 11 === 0, lit("\ncode block { x } here."))
-          .otherwise(lit(""))).as("text")),
-      "doc_id", "text")),
-
-    // Gopher composite quality filter: integer cross-multiplied ratio
-    // thresholds; suffix adds bullet/ellipsis lines so the line-shape
-    // rules exercise both branches
-    "q_gopher_quality" -> ((s, d) => TrainingData.gopherQuality(
-      t(s, d, "documents").select(col("doc_id"), concat(col("text"),
-        lit("\n- bullet point one\n* item two\nthoughts trailing off...\n" +
-          "more thoughts…\n• third bullet\n" +
-          "The end should be of use, so that we have it with stopwords."))
-        .as("text")),
-      "doc_id", "text")),
-
-    // char-entropy fingerprint (one-pass codegen kernel; per-class log
-    // terms quantized to 1e-4 pre-sum → exact-integer output)
-    "q_char_entropy" -> ((s, d) => t(s, d, "documents")
-      .filter(length(col("text")) > 0)
-      .select(col("doc_id"),
-        graft.expressions.TextHashExpressions.char_entropy_terms(col("text")).as("e"))
-      .select(col("doc_id"), col("e").getItem(0).as("n_cp"),
-        col("e").getItem(1).as("ent_q4_sum"))),
-
-    // URL-blocklist document filter: per-row exists over extracted URLs,
-    // no join, zero shuffle
-    "q_url_filter" -> ((s, d) => TrainingData.urlHostFilter(
-      s.read.parquet(fixtureUrlsParquet(s)), "doc_id", "text",
-      Seq("cdn.bar.net", "a.b.example.com", "foo.org"))),
-
-    // link/anchor extraction from HTML payload turns (anchor-corpus feed)
-    "q_link_extract" -> ((s, d) => TrainingData.linkExtract(
-      s.read.parquet(fixtureHtmlParquet(s)).filter(col("text").contains("<html")),
-      Seq("conv_id", "turn_idx"), "text")),
-
-    // container sniffing by magic bytes over a mixed binary-payload table
-    // (PNG ∪ WAV ∪ Y4M ∪ crafted PDF/HTML/text/near-miss blobs)
-    "q_mime_sniff" -> ((s, d) => Multimodal.sniffMime(
-      s.read.parquet(fixtureMimeParquet(s)), "media_id", "payload")),
-
-    // DSIR importance weights: hashed-bigram likelihood ratio of the 'en'
-    // slice (target) vs the rest (raw); tiny-key count agg + broadcast
-    // model + per-doc agg, log terms quantized 1e-4 pre-sum
-    "q_dsir_weights" -> ((s, d) => TrainingData.dsirWeights(
-      t(s, d, "documents"), "doc_id", "text", col("lang") === "en", 4096)),
-
-    // CCNet-style perplexity filter: conditional bigram LM (add-one
-    // smoothing over hashed word buckets) trained on the 'en' slice,
-    // scoring every other doc by quantized total/avg NLL
-    "q_lm_perplexity" -> ((s, d) => TrainingData.lmPerplexity(
-      t(s, d, "documents"), "doc_id", "text", col("lang") === "en", 4096)),
-
-    // JSONL sink+source roundtrip: the query WRITES documents as JSON lines
-    // then reads them back; the oracle computes the same projection from
-    // the parquet source directly, so any escape/encoding corruption in
-    // the JSON path breaks the content fingerprints
-    "q_jsonl_roundtrip" -> ((s, d) => {
-      // sf-dir-keyed path: unlike the constant-content fixtures, this one is
-      // a function of `d` — a shared path could be clobbered by a concurrent
-      // Verify/Bench over a different sf dir between write and read-back
-      val path = s"$FixtureDir/jsonl_docs_${java.lang.Integer.toHexString(d.hashCode)}"
-      t(s, d, "documents").select(col("doc_id"), col("text"), col("lang"))
-        .repartition(4).write.mode("overwrite").json(path)
-      s.read.schema("doc_id LONG, text STRING, lang STRING").json(path)
-        .select(col("doc_id"), col("lang"),
-          length(col("text")).cast("long").as("n_chars_rt"),
-          graft.expressions.TextHashExpressions.fingerprint64(col("text")).as("fp"))
-    }),
-
-    // ORC sink + source roundtrip (the other columnar interchange format,
-    // bundled with Spark): same content-fingerprint proof as the JSONL
-    // roundtrip — the oracle computes from the PARQUET source only, so a
-    // corrupting write or read would hash-mismatch
-    "q_orc_roundtrip" -> ((s, d) => {
-      val path = s"$FixtureDir/orc_docs_${java.lang.Integer.toHexString(d.hashCode)}"
-      t(s, d, "documents").select(col("doc_id"), col("text"), col("lang"))
-        .repartition(4).write.mode("overwrite").orc(path)
-      s.read.orc(path)
-        .select(col("doc_id"), col("lang"),
-          length(col("text")).cast("long").as("n_chars_rt"),
-          graft.expressions.TextHashExpressions.fingerprint64(col("text")).as("fp"))
-    }),
-
-    // gzip payload ingestion: JDK inflate in the scan stage; full-content
-    // check via the decoded text's fingerprint
-    "q_gunzip" -> ((s, d) => graft.sources.BinaryPayloads
-      .gunzipTexts(s.read.parquet(fixtureGzipParquet(s)), "doc_id", "payload")
-      .select(col("doc_id"), col("n_bytes"),
-        graft.expressions.TextHashExpressions.fingerprint64(col("text")).as("fp"),
-        substring(col("text"), 1, 60).as("head60"))),
-
-    // multi-block gzip members (stored blocks chained per RFC 1951): the
-    // same inflater scan; the oracle must WALK the block chain with a
-    // recursive CTE instead of slicing one fixed window
-    "q_gunzip_multi" -> ((s, d) => graft.sources.BinaryPayloads
-      .gunzipTexts(s.read.parquet(fixtureGzipMultiParquet(s)), "doc_id", "payload")
-      .select(col("doc_id"), col("n_bytes"),
-        graft.expressions.TextHashExpressions.fingerprint64(col("text")).as("fp"),
-        substring(col("text"), 1, 60).as("head60"))),
-
-    // HyperLogLog approx-distinct sketch of the token vocabulary: emits the
-    // mergeable integer state (2^8 buckets × max rank) — constant-width
-    // shuffle regardless of corpus size; estimate readout is driver-side
-    "q_hll_tokens" -> ((s, d) => TrainingData.hllSketch(
-      t(s, d, "documents").select(explode(wsToks(col("text"))).as("tok")),
-      col("tok"), p = 8)),
-
-    // KMV (bottom-k) distinct sketch over (doc_id, token) incidences — a
-    // stream whose distinct count exceeds k, so the D-check exercises the
-    // truncation path (the raw vocabulary is sub-k at this SF). Only 8-byte
-    // fps shuffle, TakeOrdered bottom-k (no global sort); deterministic
-    // state (byte-identical cross-engine, unlike HLL registers) and exactly
-    // mergeable across shards/days
-    "q_kmv_tokens" -> ((s, d) => TrainingData.kmvSketch(
-      t(s, d, "documents").select(col("doc_id"), explode(wsToks(col("text"))).as("tok"))
-        .select(concat(col("doc_id").cast("string"), lit(":"), col("tok"))
-          .as("v")),
-      col("v"), k = 256)),
-
-    // KMV resemblance: Jaccard of the even-doc vs odd-doc token-BIGRAM
-    // vocabularies (~900 distinct per side, > k=256 → truncation path) from
-    // the two bottom-k sketches ALONE — the bottom-k of the union is a
-    // coordinated sample, so two 10^12-row corpora compare for the price of
-    // two sketch scans plus a ≤k-row reconciliation
-    "q_kmv_resemblance" -> ((s, d) => {
-      def side(m: Int) = {
-        val t0 = wsToks(col("text"))
-        val n1 = greatest(size(t0) - 1, lit(0))
-        val bigrams = zip_with(slice(t0, lit(1), n1), slice(t0, lit(2), n1),
-          (a, b) => concat(a, lit(" "), b))
-        TrainingData.kmvSketch(
-          t(s, d, "documents").filter(pmod(col("doc_id"), lit(2)) === m)
-            .select(explode(bigrams).as("v")),
-          col("v"), k = 256)
-      }
-      TrainingData.kmvResemblance(side(0), side(1), k = 256)
-    }),
-
-    // per-GROUP KMV sketch via the native Catalyst aggregate (kmv_agg, a
-    // TypedImperativeAggregate): one sketch per language over (doc, token)
-    // incidences. Partial aggregation combines map-side, so the exchange
-    // carries ≤ one O(k) buffer per (task, lang) — per-key distinct
-    // telemetry over 10^12 rows without a per-key distinct explosion
-    "q_kmv_per_lang" -> ((s, d) => {
-      import graft.expressions.{SketchAggregates, TextHashExpressions}
-      t(s, d, "documents")
-        .select(col("lang"), col("doc_id"), explode(wsToks(col("text"))).as("tok"))
-        .select(col("lang"), TextHashExpressions.fingerprint64(
-          concat(col("doc_id").cast("string"), lit(":"), col("tok"))).as("fp"))
-        .groupBy(col("lang"))
-        .agg(SketchAggregates.kmv_agg(col("fp"), 64).as("sketch"))
-        .select(col("lang"), posexplode(col("sketch")).as(Seq("idx", "fp")))
-        .select(col("lang"), (col("idx") + 1).cast("long").as("rank"), col("fp"))
-    }),
-
-    // per-group top-k via the native Catalyst aggregate (topk_agg): longest
-    // 3 documents per language. Spark's InferWindowGroupLimit already keeps
-    // the row_number form to <=k rows per task+group before the exchange;
-    // the aggregate additionally drops BOTH local sorts (O(k) heap, no
-    // input sort), ships (rank, id)-only buffers instead of whole rows,
-    // and composes with other aggregates in one GROUP BY pass. Ranks are
-    // integers (n_chars); ties break by doc_id's UTF-8 byte order
-    "q_topk_agg" -> ((s, d) => {
-      import graft.expressions.RankAggregates
-      t(s, d, "documents")
-        .select(col("lang"), col("n_chars"),
-          col("doc_id").cast("string").as("doc_id"))
-        .groupBy(col("lang"))
-        .agg(RankAggregates.topk_agg(col("n_chars"), col("doc_id"), 3).as("tk"))
-        .select(col("lang"), posexplode(col("tk")).as(Seq("idx", "e")))
-        .select(col("lang"), (col("idx") + 1).cast("long").as("rn"),
-          col("e.rank").as("len"), col("e.id").as("doc_id"))
-    }),
-
-    // deterministic per-group uniform sample: bottom-k by a salted
-    // fingerprint of the doc id. Hash order is uniform over the group, so
-    // the k smallest hashes ARE a uniform sample without replacement —
-    // reproducible across runs, partitionings, and engines (no RNG state),
-    // and the losers never cross the exchange (O(k) agg state per
-    // (task, lang) map-side, same partial-agg plane as topk_agg)
-    "q_group_sample" -> ((s, d) => {
-      import graft.expressions.{RankAggregates, TextHashExpressions}
-      t(s, d, "documents")
-        .select(col("lang"),
-          TextHashExpressions.fingerprint64(
-            concat(lit("sample:"), col("doc_id").cast("string"))).as("fp"),
-          col("doc_id").cast("string").as("doc_id"))
-        .groupBy(col("lang"))
-        .agg(RankAggregates.bottomk_agg(col("fp"), col("doc_id"), 4).as("smp"))
-        .select(col("lang"), posexplode(col("smp")).as(Seq("idx", "e")))
-        .select(col("lang"), (col("idx") + 1).cast("long").as("draw"),
-          col("e.rank").as("fp"), col("e.id").as("doc_id"))
-    }),
-
-    // the one-pass composability payoff of aggregate-shaped top-k: corpus
-    // profile per language — doc count, total chars, the longest doc, and
-    // a deterministic 2-doc sample — in a SINGLE GROUP BY scan (one
-    // ObjectHashAggregate, one exchange of O(k) buffers). The window form
-    // of the same report needs a sort+window stage per ranking plus a join
-    // back to the counts
-    "q_lang_profile" -> ((s, d) => {
-      import graft.expressions.{RankAggregates, TextHashExpressions}
-      t(s, d, "documents")
-        .select(col("lang"), col("n_chars"),
-          col("doc_id").cast("string").as("doc_id"),
-          TextHashExpressions.fingerprint64(
-            concat(lit("sample:"), col("doc_id").cast("string"))).as("fp"))
-        .groupBy(col("lang"))
-        .agg(
-          count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("total_chars"),
-          RankAggregates.topk_agg(col("n_chars"), col("doc_id"), 1).as("tk"),
-          RankAggregates.bottomk_agg(col("fp"), col("doc_id"), 2).as("smp"))
-        .select(col("lang"), col("n_docs"), col("total_chars"),
-          col("tk").getItem(0).getField("id").as("longest_doc"),
-          col("tk").getItem(0).getField("rank").as("longest_chars"),
-          concat_ws(",", transform(col("smp"), e => e.getField("id")))
-            .as("sample_docs"))
-    }),
-
-    // count-min sketch of the token stream: mergeable (depth, bucket, cnt)
-    // state — constant-width shuffle, heavy-hitter probes without a
-    // full-vocabulary exchange
-    "q_cms_tokens" -> ((s, d) => TrainingData.cmsSketch(
-      t(s, d, "documents").select(explode(wsToks(col("text"))).as("tok")),
-      col("tok"), depth = 4, width = 1024)),
-
-    // incremental exact dedup: documents split into two "daily" batches
-    // (even ids, then odd ids), each committed through
-    // Dedup.incrementalExact — in-batch keep-min, fingerprint anti-join
-    // against the snapshot table, tagged delta append (replays are no-ops,
-    // so re-running this query is idempotent). Emits the table's final
-    // (survivor id, content fingerprint) rows. Bump the v1 suffix if the
-    // dedup semantics ever change — committed tags pin the old content.
-    "q_incremental_dedup" -> ((s, d) => {
-      // the table path hashes the SOURCE FILE metadata too: committed tags
-      // make replays no-ops, so a regenerated documents.parquet at the same
-      // sf path would otherwise keep serving the OLD table's rows while the
-      // oracle recomputes from the new data
-      val srcMeta = {
-        val f = new java.io.File(s"$d/documents.parquet")
-        s"${f.length()}_${f.lastModified()}"
-      }
-      val table = s"$ScratchDir/increm_v1_${java.lang.Integer.toHexString((d + srcMeta).hashCode)}/docs"
-      val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
-      Dedup.incrementalExact(docs.filter(col("doc_id") % 2 === 0),
-        table, "doc_id", "text", "day-0")
-      Dedup.incrementalExact(docs.filter(col("doc_id") % 2 === 1),
-        table, "doc_id", "text", "day-1")
-      graft.sources.Snapshot.read(s, table).select(col("doc_id"), col("fp"))
-    }),
-
-    // BM25 retrieval scoring against a literal query: one global stats agg
-    // (N, Σdl, per-term df), broadcast, zero-shuffle scoring; per-term
-    // contributions 1e-4-floor-quantized pre-sum
-    "q_bm25" -> ((s, d) => TfIdfMatch.bm25Scores(
-      t(s, d, "documents"), "doc_id", "text", Seq("join", "hash", "window"))),
-
-    // retrieve-then-rerank: BM25 top-50 via TakeOrdered, then the positional
-    // rerank features (coverage / ordered-bigram adjacency / tf) computed
-    // ONLY on the candidates through a broadcast join-back — the two-stage
-    // retrieval shape that keeps expensive scoring off the corpus scan
-    "q_bm25_rerank" -> ((s, d) => TfIdfMatch.bm25Rerank(
-      t(s, d, "documents"), "doc_id", "text", Seq("join", "hash", "window"),
-      k = 50, m = 10)),
-
-    // keyed snapshot MERGE (copy-on-write upsert): day-0 commits all docs,
-    // day-1 upserts modified versions of id%5==0 docs plus brand-new
-    // +1000000-offset rows; only touched chunks rewrite, the rest hard-link.
-    // Table rebuilt each run (the upsert is version-additive, a re-run on a
-    // stale table would double-apply)
-    "q_snapshot_upsert" -> ((s, d) => {
-      val dir = s"$ScratchDir/upsert_v1_${java.lang.Integer.toHexString(d.hashCode)}"
-      deleteDir(dir)
-      val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
-      graft.sources.Snapshot.write(docs, s"$dir/docs", "doc_id", 16)
-      val batch = docs.filter(col("doc_id") % 5 === 0)
-        .select(col("doc_id"), upper(col("text")).as("text"))
-        .unionByName(docs.filter(col("doc_id") % 7 === 0)
-          .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-      graft.sources.Snapshot.upsert(batch, s"$dir/docs", tag = "day-1")
-      graft.sources.Snapshot.read(s, s"$dir/docs")
-        .select(col("doc_id"), length(col("text")).cast("long").as("n_chars"),
-          graft.expressions.TextHashExpressions.fingerprint64(col("text")).as("fp"))
-    }),
-
-    // keyed snapshot DELETE (right-to-be-forgotten): purge id%9==0 docs;
-    // only their chunks rewrite, the rest hard-link — oracle is the
-    // complement select
-    "q_snapshot_delete" -> ((s, d) => {
-      val dir = s"$ScratchDir/del_v1_${java.lang.Integer.toHexString(d.hashCode)}"
-      deleteDir(dir)
-      val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
-      graft.sources.Snapshot.write(docs, s"$dir/docs", "doc_id", 16)
-      graft.sources.Snapshot.deleteKeys(
-        docs.filter(col("doc_id") % 9 === 0).select(col("doc_id")),
-        s"$dir/docs", tag = "purge")
-      graft.sources.Snapshot.read(s, s"$dir/docs")
-        .select(col("doc_id"),
-          graft.expressions.TextHashExpressions.fingerprint64(col("text")).as("fp"))
-    }),
-
-    // manifest-level data skipping: one snapshot write + four delta appends,
-    // one per event_type, so every data file carries a SINGLE event_type in
-    // its manifest stats; readWhere prunes non-matching files from the
-    // manifest alone (no footer, no listing) and re-applies the predicate
-    // as the residual filter — pruning must be output-invisible, so the
-    // oracle is the plain WHERE over the source table
-    "q_snapshot_prune" -> ((s, d) => {
-      val dir = s"$ScratchDir/prune_v1_${java.lang.Integer.toHexString(d.hashCode)}"
-      deleteDir(dir)
-      val ev = t(s, d, "events").select(col("event_id"), col("user_id"),
-        col("event_type"), col("value"))
-      val types = Seq("click", "error", "purchase", "signup", "view")
-      graft.sources.Snapshot.write(
-        ev.filter(col("event_type") === types.head), s"$dir/events", "user_id", 4)
-      types.tail.foreach(ty => graft.sources.Snapshot.append(
-        ev.filter(col("event_type") === ty), s"$dir/events", "user_id", 4,
-        tag = s"t-$ty"))
-      graft.sources.Snapshot.readWhere(s, s"$dir/events",
-        col("event_type").isin("purchase", "signup") && col("value") >= 10.0)
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          ppm(col("value")).as("value_ppm"))
-    }),
-
-    // metadata-only incremental consumption: three "daily" commits split by
-    // event_id residue; readAppended(0) must return exactly the rows days 1
-    // and 2 added — a pure manifest file-set diff, no scan of day 0 —
-    // matching the residue predicate over the source table
-    "q_snapshot_incr" -> ((s, d) => {
-      val dir = s"$ScratchDir/incr_v1_${java.lang.Integer.toHexString(d.hashCode)}"
-      deleteDir(dir)
-      val ev = t(s, d, "events").select(col("event_id"), col("user_id"))
-      graft.sources.Snapshot.write(
-        ev.filter(pmod(col("event_id"), lit(3)) === 0), s"$dir/ev", "user_id", 4)
-      (1 to 2).foreach(day => graft.sources.Snapshot.append(
-        ev.filter(pmod(col("event_id"), lit(3)) === day), s"$dir/ev", "user_id", 4,
-        tag = s"day-$day"))
-      graft.sources.Snapshot.readAppended(s, s"$dir/ev", 0)
-    }),
-
-    // §2.9 streaming sink D-coverage: the exactly-once StreamingSnapshot
-    // commit path driven by a REAL Structured Streaming query (file source,
-    // maxFilesPerTrigger=1 → one tagged delta per staged slice), then a
-    // crash-replay of batch 0 (must be a tag no-op — a double-commit would
-    // duplicate rows and hash-mismatch) and one late batch via the
-    // appendBatch primitive. The oracle recomputes the final table content
-    // straight from the source events table, so the sink's exactly-once
-    // row set gets a cross-engine check, not just a unit assertion.
-    "q_stream_commits" -> ((s, d) => {
-      val dir = s"$ScratchDir/stream_v1_${java.lang.Integer.toHexString(d.hashCode)}"
-      deleteDir(dir)
-      val ev = t(s, d, "events").select(col("event_id"), col("user_id"),
-        col("event_type"), ppm(col("value")).as("value_ppm"))
-      def slice(r: Int) = ev.filter(pmod(col("event_id"), lit(5)) === r)
-      // stage two arrival slices as single-file parquet drops
-      slice(0).coalesce(1).write.parquet(s"$dir/in/s0")
-      slice(1).coalesce(1).write.parquet(s"$dir/in/s1")
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(s"$dir/in")
-      val q = graft.streaming.StreamingSnapshot.sink(
-        stream, s"$dir/table", s"$dir/ckpt", "event_type", 4)
-      try q.processAllAvailable() finally q.stop()
-      // at-least-once redelivery of a committed batch: tag makes it a no-op
-      graft.streaming.StreamingSnapshot.appendBatch(
-        slice(0), s"$dir/table", 0L, "event_type", 4)
-      // a genuinely new late batch commits one more tagged delta
-      graft.streaming.StreamingSnapshot.appendBatch(
-        slice(2), s"$dir/table", 99L, "event_type", 4)
-      graft.sources.Snapshot.read(s, s"$dir/table")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          col("value_ppm"))
-    }),
-
-    // S5/S7 sheet addressing: write one three-sheet workbook (two nation
-    // slices + region, the reference's real sheet names — Similarity.py:28
-    // 'MCL', text_preprocessing3.py:3 'Guidelines+Description'), then read
-    // it back via sheet_name=None (all sheets) AND a named-sheet read, and
-    // emit the full readback content. The oracle recomputes the identical
-    // rows straight from the parquet source, so the whole roundtrip —
-    // stringify → _xHHHH_/XML escape → zip → workbook.xml+rels-resolved
-    // parse — must be byte-lossless and the addressing exact.
-    "q_xlsx_sheets" -> ((s, d) => {
-      val dir = s"$ScratchDir/xlsx_v1_${java.lang.Integer.toHexString(d.hashCode)}"
-      deleteDir(dir)
-      val guide = t(s, d, "nation").orderBy(col("n_nationkey"))
-        .select(col("n_nationkey").cast("string").as("k"), col("n_name").as("v"))
-      val mcl = t(s, d, "region").orderBy(col("r_regionkey"))
-        .select(col("r_regionkey").cast("string").as("k"), col("r_name").as("v"))
-      val extra = t(s, d, "nation").filter(col("n_regionkey") < 2)
-        .orderBy(col("n_nationkey"))
-        .select(col("n_name").as("k"), col("n_regionkey").cast("string").as("v"))
-      graft.sources.Xlsx.writeSheets(Seq(
-        "Guidelines+Description" -> guide, "MCL" -> mcl, "Ensure Extra" -> extra),
-        s"$dir/book.xlsx")
-      val all = graft.sources.Xlsx.readAllSheets(s, s"$dir/*.xlsx")
-        .filter(col("row_idx") > 0)
-        .select(col("sheet"), col("row_idx").cast("long").as("row_idx"),
-          concat_ws("\u0001", col("cells")).as("line"))
-      val named = graft.sources.Xlsx.readSheet(s, s"$dir/*.xlsx", "MCL")
-        .filter(col("row_idx") > 0)
-        .select(lit("named:MCL").as("sheet"),
-          col("row_idx").cast("long").as("row_idx"),
-          concat_ws("\u0001", col("cells")).as("line"))
-      all.union(named)
-    }),
-
-    // z-order clustered snapshot: files cut from the Morton-sorted run
-    // carry tight min/max on BOTH user_id and event_id, so the readWhere
-    // rectangle prunes on both dimensions — output must still equal the
-    // plain WHERE over the source
-    "q_snapshot_zorder" -> ((s, d) => {
-      val dir = s"$ScratchDir/zord_v1_${java.lang.Integer.toHexString(d.hashCode)}"
-      deleteDir(dir)
-      graft.GraftExtensions.registerOn(s)
-      val ev = t(s, d, "events").select(col("event_id"), col("user_id"),
-        col("event_type"))
-      graft.sources.Snapshot.write(ev, s"$dir/ev", "event_type", 2,
-        clusterBy = Seq("zorder2(user_id, event_id)"), rowsPerFile = 500)
-      graft.sources.Snapshot.readWhere(s, s"$dir/ev",
-        col("user_id") < 100L && col("event_id") >= 2000L)
-    }),
-
-    // metadata-only table stats surfaced as a one-row result: count/min/
-    // max/null-count come from the manifest ALONE (no scan) and must match
-    // the oracle's full aggregation over the source
-    "q_snapshot_stats" -> ((s, d) => {
-      val dir = s"$ScratchDir/tstat_v1_${java.lang.Integer.toHexString(d.hashCode)}"
-      deleteDir(dir)
-      val ev = t(s, d, "events").select(col("event_id"), col("user_id"),
-        col("event_type"))
-      graft.sources.Snapshot.write(
-        ev.filter(col("event_id") % 2 === 0), s"$dir/ev", "user_id", 4)
-      graft.sources.Snapshot.append(
-        ev.filter(col("event_id") % 2 === 1), s"$dir/ev", "user_id", 4, tag = "odd")
-      val (rows, cols) = graft.sources.Snapshot.tableStats(s"$dir/ev")
-      def l(c: String, f: graft.sources.Snapshot.ColumnStats => Any): Long =
-        f(cols(c)).asInstanceOf[Long]
-      def str(c: String, f: graft.sources.Snapshot.ColumnStats => Any): String =
-        f(cols(c)).asInstanceOf[String]
-      import s.implicits._
-      Seq((rows, l("event_id", _.min.get), l("event_id", _.max.get),
-        l("user_id", _.min.get), l("user_id", _.max.get),
-        str("event_type", _.min.get), str("event_type", _.max.get),
-        cols("event_type").nulls))
-        .toDF("n_rows", "min_eid", "max_eid", "min_uid", "max_uid",
-          "min_type", "max_type", "null_types")
-    }),
-
-    // incremental NEAR-dup: even-id docs seed the signature table, odd-id
-    // docs arrive as the next batch; emits that batch's (new, dup_of,
-    // jaccard) pairs. The table is rebuilt from scratch each run (tag
-    // replay would otherwise return the empty set on a re-run)
-    "q_incremental_neardup" -> ((s, d) => {
-      val dir = s"$ScratchDir/incnd_v1_${java.lang.Integer.toHexString(d.hashCode)}"
-      deleteDir(dir)
-      val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
-      Dedup.incrementalNearDup(docs.filter(col("doc_id") % 2 === 0),
-        s"$dir/sigs", "doc_id", "text", "day-0", threshold = 0.35).count()
-      Dedup.incrementalNearDup(docs.filter(col("doc_id") % 2 === 1),
-        s"$dir/sigs", "doc_id", "text", "day-1", threshold = 0.35)
-        .select(col("new_id"), col("dup_of"), ppm(col("jaccard")).as("jaccard_ppm"))
-    }),
-
-    // sketch-gated EXACT heavy hitters: CMS estimate as a codegen map-side
-    // gate, exact count + HAVING only on survivors — no full-vocabulary
-    // exchange; output is exact (the gate has no false negatives)
-    "q_heavy_hitters" -> ((s, d) => TrainingData.heavyHitters(
-      t(s, d, "documents").select(explode(wsToks(col("text"))).as("tok")),
-      col("tok"), minCount = 900L)),
-
-    // as-of join: latest click at-or-before each purchase per user —
-    // union-tag + ONE running-last window, no range cross product
-    "q_asof_attrib" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val us = (c: Column) => unix_micros(c.cast("timestamp"))
-      graft.operators.AsOfJoin.asOf(
-        ev.filter(col("event_type") === "purchase")
-          .select(col("event_id"), col("user_id"), col("ts")),
-        ev.filter(col("event_type") === "click")
-          .select(col("event_id"), col("user_id"), col("ts"), col("value")),
-        "user_id", "ts", "event_id", Seq("value"))
-        .select(col("event_id"), col("user_id"), us(col("ts")).as("ts_us"),
-          col("asof_event_id"), col("asof_value"),
-          us(col("asof_ts")).as("asof_ts_us"),
-          (us(col("ts")) - us(col("asof_ts"))).as("gap_us"))
-    }),
-
-    // PageRank over the host link graph (integer fixed-point, 5 rounds) —
-    // the crawl-quality prior for domain mixture weighting
-    "q_pagerank_hosts" -> ((s, d) => graft.operators.Graph.pageRank(
-      graft.operators.Graph.hostEdges(
-        s.read.parquet(fixtureUrlsParquet(s)), "doc_id", "text"),
-      "src", "dst", iters = 5)),
-
-    // SemDeDup: semantic dedup inside IVF clusters (keep the member
-    // farthest from its centroid; all cosines ppm-floored)
-    "q_semdedup" -> ((s, d) => {
-      val emb = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-      // nlist ∝ corpus size (≈64 vectors/cluster) keeps the per-cluster
-      // self-join linear in n — the docstring's scale rule, now enacted
-      // instead of a hardcoded 16; integer formula replayed by the oracle
-      val nlist = math.max(16L, (emb.count() + 63L) / 64L).toInt
-      graft.operators.Dedup.semDedup(emb, "vec_id", "embedding",
-        nlist = nlist, thresholdPpm = 300000L)
-    }),
-
-    // exact per-source size quantiles: integer-arithmetic discrete
-    // definition (rn*1e6 >= n*p), no float interpolation anywhere
-    "q_len_quantiles" -> ((s, d) => TrainingData.exactQuantiles(
-      t(s, d, "documents"), "source", col("n_chars"),
-      Seq(250000, 500000, 900000, 990000))),
-
-    // tumbling 1-hour windows over events (same plan shape as the
-    // streaming path, exact-cent sums)
-    "q_tumbling_counts" -> ((s, d) => TrainingData.tumblingCounts(
-      t(s, d, "events"), "user_id", "ts", col("value"), "1 hour")),
-
-    // BPE vocabulary induction: the FULL 12-round merge loop (each round
-    // one pass over the distinct-word table, never the corpus)
-    "q_bpe_train" -> ((s, d) => {
-      import s.implicits._
-      bpeMergesFor(s, d).toDF("rank", "l_sym", "r_sym", "merged", "n")
-    }),
-
-    // tokenizer application: sequential rank-order merge replay per doc
-    // (codegen replace chain, zero shuffle)
-    "q_bpe_encode" -> ((s, d) => TrainingData.bpeEncode(
-      t(s, d, "documents"), "doc_id", "text",
-      bpeMergesFor(s, d).map(x => (x._2, x._3)))),
-
-    // DPO preference-pair construction: per-prompt score argmax/argmin as
-    // two struct-extrema in one hash-agg (no window — viral-prompt safe)
-    "q_preference_pairs" -> ((s, d) =>
-      TrainingData.preferencePairs(
-        s.read.parquet(fixturePrefsParquet(s)),
-        "prompt", "response", col("score"), "cand_id")),
-
-    // per-conversation tool-usage profile (role counts, distinct tools,
-    // time span) — single partial-aggregatable hash-agg
-    "q_tool_stats" -> ((s, d) =>
-      TrainingData.toolStats(s.read.parquet(fsmRec60(s)))),
-
-    // salted equi-join on the skewed conv_id key (the remedy q_skew_profile
-    // decides on): right side replicated saltFactor×, hot keys split across
-    // tasks; output row-identical to the plain join, which IS the oracle
-    "q_salted_join" -> ((s, d) => {
-      val turns = s.read.parquet(fsmRec60(s))
-      val dim = turns.groupBy("conv_id").agg(count(lit(1)).as("conv_turns"))
-      Matching.saltedJoin(turns.select("conv_id", "turn_idx", "role"), dim,
-        "conv_id", saltFactor = 8,
-        uniqueCol = concat(col("conv_id"), lit("#"), col("turn_idx")))
-    }),
-
-    // key-skew profile of the heavy-tailed transcript fixture on conv_id —
-    // the salt-factor decision input; count-of-counts histogram, no global
-    // key sort anywhere
-    "q_skew_profile" -> ((s, d) =>
-      graft.operators.Diagnostics.keySkewProfile(s.read.parquet(fsmRec60(s)), "conv_id")),
-
-    // per-conversation well-formedness profile over a fixture with PLANTED
-    // violations (dup turn_idx, index gaps, blank turns, role repeats,
-    // timestamp regressions, orphan tool turns) — one window + one hash-agg
-    "q_conv_wellformed" -> ((s, d) =>
-      Transcripts.wellFormed(s.read.parquet(fixtureMessyParquet(s)))),
-
-    // repair side of the validator: blank turns dropped, duplicate indexes
-    // resolved by keep-min struct, indexes re-sequenced contiguously from 0
-    "q_conv_repair" -> ((s, d) =>
-      Transcripts.repair(s.read.parquet(fixtureMessyParquet(s)))
-        .select(col("conv_id"), col("turn_idx"), col("orig_turn_idx"),
-          col("role"), col("ts").cast("long").as("ts_epoch"),
-          graft.expressions.TextHashExpressions.fingerprint64(col("text")).as("fp"))),
-
-    // shared-prefix branch detection (re-rolled/regenerated conversations):
-    // per-turn codegen hash → per-conv prefix-hash chain → (depth, hash)
-    // family agg — only 8-byte hashes shuffle, no pairwise blocking
-    "q_branch_prefixes" -> ((s, d) =>
-      Transcripts.branchPrefixes(s.read.parquet(fixtureBranchParquet(s)))),
-
-    "q_fsm_spans" -> ((s, d) => {
-      import s.implicits._
-      val turns = s.read.parquet(fixtureFsmParquet(s, "fsmspan100",
-          FixtureGen.Profile(numConvs = 100, monsterEvery = 41,
-            monsterTurns = 80, invalidEvery = 13)))
-        .as[graft.core.Turn]
-      Extraction.spansLong(Extraction.extract(turns, Extraction.Config(numPartitions = 8)))
-    }),
-
-    // LLM-pipeline: cross-document repeated-line removal (the CCNet/
-    // RefinedWeb boilerplate-line pass) over transcript turns
-    "q_repeated_lines" -> ((s, d) => Dedup.repeatedLines(
-        fixtureTable(s, 150).withColumn("id",
-          concat_ws("#", col("conv_id"), col("turn_idx"))),
-        "text", "id")
-      .select(col("id"), col("cleaned"), col("dropped"))),
-
-    // LLM-pipeline: Gopher-style repetition signals (per-row expression
-    // trees — no shuffle; Rae et al. 2021 §A1.1)
-    // single compiled pass (RepetitionStats); the HOF column forms
-    // (TF.dupNgramPpm/dupLineCharPpm) stay as the semantic reference and
-    // are equality-pinned against this kernel in TrainingDataSpec
-    "q_repetition" -> ((s, d) => t(s, d, "documents")
-      .select(col("doc_id"),
-        graft.expressions.TextHashExpressions.repetition_stats(col("text")).as("rs"))
-      .select(col("doc_id"),
-        col("rs").getItem(0).as("dup2_ppm"),
-        col("rs").getItem(1).as("dup3_ppm"),
-        col("rs").getItem(2).as("dupline_ppm"))),
-
-    // dedup: MinHash+LSH near-dup candidates (verified jaccard)
-    "q_minhash_lsh" -> ((s, d) => Dedup.minHashLsh(
-        t(s, d, "documents"), "text", "doc_id", threshold = 0.35)
-      .select(col("left_id"), col("right_id"), ppm(col("jaccard")).as("jaccard_ppm"))),
-
-    // dedup: SimHash near-dup (pigeonhole bands — exact recall within maxHamming)
-    "q_simhash_neardup" -> ((s, d) => Dedup.simHashNearDup(
-        t(s, d, "documents"), "text", "doc_id", maxHamming = 3)),
-
-    // dedup: embedding-cosine near-dup (multi-table hyperplane LSH; the 0.3
-    // threshold matches this corpus's similarity regime — 8 tables × 2 bits
-    // gives measured recall ≥ 0.9 there, see DedupRecallSpec)
-    "q_embedding_neardup" -> ((s, d) => Dedup.embeddingNearDup(
-        t(s, d, "embeddings"), "embedding", "vec_id", dim = 64,
-        bits = 2, tables = 8, threshold = 0.3)
-      .select(col("left_id"), col("right_id"), ppm(col("cos")).as("cos_ppm"))),
-
-    // similarity search: LSH-bucketed ANN (scale path, multi-probe radius 1)
-    "q_embedding_ann_lsh" -> ((s, d) => {
-      val emb = t(s, d, "embeddings").select(col("vec_id").as("id"), col("embedding").as("vec"))
-      SimilaritySearch.lshTopK(emb.filter(col("id") < 20), emb, 3, dim = 64,
-          bits = 4, probeHamming = 1)
-        .select(col("query_id"), col("corpus_id"), ppm(col("score")).as("score_ppm"), col("rn"))
-    }),
-
-    // deterministic PLSA-EM topic matcher: the cross-engine-verifiable
-    // sibling of q_topic_match (which keeps the reference's Spark ML LDA).
-    // The full 5-iteration EM fit replays in DuckDB as an unrolled CTE chain
-    "q_plsa_match" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      graft.operators.TopicModel.plsaBestMatch(
-          docs.filter(col("doc_id") < 50)
-            .select(col("doc_id").as("id"), col("text")),
-          docs.filter(col("doc_id") >= 50 && col("doc_id") < 200)
-            .select(col("doc_id").as("id"), col("text")))
-        .select(col("left_id"), col("right_id"), ppm(col("score")).as("score_ppm"))
-    }),
-
-    // the OVER-CAP PLSA plane (the 100-TB path): fitSampleLimit 64 < the
-    // 200-doc corpus at every sf, so the fingerprint-sampled fit + the
-    // distributed per-doc theta fold-in run here — and the oracle replays
-    // the sampling chain, the sample fit, AND the fold-in independently
-    "q_plsa_foldin" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      graft.operators.TopicModel.plsaBestMatch(
-          docs.filter(col("doc_id") < 50)
-            .select(col("doc_id").as("id"), col("text")),
-          docs.filter(col("doc_id") >= 50 && col("doc_id") < 200)
-            .select(col("doc_id").as("id"), col("text")),
-          fitSampleLimit = 64)
-        .select(col("left_id"), col("right_id"), ppm(col("score")).as("score_ppm"))
-    }),
-
-    // learned-scorer matching (classifier_model.py): LR fit over
-    // concatenated pair embeddings with cosine-threshold auto-labels
-    // (0.2 here — the synthetic vectors are near-orthogonal, so the
-    // reference's 0.8 would yield a single class; the operator default
-    // stays 0.8). The fit is golden-pinned (LearnedMatchGoldenSpec); the
-    // query EXPORTS the fitted model and the oracle replays the ENTIRE
-    // inference plane — feature concat, (x-m)/sd scaling, the balanced
-    // pairwise logit ADDITION TREE (Model.logit's contract — NOT a flat
-    // left-assoc chain), the top-2 window — over the same doubles
-    "q_learned_match" -> ((s, d) => {
-      val dir = s"$FixtureDir/lr_v1_${java.lang.Integer.toHexString(d.hashCode)}"
-      deleteDir(dir)
-      val emb = t(s, d, "embeddings")
-      val left = emb.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val right = emb.filter(col("vec_id") >= 100 && col("vec_id") < 160)
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val model = graft.operators.LearnedMatch.fit(left, right, threshold = 0.2)
-      graft.operators.LearnedMatch.modelFrame(s, model)
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/model")
-      graft.operators.LearnedMatch.rankPairs(
-          graft.operators.LearnedMatch.scoredPairs(left, right, model), 2)
-        .select(col("left_id"), col("right_id"),
-          ppm(col("logit")).as("logit_ppm"), col("rn"))
-    }),
-
-    // A7: Q-learning match fold (row-independent episode folds, broadcast
-    // control side). The seeded RNG + IEEE-ordered update arithmetic make
-    // the whole 200-episode learning process bit-replayable — the DuckDB
-    // oracle re-runs it via a recursive CTE carrying the Q row as a list
-    "q_qlearning_match" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      QLearning.bestMatches(
-          emb.filter(col("vec_id") < 20)
-            .select(col("vec_id").as("id"), col("embedding").as("vec")),
-          emb.filter(col("vec_id") >= 100 && col("vec_id") < 130)
-            .select(col("vec_id").as("id"), col("embedding").as("vec")))
-        .select(col("guideline_id"), col("control_id"),
-          ppm(col("q_value")).as("q_ppm"), ppm(col("best_score")).as("score_ppm"))
-    }),
-
-    // int8-quantized ANN sweep (4x corpus memory reduction): symmetric
-    // per-vector quantization, integer dot/norm scoring — DuckDB replays
-    // the quantizer AND the integer cosine exactly
-    "q_embedding_quantized_top3" -> ((s, d) => {
-      val emb = t(s, d, "embeddings").select(col("vec_id").as("id"), col("embedding").as("vec"))
-      SimilaritySearch.quantizedTopK(emb.filter(col("id") < 20), emb, 3)
-        .select(col("query_id"), col("corpus_id"), ppm(col("score")).as("score_ppm"), col("rn"))
-    }),
-
-    // similarity search: IVF ANN (codegen'd one-pass list assignment, no
-    // corpus shuffle). lloydIters = 0 keeps centroids = exact corpus vectors
-    // (fingerprint-ranked medoid seeds), so DuckDB replays the ENTIRE
-    // operator — seeding, assignment, probing, re-rank; the Lloyd-refined
-    // path is recall-gated in DedupRecallSpec instead
-    "q_embedding_ann_ivf" -> ((s, d) => {
-      val emb = t(s, d, "embeddings").select(col("vec_id").as("id"), col("embedding").as("vec"))
-      SimilaritySearch.ivfTopK(emb.filter(col("id") < 20), emb, 3,
-          nlist = 16, nprobe = 4, lloydIters = 0)
-        .select(col("query_id"), col("corpus_id"), ppm(col("score")).as("score_ppm"), col("rn"))
-    }),
-
-    // multimodal generic plane: MIXED real payloads (PNG/WAV/Y4M blobs plus
-    // PDF/HTML/junk) routed by sniffed magic through the REAL codecs in one
-    // batched scan-side pass → typed dims (nulls where the container has
-    // none) → resize plan. The DuckDB oracle re-sniffs the same blobs and
-    // re-derives every dimension from container bytes.
-    "q_multimodal_features" -> ((s, d) => {
-      val media = s.read.parquet(fixtureMimeParquet(s))
-      Multimodal.resizePlan(
-          Multimodal.extractFeatures(media, "media_id", "payload"), maxEdge = 256)
-        .select(col("media_id"), col("mime"),
-          col("byte_len").cast("long").as("byte_len"),
-          col("width").cast("long").as("width"),
-          col("height").cast("long").as("height"),
-          col("n_frames").cast("long").as("n_frames"),
-          col("sample_rate").cast("long").as("sample_rate"),
-          col("out_width").cast("long").as("out_width"),
-          col("out_height").cast("long").as("out_height"))
-    }),
-    // multimodal image plane: REAL PNG decode (javax.imageio) → perceptual
-    // aHash → pigeonhole Hamming near-dup join (exact recall). Payloads are
-    // stored-deflate PNGs materialized to parquet, so the DuckDB oracle
-    // re-decodes the very same blobs with byte arithmetic.
-    "q_image_neardup" -> ((s, d) => Multimodal.imageNearDup(
-      Multimodal.extractImageFeatures(fixtureImages(s)), maxHamming = 4)),
-
-    // decode + feature extraction itself, oracle-checked: dimensions, exact
-    // per-channel pixel sums, and the 64-bit perceptual aHash
-    "q_image_features" -> ((s, d) =>
-      Multimodal.extractImageFeatures(fixtureImages(s)).toDF
-        .select(col("media_id"), col("width").cast("long").as("width"),
-          col("height").cast("long").as("height"),
-          col("sum_r"), col("sum_g"), col("sum_b"), col("ahash"))),
-
-    // multimodal audio plane: REAL WAV (RIFF/PCM16) decode — fmt-chunk
-    // fields + all-integer sample statistics, every one recomputed by the
-    // DuckDB oracle from the same blobs via little-endian byte arithmetic
-    "q_audio_features" -> ((s, d) =>
-      Multimodal.extractAudioFeatures(fixtureAudio(s)).toDF
-        .select(col("media_id"),
-          col("sample_rate").cast("long").as("sample_rate"),
-          col("channels").cast("long").as("channels"),
-          col("n_frames").cast("long").as("n_frames"),
-          col("sum_abs"), col("sum_sq"),
-          col("zero_crossings").cast("long").as("zero_crossings"),
-          col("peak").cast("long").as("peak"))),
-
-    // multimodal video plane: REAL Y4M (YUV4MPEG2 C444) decode — header
-    // parse + frame walk; luma and inter-frame motion sums are integer-exact
-    "q_video_features" -> ((s, d) =>
-      Multimodal.extractVideoFeatures(fixtureVideos(s)).toDF
-        .select(col("media_id"),
-          col("width").cast("long").as("width"),
-          col("height").cast("long").as("height"),
-          col("fps_num").cast("long").as("fps_num"),
-          col("n_frames").cast("long").as("n_frames"),
-          col("luma_sum"), col("motion_sum"))),
-
-    // real frame sampling: every 2nd frame's luma sum (pixels touched)
-    "q_video_frame_sample" -> ((s, d) =>
-      Multimodal.sampleVideoFrames(fixtureVideos(s), stride = 2)
-        .select(col("media_id"), col("frame_idx").cast("long").as("frame_idx"),
-          col("frame_luma"))),
-
-    // boilerplate strip over fixture HTML turns
-    "q_boilerplate" -> ((s, d) => {
-      import s.implicits._
-      s.read.parquet(fixtureHtmlParquet(s))
-        .filter(col("text").contains("<html"))
-        .select(col("conv_id"), col("turn_idx"), col("text"))
-        .as[(String, Int, String)]
-        .map { case (c, i, x) => (c, i, graft.core.Boilerplate.stripHtml(x)) }
-        .toDF("conv_id", "turn_idx", "main_content")
-    }),
-
-    // document fingerprint (custom codegen'd 64-bit rolling-hash Expression)
-    "q_fingerprint" -> ((s, d) => t(s, d, "documents")
-      .select(col("doc_id"),
-        graft.expressions.TextHashExpressions.fingerprint64(col("text")).as("fp"))),
-
-    // F3: tokenize + stopword filter + rejoin (oracle-checked); lemmatizer
-    // variant below is rows-only (custom suffix rules)
-    "q_stopword_filter" -> ((s, d) => t(s, d, "documents")
-      .select(col("doc_id"), Clean.stopwordFiltered(col("text")).as("filtered"))),
-    // both engines see whitespace-trimmed input (Java's split drops trailing
-    // empty tokens, DuckDB's keeps them — trimming removes the divergence)
-    "q_lemmatize" -> ((s, d) => t(s, d, "documents")
-      .select(col("doc_id"),
-        Clean.lemmatize(regexp_replace(col("text"), "^\\s+|\\s+$", "")).as("lemmas"))),
-
-    // J8: scalar-query scored scan — one embedded query vs every row
-    "q_scalar_query_scan" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding").as("qv"))
-      Matching.queryScan(
-          emb.filter(col("vec_id") > 0).crossJoin(broadcast(q)),
-          graft.expressions.VectorExpressions.float_cosine(col("embedding"), col("qv")))
-        .select(col("vec_id"), ppm(col("score")).as("score_ppm"))
-        .orderBy(desc("score_ppm"), col("vec_id")).limit(20)
-    }),
-
-    // X4: per-conversation line-FSM (variant B sectionizer)
-    "q_line_fsm" -> ((s, d) => {
-      import s.implicits._
-      graft.operators.LineSections.lineFsm(
-        fixtureTable(s, 150).as[graft.core.TurnSlim], 16).toDF
-    }),
-    // X5: keyword-pair window extraction (variant C)
-    "q_keyword_windows" -> ((s, d) => {
-      import s.implicits._
-      graft.operators.LineSections.keywordWindows(
-        fixtureTable(s, 150).as[graft.core.TurnSlim]).toDF
-    }),
-    // X4/X5 adversarial fuzz: the SAME operators over the marker-soup
-    // fixture, checked by the SAME DuckDB replicas pointed at it — the
-    // cross-engine pin holds far outside the well-formed fixture space
-    "q_line_fsm_fuzz" -> ((s, d) => {
-      import s.implicits._
-      graft.operators.LineSections.lineFsm(
-        s.read.parquet(fixtureMarkerSoupParquet(s))
-          .as[graft.core.TurnSlim], 16).toDF
-    }),
-    "q_keyword_windows_fuzz" -> ((s, d) => {
-      import s.implicits._
-      graft.operators.LineSections.keywordWindows(
-        s.read.parquet(fixtureMarkerSoupParquet(s))
-          .as[graft.core.TurnSlim]).toDF
-    }),
-    // S3/P5/X12: in-payload table blocks → long-form cells
-    "q_table_blocks" -> ((s, d) => {
-      import s.implicits._
-      graft.operators.TableBlocks.extract(
-        fixtureTable(s, 200).as[graft.core.TurnSlim]).toDF
-    }),
-    // S3 with the reference's capture gate: tables only from the first
-    // 'CIS Controls:' page onward, stopping after the first captured page
-    // whose next page is blank (Mutiple_CIS_Pdfs.py:20-47)
-    "q_table_blocks_gated" -> ((s, d) => {
-      import s.implicits._
-      graft.operators.TableBlocks.extractGated(
-        fixtureTable(s, 200).as[graft.core.TurnSlim]).toDF
-    }),
-    // J9/A4: union-fit TF-IDF best match — exact-vocabulary variant (the
-    // reference's TfidfVectorizer has no hashing either), DuckDB-oracled;
-    // the HashingTF variant stays unit-tested as the dense-vector path
-    "q_tfidf_match" -> ((s, d) => {
-      val doc = t(s, d, "documents").select(col("doc_id").as("id"), col("text"))
-      graft.operators.TfIdfMatch.bestMatchExact(
-        doc.filter(col("id") < 50), doc.filter(col("id") >= 50 && col("id") < 200))
-    }),
-    // F4: 'Ensure'-anchored cleaning over rule-bearing transcript turns
-    "q_ensure_anchored" -> ((s, d) => fixtureTable(s, 100)
-      .select(col("conv_id"), col("turn_idx"),
-        substring(Clean.ensureAnchored(col("text")), 1, 60).as("anchored"))
-      .filter(length(col("anchored")) > 0)),
-    // stable-ordering audit: window over (conv_id ORDER BY turn_idx) must
-    // assign row_number-1 == turn_idx on the generated table (north rule)
-    "q_ordering_audit" -> ((s, d) => fixtureTable(s, 200)
-      .withColumn("rn", row_number().over(
-          Window.partitionBy(col("conv_id")).orderBy(col("turn_idx"))))
-      .groupBy(col("conv_id"))
-      .agg(sum(when(col("rn") - 1 =!= col("turn_idx"), 1).otherwise(0)).as("violations"))
-      .filter(col("violations") === 0)),
-
-    // X7: paragraph-bounded extraction (anchor → blank line / end-of-text)
-    "q_paragraph_bounded" -> ((s, d) => fixtureTable(s, 120)
-      .select(col("conv_id"), col("turn_idx"),
-          graft.operators.RegexExtracts.paragraphBounded(col("text"), "CIS Controls:")
-            .as("paras"))
-      .filter(size(col("paras")) > 0)
-      .select(col("conv_id"), col("turn_idx"), size(col("paras")).as("n"),
-        length(element_at(col("paras"), 1)).as("first_len"))),
-    // X8: section-anchored tail slice + line-wise columnar row regex
-    "q_anchored_rows" -> ((s, d) =>
-      graft.operators.RegexExtracts.anchoredRows(
-          fixtureTable(s, 120).select(col("conv_id"), col("turn_idx"), col("text")),
-          "text", "CIS Controls[:\\s]*", "(v\\d+)\\s+(\\d+\\.\\d+)\\s+(\\w.*)", 3)
-        .select(col("conv_id"), col("turn_idx"), col("line_idx"),
-          col("g1"), col("g2"), substring(col("g3"), 1, 30).as("g3"))),
-    // X9: first-match-and-stop per conversation
-    "q_first_match_per_doc" -> ((s, d) =>
-      graft.operators.RegexExtracts.firstMatchPerDoc(
-        fixtureTable(s, 150).select(col("conv_id"), col("turn_idx"), col("text")),
-        "conv_id", "turn_idx", "text", "(\\d+)\\.(\\d+)\\.(\\d+)", 3)),
-
-    // J5: top-k per key, reversed sides (k=5, Top5_Albert.py:64)
-    "q_top5_reversed" -> ((s, d) => Matching.topKPerKey(
-        t(s, d, "events").withColumn("score", col("value")),
-        col("event_type"), 5, col("event_id"))
-      .select(col("event_type"), col("event_id"), col("value"), col("rn"))),
-
-    // J6: group-wise head(1) after global sort (BERT_Finetuned.py:136)
-    "q_group_head1" -> ((s, d) => t(s, d, "events")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("event_type")).orderBy(desc("value"), col("event_id"))))
-      .filter(col("rn") === 1)
-      .select(col("event_type"), col("event_id"), col("value"))),
-
-    // A4: LDA topic-space matcher (union-fit, k=10). The Spark ML fit is
-    // not SQL-replayable (pinned instead by LdaGoldenSpec), so the query
-    // EXPORTS the run's topic vectors and scores the readout FROM the
-    // export; the oracle replays the cosine-argmax over the same exported
-    // doubles with the loop's exact left-assoc i-ascending chain — the
-    // whole scoring tail (cosine, argmax, tie order, ppm floor) is
-    // cross-engine-checked, with only the fit itself golden-pinned.
-    "q_topic_match" -> ((s, d) => {
-      val dir = s"$FixtureDir/lda_v1_${java.lang.Integer.toHexString(d.hashCode)}"
-      deleteDir(dir)
-      val doc = t(s, d, "documents").select(col("doc_id").as("id"), col("text"))
-      val (lv, rv) = graft.operators.TopicModel.topicEmbeds(
-        doc.filter(col("id") < 30), doc.filter(col("id") >= 30 && col("id") < 120))
-      lv.coalesce(1).write.mode("overwrite").parquet(s"$dir/lv")
-      rv.coalesce(1).write.mode("overwrite").parquet(s"$dir/rv")
-      graft.operators.TopicModel.bestTopicCosine(
-          s.read.parquet(s"$dir/lv"), s.read.parquet(s"$dir/rv"))
-        .select(col("left_id"), col("right_id"), ppm(col("score")).as("score_ppm"))
-    }),
-
-    // A5: mean-pool embedding per label — posexplode + hash-agg on
-    // (label, dim): never materializes a group (VERDICT r1 #6: the
-    // collect_list formulation OOMs on a hot label at scale). Per-element
-    // micro-unit flooring makes the sums exact integers, order-independent,
-    // and engine-portable; the mean is sum_micro/cnt.
-    "q_meanpool_by_label" -> ((s, d) => t(s, d, "embeddings")
-      .select(col("label"), posexplode(col("embedding")).as(Seq("dim", "v")))
-      .groupBy(col("label"), col("dim"))
-      .agg(sum(floor(col("v").cast("double") * 1000000L).cast("long")).as("sum_micro"),
-        count(lit(1)).as("cnt"))),
-
-    // ---- training-data curation suite ----------------------------------
-    // PII scrub over a deterministically PII-augmented corpus (the fixture
-    // text carries no PII; the augmentation is the same expression on both
-    // engines, so the redaction itself is what the oracle checks)
-    "q_pii_redact" -> ((s, d) => TrainingData.piiRedact(
-        t(s, d, "documents").select(col("doc_id"),
-          concat(col("text"), lit(" contact user"), col("doc_id"),
-            lit("@example.com ip 10."), col("doc_id") % 256, lit("."),
-            (col("doc_id") * 7) % 256, lit(".4 ssn 123-45-"),
-            lpad((col("doc_id") % 10000).cast("string"), 4, "0"),
-            lit(" tel +1-555-"),
-            lpad(((col("doc_id") * 31) % 10000).cast("string"), 4, "0")).as("raw")),
-        "raw")
-      .select(col("doc_id"), col("n_email").cast("long").as("n_email"),
-        col("n_ssn").cast("long").as("n_ssn"),
-        col("n_phone").cast("long").as("n_phone"),
-        col("n_ip").cast("long").as("n_ip"), col("redacted"))),
-
-    // sub-document chunk dedup over a corpus with injected clone docs
-    // (keep-first = min(struct) hash-agg, skew-safe; see TrainingData)
-    // sliding-window chunking (overlap): zero-shuffle per-row HOF windows
-    "q_sliding_chunks" -> ((s, d) => TrainingData.slidingChunks(
-      t(s, d, "documents").select(col("doc_id"), col("text")),
-      "doc_id", "text", chunkTokens = 32, strideTokens = 24)),
-
-    "q_chunk_dedup" -> ((s, d) => {
-      val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
-      TrainingData.chunkDedup(
-        docs.unionAll(docs.filter(col("doc_id") % 5 === 0)
-          .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))),
-        "doc_id", "text", chunkTokens = 25)
-    }),
-
-    // benchmark decontamination: sliding 8-gram overlap vs the doc_id%97
-    // benchmark slice (broadcast bench side; corpus streams once)
-    "q_contamination" -> ((s, d) => TrainingData.contamination(
-      t(s, d, "documents"), "doc_id", "text", n = 8,
-      benchPred = col("doc_id") % 97 === 0)),
-
-    // Bloom-gated decontamination (the 100-TB shape: benchmark rides the
-    // plan as a 64-Kbit filter, corpus streams once with no join). The
-    // oracle replays the ENTIRE filter — fingerprint chain, double-hashed
-    // bit positions, the k-probe membership decision — so the result is
-    // pinned bit-for-bit INCLUDING deterministic false positives
-    "q_contamination_bloom" -> ((s, d) => TrainingData.contaminationBloom(
-      t(s, d, "documents"), "doc_id", "text", n = 8,
-      benchPred = col("doc_id") % 97 === 0, mBits = 65536, k = 4)),
-
-    // deterministic per-language sampling from a 64-bit id fingerprint
-    "q_stratified_sample" -> ((s, d) => TrainingData.stratifiedSample(
-        t(s, d, "documents"), "doc_id", "lang",
-        Map("en" -> 500000, "de" -> 250000, "es" -> 250000, "fr" -> 100000),
-        defaultPpm = 50000)
-      .select(col("doc_id"), col("lang"), col("bucket"))),
-
-    // Efraimidis–Spirakis weighted sampling without replacement: integer
-    // exponential race keyed on the id fingerprint, n_chars as the weight;
-    // TakeOrdered top-50 — non-survivors never shuffle
-    "q_weighted_sample" -> ((s, d) => TrainingData.weightedSample(
-        t(s, d, "documents"), "doc_id", col("n_chars"), k = 50)
-      .select(col("doc_id"), col("w"), col("pri"))),
-
-    // CCNet-style bigram-LM quality score: Laplace bigram model trained on
-    // the corpus (top-20 vocab of 31 types, so the <unk> fold is exercised),
-    // per-position log-prob quantized to 1e-4 BEFORE summation — the output
-    // is all-integer, and DuckDB retrains + rescores independently
-    "q_lm_score" -> ((s, d) => TrainingData.ngramLmScore(
-      t(s, d, "documents"), "doc_id", "text", topVocab = 20)),
-
-    // exact greedy sequence packing into 256-token context bins per lang
-    "q_seq_packing" -> ((s, d) => TrainingData.sequencePack(
-      t(s, d, "documents"), "lang", "doc_id",
-      weight = size(split(col("text"), " ")), capacity = 256)),
-
-    // near-dup cluster assignment: connected components over simhash pairs
-    // (iterative min-label propagation to the exact fixpoint)
-    "q_neardup_clusters" -> ((s, d) => Dedup.nearDupClusters(
-      Dedup.simHashNearDup(t(s, d, "documents"), "text", "doc_id"))),
-
-    // retention policy over those clusters: keep the longest member of each
-    // duplicate cluster (ties → lowest id) + every unclustered doc; emits
-    // ALL ids with the kept verdict (corpus filter + removal telemetry)
-    "q_neardup_keep" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      Dedup.keepBestPerCluster(docs,
-        Dedup.nearDupClusters(Dedup.simHashNearDup(docs, "text", "doc_id")),
-        "doc_id", col("n_chars"))
-    }),
-
-    // temperature-resampled language balance: rates derived from corpus
-    // counts (sqrt smoothing), deterministic fingerprint-bucket keep
-    "q_temperature_sample" -> ((s, d) => TrainingData.temperatureSample(
-        t(s, d, "documents"), "doc_id", "lang", topRatePpm = 300000)
-      .select(col("doc_id"), col("lang"), col("bucket"))),
-
-    // per-source quota cap, ranked by the deterministic id fingerprint
-    "q_source_cap" -> ((s, d) => TrainingData.sourceCap(
-        t(s, d, "documents"), "doc_id", "source", cap = 30)
-      .select(col("doc_id"), col("source"), col("rk").cast("long").as("rk"))),
-
-    // token-budget prefix selection in (quality desc, id) order
-    "q_token_budget" -> ((s, d) => TrainingData.tokenBudget(
-        t(s, d, "documents"), "doc_id",
-        weight = size(split(col("text"), " ")),
-        qualityDesc = col("n_chars"), budgetTokens = 10000)
-      .select(col("doc_id"), col("q"), col("w"), col("cum_tokens"))),
-
-  )
-
-  private def fixtureSlim(s: SparkSession, convs: Int) = {
-    import s.implicits._
-    // generation parallelism follows the session (was a hardcoded 8): the
-    // per-conversation synthesis is seeded per convIdx, so the table is
-    // identical as a SET for any parallelism — but both the generating
-    // flatMap and every later scan of the written files (one row group per
-    // file) gain machine-width tasks instead of 8
-    graft.sources.TranscriptGen.generate(s,
-      FixtureGen.Profile(numConvs = convs, monsterEvery = 41, monsterTurns = 80,
-        invalidEvery = 13), math.max(8, s.sparkContext.defaultParallelism))
-      .select(col("conv_id"), col("turn_idx"), col("text"))
-      .as[graft.core.TurnSlim]
-  }
+  private def specs: Seq[QuerySpec] =
+    OlapQueries.specs ++ FsmQueries.specs ++ DedupQueries.specs ++
+      TrainingDataQueries.specs ++ SnapshotQueries.specs ++
+      MultimodalQueries.specs ++ MatchingQueries.specs
+
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    specs.map(q => q.name -> q.run).toMap
+
+  def oracleSql: Map[String, String] = specs.map(q => q.name -> q.oracle).toMap
 
   /** Deterministic fixture table materialized to parquet at a FIXED absolute
     * path, so the DuckDB oracle can `read_parquet` the very same input the
     * Spark query consumed (VERDICT r1 #3: fixture-based queries were
     * rows-only merely because the oracle could not see their input).
-    * Written once per JVM; content is a pure function of `convs` (seeded). */
+    * Each fixture is written once per JVM (see [[graft.queries.Fixture]]). */
   val FixtureDir = "/root/repo/target/qfix"
 
   /** Scratch root for the snapshot TABLES the table-format queries rebuild
@@ -1553,3254 +54,4 @@ object SparkEntry {
     if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get("/dev/shm")))
       "/dev/shm/graft-qfix"
     else FixtureDir)
-
-  /** Remove a fixture directory tree if present — the snapshot-table
-    * queries rebuild from scratch each run (their commits are
-    * version-additive; a re-run on a stale table would double-apply). */
-  private def deleteDir(dir: String): Unit = {
-    val p = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      val st = java.nio.file.Files.walk(p) // must close: leaks a dir handle
-      try st.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(java.nio.file.Files.delete)
-      finally st.close()
-    }
-  }
-
-  /** Merge rounds for the BPE induction queries (q_bpe_train/q_bpe_encode);
-    * the oracle unrolls one CTE block per round. */
-  private val BpeMerges = 12
-
-  // one training run per sf dir — q_bpe_train and q_bpe_encode share it
-  private var bpeMemo = Map.empty[String, Seq[(Int, String, String, String, Long)]]
-  private def bpeMergesFor(s: SparkSession, d: String) = synchronized {
-    bpeMemo.getOrElse(d, {
-      val m = TrainingData.bpeTrainMerges(t(s, d, "documents"), "text", BpeMerges)
-      bpeMemo += d -> m
-      m
-    })
-  }
-  private val fixtureWritten = scala.collection.mutable.Set[String]()
-  /** Writes fixture `name` under [[FixtureDir]] once per JVM and returns its
-    * path. The path is built on every call, never cached, so a caller that
-    * points FixtureDir elsewhere gets fresh fixtures there. The lock is held
-    * across the write (concurrent Verify threads must not read a half-written
-    * fixture), and a fixture counts as written only once `write` returns. */
-  private def materialize(name: String)(write: String => Unit): String = synchronized {
-    val path = s"$FixtureDir/$name"
-    if (!fixtureWritten.contains(path)) {
-      write(path)
-      fixtureWritten += path
-    }
-    path
-  }
-  private def fixtureParquet(s: SparkSession, convs: Int): String = materialize(s"slim$convs") { path =>
-    fixtureSlim(s, convs).toDF.write.mode("overwrite").parquet(path)
-  }
-  private def fixtureTable(s: SparkSession, convs: Int): DataFrame = {
-    val path = fixtureParquet(s, convs)
-    spread(s, s.read.parquet(path), path)
-  }
-
-  /** Transcript fixture for the FSM queries, materialized once per name. */
-  private def fixtureFsmParquet(s: SparkSession, name: String,
-                                profile: FixtureGen.Profile): String = materialize(name) { path =>
-    // session-width generation parallelism (was 8) — same set-identical
-    // contract as fixtureSlim above
-    graft.sources.TranscriptGen.generate(s, profile,
-        math.max(8, s.sparkContext.defaultParallelism))
-      .toDF.write.mode("overwrite").parquet(path)
-  }
-
-  /** The 60-conversation FSM transcript fixture (every 23rd conversation a
-    * 300-turn monster, every 17th invalid) that most transcript queries read. */
-  private def fsmRec60(s: SparkSession): String = fixtureFsmParquet(s, "fsmrec60",
-    FixtureGen.Profile(numConvs = 60, monsterEvery = 23, monsterTurns = 300, invalidEvery = 17))
-
-  /** Deterministic web-corpus URL fixture: 200 docs whose text embeds 0–4
-    * absolute URLs (mixed-case hosts, `www.` variants, ports, fragments)
-    * inside word soup — exercises every canonicalization branch of
-    * `TrainingData.urlHostStats`. */
-  private def fixtureUrlsParquet(s: SparkSession): String = materialize("urls200") { path =>
-    val r = new java.util.Random(20260817L)
-    val hosts = Array("example.com", "Example.COM", "www.example.com",
-      "docs.foo.org", "foo.org", "WWW.Foo.org", "cdn.bar.net", "bar.net:8080",
-      "a.b.example.com")
-    val paths = Array("", "/", "/a/b", "/a/b#frag", "/index.html",
-      "/x/y/z#top", "/q", "/a/b/")
-    val words = Array("lorem", "ipsum", "dolor", "sit", "amet", "crawl",
-      "corpus", "robots", "sitemap", "anchor")
-    val rows = (0 until 200).map { i =>
-      val sb = new StringBuilder
-      val nUrls = r.nextInt(5)
-      val nWords = 3 + r.nextInt(8)
-      for (_ <- 0 until nWords) sb.append(words(r.nextInt(words.length))).append(' ')
-      for (_ <- 0 until nUrls) {
-        sb.append("http").append(if (r.nextBoolean()) "s" else "")
-          .append("://").append(hosts(r.nextInt(hosts.length)))
-          .append(paths(r.nextInt(paths.length))).append(' ')
-        for (_ <- 0 until 1 + r.nextInt(4))
-          sb.append(words(r.nextInt(words.length))).append(' ')
-      }
-      (i.toLong, sb.toString.trim)
-    }
-    import s.implicits._
-    rows.toDF("doc_id", "text").repartition(4).write.mode("overwrite").parquet(path)
-  }
-
-  /** Deterministic preference-candidate fixture: 70 prompts × 1–5 scored
-    * candidate responses (ties included), for `TrainingData.preferencePairs`. */
-  private def fixturePrefsParquet(s: SparkSession): String = materialize("pref300") { path =>
-    val r = new java.util.Random(99173L)
-    val verbs = Array("explain", "summarize", "harden", "audit", "configure")
-    val nouns = Array("sshd", "kernel", "firewall", "logging", "accounts",
-      "sudoers", "umask")
-    val rows = (0 until 70).flatMap { p =>
-      val prompt = s"${verbs(r.nextInt(verbs.length))} the ${nouns(r.nextInt(nouns.length))} policy #$p"
-      val n = 1 + r.nextInt(5)
-      (0 until n).map { c =>
-        val score = 10L + r.nextInt(8) // narrow range → frequent ties
-        (prompt, f"cand$p%03d_$c", s"response $c to prompt $p: ${nouns(r.nextInt(nouns.length))}", score)
-      }
-    }
-    import s.implicits._
-    rows.toDF("prompt", "cand_id", "response", "score")
-      .repartition(4).write.mode("overwrite").parquet(path)
-  }
-
-  /** Conversation near-dup fixture: the fsmrec60 transcripts plus a mutated
-    * clone (suffix `_b`, one turn in seven dropped) of every third
-    * conversation — deterministic re-rolled-conversation pairs at Jaccard
-    * ≈ 6/7 over turn-hash sets. */
-  private def fixtureConvDupParquet(s: SparkSession): String = materialize("convdup") { path =>
-    val base = s.read.parquet(fsmRec60(s))
-    val clones = base
-      .filter(substring(col("conv_id"), -2, 2).cast("int") % 3 === 0)
-      .filter(col("turn_idx") % 7 =!= 3)
-      .withColumn("conv_id", concat(col("conv_id"), lit("_b")))
-    base.unionByName(clones).repartition(8)
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** Transcript fixture with PLANTED well-formedness violations, keyed off
-    * the conversation number so every violation class appears in a known
-    * subset: index gaps (drop turn 2 where id%7=0), blank text (turn 1,
-    * id%11=0), timestamp regressions (turn 3 rewound, id%13=0), forced role
-    * repeats (turns 1-2 both 'assistant', id%3=0), duplicate turn_idx
-    * (turn 6 cloned with different text, id%5=0). The base data's natural
-    * u/a/t role cycle also means every 'tool' turn is an orphan (previous
-    * turn carries no tool call) — deliberate: the oracle must agree on the
-    * natural violations too, not just the planted ones. */
-  private def fixtureMessyParquet(s: SparkSession): String = materialize("messy60") { path =>
-    val base = s.read.parquet(fsmRec60(s))
-    val idn = substring(col("conv_id"), -2, 2).cast("int")
-    val mutated = base
-      .filter(!(idn % 7 === 0 && col("turn_idx") === 2))
-      .withColumn("text",
-        when(idn % 11 === 0 && col("turn_idx") === 1, lit("  "))
-          .otherwise(col("text")))
-      .withColumn("ts",
-        when(idn % 13 === 0 && col("turn_idx") === 3,
-          col("ts") - expr("INTERVAL 1000000 SECONDS"))
-          .otherwise(col("ts")))
-      .withColumn("role",
-        when(idn % 3 === 0 && col("turn_idx").isin(1, 2), lit("assistant"))
-          .otherwise(col("role")))
-    val dups = base.filter(idn % 5 === 0 && col("turn_idx") === 6)
-      .withColumn("text", concat(col("text"), lit(" [dup-idx clone]")))
-    mutated.unionByName(dups).repartition(8)
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** Transcript fixture with re-rolled conversations for branch detection:
-    * every 3rd conversation gets a clone diverging after turn 4 (suffix
-    * regenerated), every 6th an additional clone diverging after turn 2,
-    * every 10th an exact full duplicate — known prefix families of size
-    * 2-4 at known depths, plus untouched singleton conversations. */
-  private def fixtureBranchParquet(s: SparkSession): String = materialize("branch60") { path =>
-    val base = s.read.parquet(fsmRec60(s))
-    val idn = substring(col("conv_id"), -2, 2).cast("int")
-    def reroll(mod: Int, fromTurn: Int, tag: String) = base
-      .filter(idn % mod === 0)
-      .withColumn("text",
-        when(col("turn_idx") >= fromTurn,
-          concat(col("text"), lit(s" [$tag]"))).otherwise(col("text")))
-      .withColumn("conv_id", concat(col("conv_id"), lit(s"_$tag")))
-    val dup = base.filter(idn % 10 === 0)
-      .withColumn("conv_id", concat(col("conv_id"), lit("_dup")))
-    base.unionByName(reroll(3, 4, "r1")).unionByName(reroll(6, 2, "r2"))
-      .unionByName(dup).repartition(8)
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** Adversarial MARKER-SOUP fixture for the variant sectionizers (X4/X5
-    * fuzz, round-3 verdict #8): seeded compositions of header-soup lines —
-    * canonical and mangled section names, multi-keyword lines, colon soup,
-    * case flips (headers are case-SENSITIVE for the line FSM but
-    * case-INSENSITIVE for the keyword windows), unclosed/nested keyword
-    * windows, cis-control parens, pipes, empty and indented lines —
-    * deliberately far outside the well-formed fixture space. Line 0 of every
-    * page is non-empty: Java's split('\n') and SQL's string_split diverge
-    * only on ALL-newline pages (trailing-empty elision), a shape no PDF page
-    * loop emits, and the oracle's '\n+$' strip covers trailing runs. ASCII
-    * only; whitespace limited to space/tab/newline (PyStr.strip strips
-    * unicode whitespace the SQL trim set does not). */
-  private def fixtureMarkerSoupParquet(s: SparkSession): String = materialize("soup160") { path =>
-    import s.implicits._
-    val rnd = new java.util.Random(0x50DA5071L)
-    val names = Seq("Description", "Rationale", "Impact", "Audit",
-      "Remediation", "CIS Controls", "Impact Audit", "Pre Description",
-      "description", "AUDIT", "Audit Remediation", "CIS Controls Impact")
-    val tails = Seq("", ":", ": tail", ": a:b:c", " no colon here",
-      "::::", ":\t tabbed ", " rationale impact", " (v8)")
-    val fillers = Seq("ensure the daemon is masked", "see above",
-      "a:b:c", "x | y | z", "", "  indented tail  ",
-      "cis control (1.2) and more", "CIS  Control ( 3 )",
-      "remediation steps: do: twice", "impact:none", "::",
-      "description audit remediation", "tail without colon",
-      "audit impact audit", "cis control (unclosed", ")stray paren(",
-      "\tdescription rationale impact audit remediation cis control (x)")
-    val rows = (0 until 160).flatMap { c =>
-      val turns = 1 + rnd.nextInt(6)
-      (0 until turns).map { t =>
-        val nLines = 1 + rnd.nextInt(11)
-        val body = (0 until nLines).map { _ =>
-          rnd.nextInt(3) match {
-            case 0 => names(rnd.nextInt(names.size)) + tails(rnd.nextInt(tails.size))
-            case 1 => fillers(rnd.nextInt(fillers.size))
-            case _ => (if (rnd.nextBoolean()) "  " else "") +
-              names(rnd.nextInt(names.size)) + " " +
-              fillers(rnd.nextInt(fillers.size)) + tails(rnd.nextInt(tails.size))
-          }
-        }
-        val text = (s"soup page $c.$t" +: body).mkString("\n") +
-          (if (rnd.nextInt(4) == 0) "\n\n" else "")
-        (s"soup-$c", t, text)
-      }
-    }
-    rows.toDF("conv_id", "turn_idx", "text")
-      .repartition(8).write.mode("overwrite").parquet(path)
-  }
-
-  /** Stored-deflate PNG fixture (media_id, payload) materialized once, so
-    * the image oracles read the same blobs the Spark queries decode. */
-  private def fixtureImages(s: SparkSession): org.apache.spark.sql.Dataset[Multimodal.ImageRow] = {
-    import s.implicits._
-    val path = materialize("img300")(Multimodal.synthImages(s, 300).toDF.write.mode("overwrite").parquet(_))
-    s.read.parquet(path).as[Multimodal.ImageRow]
-  }
-
-  /** WAV fixture (media_id, payload): real RIFF/PCM16 blobs, so the audio
-    * oracle re-decodes the exact bytes with LE byte arithmetic. */
-  private def fixtureAudio(s: SparkSession): org.apache.spark.sql.Dataset[Multimodal.AudioRow] = {
-    import s.implicits._
-    val path = materialize("wav200")(Multimodal.synthAudio(s, 200).toDF.write.mode("overwrite").parquet(_))
-    s.read.parquet(path).as[Multimodal.AudioRow]
-  }
-
-  /** Y4M fixture (media_id, payload): real YUV4MPEG2 C444 blobs — ASCII
-    * header + raw planes, re-decodable by the oracle with byte math. */
-  private def fixtureVideos(s: SparkSession): org.apache.spark.sql.Dataset[Multimodal.VideoRow] = {
-    import s.implicits._
-    val path = materialize("y4m60")(Multimodal.synthVideos(s, 60).toDF.write.mode("overwrite").parquet(_))
-    s.read.parquet(path).as[Multimodal.VideoRow]
-  }
-
-  /** Mixed binary-payload fixture for container sniffing: the three real
-    * media fixtures (id-offset so they never collide) plus crafted
-    * PDF/HTML/plain-text blobs and a RIFF/AVI near-miss that must NOT sniff
-    * as WAV. */
-  private def fixtureMimeParquet(s: SparkSession): String = materialize("mime600") { path =>
-    import s.implicits._
-    val img = fixtureImages(s).toDF.select(col("media_id"), col("payload"))
-    val wav = fixtureAudio(s).toDF
-      .select((col("media_id") + 10000).as("media_id"), col("payload"))
-    val y4m = fixtureVideos(s).toDF
-      .select((col("media_id") + 20000).as("media_id"), col("payload"))
-    val crafted = Seq(
-      (30000L, "%PDF-1.7\n%fixture".getBytes("UTF-8")),
-      (30001L, "<!DOCTYPE html><p>x</p>".getBytes("UTF-8")),
-      (30002L, "<html><body>y</body></html>".getBytes("UTF-8")),
-      (30003L, "plain text payload".getBytes("UTF-8")),
-      (30004L, Array[Byte](0x52, 0x49, 0x46, 0x46, 1, 2, 3, 4,
-        0x41, 0x56, 0x49, 0x20))
-    ).toDF("media_id", "payload")
-    img.unionByName(wav).unionByName(y4m).unionByName(crafted)
-      .repartition(4).write.mode("overwrite").parquet(path)
-  }
-
-  /** Gzip fixture: 300 deterministic ASCII texts wrapped as stored-deflate
-    * gzip members (single final stored block, asserted by gzipStored), so
-    * the DuckDB oracle re-extracts the bytes with fixed-offset arithmetic. */
-  private def fixtureGzipParquet(s: SparkSession): String = materialize("gz300") { path =>
-    val r = new java.util.Random(20260817L)
-    val words = Array("gzip", "stored", "deflate", "corpus", "shard",
-      "wet", "page", "crawl", "ingest", "byte")
-    val rows = (0 until 300).map { i =>
-      val n = 20 + r.nextInt(400)
-      val sb = new StringBuilder
-      for (_ <- 0 until n) sb.append(words(r.nextInt(words.length))).append(' ')
-      (i.toLong, graft.sources.BinaryPayloads.gzipStored(sb.toString.trim))
-    }
-    import s.implicits._
-    rows.toDF("doc_id", "payload").repartition(4)
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** Hive-partitioned layout of the sf documents table (partition column =
-    * lang), sf-keyed: the q_partition_pruned input demonstrating directory
-    * pruning on the partition predicate. */
-  private def fixturePartitionedDocs(s: SparkSession, d: String): String = materialize(s"docs_bylang_${java.lang.Integer.toHexString(d.hashCode)}") { path =>
-    s.read.parquet(s"$d/documents.parquet")
-      .write.mode("overwrite").partitionBy("lang").parquet(path)
-  }
-
-  /** Multi-block gzip fixture: 240 deterministic texts sized 20–1500 chars,
-    * wrapped via [[graft.sources.BinaryPayloads.gzipStoredBlocks]] with a
-    * 97-byte block cap (deliberately unaligned, 1–16 stored blocks per
-    * member) — the oracle walks the chain with a recursive CTE. */
-  private def fixtureGzipMultiParquet(s: SparkSession): String = materialize("gzmulti240") { path =>
-    val r = new java.util.Random(20260818L)
-    val words = Array("multi", "block", "stored", "deflate", "chain",
-      "walk", "recursive", "member", "shard", "byte")
-    val rows = (0 until 240).map { i =>
-      val n = 3 + r.nextInt(220)
-      val sb = new StringBuilder
-      for (_ <- 0 until n) sb.append(words(r.nextInt(words.length))).append(' ')
-      (i.toLong,
-        graft.sources.BinaryPayloads.gzipStoredBlocks(sb.toString.trim, 97))
-    }
-    import s.implicits._
-    rows.toDF("doc_id", "payload").repartition(4)
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** HTML-payload fixture (q_boilerplate's input) materialized like the slim
-    * fixtures, so the DuckDB oracle can replay `Boilerplate.stripHtml` over
-    * the exact rows the Spark query consumed. */
-  private def fixtureHtmlParquet(s: SparkSession): String = materialize("html120") { path =>
-    graft.sources.TranscriptGen.generate(s,
-      FixtureGen.Profile(numConvs = 120, monsterEvery = 0, invalidEvery = 0), 4)
-      .select(col("conv_id"), col("turn_idx"), col("text"))
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** DuckDB-SQL generators replicating `TextStats`' 64-bit hash chain in
-    * HUGEINT mod-2^64 arithmetic (the q_fingerprint technique, generalized):
-    * FNV-1a over UTF-8 bytes + splitmix64 finalization. 64×64-bit multiplies
-    * are split into 32-bit halves so the product never leaves signed-HUGEINT
-    * range: x*C mod 2^64 = x*lo + ((x*hi) mod 2^32)*2^32 (mod 2^64). This
-    * lets DuckDB recompute minhash/simhash signatures INDEPENDENTLY, so the
-    * near-dup operators get a true cross-engine oracle instead of rows-only. */
-  /** Recursive-CTE Ratcliff-Obershelp: DuckDB re-runs difflib's
-    * get_matching_blocks from first principles — diagonal runs of matching
-    * cells via one gaps-and-islands window pass, then difflib's recursive
-    * split as a recursive CTE whose LATERAL picks each segment's longest
-    * match with the exact (size desc, earliest-in-a, earliest-in-b)
-    * tie-break; matching sizes accumulate as tag-3 marker rows. Validated
-    * cell-for-cell against CPython difflib on 1300+ pairs (0 mismatches,
-    * incl. forced half-even rounding cases) before being wired here.
-    * `pairsSql` must select (pid, a, b); the caller gets CTE
-    * `ro(pid, m, la, lb, ratio)` and must open with WITH RECURSIVE. */
-  private def roOracleCtes(pairsSql: String): String =
-    s"""pairs AS ($pairsSql),
-pos AS (SELECT pid, a, b, length(a) AS la, length(b) AS lb FROM pairs),
-ac0 AS (SELECT pid, a, unnest(generate_series(0, la-1)) AS i FROM pos),
-ac AS (SELECT pid, i, substr(a, i+1, 1) AS ch FROM ac0),
-bc0 AS (SELECT pid, b, unnest(generate_series(0, lb-1)) AS j FROM pos),
-bc AS (SELECT pid, j, substr(b, j+1, 1) AS ch FROM bc0),
-cells AS (SELECT x.pid, x.i, y.j FROM ac x JOIN bc y ON x.pid = y.pid AND x.ch = y.ch),
-isl AS (SELECT pid, i, j, i - row_number() OVER (PARTITION BY pid, (j - i) ORDER BY i) AS grp FROM cells),
-runs AS (SELECT pid, i, j, (max(i) OVER (PARTITION BY pid, (j - i), grp)) - i + 1 AS r FROM isl),
-seg AS (
-  SELECT pid, 0 AS alo, la::INT AS ahi, 0 AS blo, lb::INT AS bhi, 0::BIGINT AS msize FROM pos
-  UNION ALL
-  SELECT s.pid,
-    CASE t.tag WHEN 1 THEN s.alo WHEN 2 THEN best.bi + best.k ELSE 0 END,
-    CASE t.tag WHEN 1 THEN best.bi WHEN 2 THEN s.ahi ELSE 0 END,
-    CASE t.tag WHEN 1 THEN s.blo WHEN 2 THEN best.bj + best.k ELSE 0 END,
-    CASE t.tag WHEN 1 THEN best.bj WHEN 2 THEN s.bhi ELSE 0 END,
-    CASE t.tag WHEN 3 THEN best.k::BIGINT ELSE 0::BIGINT END
-  FROM seg s
-  JOIN LATERAL (
-    SELECT r.i AS bi, r.j AS bj, least(r.r, s.ahi - r.i, s.bhi - r.j)::INT AS k
-    FROM runs r
-    WHERE r.pid = s.pid AND r.i >= s.alo AND r.i < s.ahi AND r.j >= s.blo AND r.j < s.bhi
-    ORDER BY k DESC, r.i, r.j LIMIT 1) best ON best.k > 0
-  CROSS JOIN (VALUES (1), (2), (3)) t(tag)
-  WHERE t.tag = 3
-     OR (t.tag = 1 AND s.alo < best.bi AND s.blo < best.bj)
-     OR (t.tag = 2 AND best.bi + best.k < s.ahi AND best.bj + best.k < s.bhi)),
-msum AS (SELECT pid, SUM(msize)::BIGINT AS m FROM seg GROUP BY pid),
-ro AS (SELECT p.pid, COALESCE(m.m, 0) AS m, p.la, p.lb,
-    CASE WHEN p.la + p.lb = 0 THEN 1.0::DOUBLE
-         ELSE (2.0 * COALESCE(m.m, 0)) / (p.la + p.lb) END AS ratio
-  FROM pos p LEFT JOIN msum m ON p.pid = m.pid)"""
-
-  /** fuzzywuzzy asciidammit + full_process + token sort as one SQL
-    * expression — first delete U+0080–U+00FF (force_ascii=True default),
-    * then the RE2 class `[^\p{L}\p{N}_]` is Python's unicode `\W`
-    * (verified against CPython `re` on mixed-script fixtures; the kernel
-    * mirrors the same categories). DuckDB's binary-UTF-8 list_sort is
-    * code-point order, matching Python sorted() and the kernel. */
-  private def tokenSortSql(x: String): String =
-    s"""array_to_string(list_sort(list_filter(string_split_regex(
-      trim(lower(regexp_replace(regexp_replace($x, '[\\x{0080}-\\x{00FF}]', '', 'g'),
-        '[^\\p{L}\\p{N}_]', ' ', 'g'))), ' +'),
-      t -> t <> '')), ' ')"""
-
-  /** fuzzywuzzy utils.intr = Python3 round-half-EVEN (DuckDB round() is
-    * half-away-from-zero): floor + fraction/parity CASE over the identical
-    * IEEE double `100 * (2.0*m/(la+lb))`. */
-  private def intrScoreSql: String =
-    """CAST(CASE WHEN x - floor(x) > 0.5 THEN floor(x) + 1
-            WHEN x - floor(x) < 0.5 THEN floor(x)
-            ELSE floor(x) + (CAST(floor(x) AS BIGINT) % 2) END AS BIGINT)"""
-
-  /** X5 keyword-window replica, parameterized by fixture path (shared by
-    * the slim150 query and the marker-soup fuzz query). */
-  private def keywordWindowsOracleSql(path: String): String =
-    s"""WITH t AS (SELECT * FROM read_parquet('$path')),
-         m AS (SELECT conv_id, turn_idx,
-           -- Python split(newline, maxsplit 2)[:2] keeps a trailing empty
-           -- second element (text ending in a newline gains a trailing
-           -- space in the key)
-           array_to_string(list_transform(
-             (string_split(text, chr(10)))[1:2],
-             x -> trim(x, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))), ' ') AS key,
-           regexp_extract_all(text, '(?is)description(.*?)rationale', 1) v1,
-           regexp_extract_all(text, '(?is)rationale(.*?)impact', 1) v2,
-           regexp_extract_all(text, '(?is)impact(.*?)audit', 1) v3,
-           regexp_extract_all(text, '(?is)audit(.*?)remediation', 1) v4,
-           regexp_extract_all(text, '(?is)remediation(.*?)cis control', 1) v5,
-           regexp_extract_all(text, '(?is)cis\\s*control\\s*\\((.*?)\\)', 1) v6
-          FROM t),
-         e AS (SELECT conv_id, turn_idx, key, v1,v2,v3,v4,v5,v6,
-            unnest(generate_series(0, greatest(len(v1),len(v2),len(v3),len(v4),len(v5),len(v6))-1)) AS row
-          FROM m)
-         SELECT conv_id, turn_idx, key, CAST(row AS INT) AS row,
-           trim(coalesce(v1[row+1], ''), ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)) AS description,
-           trim(coalesce(v2[row+1], ''), ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)) AS rationale,
-           trim(coalesce(v3[row+1], ''), ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)) AS impact,
-           trim(coalesce(v4[row+1], ''), ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)) AS audit,
-           trim(coalesce(v5[row+1], ''), ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)) AS remediation,
-           trim(coalesce(v6[row+1], ''), ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)) AS cis_control
-         FROM e"""
-
-  /** X4 line-FSM replica (groups + occ re-derivation), parameterized by
-    * fixture path — same sharing. */
-  /** Long-form pipe-table cell replica, parameterized by the page CTE so the
-    * plain and capture-gated variants share one block/uniquify/arity chain.
-    * `pagesCte` must define CTE `t(conv_id, turn_idx, text)`. */
-  private def tableBlocksCellsSql(pagesCte: String): String =
-    s"""WITH $pagesCte,
-pl AS (SELECT conv_id, turn_idx,
-         unnest(string_split(regexp_replace(text, '\\n+$$', ''), chr(10))) AS line,
-         unnest(generate_series(0, len(string_split(regexp_replace(text, '\\n+$$', ''), chr(10))) - 1)) AS li
-       FROM t),
-tl AS (SELECT conv_id, turn_idx, line, li,
-         li - ROW_NUMBER() OVER (PARTITION BY conv_id, turn_idx ORDER BY li) AS grp
-       FROM pl WHERE line LIKE '%|%'),
-blocks AS (SELECT conv_id, turn_idx, grp, MIN(li) AS hdr_li, COUNT(*) AS n
-           FROM tl GROUP BY conv_id, turn_idx, grp HAVING COUNT(*) >= 2),
-bidx AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY conv_id, turn_idx ORDER BY hdr_li) - 1 AS INT) AS table_idx
-         FROM blocks),
-hdr AS (SELECT b.conv_id, b.turn_idx, b.grp, b.table_idx,
-          list_transform(string_split(l.line, '|'), x -> trim(x, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) AS rawnames
-        FROM bidx b JOIN tl l ON l.conv_id = b.conv_id AND l.turn_idx = b.turn_idx AND l.li = b.hdr_li),
-hcells AS (SELECT conv_id, turn_idx, grp, table_idx,
-             unnest(rawnames) AS rawname,
-             unnest(generate_series(0, len(rawnames)-1)) AS pos,
-             len(rawnames) AS arity
-           FROM hdr),
-uniq AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY conv_id, turn_idx, grp, rawname ORDER BY pos) - 1 AS INT) AS occ
-         FROM hcells),
-hnames AS (SELECT conv_id, turn_idx, grp, table_idx, pos, arity,
-             CASE WHEN occ = 0 THEN rawname ELSE rawname || '_' || occ END AS column
-           FROM uniq),
-drows AS (SELECT l.conv_id, l.turn_idx, l.grp, b.table_idx,
-            list_transform(string_split(l.line, '|'), x -> trim(x, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) AS cells, l.li
-          FROM tl l JOIN bidx b ON l.conv_id = b.conv_id AND l.turn_idx = b.turn_idx AND l.grp = b.grp
-          WHERE l.li > b.hdr_li),
-dkept AS (SELECT d.*, h.arity FROM drows d
-          JOIN (SELECT DISTINCT conv_id, turn_idx, grp, arity FROM hnames) h
-            ON d.conv_id = h.conv_id AND d.turn_idx = h.turn_idx AND d.grp = h.grp
-          WHERE len(d.cells) = h.arity),
-dnum AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY conv_id, turn_idx, grp ORDER BY li) - 1 AS INT) AS row_idx
-         FROM dkept),
-dcells AS (SELECT conv_id, turn_idx, grp, table_idx, row_idx,
-             unnest(cells) AS value,
-             unnest(generate_series(0, len(cells)-1)) AS pos
-           FROM dnum)
-SELECT d.conv_id, d.turn_idx, d.table_idx, d.row_idx, h.column, d.value
-FROM dcells d JOIN hnames h
-  ON d.conv_id = h.conv_id AND d.turn_idx = h.turn_idx AND d.grp = h.grp AND d.pos = h.pos"""
-
-  private def lineFsmOracleSql(path: String): String =
-    s"""WITH t AS (SELECT * FROM read_parquet('$path')),
--- trailing empty lines are KEPT (Python split on newline): each appends a
--- space to the open section, so a page ending in a newline leaves a
--- trailing space
-pl AS (SELECT conv_id, turn_idx,
-         unnest(string_split(text, chr(10))) AS line,
-         unnest(generate_series(0, len(string_split(text, chr(10))) - 1)) AS li
-       FROM t),
-l AS (SELECT conv_id, line,
-        ROW_NUMBER() OVER (PARTITION BY conv_id ORDER BY turn_idx, li) AS ord,
-        (line LIKE '%Description%' OR line LIKE '%Rationale%' OR line LIKE '%Impact%'
-         OR line LIKE '%Audit%' OR line LIKE '%Remediation%' OR line LIKE '%CIS Controls%') AS is_hdr
-      FROM pl),
-g AS (SELECT *, SUM(CASE WHEN is_hdr THEN 1 ELSE 0 END)
-        OVER (PARTITION BY conv_id ORDER BY ord ROWS UNBOUNDED PRECEDING) AS grp
-      FROM l),
-sec AS (
-  SELECT conv_id, grp,
-    MAX(CASE WHEN is_hdr THEN trim(split_part(line, ':', 1), ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)) END) AS name,
-    MAX(CASE WHEN is_hdr THEN trim(split_part(line, ':', 2), ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)) END)
-      || coalesce(string_agg(CASE WHEN NOT is_hdr THEN ' ' || trim(line, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)) END, '' ORDER BY ord), '') AS value,
-    MIN(ord) AS first_ord
-  FROM g WHERE grp > 0
-  GROUP BY conv_id, grp),
-numbered AS (
-  SELECT conv_id, name, value,
-    ROW_NUMBER() OVER (PARTITION BY conv_id, name ORDER BY first_ord) - 1 AS occ
-  FROM sec),
-maxlen AS (SELECT conv_id, MAX(cnt) AS maxlen FROM
-  (SELECT conv_id, name, COUNT(*) cnt FROM numbered GROUP BY conv_id, name) GROUP BY conv_id),
--- the synthesized Title REPLACES any FSM-opened 'Title' section (the
--- reference overwrites parsed_data['Title']); its rows still counted in maxlen
-names AS (SELECT DISTINCT conv_id, name FROM numbered WHERE name <> 'Title'),
-expanded AS (
-  SELECT n.conv_id, n.name AS section, unnest(generate_series(0, m.maxlen - 1)) AS row
-  FROM names n JOIN maxlen m ON n.conv_id = m.conv_id),
-title AS (
-  SELECT t.conv_id, 'Title' AS section, unnest(generate_series(0, m.maxlen - 1)) AS row,
-    split_part(t.text, chr(10), 1) AS value
-  FROM t JOIN maxlen m ON t.conv_id = m.conv_id WHERE t.turn_idx = 0)
-SELECT e.conv_id, e.section, CAST(e.row AS INT) AS row, v.value
-FROM expanded e LEFT JOIN numbered v
-  ON e.conv_id = v.conv_id AND e.section = v.name AND e.row = v.occ
-UNION ALL
-SELECT conv_id, section, CAST(row AS INT) AS row, value FROM title"""
-
-  private object Osql {
-    val Mod = "18446744073709551616::HUGEINT" // 2^64
-
-    /** UTF-8 byte list (HUGEINT) of a string expression. */
-    def utf8Bytes(col: String): String =
-      s"""flatten(list_transform(regexp_extract_all($col, '(?s).'), c ->
-    CASE WHEN ord(c) < 128 THEN [ord(c)::HUGEINT]
-         WHEN ord(c) < 2048 THEN [(192 + ord(c)//64)::HUGEINT, (128 + ord(c)%64)::HUGEINT]
-         WHEN ord(c) < 65536 THEN [(224 + ord(c)//4096)::HUGEINT, (128 + (ord(c)//64)%64)::HUGEINT, (128 + ord(c)%64)::HUGEINT]
-         ELSE [(240 + ord(c)//262144)::HUGEINT, (128 + (ord(c)//4096)%64)::HUGEINT, (128 + (ord(c)//64)%64)::HUGEINT, (128 + ord(c)%64)::HUGEINT] END))"""
-
-    /** FNV-1a fold over a HUGEINT byte list (basis 0xCBF29CE484222325; prime
-      * 0x100000001B3 = 256*2^32 + 435). */
-    def fnv(bytes: String): String =
-      s"""list_reduce(list_prepend(14695981039346656037::HUGEINT, $bytes),
-  (h, b) -> (xor(h, b) * 435::HUGEINT + ((xor(h, b) * 256::HUGEINT) % 4294967296::HUGEINT) * 4294967296::HUGEINT) % $Mod)"""
-
-    /** Four chained CTEs `<p>a..<p>d` applying splitmix64 (TextStats.mix64)
-      * to column `x` of CTE `<p>0`; SELECT * REPLACE carries the other
-      * columns through. Constants: 0x9E3779B97F4A7C15 add;
-      * 0xBF58476D1CE4E5B9 = 3210233709*2^32+484763065 after >>>30 xor;
-      * 0x94D049BB133111EB = 2496678331*2^32+321982955 after >>>27 xor;
-      * final >>>31 xor. */
-    def mixCtes(p: String, x: String): String =
-      s"""${p}a AS (SELECT * REPLACE ((($x + 11400714819323198485::HUGEINT) % $Mod) AS $x) FROM ${p}0),
-${p}b AS (SELECT * REPLACE (((xor($x, $x // 1073741824::HUGEINT) * 484763065::HUGEINT + ((xor($x, $x // 1073741824::HUGEINT) * 3210233709::HUGEINT) % 4294967296::HUGEINT) * 4294967296::HUGEINT) % $Mod) AS $x) FROM ${p}a),
-${p}c AS (SELECT * REPLACE (((xor($x, $x // 134217728::HUGEINT) * 321982955::HUGEINT + ((xor($x, $x // 134217728::HUGEINT) * 2496678331::HUGEINT) % 4294967296::HUGEINT) * 4294967296::HUGEINT) % $Mod) AS $x) FROM ${p}b),
-${p}d AS (SELECT * REPLACE ((xor($x, $x // 2147483648::HUGEINT)) AS $x) FROM ${p}c)"""
-
-      /** Unrolled BPE training chain: w0 (distinct words as chr(31)-delimited
-      * symbol strings) then per merge round i: pair counts p_i → argmax b_i
-      * (count desc, pair bytes asc) → w_{i+1} via one literal replace —
-      * DuckDB re-runs the ENTIRE induction loop independently. */
-    def bpeCtes(m: Int): String = {
-      val sb = new StringBuilder
-      sb.append(
-        """w0 AS MATERIALIZED (
-  SELECT regexp_replace(tok, '(?s)(.)', chr(31) || '\1' || chr(31), 'g') AS w,
-    CAST(COUNT(*) AS BIGINT) AS n
-  FROM (SELECT unnest(list_filter(string_split_regex(
-      regexp_replace(lower(text), '[\x00-\x1F]', ' ', 'g'), '\s+'),
-      x -> len(x) > 0)) AS tok FROM documents)
-  GROUP BY tok)""")
-      for (i <- 0 until m) {
-        sb.append(s""",
-p$i AS MATERIALIZED (SELECT pr, CAST(SUM(n) AS BIGINT) AS cnt FROM (
-    SELECT n, unnest(list_transform(generate_series(1, len(sy) - 1),
-      k -> sy[k] || chr(31) || sy[k + 1])) AS pr
-    FROM (SELECT n, list_filter(string_split(w, chr(31)), x -> len(x) > 0) AS sy
-          FROM w$i) WHERE len(sy) >= 2)
-  GROUP BY pr),
-b$i AS MATERIALIZED (SELECT pr, cnt FROM p$i ORDER BY cnt DESC, pr LIMIT 1),
-w${i + 1} AS MATERIALIZED (SELECT replace(w,
-    chr(31) || (SELECT replace(pr, chr(31), chr(31) || chr(31)) FROM b$i) || chr(31),
-    chr(31) || (SELECT replace(pr, chr(31), '') FROM b$i) || chr(31)) AS w, n
-  FROM w$i)""")
-      }
-      sb.toString
-    }
-
-  /** Unsigned HUGEINT in [0,2^64) → signed BIGINT-range value. */
-    def signed(u: String): String =
-      s"CASE WHEN $u >= 9223372036854775808::HUGEINT THEN $u - $Mod ELSE $u END"
-
-    /** Whitespace-token stream of `documents.text`, lowercased (TextStats.wsTokens). */
-    val TokCte: String =
-      """toks AS (
-  SELECT doc_id, unnest(string_split_regex(regexp_replace(lower(text), '^\s+|\s+$', '', 'g'), '\s+')) AS tok
-  FROM documents WHERE regexp_replace(text, '^\s+|\s+$', '', 'g') <> '')"""
-  }
-
-  /** Independent DuckDB recomputation of `Dedup.simHashNearDup`: per-token
-    * hash64 → 64 bit votes → signed simhash, then BRUTE-FORCE all-pairs
-    * Hamming ≤ 3 — which also re-proves the pigeonhole bands' exact-recall
-    * claim cross-engine (the Spark side only examines banded candidates). */
-  /** CTE chain `h,s1..s4,sgn,b` computing the deterministic sampling bucket
-    * per (doc_id, lang): fingerprint64(cast(doc_id)) → splitmix finalize →
-    * signed pmod 10^6 (TrainingData.stratifiedSample's keep-decision hash,
-    * replayed in HUGEINT arithmetic). */
-  private def idBucketCtes: String =
-    """h AS (
-  SELECT doc_id, lang, source,
-    list_reduce(
-      list_prepend(0::HUGEINT,
-        list_transform(regexp_extract_all(CAST(doc_id AS VARCHAR), '(?s).'), c -> ord(c)::HUGEINT)),
-      (a, b) -> (a * 257::HUGEINT + b) % 18446744073709551616::HUGEINT) AS h0
-  FROM documents),
-s1 AS (SELECT doc_id, lang, source, (h0 + 11400714819323198485::HUGEINT) % 18446744073709551616::HUGEINT AS x FROM h),
-s2 AS (SELECT doc_id, lang, source, ((xor(x, x // 1073741824::HUGEINT) * 484763065::HUGEINT + ((xor(x, x // 1073741824::HUGEINT) * 3210233709::HUGEINT) % 4294967296::HUGEINT) * 4294967296::HUGEINT) % 18446744073709551616::HUGEINT) AS x FROM s1),
-s3 AS (SELECT doc_id, lang, source, ((xor(x, x // 134217728::HUGEINT) * 321982955::HUGEINT + ((xor(x, x // 134217728::HUGEINT) * 2496678331::HUGEINT) % 4294967296::HUGEINT) * 4294967296::HUGEINT) % 18446744073709551616::HUGEINT) AS x FROM s2),
-s4 AS (SELECT doc_id, lang, source, xor(x, x // 2147483648::HUGEINT) AS x FROM s3),
-sgn AS (SELECT doc_id, lang, source,
-    CASE WHEN x >= 9223372036854775808::HUGEINT THEN x - 18446744073709551616::HUGEINT ELSE x END AS s FROM s4),
-b AS (SELECT doc_id, lang, source, CAST(s AS BIGINT) AS fp,
-    CAST(((s % 1000000) + 1000000) % 1000000 AS BIGINT) AS bucket FROM sgn)"""
-
-  /** CTE chain decoding the stored-deflate PNG fixture blobs with byte
-    * arithmetic alone (see ImageCodec.encodePngStored): hex → byte list,
-    * IHDR dims, per-channel pixel lists (scanline filter bytes + 5-byte
-    * stored-block headers skipped arithmetically), 8×8 area-average luma in
-    * the exact Scala fold order, aHash bit pack. A true cross-engine check
-    * of the DECODE path — DuckDB has no image codec. */
-  private def imageCtes: String = {
-    def chan(ch: Int): String = {
-      val j = s"((i//w)*(1+3*w) + 1 + 3*(i%w) + $ch)"
-      val off = s"(48 + ($j//65535)*65540 + ($j%65535))"
-      s"list_transform(generate_series(0, w*ht-1), i -> bytes[$off+1])"
-    }
-    s"""hb AS (SELECT media_id,
-  list_transform(regexp_extract_all(hex(payload), '..'),
-    s -> (strpos('0123456789ABCDEF', substr(s,1,1))-1)*16 + strpos('0123456789ABCDEF', substr(s,2,1))-1) AS bytes
-  FROM read_parquet('$FixtureDir/img300/*.parquet')),
-dims AS (SELECT media_id, bytes,
-  bytes[18]*65536 + bytes[19]*256 + bytes[20] AS w,
-  bytes[23]*256 + bytes[24] AS ht FROM hb),
-lists AS (SELECT media_id, w, ht, ${chan(0)} AS rl, ${chan(1)} AS gl, ${chan(2)} AS bl FROM dims),
-pc AS (SELECT media_id, unnest(list_transform(generate_series(0, w*ht-1), i ->
-    {'ci': least(7, ((i//w)*8)//ht)*8 + least(7, ((i%w)*8)//w),
-      'r': rl[i+1], 'g': gl[i+1], 'b': bl[i+1]})) AS c
-  FROM lists),
-cells AS (SELECT media_id, c.ci AS ci, SUM(c.r)::BIGINT AS sr, SUM(c.g)::BIGINT AS sg,
-    SUM(c.b)::BIGINT AS sb, COUNT(*)::BIGINT AS n
-  FROM pc GROUP BY media_id, c.ci),
-luma AS (SELECT media_id, ci,
-  (0.299::DOUBLE*sr::DOUBLE + 0.587::DOUBLE*sg::DOUBLE + 0.114::DOUBLE*sb::DOUBLE)/n::DOUBLE AS lum FROM cells),
-m AS (SELECT media_id, list_reduce(list(lum ORDER BY ci), (a,b)->a+b)/64.0 AS mean FROM luma GROUP BY media_id),
-bitsu AS (SELECT l.media_id, SUM(CASE WHEN l.lum >= m.mean THEN (1::HUGEINT << l.ci) ELSE 0::HUGEINT END) AS u
-  FROM luma l JOIN m ON l.media_id = m.media_id GROUP BY l.media_id),
-ah AS (SELECT media_id,
-  CAST(${Osql.signed("u")} AS BIGINT) AS ahash FROM bitsu)"""
-  }
-
-  /** Shared BM25 oracle scaffolding: q_bm25 and q_bm25_rerank must replay
-    * the SAME pinned float-operation order as `TfIdfMatch.bm25Scores`
-    * bit-for-bit — one generator serves both so the pinned order can never
-    * drift in just one of them. */
-  private object Bm25Osql {
-    val terms = Seq("join", "hash", "window")
-    def term(t: String, i: Int): String = {
-      val tf = s"CAST(len(list_filter(toks, x -> x = '$t')) AS DOUBLE)"
-      s"""CAST(floor(
-            ln(1.0 + (n_docs - df_$i + 0.5) / (df_$i + 0.5))
-            * ($tf * 2.2 / ($tf + 1.2 * (0.25
-                + 0.75 * (CAST(dl AS DOUBLE) * n_docs) / sum_dl)))
-            * 10000.0) AS BIGINT)"""
-    }
-    val dfCols: String = terms.zipWithIndex.map { case (t, i) =>
-      s"CAST(SUM(CASE WHEN list_contains(toks, '$t') THEN 1 ELSE 0 END) AS DOUBLE) AS df_$i"
-    }.mkString(",\n            ")
-    val scoreExpr: String =
-      terms.zipWithIndex.map { case (t, i) => term(t, i) }.mkString(" + ")
-    /** base/b2/stats CTE prefix (tokenized docs, doc lengths, corpus stats). */
-    val statsCtes: String =
-      s"""base AS (SELECT doc_id,
-            list_filter(string_split_regex(regexp_replace(
-                lower(coalesce(text, '')), '[\\x00-\\x1F]', ' ', 'g'), '\\s+'),
-              x -> len(x) > 0) AS toks
-          FROM documents),
-          b2 AS (SELECT doc_id, toks, CAST(len(toks) AS BIGINT) AS dl FROM base),
-          stats AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs,
-            CAST(SUM(dl) AS DOUBLE) AS sum_dl,
-            $dfCols
-          FROM b2)"""
-  }
-
-  /** CTE chain re-decoding the WAV fixture blobs with little-endian byte
-    * arithmetic (see AudioCodec.encodeWavPcm16's fixed canonical layout:
-    * fmt chunk at byte 13, data chunk at byte 37, samples from byte 45 —
-    * 1-indexed): channels/rate/data-length from the headers, int16 sample
-    * reconstruction with sign fold, then the same all-integer statistics
-    * the Spark decoder computes. A true cross-engine check of the audio
-    * DECODE path — DuckDB has no audio codec. */
-  private def audioCtes: String =
-    s"""hb AS (SELECT media_id,
-  list_transform(regexp_extract_all(hex(payload), '..'),
-    s -> (strpos('0123456789ABCDEF', substr(s,1,1))-1)*16 + strpos('0123456789ABCDEF', substr(s,2,1))-1) AS bytes
-  FROM read_parquet('$FixtureDir/wav200/*.parquet')),
-fmt AS (SELECT media_id, bytes,
-  (bytes[23] + bytes[24]*256) AS channels,
-  (bytes[25] + bytes[26]*256 + bytes[27]*65536 + bytes[28]*16777216) AS sample_rate,
-  (bytes[41] + bytes[42]*256 + bytes[43]*65536 + bytes[44]*16777216) AS data_len
-  FROM hb),
-samp AS (SELECT media_id, channels, sample_rate, data_len // (2*channels) AS n_frames,
-  list_transform(generate_series(0, data_len//2 - 1), i ->
-    CASE WHEN bytes[45+2*i] + bytes[46+2*i]*256 >= 32768
-         THEN CAST(bytes[45+2*i] + bytes[46+2*i]*256 - 65536 AS BIGINT)
-         ELSE CAST(bytes[45+2*i] + bytes[46+2*i]*256 AS BIGINT) END) AS s
-  FROM fmt),
-afeat AS (SELECT media_id, sample_rate::BIGINT AS sample_rate,
-  channels::BIGINT AS channels, n_frames::BIGINT AS n_frames,
-  list_sum(list_transform(s, v -> abs(v)))::BIGINT AS sum_abs,
-  list_sum(list_transform(s, v -> v*v))::BIGINT AS sum_sq,
-  COALESCE(list_sum(list_transform(generate_series(1, n_frames - 1), f ->
-    CASE WHEN (s[1+(f-1)*channels] < 0) <> (s[1+f*channels] < 0) THEN 1 ELSE 0 END)), 0)::BIGINT AS zero_crossings,
-  list_max(list_transform(s, v -> abs(v)))::BIGINT AS peak
-  FROM samp)"""
-
-  /** CTE chain re-decoding the Y4M fixture blobs (VideoCodec.encodeY4m):
-    * ASCII header reconstructed char-by-char up to the first 0x0A and
-    * regex-parsed for W/H/F; frame count derived from the byte length and
-    * the C444 stride (6-byte FRAME marker + 3 full planes); per-frame luma
-    * sums and inter-frame |ΔY| from raw plane bytes. */
-  private def videoCtes: String =
-    s"""vb AS (SELECT media_id,
-  list_transform(regexp_extract_all(hex(payload), '..'),
-    s -> (strpos('0123456789ABCDEF', substr(s,1,1))-1)*16 + strpos('0123456789ABCDEF', substr(s,2,1))-1) AS bytes
-  FROM read_parquet('$FixtureDir/y4m60/*.parquet')),
-vhdr AS (SELECT media_id, bytes, list_position(bytes, 10) AS nl FROM vb),
-vdim AS (SELECT media_id, bytes, nl,
-  CAST(regexp_extract(array_to_string(list_transform(bytes[1:nl-1], b -> chr(b::INTEGER)), ''), ' W(\\d+)', 1) AS INTEGER) AS w,
-  CAST(regexp_extract(array_to_string(list_transform(bytes[1:nl-1], b -> chr(b::INTEGER)), ''), ' H(\\d+)', 1) AS INTEGER) AS h,
-  CAST(regexp_extract(array_to_string(list_transform(bytes[1:nl-1], b -> chr(b::INTEGER)), ''), ' F(\\d+):(\\d+)', 1) AS INTEGER) AS fps_num
-  FROM vhdr),
-vfc AS (SELECT *, (len(bytes) - nl) // (6 + 3*w*h) AS n_frames FROM vdim),
-vfr AS (SELECT media_id, w, h, fps_num, n_frames, nl, bytes,
-  unnest(generate_series(0, n_frames - 1)) AS f FROM vfc),
-vluma AS (SELECT media_id, w, h, fps_num, n_frames, f,
-  list_sum(list_transform(bytes[(nl + f*(6+3*w*h) + 7):(nl + f*(6+3*w*h) + 6 + w*h)], b -> CAST(b AS BIGINT)))::BIGINT AS luma
-  FROM vfr),
-vmot AS (SELECT media_id,
-  COALESCE(SUM(m), 0)::BIGINT AS motion_sum FROM (
-    SELECT media_id, list_sum(list_transform(generate_series(1, w*h), i ->
-      abs(CAST(bytes[nl + f*(6+3*w*h) + 6 + i] AS BIGINT) - bytes[nl + (f-1)*(6+3*w*h) + 6 + i]))) AS m
-    FROM vfr WHERE f >= 1) GROUP BY media_id)"""
-
-  private def simhashCtes: String =
-    s"""${Osql.TokCte},
-tb AS (SELECT doc_id, ${Osql.utf8Bytes("tok")} AS bytes FROM toks),
-m0 AS (SELECT doc_id, ${Osql.fnv("bytes")} AS x FROM tb),
-${Osql.mixCtes("m", "x")},
-votes AS (SELECT doc_id, gs.b AS b,
-    SUM(CASE WHEN (x // (1::HUGEINT << gs.b)) % 2 = 1 THEN 1 ELSE -1 END) AS acc
-  FROM md CROSS JOIN (SELECT unnest(generate_series(0, 63)) AS b) gs
-  GROUP BY doc_id, gs.b),
-simu AS (SELECT doc_id, SUM(CASE WHEN acc > 0 THEN (1::HUGEINT << b) ELSE 0::HUGEINT END) AS u
-  FROM votes GROUP BY doc_id),
-sims AS (SELECT d.doc_id AS doc_id,
-    CAST(${Osql.signed("COALESCE(s.u, 0::HUGEINT)")} AS BIGINT) AS sim
-  FROM documents d LEFT JOIN simu s ON d.doc_id = s.doc_id)"""
-
-  private def simhashOracleSql: String =
-    s"""WITH $simhashCtes
-SELECT l.doc_id AS left_id, r.doc_id AS right_id,
-  CAST(bit_count(xor(l.sim, r.sim)) AS INT) AS hamming
-FROM sims l JOIN sims r ON l.doc_id < r.doc_id
-WHERE bit_count(xor(l.sim, r.sim)) <= 3"""
-
-  /** Connected components over the simhash pair graph: DuckDB recomputes the
-    * signatures AND the pairs, then derives each node's component as the min
-    * id reachable via a recursive closure — independently re-deriving what
-    * Spark computes by iterative min-label propagation. */
-  private def neardupClustersOracleSql: String =
-    s"""WITH RECURSIVE $simhashCtes,
-pairs AS MATERIALIZED (
-  SELECT l.doc_id AS left_id, r.doc_id AS right_id
-  FROM sims l JOIN sims r ON l.doc_id < r.doc_id
-  WHERE bit_count(xor(l.sim, r.sim)) <= 3),
-edges AS MATERIALIZED (SELECT left_id AS a, right_id AS b FROM pairs
-  UNION ALL SELECT right_id, left_id FROM pairs),
-nodes AS MATERIALIZED (SELECT DISTINCT a AS id FROM edges),
-reach AS (
-  SELECT id, id AS r FROM nodes
-  UNION
-  SELECT reach.id, e.b AS r FROM reach JOIN edges e ON e.a = reach.r)
-SELECT id AS doc_id, min(r) AS cluster FROM reach GROUP BY id"""
-
-  /** Retention-policy replica: the [[neardupClustersOracleSql]] closure plus
-    * the keep rule — rank clustered members by (n_chars desc, doc_id asc),
-    * rank 1 kept; unclustered docs kept with a NULL cluster. */
-  private def neardupKeepOracleSql: String =
-    s"""WITH RECURSIVE $simhashCtes,
-pairs AS MATERIALIZED (
-  SELECT l.doc_id AS left_id, r.doc_id AS right_id
-  FROM sims l JOIN sims r ON l.doc_id < r.doc_id
-  WHERE bit_count(xor(l.sim, r.sim)) <= 3),
-edges AS MATERIALIZED (SELECT left_id AS a, right_id AS b FROM pairs
-  UNION ALL SELECT right_id, left_id FROM pairs),
-nodes AS MATERIALIZED (SELECT DISTINCT a AS id FROM edges),
-reach AS (
-  SELECT id, id AS r FROM nodes
-  UNION
-  SELECT reach.id, e.b AS r FROM reach JOIN edges e ON e.a = reach.r),
-comp AS (SELECT id AS doc_id, min(r) AS cluster FROM reach GROUP BY id),
-clustered AS (
-  SELECT d.doc_id, c.cluster, d.n_chars AS keep_score,
-    (row_number() OVER (PARTITION BY c.cluster
-       ORDER BY d.n_chars DESC, d.doc_id ASC)) = 1 AS kept
-  FROM documents d JOIN comp c ON d.doc_id = c.doc_id)
-SELECT doc_id, cluster, keep_score, kept FROM clustered
-UNION ALL
-SELECT d.doc_id, NULL AS cluster, d.n_chars AS keep_score, true AS kept
-FROM documents d ANTI JOIN comp c ON d.doc_id = c.doc_id"""
-
-  /** Independent DuckDB recomputation of `Dedup.minHashLsh` (k=3 shingles,
-    * 16 hashes, 8 bands, threshold 0.35): shingle base hashes → signed minima
-    * per seed → banded keys (mix-fold) → candidate equi-join → exact
-    * shingle-set Jaccard verify. Replicates the BANDING too, so candidate
-    * misses on either side would surface as row-count mismatches. */
-  private def minhashOracleSql: String = minhashPairsSql(
-    "l.doc_id < r.doc_id", "left_id", "right_id")
-
-  /** The full MinHash signature/banding/verify replica, parameterized by
-    * the candidate-pair predicate — shared by the self-join near-dup
-    * oracle and the incremental (new-batch vs history) variant. */
-  private def minhashPairsSql(pairPred: String, leftName: String,
-                              rightName: String): String =
-    s"""WITH tl AS (
-  SELECT doc_id, string_split_regex(regexp_replace(lower(text), '^\\s+|\\s+$$', '', 'g'), '\\s+') AS toks
-  FROM documents WHERE regexp_replace(text, '^\\s+|\\s+$$', '', 'g') <> ''),
-sh AS (SELECT DISTINCT doc_id, unnest(
-    CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-         ELSE list_transform(generate_series(1, len(toks) - 2), i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]) END) AS shingle
-  FROM tl),
-tb AS (SELECT doc_id, shingle, ${Osql.utf8Bytes("shingle")} AS bytes FROM sh),
-fnv0 AS (SELECT doc_id, shingle, ${Osql.fnv("bytes")} AS x FROM tb),
-${Osql.mixCtes("fnv", "x")},
-bh AS (SELECT doc_id, x AS h FROM fnvd),
-mh0 AS (SELECT doc_id, gs.i AS i,
-    xor(h, (gs.i::HUGEINT * 11400714819323198485::HUGEINT) % ${Osql.Mod}) AS x
-  FROM bh CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS i) gs),
-${Osql.mixCtes("mh", "x")},
-sigs AS (SELECT doc_id, i, MIN(${Osql.signed("x")}) AS sig_s FROM mhd GROUP BY doc_id, i),
-sigu AS (SELECT doc_id, i,
-    (CASE WHEN sig_s < 0 THEN sig_s + ${Osql.Mod} ELSE sig_s END)::HUGEINT AS sig FROM sigs),
-bk00 AS (SELECT a.doc_id, a.i // 2 AS band_idx,
-    xor(xor(14695981039346656037::HUGEINT, (a.i // 2)::HUGEINT), a.sig) AS x
-  FROM sigu a WHERE a.i % 2 = 0),
-${Osql.mixCtes("bk0", "x")},
-bk10 AS (SELECT k.doc_id, k.band_idx, xor(k.x, s.sig) AS x
-  FROM bk0d k JOIN sigu s ON s.doc_id = k.doc_id AND s.i = k.band_idx * 2 + 1),
-${Osql.mixCtes("bk1", "x")},
-bk AS (SELECT doc_id, band_idx, x AS band_key FROM bk1d),
-cand AS (SELECT DISTINCT l.doc_id AS left_id, r.doc_id AS right_id
-  FROM bk l JOIN bk r ON l.band_idx = r.band_idx AND l.band_key = r.band_key AND ($pairPred)),
-sets AS (SELECT DISTINCT doc_id, h FROM bh),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM sets GROUP BY doc_id),
-inter AS (SELECT c.left_id, c.right_id, COUNT(*) AS it
-  FROM cand c JOIN sets a ON a.doc_id = c.left_id JOIN sets b ON b.doc_id = c.right_id AND a.h = b.h
-  GROUP BY c.left_id, c.right_id),
-jac AS (SELECT c.left_id, c.right_id,
-    COALESCE(i.it, 0)::DOUBLE / (nl.n + nr.n - COALESCE(i.it, 0)) AS j
-  FROM cand c LEFT JOIN inter i ON i.left_id = c.left_id AND i.right_id = c.right_id
-  JOIN sizes nl ON nl.doc_id = c.left_id JOIN sizes nr ON nr.doc_id = c.right_id)
-SELECT left_id AS $leftName, right_id AS $rightName,
-  CAST(FLOOR(j * 1000000) AS BIGINT) AS jaccard_ppm
-FROM jac WHERE j >= 0.35"""
-
-  /** CTEs computing hyperplane-LSH buckets of an `emb` CTE (vec_id,
-    * embedding) for the (tbl → seedExpr) plane family. Planes are
-    * regenerated from splitmix64 EXACTLY as `HyperplaneBucket.planes`
-    * (h → h.toDouble / 2^63 / 2 — both conversions correctly-rounded IEEE on
-    * either engine), and every dot product folds in index order via
-    * list_reduce, so each double matches the compiled kernel bit-for-bit.
-    * Emits CTEs ending in: pw(tbl, p, ws), bkt(vec_id, tbl, bucket). */
-  private def bucketCtes(seedExpr: String, tables: Int, bits: Int, dim: Int): String =
-    s"""tbls AS (SELECT unnest(generate_series(0, ${tables - 1})) AS tbl),
-pl0 AS (SELECT t.tbl AS tbl, pp.p AS p, ii.i AS i,
-    xor(xor(($seedExpr)::HUGEINT, pp.p::HUGEINT * 4294967296::HUGEINT), ii.i::HUGEINT) AS x
-  FROM tbls t
-  CROSS JOIN (SELECT unnest(generate_series(0, ${bits - 1})) AS p) pp
-  CROSS JOIN (SELECT unnest(generate_series(0, ${dim - 1})) AS i) ii),
-${Osql.mixCtes("pl", "x")},
-pw AS (SELECT tbl, p, list((${Osql.signed("x")})::DOUBLE / 9223372036854775808.0 / 2.0 ORDER BY i) AS ws
-  FROM pld GROUP BY tbl, p),
-dotp AS (SELECT e.vec_id, w.tbl, w.p,
-    list_reduce(list_transform(generate_series(1, $dim), i -> e.embedding[i]::DOUBLE * w.ws[i]), (a, b) -> a + b) AS d
-  FROM emb e CROSS JOIN pw w),
-bkt AS (SELECT vec_id, tbl, SUM(CASE WHEN d >= 0 THEN 1 << p ELSE 0 END) AS bucket
-  FROM dotp GROUP BY vec_id, tbl)"""
-
-  /** Ordered-fold squared-norm CTE (vec_id, nn) over `emb`. */
-  private def normCte(dim: Int): String =
-    s"""nrm AS (SELECT vec_id,
-    list_reduce(list_transform(generate_series(1, $dim), i -> embedding[i]::DOUBLE * embedding[i]::DOUBLE), (a, b) -> a + b) AS nn
-  FROM emb)"""
-
-  /** FloatCosine of two vectors given their precomputed squared norms. */
-  private def cosExpr(a: String, b: String, na: String, nb: String, dim: Int): String =
-    s"""CASE WHEN $na = 0 OR $nb = 0 THEN 0.0
-         ELSE list_reduce(list_transform(generate_series(1, $dim), i -> $a[i]::DOUBLE * $b[i]::DOUBLE), (x, y) -> x + y) / (SQRT($na) * SQRT($nb)) END"""
-
-  /** Independent DuckDB recomputation of `Dedup.embeddingNearDup` (8 tables
-    * × 2 bits, threshold 0.3) including the LSH blocking itself. */
-  private def embNearDupOracleSql: String =
-    s"""WITH emb AS (SELECT vec_id, embedding FROM embeddings),
-${bucketCtes("42 + 1000 * t.tbl", tables = 8, bits = 2, dim = 64)},
-cand AS (SELECT DISTINCT l.vec_id AS left_id, r.vec_id AS right_id
-  FROM bkt l JOIN bkt r ON l.tbl = r.tbl AND l.bucket = r.bucket AND l.vec_id < r.vec_id),
-${normCte(64)},
-scored AS (SELECT c.left_id, c.right_id,
-    ${cosExpr("el.embedding", "er.embedding", "nl.nn", "nr.nn", 64)} AS cos
-  FROM cand c JOIN emb el ON el.vec_id = c.left_id JOIN emb er ON er.vec_id = c.right_id
-  JOIN nrm nl ON nl.vec_id = c.left_id JOIN nrm nr ON nr.vec_id = c.right_id)
-SELECT left_id, right_id, CAST(FLOOR(cos * 1000000) AS BIGINT) AS cos_ppm
-FROM scored WHERE cos >= 0.3"""
-
-  /** Independent DuckDB recomputation of `SimilaritySearch.lshTopK`
-    * (bits=4, multi-probe Hamming 1, k=3) over queries vec_id < 20. */
-  private def annLshOracleSql: String =
-    s"""WITH emb AS (SELECT vec_id, embedding FROM embeddings),
-${bucketCtes("42", tables = 1, bits = 4, dim = 64)},
-qry AS (SELECT b.vec_id AS query_id, xor(b.bucket, m.m) AS bucket
-  FROM bkt b CROSS JOIN (SELECT unnest([0, 1, 2, 4, 8]) AS m) m
-  WHERE b.vec_id < 20),
-cnd AS (SELECT q.query_id, c.vec_id AS corpus_id
-  FROM qry q JOIN bkt c ON c.bucket = q.bucket WHERE c.vec_id <> q.query_id),
-${normCte(64)},
-scored AS (SELECT n.query_id, n.corpus_id,
-    ${cosExpr("eq.embedding", "ec.embedding", "nq.nn", "nc.nn", 64)} AS cos
-  FROM cnd n JOIN emb eq ON eq.vec_id = n.query_id JOIN emb ec ON ec.vec_id = n.corpus_id
-  JOIN nrm nq ON nq.vec_id = n.query_id JOIN nrm nc ON nc.vec_id = n.corpus_id),
-rnk AS (SELECT query_id, corpus_id, cos,
-    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, corpus_id) AS rn
-  FROM scored)
-SELECT query_id, corpus_id, CAST(FLOOR(cos * 1000000) AS BIGINT) AS score_ppm, CAST(rn AS INT) AS rn
-FROM rnk WHERE rn <= 3"""
-
-  /** Independent DuckDB replay of `SimilaritySearch.ivfTopK` at
-    * lloydIters = 0 (nlist=16, nprobe=4, k=3): fingerprint-ranked medoid
-    * seeding (the TextStats id-hash chain in HUGEINT arithmetic), one-pass
-    * max-cosine list assignment with lowest-index ties, query probing, and
-    * the exact cosine re-rank — the ENTIRE approximate operator is
-    * recomputed cross-engine, not just its output schema. */
-  private def ivfOracleSql: String =
-    s"""WITH emb AS (SELECT vec_id, embedding FROM embeddings),
-e0 AS (SELECT vec_id, embedding,
-  list_reduce(list_prepend(0::HUGEINT,
-    list_transform(regexp_extract_all(CAST(vec_id AS VARCHAR), '(?s).'), c -> ord(c)::HUGEINT)),
-  (a, b) -> (a * 257::HUGEINT + b) % ${Osql.Mod}) AS x
-  FROM emb),
-${Osql.mixCtes("e", "x")},
-efp AS (SELECT vec_id, embedding, CAST(${Osql.signed("x")} AS BIGINT) AS fp FROM ed),
-cent AS (SELECT embedding AS centv,
-    ROW_NUMBER() OVER (ORDER BY fp, vec_id) - 1 AS cluster,
-    list_reduce(list_transform(generate_series(1, 64), i -> embedding[i]::DOUBLE * embedding[i]::DOUBLE), (a, b) -> a + b) AS cn
-  FROM (SELECT * FROM efp ORDER BY fp, vec_id LIMIT 16)),
-${normCte(64)},
-asn0 AS (SELECT e.vec_id AS corpus_id, e.embedding AS cv, n.nn AS cvn, c.cluster,
-    ${cosExpr("e.embedding", "c.centv", "n.nn", "c.cn", 64)} AS s
-  FROM emb e JOIN nrm n ON n.vec_id = e.vec_id CROSS JOIN cent c),
-asn AS (SELECT corpus_id, cv, cvn, cluster FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY corpus_id ORDER BY s DESC, cluster) AS arn FROM asn0)
-  WHERE arn = 1),
-qp AS (SELECT query_id, qv, qvn, cluster FROM (
-    SELECT e.vec_id AS query_id, e.embedding AS qv, n.nn AS qvn, c.cluster,
-      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-        ORDER BY ${cosExpr("e.embedding", "c.centv", "n.nn", "c.cn", 64)} DESC, c.cluster) AS crn
-    FROM emb e JOIN nrm n ON n.vec_id = e.vec_id CROSS JOIN cent c WHERE e.vec_id < 20)
-  WHERE crn <= 4),
-sc AS (SELECT q.query_id, a.corpus_id,
-    ${cosExpr("q.qv", "a.cv", "q.qvn", "a.cvn", 64)} AS cos
-  FROM qp q JOIN asn a ON q.cluster = a.cluster WHERE q.query_id <> a.corpus_id)
-SELECT query_id, corpus_id, CAST(FLOOR(cos * 1000000) AS BIGINT) AS score_ppm, CAST(rn AS INT) AS rn
-FROM (SELECT query_id, corpus_id, cos,
-    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, corpus_id) AS rn FROM sc)
-WHERE rn <= 3"""
-
-  /** Independent DuckDB replay of `Dedup.semDedup` (nlist=16, t=0.3):
-    * fingerprint-ranked seeds, max-cosine assignment, within-cluster
-    * dominance rule — the same chain as [[ivfOracleSql]] plus the
-    * ppm-floored keep-low-centroid-similarity pair filter. */
-  private def semDedupOracleSql: String =
-    s"""WITH emb AS (SELECT vec_id, embedding FROM embeddings),
-nl AS (SELECT GREATEST(16, (COUNT(*) + 63) // 64) AS nlist FROM emb),
-e0 AS (SELECT vec_id, embedding,
-  list_reduce(list_prepend(0::HUGEINT,
-    list_transform(regexp_extract_all(CAST(vec_id AS VARCHAR), '(?s).'), c -> ord(c)::HUGEINT)),
-  (a, b) -> (a * 257::HUGEINT + b) % ${Osql.Mod}) AS x
-  FROM emb),
-${Osql.mixCtes("e", "x")},
-efp AS (SELECT vec_id, embedding, CAST(${Osql.signed("x")} AS BIGINT) AS fp FROM ed),
-cent AS (SELECT embedding AS centv, rn - 1 AS cluster,
-    list_reduce(list_transform(generate_series(1, 64), i -> embedding[i]::DOUBLE * embedding[i]::DOUBLE), (a, b) -> a + b) AS cn
-  FROM (SELECT *, ROW_NUMBER() OVER (ORDER BY fp, vec_id) AS rn FROM efp)
-  WHERE rn <= (SELECT nlist FROM nl)),
-${normCte(64)},
-asn0 AS (SELECT e.vec_id AS id, e.embedding AS cv, n.nn AS cvn, c.cluster,
-    ${cosExpr("e.embedding", "c.centv", "n.nn", "c.cn", 64)} AS s
-  FROM emb e JOIN nrm n ON n.vec_id = e.vec_id CROSS JOIN cent c),
-asn AS (SELECT id, cv, cvn, CAST(cluster AS INTEGER) AS cluster,
-    CAST(FLOOR(s * 1000000) AS BIGINT) AS ccos_ppm FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY id ORDER BY s DESC, cluster) AS arn FROM asn0)
-  WHERE arn = 1),
-drp AS (SELECT DISTINCT l.id AS id
-  FROM asn l JOIN asn r ON l.cluster = r.cluster AND l.id <> r.id
-  WHERE CAST(FLOOR(${cosExpr("l.cv", "r.cv", "l.cvn", "r.cvn", 64)} * 1000000) AS BIGINT) >= 300000
-    AND (r.ccos_ppm < l.ccos_ppm OR (r.ccos_ppm = l.ccos_ppm AND r.id < l.id)))
-SELECT a.id, a.cluster, a.ccos_ppm,
-  CASE WHEN d.id IS NULL THEN 0 ELSE 1 END AS is_dup
-FROM asn a LEFT JOIN drp d ON a.id = d.id"""
-
-  /** Independent DuckDB replay of `TopicModel.plsaBestMatch` (k=10,
-    * iters=5): the COMPLETE PLSA-EM fit — modular-pattern init, five exact
-    * EM steps as an unrolled CTE chain over flat list-of-doubles state
-    * (θ: doc-major width k; φ: topic-major width V), zero-row guard, and
-    * the topic-space cosine argmax. Every sum is an ascending-order
-    * list_reduce, matching the Scala fold order term for term, so the
-    * learned topic mixtures are bit-identical cross-engine. */
-  // --- shared PLSA-oracle list arithmetic (plsaOracleSql + plsaFoldinOracleSql)
-  /** rowsum over row (i // w) of width `w` in flat list `l` */
-  private def plsaRowSum(l: String, w: String) =
-    s"list_reduce($l[(i // $w) * $w + 1 : (i // $w) * $w + $w], (a, b) -> a + b)"
-  /** row-normalize flat list `src` of width `w`; zero rows keep `keep` */
-  private def plsaNormed(src: String, w: String, keep: String) =
-    s"""list_transform(generate_series(0, len($src) - 1), i ->
-      CASE WHEN ${plsaRowSum(src, w)} = 0.0 THEN $keep[i + 1]
-           ELSE $src[i + 1] / ${plsaRowSum(src, w)} END)"""
-
-  private def plsaOracleSql(k: Int = 10, iters: Int = 5): String = {
-    def normed(src: String, w: String, keep: String) = plsaNormed(src, w, keep)
-    val iterBlocks = (1 to iters).map { t =>
-      val p = if (t == 1) "s0" else s"i${t - 1}"
-      s"""i${t}a AS (SELECT nf, dn, vn, ids, th, ph,
-  list_transform(generate_series(0, dn * vn - 1), i ->
-    list_reduce(list_transform(generate_series(0, ${k - 1}), z ->
-      th[(i // vn) * $k + z + 1] * ph[z * vn + (i % vn) + 1]), (a, b) -> a + b)) AS dnm
-  FROM $p),
-i${t}b AS (SELECT *, list_transform(generate_series(0, dn * $k - 1), i ->
-    list_reduce(list_transform(generate_series(0, vn - 1), w ->
-      nf[(i // $k) * vn + w + 1] * th[i + 1] * ph[(i % $k) * vn + w + 1] / dnm[(i // $k) * vn + w + 1]),
-      (a, b) -> a + b)) AS tn
-  FROM i${t}a),
-i${t}c AS (SELECT *, list_transform(generate_series(0, $k * vn - 1), i ->
-    list_reduce(list_transform(generate_series(0, dn - 1), dd ->
-      nf[dd * vn + (i % vn) + 1] * th[dd * $k + (i // vn) + 1] * ph[i + 1] / dnm[dd * vn + (i % vn) + 1]),
-      (a, b) -> a + b)) AS pn
-  FROM i${t}b),
-i$t AS (SELECT nf, dn, vn, ids,
-  ${normed("tn", k.toString, "th")} AS th,
-  ${normed("pn", "vn", "ph")} AS ph
-  FROM i${t}c)"""
-    }.mkString(",\n")
-    def cos(a: String, b: String) =
-      s"""CASE WHEN list_reduce(list_transform(generate_series(1, $k), i -> $a[i] * $a[i]), (x, y) -> x + y) = 0.0
-           OR list_reduce(list_transform(generate_series(1, $k), i -> $b[i] * $b[i]), (x, y) -> x + y) = 0.0 THEN 0.0
-         ELSE list_reduce(list_transform(generate_series(1, $k), i -> $a[i] * $b[i]), (x, y) -> x + y)
-           / (SQRT(list_reduce(list_transform(generate_series(1, $k), i -> $a[i] * $a[i]), (x, y) -> x + y))
-            * SQRT(list_reduce(list_transform(generate_series(1, $k), i -> $b[i] * $b[i]), (x, y) -> x + y))) END"""
-    s"""WITH d0 AS (SELECT doc_id, regexp_extract_all(lower(text), '\\w\\w+') AS tk
-  FROM documents WHERE doc_id < 200),
-ds AS (SELECT doc_id, tk, ROW_NUMBER() OVER (ORDER BY doc_id) AS di FROM d0),
-vz AS (SELECT tok, ROW_NUMBER() OVER (ORDER BY tok) AS w
-  FROM (SELECT DISTINCT unnest(tk) AS tok FROM ds)),
-nrows AS (SELECT ds.di, vz.w, len(list_filter(ds.tk, t -> t = vz.tok))::DOUBLE AS c
-  FROM ds CROSS JOIN vz),
-base AS (SELECT
-  (SELECT list(c ORDER BY di, w) FROM nrows) AS nf,
-  (SELECT COUNT(*)::INTEGER FROM ds) AS dn,
-  (SELECT COUNT(*)::INTEGER FROM vz) AS vn,
-  (SELECT list(doc_id ORDER BY doc_id) FROM ds) AS ids),
-b1 AS (SELECT *, list_transform(generate_series(0, dn * $k - 1), i ->
-    1.0 + CAST((ids[i // $k + 1] * 31 + (i % $k) * 17) % 97 AS DOUBLE) / 1000.0) AS thr,
-  list_transform(generate_series(0, $k * vn - 1), i ->
-    1.0 + CAST(((i // vn) * 13 + (i % vn) * 7) % 89 AS DOUBLE) / 1000.0) AS phr
-  FROM base),
-s0 AS (SELECT nf, dn, vn, ids,
-  ${normed("thr", k.toString, "thr")} AS th,
-  ${normed("phr", "vn", "phr")} AS ph
-  FROM b1),
-$iterBlocks,
-emb AS (SELECT ids[di] AS id,
-    list_transform(generate_series(0, ${k - 1}), z -> th[(di - 1) * $k + z + 1]) AS tv
-  FROM (SELECT *, unnest(generate_series(1, dn)) AS di FROM i$iters)),
-sc AS (SELECT l.id AS left_id, r.id AS right_id, ${cos("l.tv", "r.tv")} AS score
-  FROM emb l CROSS JOIN emb r WHERE l.id < 50 AND r.id >= 50)
-SELECT left_id, right_id, CAST(FLOOR(score * 1000000) AS BIGINT) AS score_ppm
-FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY left_id ORDER BY score DESC, right_id) AS rn FROM sc)
-WHERE rn = 1"""
-  }
-
-  /** Independent DuckDB replay of the OVER-CAP `plsaBestMatch` plane
-    * (`fitSampleLimit` = cap < corpus — the 100-TB path): the fingerprint64
-    * sample ranking (char-257 fold + splitmix64, signed order, id
-    * tie-break — the q_group_sample chain), the joint EM fit on the sample
-    * docs (same unrolled chain as [[plsaOracleSql]]), then the distributed
-    * per-doc theta fold-in — `iters` theta-only EM blocks against the
-    * FITTED φ over ALL docs — as a dense flat-list replica. Zero-count
-    * (doc, word) terms add an exact 0.0 to nonnegative partial sums, so
-    * the dense w-ascending folds equal the Scala kernel's sparse
-    * w-ascending folds bit for bit. */
-  private def plsaFoldinOracleSql(k: Int = 10, iters: Int = 5, cap: Int = 64): String = {
-    def normed(src: String, w: String, keep: String) = plsaNormed(src, w, keep)
-    val fitBlocks = (1 to iters).map { t =>
-      val p = if (t == 1) "s0" else s"i${t - 1}"
-      s"""i${t}a AS (SELECT nf, dn, vn, ids, th, ph,
-  list_transform(generate_series(0, dn * vn - 1), i ->
-    list_reduce(list_transform(generate_series(0, ${k - 1}), z ->
-      th[(i // vn) * $k + z + 1] * ph[z * vn + (i % vn) + 1]), (a, b) -> a + b)) AS dnm
-  FROM $p),
-i${t}b AS (SELECT *, list_transform(generate_series(0, dn * $k - 1), i ->
-    list_reduce(list_transform(generate_series(0, vn - 1), w ->
-      nf[(i // $k) * vn + w + 1] * th[i + 1] * ph[(i % $k) * vn + w + 1] / dnm[(i // $k) * vn + w + 1]),
-      (a, b) -> a + b)) AS tn
-  FROM i${t}a),
-i${t}c AS (SELECT *, list_transform(generate_series(0, $k * vn - 1), i ->
-    list_reduce(list_transform(generate_series(0, dn - 1), dd ->
-      nf[dd * vn + (i % vn) + 1] * th[dd * $k + (i // vn) + 1] * ph[i + 1] / dnm[dd * vn + (i % vn) + 1]),
-      (a, b) -> a + b)) AS pn
-  FROM i${t}b),
-i$t AS (SELECT nf, dn, vn, ids,
-  ${normed("tn", k.toString, "th")} AS th,
-  ${normed("pn", "vn", "ph")} AS ph
-  FROM i${t}c)"""
-    }.mkString(",\n")
-    val foldBlocks = (1 to iters).map { t =>
-      val p = if (t == 1) "f0s" else s"g${t - 1}"
-      s"""g${t}a AS (SELECT mf, dm, vn, jds, ph, tf,
-  list_transform(generate_series(0, dm * vn - 1), i ->
-    list_reduce(list_transform(generate_series(0, ${k - 1}), z ->
-      tf[(i // vn) * $k + z + 1] * ph[z * vn + (i % vn) + 1]), (a, b) -> a + b)) AS dnm
-  FROM $p),
-g${t}b AS (SELECT *, list_transform(generate_series(0, dm * $k - 1), i ->
-    list_reduce(list_transform(generate_series(0, vn - 1), w ->
-      mf[(i // $k) * vn + w + 1] * tf[i + 1] * ph[(i % $k) * vn + w + 1] / dnm[(i // $k) * vn + w + 1]),
-      (a, b) -> a + b)) AS tn
-  FROM g${t}a),
-g$t AS (SELECT mf, dm, vn, jds, ph,
-  ${normed("tn", k.toString, "tf")} AS tf
-  FROM g${t}b)"""
-    }.mkString(",\n")
-    def cos(a: String, b: String) =
-      s"""CASE WHEN list_reduce(list_transform(generate_series(1, $k), i -> $a[i] * $a[i]), (x, y) -> x + y) = 0.0
-           OR list_reduce(list_transform(generate_series(1, $k), i -> $b[i] * $b[i]), (x, y) -> x + y) = 0.0 THEN 0.0
-         ELSE list_reduce(list_transform(generate_series(1, $k), i -> $a[i] * $b[i]), (x, y) -> x + y)
-           / (SQRT(list_reduce(list_transform(generate_series(1, $k), i -> $a[i] * $a[i]), (x, y) -> x + y))
-            * SQRT(list_reduce(list_transform(generate_series(1, $k), i -> $b[i] * $b[i]), (x, y) -> x + y))) END"""
-    s"""WITH h0 AS (SELECT doc_id, list_reduce(list_prepend(0::HUGEINT,
-    list_transform(regexp_extract_all(CAST(doc_id AS VARCHAR), '(?s).'), c -> ord(c)::HUGEINT)),
-  (a, b) -> (a * 257::HUGEINT + b) % ${Osql.Mod}) AS x
-  FROM documents WHERE doc_id < 200),
-${Osql.mixCtes("h", "x")},
-samp AS (SELECT doc_id FROM hd
-  ORDER BY CAST(${Osql.signed("x")} AS BIGINT), doc_id LIMIT $cap),
-d0 AS (SELECT doc_id, regexp_extract_all(lower(text), '\\w\\w+') AS tk
-  FROM documents WHERE doc_id IN (SELECT doc_id FROM samp)),
-ds AS (SELECT doc_id, tk, ROW_NUMBER() OVER (ORDER BY doc_id) AS di FROM d0),
-vz AS (SELECT tok, ROW_NUMBER() OVER (ORDER BY tok) AS w
-  FROM (SELECT DISTINCT unnest(tk) AS tok FROM ds)),
-nrows AS (SELECT ds.di, vz.w, len(list_filter(ds.tk, t -> t = vz.tok))::DOUBLE AS c
-  FROM ds CROSS JOIN vz),
-base AS (SELECT
-  (SELECT list(c ORDER BY di, w) FROM nrows) AS nf,
-  (SELECT COUNT(*)::INTEGER FROM ds) AS dn,
-  (SELECT COUNT(*)::INTEGER FROM vz) AS vn,
-  (SELECT list(doc_id ORDER BY doc_id) FROM ds) AS ids),
-b1 AS (SELECT *, list_transform(generate_series(0, dn * $k - 1), i ->
-    1.0 + CAST((ids[i // $k + 1] * 31 + (i % $k) * 17) % 97 AS DOUBLE) / 1000.0) AS thr,
-  list_transform(generate_series(0, $k * vn - 1), i ->
-    1.0 + CAST(((i // vn) * 13 + (i % vn) * 7) % 89 AS DOUBLE) / 1000.0) AS phr
-  FROM base),
-s0 AS (SELECT nf, dn, vn, ids,
-  ${normed("thr", k.toString, "thr")} AS th,
-  ${normed("phr", "vn", "phr")} AS ph
-  FROM b1),
-$fitBlocks,
-e0 AS (SELECT doc_id, regexp_extract_all(lower(text), '\\w\\w+') AS tk
-  FROM documents WHERE doc_id < 200),
-es AS (SELECT doc_id, tk, ROW_NUMBER() OVER (ORDER BY doc_id) AS dj FROM e0),
-mrows AS (SELECT es.dj, vz.w, len(list_filter(es.tk, t -> t = vz.tok))::DOUBLE AS c
-  FROM es CROSS JOIN vz),
-fb AS (SELECT
-  (SELECT list(c ORDER BY dj, w) FROM mrows) AS mf,
-  (SELECT COUNT(*)::INTEGER FROM es) AS dm,
-  (SELECT list(doc_id ORDER BY doc_id) FROM es) AS jds,
-  vn, ph FROM i$iters),
-f1 AS (SELECT *, list_transform(generate_series(0, dm * $k - 1), i ->
-    1.0 + CAST((jds[i // $k + 1] * 31 + (i % $k) * 17) % 97 AS DOUBLE) / 1000.0) AS tfr
-  FROM fb),
-f0s AS (SELECT mf, dm, vn, jds, ph,
-  ${normed("tfr", k.toString, "tfr")} AS tf
-  FROM f1),
-$foldBlocks,
-emb AS (SELECT jds[dj] AS id,
-    list_transform(generate_series(0, ${k - 1}), z -> tf[(dj - 1) * $k + z + 1]) AS tv
-  FROM (SELECT *, unnest(generate_series(1, dm)) AS dj FROM g$iters)),
-sc AS (SELECT l.id AS left_id, r.id AS right_id, ${cos("l.tv", "r.tv")} AS score
-  FROM emb l CROSS JOIN emb r WHERE l.id < 50 AND r.id >= 50)
-SELECT left_id, right_id, CAST(FLOOR(score * 1000000) AS BIGINT) AS score_ppm
-FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY left_id ORDER BY score DESC, right_id) AS rn FROM sc)
-WHERE rn = 1"""
-  }
-
-  /** Independent DuckDB replay of `QLearning.bestMatches` (episodes=200,
-    * lr=0.1, γ=0.9, ε=0.1, seed=0x51AB): the reward matrix (ordered-fold
-    * cosines), the splitmix64 epsilon/action draws (HUGEINT arithmetic),
-    * and the full 200-step Q fold — a RECURSIVE CTE carrying each
-    * guideline's Q row as a DOUBLE list, with np.argmax's first-max-index
-    * semantics via list_position(q, list_max(q)). Every update is IEEE
-    * left-to-right in both engines, so the learned Q rows (and therefore
-    * the argmax readout) are bit-identical. */
-  private def qlearnOracleSql: String = {
-    val qUpd = "t.q[t.act] + 0.1*(t.rewards[t.act] + 0.9*t.mq - t.q[t.act])"
-    s"""WITH RECURSIVE emb AS (SELECT vec_id, embedding FROM embeddings),
-g AS (SELECT vec_id AS gid, embedding AS gv FROM emb
-  WHERE vec_id < 20 AND embedding IS NOT NULL),
-c AS (SELECT vec_id AS cid, embedding AS cv,
-    CAST(ROW_NUMBER() OVER (ORDER BY vec_id) AS INTEGER) AS ci
-  FROM emb WHERE vec_id >= 100 AND vec_id < 130 AND embedding IS NOT NULL),
-nc AS (SELECT COUNT(*)::HUGEINT AS n, COUNT(*)::INTEGER AS ni FROM c),
-gn AS (SELECT gid, list_reduce(list_transform(generate_series(1, 64), i -> gv[i]::DOUBLE * gv[i]::DOUBLE), (a, b) -> a + b) AS nn FROM g),
-cn AS (SELECT cid, list_reduce(list_transform(generate_series(1, 64), i -> cv[i]::DOUBLE * cv[i]::DOUBLE), (a, b) -> a + b) AS nn FROM c),
-rw AS MATERIALIZED (SELECT g.gid, list(${cosExpr("g.gv", "c.cv", "gn.nn", "cn.nn", 64)} ORDER BY c.ci) AS rewards
-  FROM g JOIN gn ON gn.gid = g.gid CROSS JOIN c JOIN cn ON cn.cid = c.cid
-  GROUP BY g.gid),
-r0 AS (SELECT gid, e, kind,
-    xor(xor(20907::HUGEINT, ((gid * 2654435761)::HUGEINT) % ${Osql.Mod}), (2*e + kind)::HUGEINT) AS x
-  FROM g CROSS JOIN (SELECT unnest(generate_series(0, 199)) AS e) es
-  CROSS JOIN (SELECT unnest([0, 1]) AS kind) ks),
-${Osql.mixCtes("r", "x")},
-rnd AS MATERIALIZED (SELECT gid, e,
-    MAX(CASE WHEN kind = 0 THEN (x // 2048::HUGEINT)::DOUBLE / 9007199254740992.0 END) AS u,
-    MAX(CASE WHEN kind = 1 THEN CAST(x % (SELECT n FROM nc) AS INTEGER) END) AS ra
-  FROM rd GROUP BY gid, e),
-rec AS (
-  SELECT gid, 0 AS e,
-    list_transform(generate_series(1, (SELECT ni FROM nc)), i -> 0.0::DOUBLE) AS q FROM g
-  UNION ALL
-  SELECT t.gid, t.e + 1,
-    list_transform(generate_series(1, (SELECT ni FROM nc)), i ->
-      CASE WHEN i = t.act THEN $qUpd ELSE t.q[i] END) AS q
-  FROM (
-    SELECT rec.gid, rec.e, rec.q, w.rewards, list_max(rec.q) AS mq,
-      CASE WHEN n.u < 0.1 THEN n.ra + 1
-           ELSE CAST(list_position(rec.q, list_max(rec.q)) AS INTEGER) END AS act
-    FROM rec JOIN rnd n ON n.gid = rec.gid AND n.e = rec.e
-    JOIN rw w ON w.gid = rec.gid
-    WHERE rec.e < 200) t),
-fin AS (SELECT gid, q, CAST(list_position(q, list_max(q)) AS INTEGER) AS best
-  FROM rec WHERE e = 200)
-SELECT f.gid AS guideline_id, c.cid AS control_id,
-  CAST(FLOOR(f.q[f.best] * 1000000) AS BIGINT) AS q_ppm,
-  CAST(FLOOR(w.rewards[f.best] * 1000000) AS BIGINT) AS score_ppm
-FROM fin f JOIN c ON c.ci = f.best JOIN rw w ON w.gid = f.gid"""
-  }
-
-  /** Independent DuckDB recomputation of `TfIdfMatch.bestMatchExact`: the
-    * 1e-4 weight quantization makes every aggregate an exact integer, so the
-    * two engines' sums cannot diverge by summation order. */
-  private val tfidfOracleSql: String =
-    """WITH l AS (SELECT doc_id AS id, text FROM documents WHERE doc_id < 50),
-r AS (SELECT doc_id AS id, text FROM documents WHERE doc_id >= 50 AND doc_id < 200),
-lt AS (SELECT left_id, term, COUNT(*) AS tf FROM
-  (SELECT id AS left_id, unnest(regexp_extract_all(lower(text), '\w\w+')) AS term FROM l)
-  GROUP BY left_id, term),
-rt AS (SELECT right_id, term, COUNT(*) AS tf FROM
-  (SELECT id AS right_id, unnest(regexp_extract_all(lower(text), '\w\w+')) AS term FROM r)
-  GROUP BY right_id, term),
-nn AS (SELECT (SELECT COUNT(*) FROM l) + (SELECT COUNT(*) FROM r) AS n),
-idf AS (SELECT term, ln(((SELECT n FROM nn) + 1.0) / (df + 1.0)) + 1.0 AS idf
-  FROM (SELECT term, COUNT(*) AS df FROM
-    (SELECT term FROM lt UNION ALL SELECT term FROM rt) GROUP BY term)),
-lw AS (SELECT left_id, lt.term AS term, CAST(FLOOR(tf * idf * 10000) AS BIGINT) AS w
-  FROM lt JOIN idf ON lt.term = idf.term),
-rw AS (SELECT right_id, rt.term AS term, CAST(FLOOR(tf * idf * 10000) AS BIGINT) AS w
-  FROM rt JOIN idf ON rt.term = idf.term),
-nl AS (SELECT left_id, SUM(w * w) AS sl FROM lw GROUP BY left_id),
-nr AS (SELECT right_id, SUM(w * w) AS sr FROM rw GROUP BY right_id),
-dotp AS (SELECT left_id, right_id, SUM(lw.w * rw.w) AS dot
-  FROM lw JOIN rw ON lw.term = rw.term GROUP BY left_id, right_id),
-scored AS (SELECT d.left_id, d.right_id,
-    CAST(FLOOR(d.dot::DOUBLE / (SQRT(nl.sl::DOUBLE) * SQRT(nr.sr::DOUBLE)) * 1000000) AS BIGINT) AS score_ppm
-  FROM dotp d JOIN nl ON nl.left_id = d.left_id JOIN nr ON nr.right_id = d.right_id),
-best AS (SELECT left_id, right_id, score_ppm,
-    ROW_NUMBER() OVER (PARTITION BY left_id ORDER BY score_ppm DESC, right_id) AS rn FROM scored)
-SELECT left_id, right_id, score_ppm FROM best WHERE rn = 1
-UNION ALL
-SELECT l.id AS left_id, (SELECT MIN(id) FROM r) AS right_id, CAST(0 AS BIGINT) AS score_ppm
-FROM l WHERE l.id NOT IN (SELECT left_id FROM scored)"""
-
-  def oracleSql: Map[String, String] = Map(
-    "q_simhash_neardup" -> simhashOracleSql,
-    "q_neardup_clusters" -> neardupClustersOracleSql,
-    "q_neardup_keep" -> neardupKeepOracleSql,
-    // flagship FSM replicas (see FsmOracleSql scaladoc)
-    "q_fsm_spans" ->
-      FsmOracleSql.spans.replace("__FIX__", s"$FixtureDir/fsmspan100/*.parquet"),
-    "q_fsm_records" ->
-      FsmOracleSql.records.replace("__FIX__", s"$FixtureDir/fsmrec60/*.parquet"),
-    "q_fsm_bucketed" ->
-      FsmOracleSql.records.replace("__FIX__", s"$FixtureDir/fsmrec60/*.parquet"),
-    "q_fsm_capped_route" ->
-      FsmOracleSql.records.replace("__FIX__", s"$FixtureDir/fsmrec60/*.parquet"),
-    "q_conv_docs" ->
-      s"""SELECT conv_id, string_agg(text, chr(10) ORDER BY turn_idx) AS doc_text,
-            COUNT(*) AS n_turns
-          FROM read_parquet('$FixtureDir/fsmrec60/*.parquet')
-          GROUP BY conv_id""",
-    "q_loss_mask" ->
-      s"""WITH t AS (
-            SELECT conv_id, turn_idx, role, text,
-              CAST(COALESCE(SUM(LENGTH(text) + 1) OVER (
-                PARTITION BY conv_id ORDER BY turn_idx, text
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-                AS start_off
-            FROM read_parquet('$FixtureDir/fsmrec60/*.parquet')
-            WHERE text IS NOT NULL)
-          SELECT conv_id, turn_idx, start_off,
-            start_off + LENGTH(text) AS end_off,
-            COALESCE(role = 'assistant', FALSE) AS loss
-          FROM t""",
-    "q_conv_neardup" ->
-      s"""WITH t AS (
-            SELECT DISTINCT conv_id, md5(text) AS th
-            FROM read_parquet('$FixtureDir/convdup/*.parquet')
-            WHERE text IS NOT NULL),
-          keep AS (
-            SELECT conv_id, th FROM (
-              SELECT conv_id, th, COUNT(*) OVER (PARTITION BY th) AS df
-              FROM t)
-            WHERE df <= 40),
-          sz AS (SELECT conv_id, COUNT(*) AS n FROM keep GROUP BY conv_id),
-          c AS (
-            SELECT l.conv_id AS cid1, r.conv_id AS cid2, COUNT(*) AS inter
-            FROM keep l JOIN keep r
-              ON l.th = r.th AND l.conv_id < r.conv_id
-            GROUP BY 1, 2)
-          SELECT cid1, cid2, inter, s1.n AS n1, s2.n AS n2
-          FROM c
-          JOIN sz s1 ON c.cid1 = s1.conv_id
-          JOIN sz s2 ON c.cid2 = s2.conv_id
-          WHERE inter * 1000000 >= (s1.n + s2.n - inter) * 600000""",
-    "q_bpe_pairs" ->
-      """WITH toks AS (
-            SELECT unnest(regexp_split_to_array(text, '\s+')) AS tok
-            FROM documents),
-          p AS (
-            SELECT substring(tok, unnest(generate_series(1, length(tok) - 1)), 2)
-              AS pair
-            FROM toks WHERE length(tok) >= 2)
-          SELECT pair, COUNT(*) AS n
-          FROM p GROUP BY pair ORDER BY n DESC, pair LIMIT 50""",
-    "q_length_hist" ->
-      """SELECT source,
-            CASE WHEN n_chars <= 0 THEN 0
-                 ELSE length(bin(n_chars)) END AS len_bucket,
-            COUNT(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS sum_size
-          FROM documents GROUP BY source, len_bucket""",
-    "q_url_hosts" ->
-      s"""WITH u AS (
-            SELECT doc_id, unnest(regexp_extract_all(text,
-              'https?://[A-Za-z0-9.-]+(?::[0-9]+)?(?:/[^ \\t\\n"''<>]*)?')) AS url
-            FROM read_parquet('$FixtureDir/urls200/*.parquet')),
-          c AS (
-            SELECT doc_id,
-              regexp_replace(lower(regexp_extract(url,
-                'https?://([A-Za-z0-9.-]+)', 1)), '^www\\.', '') AS host,
-              CASE WHEN p = '' THEN '/' ELSE p END AS path
-            FROM (SELECT doc_id, url,
-                regexp_replace(coalesce(regexp_extract(url,
-                  'https?://[A-Za-z0-9.-]+(?::[0-9]+)?(/[^ \\t\\n"''<>]*)?', 1),
-                  ''), '#.*${"$"}', '') AS p
-              FROM u))
-          SELECT host, COUNT(*) AS n_urls,
-            COUNT(DISTINCT doc_id) AS n_docs,
-            COUNT(DISTINCT path) AS n_paths
-          FROM c GROUP BY host""",
-    // C4 cleaning: line filter (terminal punct, >=3 words, marker-free)
-    // then doc rules (>=5 sentences, no lorem ipsum, no brace) — suffix
-    // replicated with chr(10) newlines
-    "q_c4_clean" ->
-      """WITH aug AS (SELECT doc_id, text || chr(10) ||
-           'This tail sentence is long enough to keep.' || chr(10) ||
-           'short line' || chr(10) ||
-           'Please enable javascript to continue!' || chr(10) ||
-           'Read our privacy policy today okay.' ||
-           CASE WHEN doc_id % 7 = 0 THEN chr(10) || 'lorem ipsum dolor sit amet.' ELSE '' END ||
-           CASE WHEN doc_id % 11 = 0 THEN chr(10) || 'code block { x } here.' ELSE '' END AS t
-         FROM documents),
-         l AS (SELECT doc_id, string_split(
-             regexp_replace(t, '[\x00-\x09\x0B-\x1F]', ' ', 'g'), chr(10)) AS lines
-           FROM aug),
-         k AS (SELECT doc_id, lines, list_filter(lines, x ->
-             NOT contains(lower(trim(x)), 'javascript') AND
-             NOT contains(lower(trim(x)), 'terms of use') AND
-             NOT contains(lower(trim(x)), 'privacy policy') AND
-             NOT contains(lower(trim(x)), 'cookie policy') AND
-             NOT contains(lower(trim(x)), 'uses cookies') AND
-             regexp_matches(trim(x), '[.!?"]' || chr(36)) AND
-             len(string_split_regex(trim(x), '\s+')) >= 3) AS kept FROM l),
-         c AS (SELECT doc_id, CAST(len(lines) AS BIGINT) AS n_lines,
-             CAST(len(kept) AS BIGINT) AS n_kept,
-             array_to_string(kept, chr(10)) AS clean_text FROM k)
-         SELECT doc_id, n_lines, n_kept, clean_text,
-           CAST(len(regexp_extract_all(clean_text, '[.!?]')) AS BIGINT) AS n_sentences,
-           CASE WHEN len(regexp_extract_all(clean_text, '[.!?]')) >= 5
-                 AND NOT contains(lower(clean_text), 'lorem ipsum')
-                 AND NOT contains(clean_text, '{')
-             THEN 1 ELSE 0 END AS doc_keep
-         FROM c""",
-    // Gopher §A1.1 composite: all ratio thresholds as integer
-    // cross-multiplications — no float boundary anywhere
-    "q_gopher_quality" ->
-      """WITH aug AS (SELECT doc_id, text || chr(10) ||
-           '- bullet point one' || chr(10) || '* item two' || chr(10) ||
-           'thoughts trailing off...' || chr(10) ||
-           'more thoughts' || chr(8230) || chr(10) ||
-           chr(8226) || ' third bullet' || chr(10) ||
-           'The end should be of use, so that we have it with stopwords.' AS t0
-         FROM documents),
-         cl AS (SELECT doc_id,
-             regexp_replace(t0, '[\x00-\x09\x0B-\x1F]', ' ', 'g') AS t FROM aug),
-         b AS (SELECT doc_id, t,
-             list_filter(string_split_regex(t, '\s+'), x -> len(x) > 0) AS toks,
-             string_split(t, chr(10)) AS lines FROM cl),
-         lt AS (SELECT *, list_transform(toks, x -> lower(x)) AS lowtoks FROM b),
-         c AS (SELECT doc_id,
-             CAST(len(toks) AS BIGINT) AS n_words,
-             CAST(COALESCE(list_sum(list_transform(toks, x -> len(x))), 0) AS BIGINT) AS n_word_chars,
-             CAST(len(regexp_extract_all(t, '#')) +
-                  len(regexp_extract_all(t, '\.{3}')) +
-                  len(regexp_extract_all(t, chr(8230))) AS BIGINT) AS n_symbols,
-             CAST(len(lines) AS BIGINT) AS n_lines,
-             CAST(len(list_filter(lines, l -> regexp_matches(trim(l),
-               '^[-*' || chr(8226) || ']'))) AS BIGINT) AS n_bullet,
-             CAST(len(list_filter(lines, l -> regexp_matches(trim(l),
-               '(\.\.\.|' || chr(8230) || ')' || chr(36)))) AS BIGINT) AS n_ellipsis,
-             CAST(len(list_filter(toks, x -> regexp_matches(x, '[A-Za-z]'))) AS BIGINT) AS n_alpha_words,
-             CAST((CASE WHEN list_contains(lowtoks, 'the') THEN 1 ELSE 0 END) +
-               (CASE WHEN list_contains(lowtoks, 'be') THEN 1 ELSE 0 END) +
-               (CASE WHEN list_contains(lowtoks, 'to') THEN 1 ELSE 0 END) +
-               (CASE WHEN list_contains(lowtoks, 'of') THEN 1 ELSE 0 END) +
-               (CASE WHEN list_contains(lowtoks, 'and') THEN 1 ELSE 0 END) +
-               (CASE WHEN list_contains(lowtoks, 'that') THEN 1 ELSE 0 END) +
-               (CASE WHEN list_contains(lowtoks, 'have') THEN 1 ELSE 0 END) +
-               (CASE WHEN list_contains(lowtoks, 'with') THEN 1 ELSE 0 END) AS BIGINT) AS n_stop_hits
-           FROM lt)
-         SELECT doc_id, n_words, n_word_chars, n_symbols, n_lines, n_bullet,
-           n_ellipsis, n_alpha_words, n_stop_hits,
-           CASE WHEN n_words >= 50 AND n_words <= 100000 THEN 1 ELSE 0 END AS pass_words,
-           CASE WHEN n_words * 3 <= n_word_chars AND n_word_chars <= n_words * 10 THEN 1 ELSE 0 END AS pass_meanlen,
-           CASE WHEN n_symbols * 10 <= n_words THEN 1 ELSE 0 END AS pass_symbol,
-           CASE WHEN n_bullet * 10 <= n_lines * 9 THEN 1 ELSE 0 END AS pass_bullet,
-           CASE WHEN n_ellipsis * 10 <= n_lines * 3 THEN 1 ELSE 0 END AS pass_ellipsis,
-           CASE WHEN n_alpha_words * 5 >= n_words * 4 THEN 1 ELSE 0 END AS pass_alpha,
-           CASE WHEN n_stop_hits >= 2 THEN 1 ELSE 0 END AS pass_stop,
-           CASE WHEN n_words >= 50 AND n_words <= 100000
-                 AND n_words * 3 <= n_word_chars AND n_word_chars <= n_words * 10
-                 AND n_symbols * 10 <= n_words
-                 AND n_bullet * 10 <= n_lines * 9
-                 AND n_ellipsis * 10 <= n_lines * 3
-                 AND n_alpha_words * 5 >= n_words * 4
-                 AND n_stop_hits >= 2 THEN 1 ELSE 0 END AS gopher_pass
-         FROM c""",
-    // char-entropy fingerprint: DuckDB rebuilds the code-point histogram
-    // and the same 1e-4-quantized log terms
-    "q_char_entropy" ->
-      """WITH ch AS (SELECT doc_id, unnest(regexp_extract_all(text, '(?s).')) AS c
-           FROM documents WHERE length(text) > 0),
-         g AS (SELECT doc_id, c, COUNT(*)::BIGINT AS cnt FROM ch GROUP BY doc_id, c),
-         n AS (SELECT doc_id, CAST(SUM(cnt) AS BIGINT) AS n_cp FROM g GROUP BY doc_id)
-         SELECT g.doc_id, ANY_VALUE(n.n_cp) AS n_cp,
-           CAST(SUM(cnt * CAST(FLOOR(ln(n.n_cp::DOUBLE / cnt::DOUBLE) * 10000) AS BIGINT)) AS BIGINT) AS ent_q4_sum
-         FROM g JOIN n ON g.doc_id = n.doc_id GROUP BY g.doc_id""",
-    // URL-blocklist filter: same extract + canonicalize chain as
-    // q_url_hosts, then a list_filter membership probe per doc
-    "q_url_filter" ->
-      s"""SELECT doc_id,
-           CAST(len(regexp_extract_all(text,
-             'https?://[A-Za-z0-9.-]+(?::[0-9]+)?(?:/[^ \\t\\n"''<>]*)?')) AS BIGINT) AS n_urls,
-           CASE WHEN len(list_filter(regexp_extract_all(text,
-               'https?://[A-Za-z0-9.-]+(?::[0-9]+)?(?:/[^ \\t\\n"''<>]*)?'), u ->
-               list_contains(['cdn.bar.net', 'a.b.example.com', 'foo.org'],
-                 regexp_replace(lower(regexp_extract(u,
-                   'https?://([A-Za-z0-9.-]+)', 1)), '^www\\.', '')))) > 0
-             THEN 1 ELSE 0 END AS blocked
-         FROM read_parquet('$FixtureDir/urls200/*.parquet')""",
-    // link/anchor extraction: both capture groups re-extracted, zipped by
-    // index, anchors whitespace-normalized
-    "q_link_extract" ->
-      s"""WITH t AS (SELECT conv_id, turn_idx,
-             regexp_extract_all(text, '<a\\s[^>]*href="([^"]*)"[^>]*>([^<]*)</a>', 1) AS hs,
-             regexp_extract_all(text, '<a\\s[^>]*href="([^"]*)"[^>]*>([^<]*)</a>', 2) AS asx
-           FROM read_parquet('$FixtureDir/html120/*.parquet')
-           WHERE contains(text, '<html')),
-         e AS (SELECT conv_id, turn_idx, hs, asx,
-             unnest(generate_series(1, len(hs))) AS i FROM t)
-         SELECT conv_id, turn_idx, CAST(i - 1 AS BIGINT) AS pos,
-           hs[i] AS href,
-           trim(regexp_replace(asx[i], '\\s+', ' ', 'g')) AS anchor
-         FROM e""",
-    // container sniffing: DuckDB hexes the whole blob and prefix-matches
-    // the same magic strings
-    "q_mime_sniff" ->
-      s"""WITH m AS (SELECT media_id,
-             substring(upper(hex(payload)), 1, 24) AS magic24
-           FROM read_parquet('$FixtureDir/mime600/*.parquet'))
-         SELECT media_id, magic24,
-           CASE WHEN starts_with(magic24, '89504E47') THEN 'image/png'
-                WHEN starts_with(magic24, '52494646')
-                  AND substring(magic24, 17, 8) = '57415645' THEN 'audio/x-wav'
-                WHEN starts_with(magic24, '595556344D50454732') THEN 'video/x-y4m'
-                WHEN starts_with(magic24, '255044462D') THEN 'application/pdf'
-                WHEN starts_with(magic24, '3C21444F43')
-                  OR starts_with(magic24, '3C21646F63')
-                  OR starts_with(magic24, '3C68746D6C')
-                  OR starts_with(magic24, '3C48544D4C') THEN 'text/html'
-                ELSE 'application/octet-stream' END AS mime
-         FROM m""",
-    // DSIR replica: bigram stream → fingerprint64 HUGEINT chain → signed
-    // pmod bucket → Laplace bucket counts → quantized log-ratio sum
-    "q_dsir_weights" ->
-      s"""WITH base AS (SELECT doc_id, (lang = 'en') AS is_t,
-    regexp_replace(text, '[\\x00-\\x1F]', ' ', 'g') AS text FROM documents),
-tk AS (SELECT doc_id, is_t,
-    list_filter(string_split_regex(lower(text), '\\s+'), x -> len(x) > 0) AS tk
-  FROM base),
-bg AS (SELECT doc_id, is_t,
-    unnest(list_transform(generate_series(1, len(tk) - 1),
-      i -> tk[i] || ' ' || tk[i + 1])) AS g
-  FROM tk WHERE len(tk) >= 2),
-m0 AS (SELECT doc_id, is_t,
-    list_reduce(
-      list_prepend(0::HUGEINT,
-        list_transform(regexp_extract_all(g, '(?s).'), c -> ord(c)::HUGEINT)),
-      (a, b) -> (a * 257::HUGEINT + b) % ${Osql.Mod}) AS x
-  FROM bg),
-${Osql.mixCtes("m", "x")},
-f AS (SELECT doc_id, is_t,
-    CAST(((${Osql.signed("x")} % 4096) + 4096) % 4096 AS BIGINT) AS b FROM md),
-c AS (SELECT b,
-    CAST(SUM(CASE WHEN is_t THEN 1 ELSE 0 END) AS BIGINT) AS ct,
-    CAST(SUM(CASE WHEN is_t THEN 0 ELSE 1 END) AS BIGINT) AS cr
-  FROM f GROUP BY b),
-tot AS (SELECT CAST(SUM(ct) AS BIGINT) AS tt, CAST(SUM(cr) AS BIGINT) AS tr FROM c),
-sc AS (SELECT f.doc_id, COUNT(*)::BIGINT AS n_feats,
-    CAST(SUM(CAST(FLOOR(ln(
-      ((ct + 1) * (tr + 4096))::DOUBLE / ((cr + 1) * (tt + 4096))::DOUBLE
-    ) * 10000) AS BIGINT)) AS BIGINT) AS dsir_q4_sum
-  FROM f JOIN c USING(b) CROSS JOIN tot WHERE NOT is_t GROUP BY f.doc_id)
-SELECT d.doc_id, COALESCE(sc.n_feats, 0)::BIGINT AS n_feats,
-  COALESCE(sc.dsir_q4_sum, 0)::BIGINT AS dsir_q4_sum
-FROM documents d LEFT JOIN sc ON d.doc_id = sc.doc_id WHERE d.lang <> 'en'""",
-    // LM-perplexity replica: per-token fingerprint64 chain → signed pmod
-    // word bucket → adjacent-pair keys u*V+v → add-one conditional bigram
-    // LM from the 'en' slice → quantized NLL sum over the rest
-    "q_lm_perplexity" ->
-      s"""WITH base AS (SELECT doc_id, (lang = 'en') AS is_t,
-    regexp_replace(text, '[\\x00-\\x1F]', ' ', 'g') AS text FROM documents),
-tk AS (SELECT doc_id, is_t,
-    list_filter(string_split_regex(lower(text), '\\s+'), x -> len(x) > 0) AS tk
-  FROM base),
-tr AS (SELECT doc_id, is_t, unnest(generate_series(1, len(tk))) AS i, tk
-  FROM tk WHERE len(tk) >= 2),
-m0 AS (SELECT doc_id, is_t, i,
-    list_reduce(
-      list_prepend(0::HUGEINT,
-        list_transform(regexp_extract_all(tk[i], '(?s).'), c -> ord(c)::HUGEINT)),
-      (a, b) -> (a * 257::HUGEINT + b) % ${Osql.Mod}) AS x
-  FROM tr),
-${Osql.mixCtes("m", "x")},
-bkt AS (SELECT doc_id, is_t, i,
-    CAST(((${Osql.signed("x")} % 4096) + 4096) % 4096 AS BIGINT) AS b FROM md),
-pairs AS (SELECT a.doc_id, a.is_t, a.b * 4096 + n.b AS k
-  FROM bkt a JOIN bkt n ON a.doc_id = n.doc_id AND n.i = a.i + 1),
-c AS (SELECT k, COUNT(*)::BIGINT AS c_uv FROM pairs WHERE is_t GROUP BY k),
-cu AS (SELECT k // 4096 AS u, CAST(SUM(c_uv) AS BIGINT) AS c_u FROM c GROUP BY 1),
-sc AS (SELECT p.doc_id, COUNT(*)::BIGINT AS n_pairs,
-    CAST(SUM(-CAST(FLOOR(ln(
-      (COALESCE(c.c_uv, 0) + 1)::DOUBLE / (COALESCE(cu.c_u, 0) + 4096)::DOUBLE
-    ) * 10000) AS BIGINT)) AS BIGINT) AS nll_q4_sum
-  FROM pairs p LEFT JOIN c USING (k) LEFT JOIN cu ON p.k // 4096 = cu.u
-  WHERE NOT p.is_t GROUP BY p.doc_id)
-SELECT d.doc_id, COALESCE(sc.n_pairs, 0)::BIGINT AS n_pairs,
-  COALESCE(sc.nll_q4_sum, 0)::BIGINT AS nll_q4_sum,
-  CASE WHEN COALESCE(sc.n_pairs, 0) = 0 THEN 0
-       ELSE sc.nll_q4_sum // sc.n_pairs END::BIGINT AS avg_nll_q4
-FROM documents d LEFT JOIN sc ON d.doc_id = sc.doc_id WHERE d.lang <> 'en'""",
-    // JSONL roundtrip oracle: computed from the PARQUET source — it never
-    // sees the intermediate JSON, so equality proves the roundtrip
-    "q_jsonl_roundtrip" ->
-      s"""WITH f0 AS (SELECT doc_id, lang,
-    CAST(length(text) AS BIGINT) AS n_chars_rt, text,
-    list_reduce(list_prepend(0::HUGEINT,
-      list_transform(regexp_extract_all(text, '(?s).'), c -> ord(c)::HUGEINT)),
-    (a, b) -> (a * 257::HUGEINT + b) % ${Osql.Mod}) AS x
-  FROM documents),
-${Osql.mixCtes("f", "x")}
-SELECT doc_id, lang, n_chars_rt, CAST(${Osql.signed("x")} AS BIGINT) AS fp FROM fd""",
-    // ORC roundtrip: same parquet-source-only replica as the JSONL one
-    "q_orc_roundtrip" ->
-      s"""WITH o0 AS (SELECT doc_id, lang,
-    CAST(length(text) AS BIGINT) AS n_chars_rt, text,
-    list_reduce(list_prepend(0::HUGEINT,
-      list_transform(regexp_extract_all(text, '(?s).'), c -> ord(c)::HUGEINT)),
-    (a, b) -> (a * 257::HUGEINT + b) % ${Osql.Mod}) AS x
-  FROM documents),
-${Osql.mixCtes("o", "x")}
-SELECT doc_id, lang, n_chars_rt, CAST(${Osql.signed("x")} AS BIGINT) AS fp FROM od""",
-    // gzip replica: fixed-offset stored-deflate extraction (10-byte header,
-    // 1-byte block header, LE length, data) + fingerprint64 of the decoded
-    // text via the HUGEINT chain — DuckDB "gunzips" with byte arithmetic
-    "q_gunzip" ->
-      s"""WITH raw AS (SELECT doc_id,
-    list_transform(regexp_extract_all(hex(payload), '..'),
-      s -> (strpos('0123456789ABCDEF', substr(s, 1, 1)) - 1) * 16 +
-           strpos('0123456789ABCDEF', substr(s, 2, 1)) - 1) AS bytes
-  FROM read_parquet('$FixtureDir/gz300/*.parquet')),
-b2 AS (SELECT doc_id, bytes, bytes[12] + 256 * bytes[13] AS len FROM raw),
-dec AS (SELECT doc_id, len,
-    array_to_string(list_transform(bytes[16 : 15 + len], b -> chr(CAST(b AS INTEGER))), '') AS text
-  FROM b2),
-f0 AS (SELECT doc_id, len, text,
-  list_reduce(list_prepend(0::HUGEINT,
-    list_transform(regexp_extract_all(text, '(?s).'), c -> ord(c)::HUGEINT)),
-  (a, b) -> (a * 257::HUGEINT + b) % ${Osql.Mod}) AS x
-  FROM dec),
-${Osql.mixCtes("f", "x")}
-SELECT doc_id, CAST(len AS BIGINT) AS n_bytes,
-  CAST(${Osql.signed("x")} AS BIGINT) AS fp,
-  substring(text, 1, 60) AS head60
-FROM fd""",
-    // multi-block gzip replica: a RECURSIVE CTE walks the stored-deflate
-    // block chain (off → 1-byte BFINAL/BTYPE header, LEN little-endian,
-    // LEN data bytes → off + 5 + LEN) until BFINAL; fixture is ASCII so
-    // decoded char length == byte length
-    "q_gunzip_multi" ->
-      s"""WITH RECURSIVE raw AS (SELECT doc_id,
-    list_transform(regexp_extract_all(hex(payload), '..'),
-      s -> (strpos('0123456789ABCDEF', substr(s, 1, 1)) - 1) * 16 +
-           strpos('0123456789ABCDEF', substr(s, 2, 1)) - 1) AS bytes
-  FROM read_parquet('$FixtureDir/gzmulti240/*.parquet')),
-walk AS (
-  SELECT doc_id, bytes, CAST(11 AS BIGINT) AS off, '' AS txt, 0 AS fin FROM raw
-  UNION ALL
-  SELECT doc_id, bytes,
-    off + 5 + bytes[off + 1] + 256 * bytes[off + 2],
-    txt || array_to_string(list_transform(
-      bytes[off + 5 : off + 4 + bytes[off + 1] + 256 * bytes[off + 2]],
-      b -> chr(CAST(b AS INTEGER))), ''),
-    CAST(bytes[off] % 2 AS INTEGER)
-  FROM walk WHERE fin = 0),
-g0 AS (SELECT doc_id, txt,
-  list_reduce(list_prepend(0::HUGEINT,
-    list_transform(regexp_extract_all(txt, '(?s).'), c -> ord(c)::HUGEINT)),
-  (a, b) -> (a * 257::HUGEINT + b) % ${Osql.Mod}) AS x
-  FROM walk WHERE fin = 1),
-${Osql.mixCtes("g", "x")}
-SELECT doc_id, CAST(len(txt) AS BIGINT) AS n_bytes,
-  CAST(${Osql.signed("x")} AS BIGINT) AS fp,
-  substring(txt, 1, 60) AS head60
-FROM gd""",
-    // HLL sketch replica: fingerprint64 HUGEINT chain per token, bucket =
-    // top 8 bits (x // 2^56), rank = 56-bit-field leading zeros + 1 via
-    // bin() bit length (65 - p - bitlen; rest = 0 → 57) — integer-exact
-    "q_hll_tokens" ->
-      s"""WITH tk AS (SELECT unnest(list_filter(string_split_regex(
-      regexp_replace(lower(text), '[\\x00-\\x1F]', ' ', 'g'), '\\s+'),
-      x -> len(x) > 0)) AS tok FROM documents),
-h0 AS (SELECT list_reduce(list_prepend(0::HUGEINT,
-    list_transform(regexp_extract_all(tok, '(?s).'), c -> ord(c)::HUGEINT)),
-  (a, b) -> (a * 257::HUGEINT + b) % ${Osql.Mod}) AS x
-  FROM tk),
-${Osql.mixCtes("h", "x")},
-br AS (SELECT x // 72057594037927936::HUGEINT AS bucket,
-              x % 72057594037927936::HUGEINT AS rest FROM hd)
-SELECT CAST(bucket AS BIGINT) AS bucket,
-  CAST(MAX(CASE WHEN rest = 0 THEN 57
-       ELSE 57 - length(bin(CAST(rest AS BIGINT))) END) AS BIGINT) AS max_rank
-FROM br GROUP BY bucket""",
-    // KMV replica: same fingerprint chain, DISTINCT at the fp level (Spark
-    // dedups fingerprints, so hash-colliding distinct tokens collapse in
-    // both engines), unsigned HUGEINT order = the Spark side's sign-bit
-    // flip, rank from row_number over the full distinct set before LIMIT
-    "q_kmv_tokens" ->
-      s"""WITH tk AS (SELECT DISTINCT CAST(doc_id AS VARCHAR) || ':' || tok AS tok
-  FROM (SELECT doc_id, unnest(list_filter(string_split_regex(
-      regexp_replace(lower(text), '[\\x00-\\x1F]', ' ', 'g'), '\\s+'),
-      x -> len(x) > 0)) AS tok FROM documents)),
-h0 AS (SELECT list_reduce(list_prepend(0::HUGEINT,
-    list_transform(regexp_extract_all(tok, '(?s).'), c -> ord(c)::HUGEINT)),
-  (a, b) -> (a * 257::HUGEINT + b) % ${Osql.Mod}) AS x
-  FROM tk),
-${Osql.mixCtes("h", "x")},
-u AS (SELECT DISTINCT x FROM hd),
-r AS (SELECT x, row_number() OVER (ORDER BY x) AS rnk FROM u ORDER BY x LIMIT 256)
-SELECT CAST(rnk AS BIGINT) AS rank, CAST(${Osql.signed("x")} AS BIGINT) AS fp FROM r""",
-    // KMV-resemblance replica: per-side distinct bigram fingerprints (same
-    // ord-polynomial + splitmix chain; `side` rides through mixCtes via
-    // SELECT * REPLACE), per-side bottom-k, bottom-k of the union, and the
-    // coordinated-sample intersection count — all exact integers
-    "q_kmv_resemblance" ->
-      s"""WITH tk AS (SELECT side, t AS tok FROM (
-    SELECT doc_id % 2 AS side,
-      unnest(list_transform(generate_series(1, len(l) - 1),
-        k -> l[k] || ' ' || l[k + 1])) AS t
-    FROM (SELECT doc_id, list_filter(string_split_regex(
-        regexp_replace(lower(text), '[\\x00-\\x1F]', ' ', 'g'), '\\s+'),
-        x -> len(x) > 0) AS l FROM documents))
-  GROUP BY side, t),
-h0 AS (SELECT side, list_reduce(list_prepend(0::HUGEINT,
-    list_transform(regexp_extract_all(tok, '(?s).'), c -> ord(c)::HUGEINT)),
-  (a, b) -> (a * 257::HUGEINT + b) % ${Osql.Mod}) AS x
-  FROM tk),
-${Osql.mixCtes("h", "x")},
-ka AS (SELECT DISTINCT x FROM hd WHERE side = 0 ORDER BY x LIMIT 256),
-kb AS (SELECT DISTINCT x FROM hd WHERE side = 1 ORDER BY x LIMIT 256),
-un AS (SELECT DISTINCT x FROM (SELECT x FROM ka UNION ALL SELECT x FROM kb)
-  ORDER BY x LIMIT 256),
-i AS (SELECT count(*) AS n_inter FROM un JOIN ka USING (x) JOIN kb USING (x)),
-u AS (SELECT count(*) AS k_union FROM un)
-SELECT CAST(k_union AS BIGINT) AS k_union, CAST(n_inter AS BIGINT) AS n_inter,
-  CAST(CASE WHEN k_union = 0 THEN 0
-       ELSE n_inter * 1000000 // k_union END AS BIGINT) AS jaccard_ppm
-FROM u, i""",
-    // per-lang KMV replica: distinct (lang, doc:token) pairs → fingerprint
-    // chain (lang rides through mixCtes) → per-lang DISTINCT fp → per-lang
-    // bottom-64 via QUALIFY-style row_number
-    "q_kmv_per_lang" ->
-      s"""WITH tk AS (SELECT DISTINCT lang,
-    CAST(doc_id AS VARCHAR) || ':' || tok AS tok
-  FROM (SELECT lang, doc_id, unnest(list_filter(string_split_regex(
-      regexp_replace(lower(text), '[\\x00-\\x1F]', ' ', 'g'), '\\s+'),
-      x -> len(x) > 0)) AS tok FROM documents)),
-h0 AS (SELECT lang, list_reduce(list_prepend(0::HUGEINT,
-    list_transform(regexp_extract_all(tok, '(?s).'), c -> ord(c)::HUGEINT)),
-  (a, b) -> (a * 257::HUGEINT + b) % ${Osql.Mod}) AS x
-  FROM tk),
-${Osql.mixCtes("h", "x")},
-u AS (SELECT DISTINCT lang, x FROM hd),
-r AS (SELECT lang, x,
-    row_number() OVER (PARTITION BY lang ORDER BY x) AS rnk FROM u)
-SELECT lang, CAST(rnk AS BIGINT) AS rank,
-  CAST(${Osql.signed("x")} AS BIGINT) AS fp
-FROM r WHERE rnk <= 64""",
-    // topk_agg replica: the aggregate's (rank desc, id asc-binary) order IS
-    // a row_number window over the same keys — the oracle proves the O(k)
-    // partial-agg path equals the full-sort semantics
-    "q_topk_agg" ->
-      """SELECT lang, rn, len, doc_id FROM (
-  SELECT lang, n_chars AS len, CAST(doc_id AS VARCHAR) AS doc_id,
-    ROW_NUMBER() OVER (PARTITION BY lang
-      ORDER BY n_chars DESC, CAST(doc_id AS VARCHAR)) AS rn
-  FROM documents) WHERE rn <= 3""",
-    // group-sample replica: same salted fingerprint chain per doc_id, then
-    // a row_number window over the SIGNED hash (bottomk_agg compares Java
-    // longs) with the id tie-break — proves the O(k) sampler draws exactly
-    // the hash-order bottom-k
-    "q_group_sample" ->
-      s"""WITH tk AS (SELECT lang, CAST(doc_id AS VARCHAR) AS doc_id,
-    'sample:' || CAST(doc_id AS VARCHAR) AS s FROM documents),
-h0 AS (SELECT lang, doc_id, list_reduce(list_prepend(0::HUGEINT,
-    list_transform(regexp_extract_all(s, '(?s).'), c -> ord(c)::HUGEINT)),
-  (a, b) -> (a * 257::HUGEINT + b) % ${Osql.Mod}) AS x FROM tk),
-${Osql.mixCtes("h", "x")},
-r AS (SELECT lang, doc_id, CAST(${Osql.signed("x")} AS BIGINT) AS fp,
-    row_number() OVER (PARTITION BY lang
-      ORDER BY CAST(${Osql.signed("x")} AS BIGINT), doc_id) AS rnk
-  FROM hd)
-SELECT lang, CAST(rnk AS BIGINT) AS draw, fp, doc_id FROM r WHERE rnk <= 4""",
-    // lang-profile replica: plain aggregates + the two window replicas the
-    // one-pass Spark aggregate fuses (top-1 by n_chars, bottom-2 by salted
-    // fingerprint), joined per lang
-    "q_lang_profile" ->
-      s"""WITH tk AS (SELECT lang, CAST(doc_id AS VARCHAR) AS doc_id,
-    'sample:' || CAST(doc_id AS VARCHAR) AS s FROM documents),
-h0 AS (SELECT lang, doc_id, list_reduce(list_prepend(0::HUGEINT,
-    list_transform(regexp_extract_all(s, '(?s).'), c -> ord(c)::HUGEINT)),
-  (a, b) -> (a * 257::HUGEINT + b) % ${Osql.Mod}) AS x FROM tk),
-${Osql.mixCtes("h", "x")},
-smp AS (SELECT lang, string_agg(doc_id, ',' ORDER BY rnk) AS sample_docs
-  FROM (SELECT lang, doc_id, row_number() OVER (PARTITION BY lang
-      ORDER BY CAST(${Osql.signed("x")} AS BIGINT), doc_id) AS rnk FROM hd)
-  WHERE rnk <= 2 GROUP BY lang),
-top1 AS (SELECT lang, doc_id AS longest_doc, n_chars AS longest_chars
-  FROM (SELECT lang, CAST(doc_id AS VARCHAR) AS doc_id, n_chars,
-      row_number() OVER (PARTITION BY lang
-        ORDER BY n_chars DESC, CAST(doc_id AS VARCHAR)) AS rn
-    FROM documents) WHERE rn = 1),
-agg AS (SELECT lang, COUNT(*) AS n_docs,
-    CAST(SUM(n_chars) AS BIGINT) AS total_chars FROM documents GROUP BY lang)
-SELECT a.lang, a.n_docs, a.total_chars, t.longest_doc, t.longest_chars,
-  s.sample_docs
-FROM agg a JOIN top1 t ON t.lang = a.lang JOIN smp s ON s.lang = a.lang""",
-    // CMS replica: fingerprint64 per token, then per depth row d the
-    // splitmix rehash of xor(fp, (d+1)*GOLDEN) — the minHash hash family —
-    // and the low 10 bits (width 1024 divides 2^64, so unsigned HUGEINT
-    // and signed JVM residues coincide)
-    "q_cms_tokens" ->
-      s"""WITH tk AS (SELECT unnest(list_filter(string_split_regex(
-      regexp_replace(lower(text), '[\\x00-\\x1F]', ' ', 'g'), '\\s+'),
-      x -> len(x) > 0)) AS tok FROM documents),
-h0 AS (SELECT list_reduce(list_prepend(0::HUGEINT,
-    list_transform(regexp_extract_all(tok, '(?s).'), c -> ord(c)::HUGEINT)),
-  (a, b) -> (a * 257::HUGEINT + b) % ${Osql.Mod}) AS x
-  FROM tk),
-${Osql.mixCtes("h", "x")},
-e0 AS (SELECT s.d AS d, xor(hd.x, s.seed) AS x FROM hd CROSS JOIN (VALUES
-  ${(0 until 4).map(i => s"($i, ${java.lang.Long.toUnsignedString((i + 1) * 0x9E3779B97F4A7C15L)}::HUGEINT)").mkString(", ")})
-  AS s(d, seed)),
-${Osql.mixCtes("e", "x")}
-SELECT CAST(d AS BIGINT) AS d, CAST(x % 1024::HUGEINT AS BIGINT) AS bucket,
-  CAST(COUNT(*) AS BIGINT) AS cnt
-FROM ed GROUP BY 1, 2""",
-    // incremental-dedup replica: fingerprint64 per doc, then per fp group
-    // the day-0 (even-id) minimum wins if the fp appeared on day 0, else
-    // the day-1 minimum — exactly the anti-join batch order
-    "q_incremental_dedup" ->
-      s"""WITH f0 AS (SELECT doc_id, list_reduce(list_prepend(0::HUGEINT,
-    list_transform(regexp_extract_all(text, '(?s).'), c -> ord(c)::HUGEINT)),
-  (a, b) -> (a * 257::HUGEINT + b) % ${Osql.Mod}) AS x
-  FROM documents),
-${Osql.mixCtes("f", "x")},
-fp AS (SELECT doc_id, CAST(${Osql.signed("x")} AS BIGINT) AS fp FROM fd)
-SELECT COALESCE(MIN(CASE WHEN doc_id % 2 = 0 THEN doc_id END), MIN(doc_id)) AS doc_id,
-  fp
-FROM fp GROUP BY fp""",
-    // heavy-hitter replica: the final output is EXACT (the CMS gate only
-    // prunes, never drops a true heavy hitter), so plain GROUP BY + HAVING
-    // is the complete oracle
-    "q_heavy_hitters" ->
-      s"""SELECT tok AS value, CAST(COUNT(*) AS BIGINT) AS cnt
-FROM (SELECT unnest(list_filter(string_split_regex(
-    regexp_replace(lower(text), '[\\x00-\\x1F]', ' ', 'g'), '\\s+'),
-    x -> len(x) > 0)) AS tok FROM documents)
-GROUP BY tok HAVING COUNT(*) >= 900""",
-    // as-of replica: DuckDB's NATIVE ASOF LEFT JOIN — an independent
-    // algorithm (sort-merge as-of) replaying the same contract: inclusive
-    // l.ts >= r.ts, right side pre-deduped per (user, ts) by greatest
-    // event_id (arg_max == the Spark struct-max)
-    "q_asof_attrib" ->
-      """WITH r AS (SELECT user_id, ts, max(event_id) AS click_id,
-    arg_max(value, event_id) AS click_value
-  FROM events WHERE event_type = 'click' GROUP BY user_id, ts),
-l AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase')
-SELECT l.event_id, l.user_id, epoch_us(l.ts) AS ts_us,
-  r.click_id AS asof_event_id, r.click_value AS asof_value,
-  epoch_us(r.ts) AS asof_ts_us,
-  epoch_us(l.ts) - epoch_us(r.ts) AS gap_us
-FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.ts""",
-    // PageRank replica: same edge derivation (positional unnest zip for
-    // first-host), then the 5 power-iteration rounds unrolled as
-    // MATERIALIZED CTEs in the identical integer fixed-point op order
-    "q_pagerank_hosts" -> {
-      val iter = (i: Int) =>
-        s"""p$i AS MATERIALIZED (SELECT nd.node,
-  (1000000000000::BIGINT * 15) // (100 * (SELECT n FROM nn)) +
-    COALESCE(f.inflow, 0) AS rank
-  FROM nd LEFT JOIN (
-    SELECT e.dst AS node,
-      CAST(SUM((r.rank * 85) // (100 * deg.od)) AS BIGINT) AS inflow
-    FROM ed e JOIN deg ON deg.src = e.src JOIN p${i - 1} r ON r.node = e.src
-    GROUP BY e.dst) f ON f.node = nd.node)"""
-      s"""WITH t AS (SELECT doc_id, regexp_extract_all(text,
-    'https?://[A-Za-z0-9.-]+(?::[0-9]+)?(?:/[^ \\t\\n"''<>]*)?') AS l
-  FROM read_parquet('$FixtureDir/urls200/*.parquet')),
-u0 AS (SELECT doc_id, unnest(generate_series(1, len(l))) AS pos,
-    unnest(l) AS url FROM t),
-uh AS (SELECT doc_id, pos, host FROM (SELECT doc_id, pos,
-    regexp_replace(lower(regexp_extract(url, 'https?://([A-Za-z0-9.-]+)', 1)),
-      '^www\\.', '') AS host FROM u0) WHERE host <> ''),
-fh AS (SELECT doc_id, arg_min(host, pos) AS src FROM uh GROUP BY doc_id),
-ed AS MATERIALIZED (SELECT DISTINCT fh.src AS src, uh.host AS dst
-  FROM uh JOIN fh ON uh.doc_id = fh.doc_id WHERE uh.host <> fh.src),
-deg AS MATERIALIZED (SELECT src, CAST(COUNT(*) AS BIGINT) AS od FROM ed GROUP BY src),
-nd AS MATERIALIZED (SELECT DISTINCT node FROM
-  (SELECT src AS node FROM ed UNION ALL SELECT dst FROM ed)),
-nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nd),
-p0 AS (SELECT node, 1000000000000::BIGINT // (SELECT n FROM nn) AS rank FROM nd),
-${(1 to 5).map(iter).mkString(",\n")}
-SELECT node, CAST(rank AS BIGINT) AS rank FROM p5"""
-    },
-    // exact integer quantiles: same rank/count window + rn*1e6 >= n*p rule
-    "q_len_quantiles" ->
-      """WITH r AS (SELECT source, n_chars,
-           row_number() OVER (PARTITION BY source ORDER BY n_chars) AS rn,
-           COUNT(*) OVER (PARTITION BY source) AS n FROM documents)
-         SELECT source, CAST(MAX(n) AS BIGINT) AS n,
-           MIN(CASE WHEN rn * 1000000 >= n * 250000 THEN n_chars END) AS q250000,
-           MIN(CASE WHEN rn * 1000000 >= n * 500000 THEN n_chars END) AS q500000,
-           MIN(CASE WHEN rn * 1000000 >= n * 900000 THEN n_chars END) AS q900000,
-           MIN(CASE WHEN rn * 1000000 >= n * 990000 THEN n_chars END) AS q990000
-         FROM r GROUP BY source""",
-    // tumbling windows: date_trunc buckets == Spark's epoch-aligned
-    // window() for exact-hour widths; money in exact cents
-    "q_tumbling_counts" ->
-      """WITH b AS (SELECT user_id, date_trunc('hour', ts) AS w0, value FROM events)
-         SELECT user_id,
-           CAST(epoch_ms(w0) / 1000 AS BIGINT) AS w_start_epoch,
-           CAST(epoch_ms(w0 + INTERVAL 1 HOUR) / 1000 AS BIGINT) AS w_end_epoch,
-           COUNT(*) AS n_events,
-           CAST(FLOOR(SUM(CAST(value AS DECIMAL(18,4))) * 100) AS BIGINT) AS sum_cents
-         FROM b GROUP BY user_id, w0""",
-    // BPE induction replica: DuckDB re-runs the full 12-round merge loop
-    // (pair counts → argmax → replace) from scratch
-    "q_bpe_train" ->
-      s"""WITH ${Osql.bpeCtes(BpeMerges)}
-${(0 until BpeMerges).map(i =>
-        s"""SELECT CAST($i AS INTEGER) AS "rank", split_part(pr, chr(31), 1) AS l_sym,
-  split_part(pr, chr(31), 2) AS r_sym, replace(pr, chr(31), '') AS merged,
-  cnt AS n FROM b$i""").mkString("\nUNION ALL\n")}""",
-    // tokenizer-application replica: the SAME independently-trained merge
-    // chain applied to every doc in rank order
-    "q_bpe_encode" ->
-      s"""WITH ${Osql.bpeCtes(BpeMerges)},
-d0 AS (SELECT doc_id, trim(regexp_replace(regexp_replace(lower(text),
-    '[\\x00-\\x1F]', ' ', 'g'), '\\s+', ' ', 'g')) AS norm FROM documents),
-e0 AS MATERIALIZED (SELECT doc_id, norm,
-    regexp_replace(norm, '(?s)(.)', chr(31) || '\\1' || chr(31), 'g') AS s FROM d0),
-${(0 until BpeMerges).map(i =>
-        s"""e${i + 1} AS MATERIALIZED (SELECT doc_id, norm, replace(s,
-    chr(31) || (SELECT replace(pr, chr(31), chr(31) || chr(31)) FROM b$i) || chr(31),
-    chr(31) || (SELECT replace(pr, chr(31), '') FROM b$i) || chr(31)) AS s
-  FROM e$i)""").mkString(",\n")}
-SELECT doc_id,
-  CASE WHEN norm = '' THEN CAST(0 AS BIGINT)
-       ELSE CAST(len(string_split(norm, ' ')) AS BIGINT) END AS n_words,
-  CASE WHEN norm = '' THEN CAST(0 AS BIGINT)
-       ELSE CAST((length(s) - length(replace(s, chr(31), ''))) // 2 -
-                 (len(string_split(norm, ' ')) - 1) AS BIGINT) END AS n_tokens,
-  substring(trim(regexp_replace(replace(s, chr(31), ' '), ' +', ' ', 'g')), 1, 80) AS enc80
-FROM e$BpeMerges""",
-    "q_preference_pairs" ->
-      s"""WITH a AS (
-            SELECT prompt,
-              max(struct_pack(s := score, cand_id := cand_id,
-                response := response)) AS ch,
-              min(struct_pack(s := score, cand_id := cand_id,
-                response := response)) AS rj,
-              COUNT(*) AS n_candidates
-            FROM read_parquet('$FixtureDir/pref300/*.parquet')
-            GROUP BY prompt)
-          SELECT prompt,
-            ch.response AS chosen, ch.s AS chosen_score,
-            ch.cand_id AS chosen_id,
-            rj.response AS rejected, rj.s AS rejected_score,
-            rj.cand_id AS rejected_id, n_candidates
-          FROM a WHERE ch.cand_id <> rj.cand_id""",
-    "q_sft_pairs" ->
-      s"""WITH w AS (
-            SELECT conv_id, turn_idx, role, text,
-              string_agg(role || ': ' || text, chr(10) || chr(10)) OVER (
-                PARTITION BY conv_id ORDER BY turn_idx
-                ROWS BETWEEN 4 PRECEDING AND 1 PRECEDING) AS prompt
-            FROM read_parquet('$FixtureDir/fsmrec60/*.parquet'))
-          SELECT conv_id, turn_idx, prompt, text AS response
-          FROM w WHERE role = 'assistant' AND prompt IS NOT NULL""",
-    "q_tool_stats" ->
-      s"""SELECT conv_id, COUNT(*) AS n_turns,
-            CAST(SUM(CASE WHEN role = 'assistant' THEN 1 ELSE 0 END) AS BIGINT) AS n_assistant,
-            CAST(SUM(CASE WHEN role = 'tool' THEN 1 ELSE 0 END) AS BIGINT) AS n_tool_calls,
-            array_to_string(list_sort(coalesce(
-              list(DISTINCT tool) FILTER (WHERE tool IS NOT NULL), [])), ',') AS tools,
-            epoch_us(MIN(ts)) // 1000000 AS t_first_epoch,
-            epoch_us(MAX(ts)) // 1000000 AS t_last_epoch
-          FROM read_parquet('$FixtureDir/fsmrec60/*.parquet')
-          GROUP BY conv_id""",
-    // BM25 replica: same tokenizer, same stats, same pinned float-op order
-    // (dl/avgdl written (dl·N)/Σdl; per-term floor(idf·tfc·1e4) pre-sum)
-    "q_bm25" ->
-      s"""WITH ${Bm25Osql.statsCtes}
-          SELECT doc_id, dl AS n_tokens,
-            ${Bm25Osql.scoreExpr}
-            AS bm25_q4
-          FROM b2 CROSS JOIN stats""",
-
-    // rerank replica: the full q_bm25 chain → ORDER BY/LIMIT 50 candidates →
-    // positional features over the candidate token lists (1-indexed
-    // generate_series probe for ordered bigrams) → packed integer rerank key
-    "q_bm25_rerank" -> {
-      val terms = Bm25Osql.terms
-      val coverage = terms
-        .map(t => s"CASE WHEN list_contains(toks, '$t') THEN 1 ELSE 0 END")
-        .mkString(" + ")
-      val adjacency = terms.sliding(2).map { bg =>
-        s"""len(list_filter(generate_series(1, len(toks) - 1),
-             i -> toks[i] = '${bg.head}' AND toks[i + 1] = '${bg(1)}'))"""
-      }.mkString(" + ")
-      val tfTotal = terms
-        .map(t => s"len(list_filter(toks, x -> x = '$t'))").mkString(" + ")
-      s"""WITH ${Bm25Osql.statsCtes},
-          scored AS (SELECT doc_id, toks,
-            ${Bm25Osql.scoreExpr}
-            AS bm25_q4
-          FROM b2 CROSS JOIN stats),
-          cand AS (SELECT doc_id, toks, bm25_q4 FROM scored
-            ORDER BY bm25_q4 DESC, doc_id LIMIT 50),
-          feat AS (SELECT doc_id, bm25_q4,
-            CAST($coverage AS BIGINT) AS coverage,
-            least(999999::BIGINT, CAST($adjacency AS BIGINT)) AS adjacency,
-            least(999999::BIGINT, CAST($tfTotal AS BIGINT)) AS tf_capped
-          FROM cand),
-          r AS (SELECT doc_id, bm25_q4, coverage, adjacency,
-            coverage * 1000000000000::BIGINT + adjacency * 1000000::BIGINT
-              + tf_capped AS rerank_q
-          FROM feat)
-          SELECT CAST(row_number() OVER (
-              ORDER BY rerank_q DESC, bm25_q4 DESC, doc_id) AS BIGINT) AS rank,
-            doc_id, bm25_q4, coverage, adjacency, rerank_q
-          FROM r ORDER BY rerank_q DESC, bm25_q4 DESC, doc_id LIMIT 10"""
-    },
-
-    // snapshot-upsert oracle: the merge computed directly from the source
-    // table — update-in-place for id%5==0, original otherwise, +1000000
-    // clones for id%7==0 — then the fingerprint chain over the final text
-    "q_snapshot_upsert" ->
-      s"""WITH merged AS (
-            SELECT doc_id,
-              CASE WHEN doc_id % 5 = 0 THEN upper(text) ELSE text END AS text
-            FROM documents
-            UNION ALL
-            SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 7 = 0),
-          u0 AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars,
-            list_reduce(list_prepend(0::HUGEINT,
-              list_transform(regexp_extract_all(text, '(?s).'),
-                c -> ord(c)::HUGEINT)),
-              (a, b) -> (a * 257::HUGEINT + b) % ${Osql.Mod}) AS x
-          FROM merged),
-          ${Osql.mixCtes("u", "x")}
-          SELECT doc_id, n_chars, CAST(${Osql.signed("x")} AS BIGINT) AS fp
-          FROM ud""",
-
-    // snapshot-delete oracle: the complement select + fingerprint chain
-    "q_snapshot_delete" ->
-      s"""WITH dl0 AS (SELECT doc_id,
-            list_reduce(list_prepend(0::HUGEINT,
-              list_transform(regexp_extract_all(text, '(?s).'),
-                c -> ord(c)::HUGEINT)),
-              (a, b) -> (a * 257::HUGEINT + b) % ${Osql.Mod}) AS x
-          FROM documents WHERE doc_id % 9 <> 0),
-          ${Osql.mixCtes("dl", "x")}
-          SELECT doc_id, CAST(${Osql.signed("x")} AS BIGINT) AS fp FROM dld""",
-
-    // z-order oracle: two-dimensional pruning must be output-invisible
-    "q_snapshot_zorder" ->
-      """SELECT event_id, user_id, event_type FROM events
-         WHERE user_id < 100 AND event_id >= 2000""",
-
-    // metadata-only stats oracle: the full aggregation the manifest fold
-    // must reproduce without opening a data file
-    "q_snapshot_stats" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_rows,
-                min(event_id) AS min_eid, max(event_id) AS max_eid,
-                min(user_id) AS min_uid, max(user_id) AS max_uid,
-                min(event_type) AS min_type, max(event_type) AS max_type,
-                CAST(sum(CASE WHEN event_type IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-                  AS null_types
-         FROM events""",
-
-    // incremental-consumption oracle: the day-1/day-2 residue rows straight
-    // from the source — the file-set diff must return exactly these
-    "q_snapshot_incr" ->
-      """SELECT event_id, user_id FROM events
-         WHERE event_id % 3 IN (1, 2)""",
-
-    // streaming-sink oracle: the exactly-once committed content is exactly
-    // the three arrival slices, no dup (replayed batch 0) and no loss
-    "q_stream_commits" ->
-      """SELECT event_id, user_id, event_type,
-           CAST(floor(value * 1000000) AS BIGINT) AS value_ppm
-         FROM events WHERE event_id % 5 IN (0, 1, 2)""",
-
-    // xlsx sheet-addressing oracle: the workbook content recomputed straight
-    // from the source tables — readback must be byte-identical (the MCL
-    // sheet appears twice: once via the all-sheets read, once via the
-    // named-sheet read)
-    "q_xlsx_sheets" ->
-      """WITH guide AS (SELECT 'Guidelines+Description' AS sheet,
-              CAST(ROW_NUMBER() OVER (ORDER BY n_nationkey) AS BIGINT) AS row_idx,
-              CAST(n_nationkey AS VARCHAR) || chr(1) || n_name AS line
-            FROM nation),
-          mcl AS (SELECT 'MCL' AS sheet,
-              CAST(ROW_NUMBER() OVER (ORDER BY r_regionkey) AS BIGINT) AS row_idx,
-              CAST(r_regionkey AS VARCHAR) || chr(1) || r_name AS line
-            FROM region),
-          extra AS (SELECT 'Ensure Extra' AS sheet,
-              CAST(ROW_NUMBER() OVER (ORDER BY n_nationkey) AS BIGINT) AS row_idx,
-              n_name || chr(1) || CAST(n_regionkey AS VARCHAR) AS line
-            FROM nation WHERE n_regionkey < 2)
-          SELECT sheet, row_idx, line FROM guide
-          UNION ALL SELECT sheet, row_idx, line FROM mcl
-          UNION ALL SELECT sheet, row_idx, line FROM extra
-          UNION ALL SELECT 'named:MCL' AS sheet, row_idx, line FROM mcl""",
-
-    // data-skipping oracle: the plain WHERE over the source table — file
-    // pruning must be invisible in the output
-    "q_snapshot_prune" ->
-      """SELECT event_id, user_id, event_type,
-           CAST(floor(value * 1000000) AS BIGINT) AS value_ppm
-         FROM events
-         WHERE event_type IN ('purchase', 'signup') AND value >= 10.0""",
-
-    // salted-join oracle: the PLAIN inner join — salting must be invisible
-    // in the output
-    "q_salted_join" ->
-      s"""WITH t AS (SELECT conv_id, turn_idx, role
-            FROM read_parquet('$FixtureDir/fsmrec60/*.parquet')),
-          d AS (SELECT conv_id, COUNT(*) AS conv_turns
-            FROM read_parquet('$FixtureDir/fsmrec60/*.parquet') GROUP BY 1)
-          SELECT t.conv_id, t.turn_idx, t.role, d.conv_turns
-          FROM t JOIN d USING (conv_id)""",
-
-    // skew-profile replica: identical count-of-counts chain; sums cast back
-    // from DuckDB's HUGEINT to BIGINT; heaviest key via ORDER BY c, k DESC
-    "q_skew_profile" ->
-      s"""WITH counts AS (SELECT conv_id AS k, COUNT(*) AS c
-            FROM read_parquet('$FixtureDir/fsmrec60/*.parquet') GROUP BY 1),
-          hist AS (SELECT c, COUNT(*) AS nk FROM counts GROUP BY 1),
-          cum AS (SELECT c, nk,
-              CAST(SUM(nk) OVER (ORDER BY c ROWS BETWEEN UNBOUNDED PRECEDING
-                AND CURRENT ROW) AS BIGINT) AS cum,
-              CAST(SUM(nk) OVER () AS BIGINT) AS n_keys,
-              CAST(SUM(c * nk) OVER () AS BIGINT) AS n_rows
-            FROM hist),
-          dist AS (SELECT MAX(n_keys) AS n_keys, MAX(n_rows) AS n_rows,
-              MAX(c) AS max_key_rows,
-              MIN(CASE WHEN cum * 1000000 >= n_keys * 500000 THEN c END)
-                AS p50_key_rows,
-              MIN(CASE WHEN cum * 1000000 >= n_keys * 990000 THEN c END)
-                AS p99_key_rows
-            FROM cum),
-          top AS (SELECT k AS top_key, c AS top_key_rows FROM counts
-            ORDER BY c DESC, k DESC LIMIT 1)
-          SELECT n_keys, n_rows, max_key_rows, p50_key_rows, p99_key_rows,
-            top_key, top_key_rows,
-            (max_key_rows * 1000000) // p50_key_rows AS skew_ppm
-          FROM dist CROSS JOIN top""",
-
-    // well-formedness replica: identical window (same deterministic tie
-    // order) + conditional sums; NULLS FIRST pins DuckDB's default NULLS
-    // LAST to Spark's asc-nulls-first (no sort-key nulls in the fixture,
-    // but the order spec should not rely on that)
-    "q_conv_wellformed" ->
-      s"""WITH wf0 AS (
-            SELECT conv_id, turn_idx, role, tool, ts,
-              (text IS NULL) AS tnull,
-              (text IS NULL OR trim(text, ' ' || chr(9) || chr(13) || chr(10) || chr(11) || chr(12)) = '') AS is_empty,
-              (ts IS NULL) AS ts_null,
-              (turn_idx IS NULL) AS idx_null,
-              list_reduce(list_prepend(0::HUGEINT,
-                list_transform(regexp_extract_all(coalesce(text, ''), '(?s).'),
-                  c -> ord(c)::HUGEINT)),
-                (a, b) -> (a * 257::HUGEINT + b) % ${Osql.Mod}) AS x
-            FROM read_parquet('$FixtureDir/messy60/*.parquet')),
-          ${Osql.mixCtes("wf", "x")},
-          st AS (
-            SELECT conv_id, turn_idx, role, tool, ts, is_empty, ts_null, idx_null,
-              lag(role) OVER w AS prev_role,
-              lag(tool) OVER w AS prev_tool,
-              lag(ts) OVER w AS prev_ts
-            FROM (SELECT *, CAST(${Osql.signed("x")} AS BIGINT) AS fp FROM wfd)
-            WINDOW w AS (PARTITION BY conv_id
-              ORDER BY turn_idx NULLS FIRST, fp NULLS FIRST,
-                tnull NULLS FIRST, role NULLS FIRST,
-                tool NULLS FIRST, ts NULLS FIRST)),
-          agg AS (
-            SELECT conv_id,
-              COUNT(*) AS n_turns,
-              COUNT(*) - COUNT(DISTINCT turn_idx) AS dup_idx,
-              CAST(MAX(turn_idx) - MIN(turn_idx) + 1 AS BIGINT)
-                - COUNT(DISTINCT turn_idx) AS idx_gaps,
-              CAST(MIN(turn_idx) AS BIGINT) AS min_idx,
-              CAST(SUM(CASE WHEN is_empty THEN 1 ELSE 0 END) AS BIGINT) AS empty_turns,
-              CAST(SUM(CASE WHEN prev_role IS NOT NULL AND prev_role = role
-                THEN 1 ELSE 0 END) AS BIGINT) AS role_repeats,
-              CAST(SUM(CASE WHEN prev_ts IS NOT NULL AND ts < prev_ts
-                THEN 1 ELSE 0 END) AS BIGINT) AS ts_regressions,
-              CAST(SUM(CASE WHEN role = 'tool'
-                AND (prev_tool IS NULL OR prev_tool = '')
-                THEN 1 ELSE 0 END) AS BIGINT) AS orphan_tool_turns,
-              CAST(SUM(CASE WHEN ts_null THEN 1 ELSE 0 END) AS BIGINT) AS null_ts,
-              CAST(SUM(CASE WHEN idx_null THEN 1 ELSE 0 END) AS BIGINT) AS null_idx
-            FROM st GROUP BY conv_id)
-          SELECT *, (dup_idx = 0 AND idx_gaps = 0 AND min_idx = 0
-            AND empty_turns = 0 AND role_repeats = 0 AND ts_regressions = 0
-            AND orphan_tool_turns = 0 AND null_ts = 0 AND null_idx = 0) AS well_formed
-          FROM agg""",
-
-    // repair replica: same keep-min struct dedup (field-lexicographic,
-    // NULLS FIRST pins DuckDB to Spark's asc-nulls-first) + re-sequencing
-    "q_conv_repair" ->
-      s"""WITH kept AS (
-            SELECT conv_id, turn_idx AS orig_turn_idx, role, text, ts,
-              row_number() OVER (PARTITION BY conv_id, turn_idx
-                ORDER BY ts NULLS FIRST, text NULLS FIRST, role NULLS FIRST,
-                  tool NULLS FIRST) AS dup_rn
-            FROM read_parquet('$FixtureDir/messy60/*.parquet')
-            WHERE text IS NOT NULL AND trim(text, ' ' || chr(9) || chr(13) || chr(10) || chr(11) || chr(12)) <> ''
-              AND turn_idx IS NOT NULL),
-          rs AS (SELECT conv_id, orig_turn_idx, role, text, ts,
-              row_number() OVER (PARTITION BY conv_id
-                ORDER BY orig_turn_idx, ts NULLS FIRST, text) - 1 AS turn_idx
-            FROM kept WHERE dup_rn = 1),
-          r0 AS (SELECT conv_id, turn_idx, orig_turn_idx, role,
-            epoch_us(ts) // 1000000 AS ts_epoch,
-            list_reduce(list_prepend(0::HUGEINT,
-              list_transform(regexp_extract_all(text, '(?s).'),
-                c -> ord(c)::HUGEINT)),
-              (a, b) -> (a * 257::HUGEINT + b) % ${Osql.Mod}) AS x
-          FROM rs),
-          ${Osql.mixCtes("r", "x")}
-          SELECT conv_id, turn_idx, orig_turn_idx, role, ts_epoch,
-            CAST(${Osql.signed("x")} AS BIGINT) AS fp
-          FROM rd""",
-
-    // branch-prefix replica: fingerprint64 per (role, text) turn
-    // (q_fingerprint technique), prefix chain re-derived by a RECURSIVE CTE
-    // with the same FNV-prime split multiply mod 2^64, then family sizes
-    // and the per-conversation deepest shared depth. `rn` (and the hash
-    // chain feeding it) MUST be MATERIALIZED: the recursive `chain` CTE
-    // joins it once per depth level, and without the hint DuckDB re-runs
-    // the whole per-char fingerprint scan on every iteration — minutes
-    // instead of ~2 s on the fixed 96-conv fixture
-    "q_branch_prefixes" ->
-      s"""WITH RECURSIVE tx AS MATERIALIZED (
-            SELECT conv_id, turn_idx,
-              coalesce(role, '') || chr(31) || coalesce(text, '') AS kt
-            FROM read_parquet('$FixtureDir/branch60/*.parquet')),
-          bp0 AS MATERIALIZED (
-            SELECT conv_id, turn_idx,
-              list_reduce(list_prepend(0::HUGEINT,
-                list_transform(regexp_extract_all(kt, '(?s).'),
-                  c -> ord(c)::HUGEINT)),
-                (a, b) -> (a * 257::HUGEINT + b) % ${Osql.Mod}) AS x
-            FROM tx),
-          ${Osql.mixCtes("bp", "x")},
-          rn AS MATERIALIZED (SELECT conv_id, row_number() OVER (
-              PARTITION BY conv_id ORDER BY turn_idx,
-                CAST(${Osql.signed("x")} AS BIGINT)) AS pos, x FROM bpd),
-          chain AS (
-            SELECT conv_id, 1::BIGINT AS depth, x AS pref FROM rn WHERE pos = 1
-            UNION ALL
-            SELECT r.conv_id, c.depth + 1,
-              ((c.pref * 435::HUGEINT
-                + ((c.pref * 256::HUGEINT) % 4294967296::HUGEINT)
-                  * 4294967296::HUGEINT) % ${Osql.Mod} + r.x) % ${Osql.Mod}
-            FROM chain c JOIN rn r
-              ON r.conv_id = c.conv_id AND r.pos = c.depth + 1),
-          fams AS (SELECT depth, pref, CAST(COUNT(*) AS BIGINT) AS n_siblings
-            FROM chain GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-          deep AS (SELECT c.conv_id, c.depth, c.pref, f.n_siblings,
-              row_number() OVER (PARTITION BY c.conv_id
-                ORDER BY c.depth DESC) AS rk
-            FROM chain c JOIN fams f
-              ON f.depth = c.depth AND f.pref = c.pref)
-          SELECT t.conv_id,
-            COALESCE(d.depth, 0) AS branch_depth,
-            COALESCE(CAST(CASE WHEN d.pref >= 9223372036854775808::HUGEINT
-              THEN d.pref - ${Osql.Mod} ELSE d.pref END AS BIGINT), 0)
-              AS family_hash,
-            COALESCE(d.n_siblings, 0) AS n_siblings
-          FROM (SELECT DISTINCT conv_id FROM tx) t
-          LEFT JOIN (SELECT * FROM deep WHERE rk = 1) d
-            ON d.conv_id = t.conv_id""",
-
-    "q_minhash_lsh" -> minhashOracleSql,
-    // incremental near-dup replica: same signature/band/verify chain, but
-    // candidates are (odd new-batch doc, even history doc) pairs
-    "q_incremental_neardup" -> minhashPairsSql(
-      "l.doc_id % 2 = 1 AND r.doc_id % 2 = 0", "new_id", "dup_of"),
-    "q_tfidf_match" -> tfidfOracleSql,
-    "q_embedding_neardup" -> embNearDupOracleSql,
-    "q_embedding_ann_lsh" -> annLshOracleSql,
-    "q_embedding_ann_ivf" -> ivfOracleSql,
-    "q_qlearning_match" -> qlearnOracleSql,
-    "q_plsa_match" -> plsaOracleSql(),
-
-    // learned-scorer inference oracle: rebuilds every pair's concatenated
-    // feature vector from the SOURCE embeddings table, applies the
-    // exported scaler+LR model with the kernel's exact BALANCED PAIRWISE
-    // addition tree (Model.logit deliberately avoids a left fold — a flat
-    // chain rounds doubles differently AND trips DuckDB's expression-depth
-    // limit), and replays the top-2 window — the whole inference plane
-    // cross-engine, only the iterative fit golden-pinned
-    // (LearnedMatchGoldenSpec)
-    "q_learned_match" -> {
-      // balanced pairwise addition tree, the kernel's exact contract (see
-      // LearnedMatch.Model.logit): log2(128)=7 paren depth — a flat
-      // left-assoc 128-term chain trips DuckDB's expression-depth limit
-      def sumTree(ts: Seq[String]): String =
-        if (ts.length == 1) ts.head
-        else sumTree(ts.grouped(2).map(g =>
-          if (g.length == 2) s"(${g(0)} + ${g(1)})" else g(0)).toSeq)
-      val terms = sumTree((1 to 128).map { i =>
-        val x = if (i <= 64) s"CAST(l.embedding[$i] AS DOUBLE)"
-                else s"CAST(r.embedding[${i - 64}] AS DOUBLE)"
-        s"mo.w[$i] * (($x - mo.m[$i]) / mo.sd[$i])"
-      })
-      s"""WITH mo AS (
-            SELECT list(w ORDER BY dim) AS w, list(m ORDER BY dim) AS m,
-                   list(sd ORDER BY dim) AS sd, max(intercept) AS b
-            FROM read_parquet('$FixtureDir/lr_v1___SFHASH__/model/*.parquet')),
-          scored AS (
-            SELECT l.vec_id AS left_id, r.vec_id AS right_id,
-              ($terms) + mo.b AS logit
-            FROM embeddings l CROSS JOIN embeddings r CROSS JOIN mo
-            WHERE l.vec_id < 20 AND r.vec_id >= 100 AND r.vec_id < 160),
-          ranked AS (
-            SELECT left_id, right_id, logit,
-              ROW_NUMBER() OVER (PARTITION BY left_id
-                ORDER BY logit DESC, right_id) AS rn
-            FROM scored)
-          SELECT left_id, right_id,
-            CAST(floor(logit * 1000000) AS BIGINT) AS logit_ppm, rn
-          FROM ranked WHERE rn <= 2"""
-    },
-
-    // LDA readout oracle: replays bestTopicCosine over the query's OWN
-    // exported topic vectors (same doubles, parquet is exact for IEEE754).
-    // The k=10 chains below are literal left-assoc i-ascending sums —
-    // bit-identical to the Scala loop's dot/na/nb accumulators — so score,
-    // argmax, tie order, and the ppm floor all replay exactly; only the ML
-    // fit that PRODUCED the vectors stays golden-pinned (LdaGoldenSpec).
-    // __SFHASH__ is substituted by Verify with this run's sf-dir hash.
-    "q_topic_match" -> {
-      val dot = (1 to 10).map(i => s"l.lv[$i]*r.rv[$i]").mkString(" + ")
-      val na = (1 to 10).map(i => s"l.lv[$i]*l.lv[$i]").mkString(" + ")
-      val nb = (1 to 10).map(i => s"r.rv[$i]*r.rv[$i]").mkString(" + ")
-      s"""WITH s AS (
-            SELECT l.left_id, r.right_id,
-              CASE WHEN ($na) = 0.0 OR ($nb) = 0.0 THEN 0.0
-                   ELSE ($dot) / (sqrt($na) * sqrt($nb)) END AS score
-            FROM read_parquet('$FixtureDir/lda_v1___SFHASH__/lv/*.parquet') l
-            CROSS JOIN read_parquet('$FixtureDir/lda_v1___SFHASH__/rv/*.parquet') r),
-          ranked AS (
-            SELECT left_id, right_id, score,
-              ROW_NUMBER() OVER (PARTITION BY left_id
-                ORDER BY score DESC, right_id) AS rn
-            FROM s)
-          SELECT left_id, right_id,
-            CAST(floor(score * 1000000) AS BIGINT) AS score_ppm
-          FROM ranked WHERE rn = 1"""
-    },
-    "q_plsa_foldin" -> plsaFoldinOracleSql(),
-    "q_semdedup" -> semDedupOracleSql,
-    // int8 quantizer replica: per-vector scale = max|v|/127, floor(x+0.5)
-    // clamp ±127, then exact integer dot/norm cosine
-    "q_embedding_quantized_top3" ->
-      """WITH sc AS (SELECT vec_id, embedding,
-           list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) / 127.0 AS scale
-         FROM embeddings),
-qz AS (SELECT vec_id,
-    CASE WHEN scale = 0 THEN list_transform(embedding, x -> 0::BIGINT)
-         ELSE list_transform(embedding, x ->
-           CAST(GREATEST(-127.0, LEAST(127.0, FLOOR(CAST(x AS DOUBLE) / scale + 0.5))) AS BIGINT)) END AS q
-  FROM sc),
-pr AS (SELECT a.vec_id AS query_id, b.vec_id AS corpus_id,
-    list_reduce(list_transform(generate_series(1, 64), i -> a.q[i] * b.q[i]), (x, y) -> x + y) AS dot,
-    list_reduce(list_transform(generate_series(1, 64), i -> a.q[i] * a.q[i]), (x, y) -> x + y) AS na,
-    list_reduce(list_transform(generate_series(1, 64), i -> b.q[i] * b.q[i]), (x, y) -> x + y) AS nb
-  FROM qz a CROSS JOIN qz b WHERE a.vec_id < 20 AND a.vec_id <> b.vec_id),
-scd AS (SELECT query_id, corpus_id,
-    CASE WHEN na = 0 OR nb = 0 THEN 0.0
-         ELSE dot::DOUBLE / (SQRT(na::DOUBLE) * SQRT(nb::DOUBLE)) END AS score
-  FROM pr)
-SELECT query_id, corpus_id, CAST(FLOOR(score * 1000000) AS BIGINT) AS score_ppm,
-  CAST(rn AS INT) AS rn
-FROM (SELECT query_id, corpus_id, score,
-    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY score DESC, corpus_id) AS rn FROM scd)
-WHERE rn <= 3""",
-    "q_repeated_lines" ->
-      s"""WITH t AS (SELECT conv_id || '#' || turn_idx AS id, text
-  FROM read_parquet('$FixtureDir/slim150/*.parquet')),
-lines AS (SELECT id,
-    unnest(string_split(text, chr(10))) AS line,
-    unnest(generate_series(0, len(string_split(text, chr(10))) - 1)) AS li
-  FROM t),
-hot AS (SELECT trim(line, ' ' || chr(9) || chr(13) || chr(11) || chr(12)) AS norm FROM lines WHERE trim(line, ' ' || chr(9) || chr(13) || chr(11) || chr(12)) <> ''
-  GROUP BY trim(line, ' ' || chr(9) || chr(13) || chr(11) || chr(12)) HAVING COUNT(DISTINCT id) >= 2),
-kept AS (SELECT id, li, line FROM lines
-  WHERE trim(line, ' ' || chr(9) || chr(13) || chr(11) || chr(12)) = '' OR trim(line, ' ' || chr(9) || chr(13) || chr(11) || chr(12)) NOT IN (SELECT norm FROM hot)),
-agg AS (SELECT id, string_agg(line, chr(10) ORDER BY li) AS cleaned FROM kept GROUP BY id),
-drp AS (SELECT id, COUNT(*) AS dropped FROM lines
-  WHERE trim(line, ' ' || chr(9) || chr(13) || chr(11) || chr(12)) <> '' AND trim(line, ' ' || chr(9) || chr(13) || chr(11) || chr(12)) IN (SELECT norm FROM hot) GROUP BY id)
-SELECT t.id, COALESCE(a.cleaned, '') AS cleaned, COALESCE(p.dropped, 0) AS dropped
-FROM t LEFT JOIN agg a ON a.id = t.id LEFT JOIN drp p ON p.id = t.id""",
-    "q_repetition" ->
-      """WITH base AS (SELECT doc_id,
-    CASE WHEN trim(text) = '' THEN []
-         ELSE list_filter(string_split_regex(trim(lower(text)), '[\s\x0B]+'),
-                t -> t <> '') END AS toks,
-    list_filter(list_transform(string_split(text, chr(10)), l -> trim(l)), l -> l <> '') AS lns
-  FROM documents),
-grams AS (SELECT doc_id,
-    CASE WHEN len(toks) < 2 THEN []
-         ELSE list_transform(generate_series(1, len(toks) - 1), i -> toks[i] || ' ' || toks[i+1]) END AS g2,
-    CASE WHEN len(toks) < 3 THEN []
-         ELSE list_transform(generate_series(1, len(toks) - 2), i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]) END AS g3,
-    lns FROM base),
-lstats AS (SELECT doc_id, g2, g3,
-    COALESCE(list_sum(list_transform(lns, l -> length(l))), 0) AS total,
-    COALESCE(list_sum(list_transform(lns, l ->
-      CASE WHEN len(list_filter(lns, x -> x = l)) > 1 THEN length(l) ELSE 0 END)), 0) AS dup
-  FROM grams)
-SELECT doc_id,
-  CASE WHEN len(g2) = 0 THEN CAST(0 AS BIGINT)
-       ELSE CAST(FLOOR((len(g2) - len(list_distinct(g2)))::DOUBLE / len(g2)::DOUBLE * 1000000) AS BIGINT) END AS dup2_ppm,
-  CASE WHEN len(g3) = 0 THEN CAST(0 AS BIGINT)
-       ELSE CAST(FLOOR((len(g3) - len(list_distinct(g3)))::DOUBLE / len(g3)::DOUBLE * 1000000) AS BIGINT) END AS dup3_ppm,
-  CASE WHEN total = 0 THEN CAST(0 AS BIGINT)
-       ELSE CAST(FLOOR(dup::DOUBLE / total::DOUBLE * 1000000) AS BIGINT) END AS dupline_ppm
-FROM lstats""",
-    "q_agg_pricing" ->
-      """SELECT l_returnflag, l_linestatus, CAST(SUM(l_quantity) AS BIGINT) AS sum_qty,
-         COUNT(*) AS cnt,
-         CAST(FLOOR(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * (1 - CAST(l_discount AS DECIMAL(18,4)))) * 100) AS BIGINT) AS revenue_cents
-         FROM lineitem GROUP BY l_returnflag, l_linestatus""",
-    // partition-pruning replica: the layout is content-preserving, so the
-    // oracle reads the ORIGINAL table with the same predicate
-    "q_partition_pruned" ->
-      """SELECT source, COUNT(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS sum_chars
-         FROM documents WHERE lang = 'en' GROUP BY source""",
-    // rollup replica: GROUPING() bits composed exactly like Spark's
-    // grouping_id (first grouping column = most significant bit)
-    "q_rollup_pricing" ->
-      """SELECT l_returnflag, l_linestatus,
-         CAST(SUM(l_quantity) AS BIGINT) AS sum_qty, COUNT(*) AS cnt,
-         CAST(GROUPING(l_returnflag) * 2 + GROUPING(l_linestatus) AS BIGINT) AS gid
-         FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""",
-    "q_pivot_lang" ->
-      """SELECT source,
-         CAST(SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS n_en,
-         CAST(SUM(CASE WHEN lang = 'de' THEN 1 ELSE 0 END) AS BIGINT) AS n_de,
-         CAST(SUM(CASE WHEN lang = 'fr' THEN 1 ELSE 0 END) AS BIGINT) AS n_fr,
-         CAST(SUM(CASE WHEN lang NOT IN ('en','de','fr') THEN 1 ELSE 0 END) AS BIGINT) AS n_other,
-         COUNT(*) AS n_docs
-         FROM documents GROUP BY source""",
-    "q_filter_project" ->
-      "SELECT doc_id, lang, n_chars FROM documents WHERE text LIKE '%spark%' AND n_chars > 200",
-    "q_bestmatch_window" ->
-      """SELECT user_id, event_id AS best_event, value FROM (
-           SELECT user_id, event_id, value,
-             ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY value DESC, event_id) rn
-           FROM events) WHERE rn = 1""",
-    "q_topk_per_key" ->
-      """SELECT user_id, event_id, value, rn FROM (
-           SELECT user_id, event_id, value,
-             ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY value DESC, event_id) rn
-           FROM events) WHERE rn <= 2""",
-    "q_first_event_per_user" ->
-      """SELECT user_id, event_id AS first_event, CAST(FLOOR(epoch(ts)) AS BIGINT) AS ts_epoch FROM (
-           SELECT user_id, event_id, ts,
-             ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) rn
-           FROM events) WHERE rn = 1""",
-    "q_sessionize" ->
-      // exact-microsecond gap arithmetic, mirroring byGap (a floored
-      // whole-second replica under-splits sub-second streams)
-      """WITH o AS (
-           SELECT user_id, event_id, ts, epoch_us(ts) AS us,
-                  lag(epoch_us(ts)) OVER
-                    (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-           FROM events),
-         b AS (SELECT user_id, event_id, ts, us,
-                      CASE WHEN prev IS NOT NULL AND us - prev > 1800000000
-                           THEN 1 ELSE 0 END AS brk FROM o),
-         s AS (SELECT user_id, us,
-                      sum(brk) OVER
-                        (PARTITION BY user_id ORDER BY ts, event_id) AS session_idx
-               FROM b)
-         SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
-                COUNT(*) AS n_events,
-                CAST(min(us)//1000000 AS BIGINT) AS start_epoch,
-                CAST(max(us)//1000000 AS BIGINT) AS end_epoch
-         FROM s GROUP BY user_id, session_idx""",
-    "q_session_window" ->
-      """WITH o AS (
-           SELECT user_id, ts, epoch_us(ts) AS us,
-                  lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts) AS prev
-           FROM events),
-         b AS (SELECT user_id, ts, us,
-                      CASE WHEN prev IS NOT NULL AND us - prev > 1800000000
-                           THEN 1 ELSE 0 END AS brk FROM o),
-         s AS (SELECT user_id, us,
-                      sum(brk) OVER (PARTITION BY user_id ORDER BY ts) AS sid
-               FROM b)
-         SELECT user_id, CAST(min(us)//1000000 AS BIGINT) AS w_start_epoch,
-                CAST((max(us)+1800000000)//1000000 AS BIGINT) AS w_end_epoch,
-                COUNT(*) AS n_events
-         FROM s GROUP BY user_id, sid""",
-    "q_capture_flag" ->
-      """SELECT user_id, COUNT(*) AS events_after_first_purchase FROM (
-           SELECT user_id,
-             MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-               OVER (PARTITION BY user_id ORDER BY ts, event_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS flag
-           FROM events) WHERE flag = 1 GROUP BY user_id""",
-    "q_union_concat" ->
-      """SELECT doc_id, lang, source FROM documents WHERE lang = 'en'
-         UNION ALL SELECT doc_id, lang, source FROM documents WHERE lang = 'fr'""",
-    "q_dedup_exact" ->
-      """SELECT MIN(doc_id) AS keep_id, COUNT(*) AS dup_count, LENGTH(text) AS text_len
-         FROM documents GROUP BY text""",
-    "q_dup_substrings" ->
-      """WITH pts AS (
-           SELECT doc_id AS id, text,
-                  CAST(unnest(range(0, greatest(length(text)-32+1, 0))) AS INT) AS pos
-           FROM documents),
-         g AS (SELECT id, pos, substr(text, pos+1, 32) AS gram FROM pts),
-         dup AS (SELECT gram FROM g GROUP BY gram HAVING count(*) > 1),
-         cov AS (SELECT id, pos FROM g WHERE gram IN (SELECT gram FROM dup)),
-         brk AS (
-           SELECT id, pos,
-                  CASE WHEN prev IS NULL OR pos - prev > 32 THEN 1 ELSE 0 END AS b
-           FROM (SELECT id, pos,
-                        lag(pos) OVER (PARTITION BY id ORDER BY pos) AS prev
-                 FROM cov)),
-         isl AS (SELECT id, pos,
-                        sum(b) OVER (PARTITION BY id ORDER BY pos) AS island
-                 FROM brk)
-         SELECT id, CAST(min(pos) AS INT) AS start,
-                CAST(max(pos) + 32 AS INT) AS "end"
-         FROM isl GROUP BY id, island""",
-    "q_dup_substrings_removed" ->
-      """WITH pts AS (
-           SELECT doc_id AS id, text,
-                  CAST(unnest(range(0, greatest(length(text)-32+1, 0))) AS INT) AS pos
-           FROM documents),
-         g AS (SELECT id, pos, substr(text, pos+1, 32) AS gram FROM pts),
-         dup AS (SELECT gram FROM g GROUP BY gram HAVING count(*) > 1),
-         cov AS (SELECT id, pos FROM g WHERE gram IN (SELECT gram FROM dup)),
-         brk AS (
-           SELECT id, pos,
-                  CASE WHEN prev IS NULL OR pos - prev > 32 THEN 1 ELSE 0 END AS b
-           FROM (SELECT id, pos,
-                        lag(pos) OVER (PARTITION BY id ORDER BY pos) AS prev
-                 FROM cov)),
-         isl AS (SELECT id, pos,
-                        sum(b) OVER (PARTITION BY id ORDER BY pos) AS island
-                 FROM brk),
-         spans AS (SELECT id, min(pos) AS s, max(pos) + 32 AS e
-                   FROM isl GROUP BY id, island),
-         mids AS (SELECT id,
-                         coalesce(lag(e) OVER (PARTITION BY id ORDER BY s), 0) AS seg_start,
-                         s AS seg_end
-                  FROM spans),
-         tails AS (SELECT id, max(e) AS seg_start, 2147483647 AS seg_end
-                   FROM spans GROUP BY id),
-         segs AS (SELECT * FROM mids UNION ALL SELECT * FROM tails),
-         cut AS (
-           SELECT segs.id, seg_start,
-                  substr(d.text, seg_start+1,
-                         greatest(0, least(seg_end, length(d.text)) - seg_start)) AS seg
-           FROM segs JOIN documents d ON d.doc_id = segs.id
-           WHERE seg_end > seg_start),
-         reb AS (SELECT id, string_agg(seg, '' ORDER BY seg_start) AS cleaned
-                 FROM cut GROUP BY id)
-         SELECT d.doc_id AS id, coalesce(reb.cleaned, d.text) AS cleaned,
-                CAST(length(d.text) - length(coalesce(reb.cleaned, d.text)) AS BIGINT) AS removed
-         FROM documents d LEFT JOIN reb ON reb.id = d.doc_id""",
-    "q_global_topk" ->
-      "SELECT event_id, user_id, value FROM events ORDER BY value DESC, event_id LIMIT 10",
-    "q_join_agg" ->
-      """SELECT c_mktsegment, COUNT(*) AS n_orders,
-         CAST(FLOOR(SUM(CAST(o_totalprice AS DECIMAL(18,4))) * 100) AS BIGINT) AS total_cents
-         FROM orders JOIN customer ON o_custkey = c_custkey GROUP BY c_mktsegment""",
-    "q_dim_join_count" ->
-      """SELECT p_brand, COUNT(*) AS n_lines, CAST(SUM(l_quantity) AS BIGINT) AS sum_qty
-         FROM lineitem JOIN part ON l_partkey = p_partkey
-         WHERE p_size < 10 GROUP BY p_brand""",
-    "q_cross_join_score" ->
-      """SELECT n_name, r_name, CAST(FLOOR(score * 1000000) AS BIGINT) AS score_ppm FROM (
-           SELECT n_name, r_name,
-             1.0 / (1.0 + ABS(LENGTH(n_name) - LENGTH(r_name))) AS score
-           FROM nation CROSS JOIN region) WHERE score > 0.2""",
-    "q_regex_extract_first" ->
-      "SELECT doc_id, COALESCE(regexp_extract(text, '\\b(b[a-z]+)\\b', 1), '') AS first_b FROM documents",
-    "q_regex_count_hits" ->
-      "SELECT doc_id, LEN(regexp_extract_all(text, '\\b(data|join)\\b', 1)) AS n_hits FROM documents",
-    "q_split_slice" ->
-      "SELECT doc_id, SUBSTRING(split_part(text, ' scan ', 1), 1, 40) AS head40 FROM documents",
-    "q_first_words_key" ->
-      """SELECT doc_id, CONCAT_WS(' ', split_part(text, ' ', 1), split_part(text, ' ', 2)) AS key2
-         FROM documents""",
-    "q_clean_scrub" ->
-      """WITH c AS (SELECT doc_id,
-           TRIM(regexp_replace(LOWER(text), '[^a-z\s\x0B]', '', 'g')) AS cleaned
-         FROM documents)
-         SELECT doc_id,
-           SUBSTRING(TRIM(list_filter(string_split_regex(cleaned, '[\s\x0B]+'),
-             t -> t <> '')[1]), 1, 20) AS w0,
-           SUBSTRING(cleaned, 1, 40) AS cleaned40
-         FROM c""",
-    // ftfy-lite normalization: the messy suffix and every rule rebuilt from
-    // chr() codes (no raw control bytes in source); '\t'/'\n' inside SQL
-    // single quotes reach RE2 un-processed, which reads them as tab/newline
-    "q_normalize_text" ->
-      """WITH m AS (SELECT doc_id, text ||
-           '  ' || chr(8216) || 'q' || chr(8217) || ' ' || chr(8220) || 'w' || chr(8221) ||
-           ' ' || chr(8211) || ' ' || chr(8212) || ' ' || chr(160) || 'x' || chr(8230) || ' ' ||
-           chr(1) || chr(7) || 'ok' || chr(9) || 'tab  end' ||
-           chr(10) || chr(10) || chr(10) || chr(10) || 'tail  ' AS t
-         FROM documents)
-         SELECT doc_id, regexp_replace(
-           regexp_replace(
-             regexp_replace(
-               replace(
-                 translate(
-                   regexp_replace(t, '[\x00-\x08\x0B-\x1F\x7F]', '', 'g'),
-                   chr(8216)||chr(8217)||chr(8220)||chr(8221)||chr(8211)||chr(8212)||chr(160),
-                   '''''""-- '),
-                 chr(8230), '...'),
-               '[ \t]+', ' ', 'g'),
-             '\n{3,}', chr(10)||chr(10), 'g'),
-           '^\s+|\s+$', '', 'g') AS normalized
-         FROM m""",
-    "q_tokens" ->
-      """SELECT doc_id,
-         LEN(list_filter(string_split_regex(TRIM(text), '[\s\x0B]+'), t -> t <> '')) AS n_tokens,
-         LEN(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^\s\x0BA-Za-z0-9]')) AS n_bpeish
-         FROM documents WHERE LENGTH(TRIM(text)) > 0""",
-    "q_quality_ratios" ->
-      """WITH b AS (
-           SELECT doc_id, text, LENGTH(text) AS n,
-             CAST(LENGTH(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE) / LENGTH(text) AS alpha,
-             CAST(LENGTH(regexp_replace(text, '[a-zA-Z0-9\s\x0B]', '', 'g')) AS DOUBLE) / LENGTH(text) AS punct,
-             LEN(regexp_extract_all(LOWER(text), '\b(a|and|for|in|is|it|of|that|the|to)\b', 1)) AS stop_en,
-             LEN(list_filter(string_split_regex(TRIM(text), '[\s\x0B]+'), t -> t <> '')) AS n_tok,
-             CAST(LENGTH(regexp_replace(text, '[\s\x0B]', '', 'g')) AS DOUBLE) AS tok_chars
-           FROM documents WHERE LENGTH(text) > 0),
-         q AS (
-           SELECT doc_id, alpha, punct, stop_en,
-             0.3 * LEAST(1.0, n / 200.0) + 0.25 * alpha
-             + 0.2 * LEAST((CAST(stop_en AS DOUBLE) / n_tok) * 4, 1.0)
-             + 0.15 * (CASE WHEN tok_chars / n_tok >= 3 AND tok_chars / n_tok <= 10 THEN 1.0 ELSE 0.5 END)
-             + 0.1 * (1.0 - LEAST(punct * 5, 1.0)) AS raw
-           FROM b)
-         SELECT doc_id,
-           CAST(FLOOR(alpha * 1000000) AS BIGINT) AS alpha_ppm,
-           CAST(FLOOR(punct * 1000000) AS BIGINT) AS punct_ppm,
-           stop_en,
-           CAST(FLOOR(GREATEST(0.0, LEAST(1.0, raw)) * 1000000) AS BIGINT) AS quality_ppm
-         FROM q""",
-    "q_score_percentile" ->
-      """WITH b AS (
-           SELECT doc_id, source, text, LENGTH(text) AS n,
-             CAST(LENGTH(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE) / LENGTH(text) AS alpha,
-             CAST(LENGTH(regexp_replace(text, '[a-zA-Z0-9\s\x0B]', '', 'g')) AS DOUBLE) / LENGTH(text) AS punct,
-             LEN(regexp_extract_all(LOWER(text), '\b(a|and|for|in|is|it|of|that|the|to)\b', 1)) AS stop_en,
-             LEN(list_filter(string_split_regex(TRIM(text), '[\s\x0B]+'), t -> t <> '')) AS n_tok,
-             CAST(LENGTH(regexp_replace(text, '[\s\x0B]', '', 'g')) AS DOUBLE) AS tok_chars
-           FROM documents WHERE LENGTH(text) > 0),
-         q AS (
-           SELECT doc_id, source,
-             0.3 * LEAST(1.0, n / 200.0) + 0.25 * alpha
-             + 0.2 * LEAST((CAST(stop_en AS DOUBLE) / n_tok) * 4, 1.0)
-             + 0.15 * (CASE WHEN tok_chars / n_tok >= 3 AND tok_chars / n_tok <= 10 THEN 1.0 ELSE 0.5 END)
-             + 0.1 * (1.0 - LEAST(punct * 5, 1.0)) AS raw
-           FROM b),
-         p AS (
-           SELECT doc_id, source,
-             CAST(FLOOR(GREATEST(0.0, LEAST(1.0, raw)) * 1000000) AS BIGINT) AS quality_ppm
-           FROM q)
-         SELECT doc_id, source, quality_ppm,
-           CAST(FLOOR(percent_rank() OVER (PARTITION BY source ORDER BY quality_ppm) * 1000000) AS BIGINT) AS pctl_ppm
-         FROM p""",
-    "q_langid" ->
-      """WITH h AS (
-           SELECT doc_id,
-             LEN(regexp_extract_all(LOWER(text), '\b(das|den|der|die|ein|in|ist|mit|und|von)\b', 1)) AS h_de,
-             LEN(regexp_extract_all(LOWER(text), '\b(a|and|for|in|is|it|of|that|the|to)\b', 1)) AS h_en,
-             LEN(regexp_extract_all(LOWER(text), '\b(de|el|en|es|la|los|por|que|un|y)\b', 1)) AS h_es,
-             LEN(regexp_extract_all(LOWER(text), '\b(des|du|en|est|et|la|le|les|que|un)\b', 1)) AS h_fr
-           FROM documents)
-         SELECT doc_id, CASE
-           WHEN GREATEST(h_de, h_en, h_es, h_fr) = 0 THEN 'und'
-           WHEN h_de = GREATEST(h_de, h_en, h_es, h_fr) THEN 'de'
-           WHEN h_en = GREATEST(h_de, h_en, h_es, h_fr) THEN 'en'
-           WHEN h_es = GREATEST(h_de, h_en, h_es, h_fr) THEN 'es'
-           ELSE 'fr' END AS lang_pred
-         FROM h""",
-    "q_jaccard_pairs" ->
-      """WITH s AS (SELECT doc_id, source,
-             list_distinct(list_filter(
-               string_split_regex(TRIM(LOWER(text)), '[\s\x0B]+'), t -> t <> '')) AS toks
-           FROM documents)
-         SELECT l.doc_id AS left_id, r.doc_id AS right_id,
-           CAST(FLOOR((CAST(LEN(list_intersect(l.toks, r.toks)) AS DOUBLE) /
-             (LEN(l.toks) + LEN(r.toks) - LEN(list_intersect(l.toks, r.toks)))) * 1000000) AS BIGINT) AS jaccard_ppm
-         FROM s l JOIN s r ON l.source = r.source AND l.doc_id < r.doc_id
-         WHERE CAST(LEN(list_intersect(l.toks, r.toks)) AS DOUBLE) /
-           (LEN(l.toks) + LEN(r.toks) - LEN(list_intersect(l.toks, r.toks))) >= 0.35""",
-    // full independent fuzz.token_sort_ratio: full_process + token sort in
-    // SQL, Ratcliff-Obershelp via the recursive segment CTE, half-even
-    // rounding replicated explicitly (kinds 1/2 = name/type score columns)
-    "q_token_sort_pairs" -> {
-      val pairsSql =
-        s"""SELECT 1000000 + l.p_partkey*1000 + r.p_partkey AS pid,
-      ${tokenSortSql("l.p_name")} AS a, ${tokenSortSql("r.p_name")} AS b
-    FROM part l, part r
-    WHERE l.p_partkey < 40 AND r.p_partkey >= 100 AND r.p_partkey < 140
-    UNION ALL
-    SELECT 2000000 + l.p_partkey*1000 + r.p_partkey,
-      ${tokenSortSql("l.p_type")}, ${tokenSortSql("r.p_type")}
-    FROM part l, part r
-    WHERE l.p_partkey < 40 AND r.p_partkey >= 100 AND r.p_partkey < 140"""
-      s"""WITH RECURSIVE
-${roOracleCtes(pairsSql)},
-scx AS (SELECT pid, 100 * ((2.0 * m) / (la + lb)) AS x FROM ro WHERE la > 0 AND lb > 0),
-sc AS (SELECT pid, $intrScoreSql AS score FROM scx),
--- fuzz.ratio decorator order: equal processed strings (incl. BOTH empty)
--- hit check_for_equivalence -> 100 before the empty guard -> 0
-allsc AS (SELECT r.pid,
-  CASE WHEN r.la = 0 AND r.lb = 0 THEN 100 ELSE COALESCE(sc.score, 0) END AS score
-  FROM ro r LEFT JOIN sc ON r.pid = sc.pid)
-SELECT n.cis AS cis_index, n.mas AS master_index,
-  n.score AS name_sim, ty.score AS type_sim
-FROM (SELECT (pid % 1000000) // 1000 AS cis, pid % 1000 AS mas, score
-      FROM allsc WHERE pid // 1000000 = 1) n
-JOIN (SELECT (pid % 1000000) // 1000 AS cis, pid % 1000 AS mas, score
-      FROM allsc WHERE pid // 1000000 = 2) ty
-  ON n.cis = ty.cis AND n.mas = ty.mas"""
-    },
-
-    // difflib SequenceMatcher argmax per rule + the strict >0.8 null-out
-    // (bestmatch.py replica); same R-O chain on the RAW strings
-    "q_seqmatch_best" -> {
-      val pairsSql =
-        """SELECT l.p_partkey*1000 + r.p_partkey AS pid,
-      l.p_name AS a, r.p_name || ' kit' AS b
-    FROM part l, part r
-    WHERE l.p_partkey < 30 AND r.p_partkey >= 15 AND r.p_partkey < 45"""
-      s"""WITH RECURSIVE
-${roOracleCtes(pairsSql)},
-ranked AS (SELECT pid // 1000 AS rule_id, pid % 1000 AS control_id, ratio,
-    row_number() OVER (PARTITION BY pid // 1000 ORDER BY ratio DESC, pid % 1000) AS rn
-  FROM ro),
-best AS (SELECT rule_id, control_id, ratio FROM ranked WHERE rn = 1)
-SELECT b.rule_id, lp.p_name AS rule,
-  CASE WHEN b.ratio > 0.8 THEN b.control_id END AS control_id,
-  CASE WHEN b.ratio > 0.8 THEN rp.p_name || ' kit' END AS control,
-  CASE WHEN b.ratio > 0.8 THEN CAST(FLOOR(b.ratio * 1000000) AS BIGINT) END AS score_ppm
-FROM best b
-JOIN part lp ON lp.p_partkey = b.rule_id
-JOIN part rp ON rp.p_partkey = b.control_id"""
-    },
-
-    "q_embedding_top3" ->
-      """WITH q AS (SELECT vec_id qid, embedding qv FROM embeddings WHERE vec_id < 20),
-         c AS (SELECT vec_id cid, embedding cv FROM embeddings),
-         s AS (SELECT qid, cid,
-           list_sum(list_transform(list_zip(qv, cv), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))) /
-           (SQRT(list_sum(list_transform(qv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) *
-            SQRT(list_sum(list_transform(cv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS score
-           FROM q, c WHERE qid != cid)
-         SELECT qid AS query_id, cid AS corpus_id,
-           CAST(FLOOR(score * 1000000) AS BIGINT) AS score_ppm, rn
-         FROM (SELECT qid, cid, score,
-           ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, cid) rn FROM s)
-         WHERE rn <= 3""",
-    "q_json_props" ->
-      "SELECT event_id, TRY_CAST(json_extract_string(props, '$.k') AS BIGINT) AS k FROM events",
-    "q_stopword_filter" -> {
-      val inList = graft.core.TextStats.NltkStopWordsEn
-        .map(w => "'" + w.replace("'", "''") + "'").mkString(",")
-      s"""SELECT doc_id, array_to_string(list_filter(
-           string_split_regex(TRIM(LOWER(text)), '[\\s\\x0B]+'),
-           t -> t <> '' AND t NOT IN ($inList)), ' ') AS filtered
-         FROM documents"""
-    },
-    "q_top5_reversed" ->
-      """SELECT event_type, event_id, value, rn FROM (
-           SELECT event_type, event_id, value,
-             ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY value DESC, event_id) rn
-           FROM events) WHERE rn <= 5""",
-    "q_group_head1" ->
-      """SELECT event_type, event_id, value FROM (
-           SELECT event_type, event_id, value,
-             ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY value DESC, event_id) rn
-           FROM events) WHERE rn = 1""",
-    // ---- fixture-table oracles: DuckDB reads the SAME parquet the Spark
-    // query consumed (materialized by fixtureParquet at a fixed path) -------
-    "q_ordering_audit" ->
-      s"""SELECT conv_id, violations FROM (
-           SELECT conv_id, SUM(CASE WHEN rn - 1 <> turn_idx THEN 1 ELSE 0 END)::BIGINT AS violations
-           FROM (SELECT conv_id, turn_idx,
-                   ROW_NUMBER() OVER (PARTITION BY conv_id ORDER BY turn_idx) rn
-                 FROM read_parquet('$FixtureDir/slim200/*.parquet'))
-           GROUP BY conv_id) WHERE violations = 0""",
-    "q_first_match_per_doc" ->
-      s"""SELECT conv_id, turn_idx,
-           regexp_extract(text, '(\\d+)\\.(\\d+)\\.(\\d+)', 1) AS g1,
-           regexp_extract(text, '(\\d+)\\.(\\d+)\\.(\\d+)', 2) AS g2,
-           regexp_extract(text, '(\\d+)\\.(\\d+)\\.(\\d+)', 3) AS g3
-         FROM (SELECT conv_id, turn_idx, text,
-                 ROW_NUMBER() OVER (PARTITION BY conv_id ORDER BY turn_idx) rn
-               FROM read_parquet('$FixtureDir/slim150/*.parquet')
-               WHERE regexp_matches(text, '(\\d+)\\.(\\d+)\\.(\\d+)'))
-         WHERE rn = 1""",
-    "q_ensure_anchored" ->
-      s"""SELECT conv_id, turn_idx, anchored FROM (
-           SELECT conv_id, turn_idx, SUBSTRING(
-             CASE WHEN regexp_matches(text, '(?i)\\bEnsure\\b')
-                  THEN regexp_extract(text, '(?is)(\\bEnsure\\b.*)', 1)
-                  ELSE regexp_replace(text, '^\\.?\\d+(?:\\.\\d+)*\\s*', '')
-             END, 1, 60) AS anchored
-           FROM read_parquet('$FixtureDir/slim100/*.parquet'))
-         WHERE LENGTH(anchored) > 0""",
-    "q_paragraph_bounded" ->
-      // leading \b only (anchor ends in ':'); per-match strip mirrors the
-      // reference's .strip() on every span
-      s"""SELECT conv_id, turn_idx, LEN(paras) AS n, LENGTH(paras[1]) AS first_len
-         FROM (SELECT conv_id, turn_idx,
-                 list_transform(
-                   regexp_extract_all(text, '(?s)(\\bCIS Controls:.*?)(?:\\n\\n|$$)', 1),
-                   p -> regexp_replace(p, '^\\s+|\\s+$$', '', 'g')) AS paras
-               FROM read_parquet('$FixtureDir/slim120/*.parquet'))
-         WHERE LEN(paras) > 0""",
-    "q_anchored_rows" ->
-      // tail = text AFTER the greedy anchor match (text[match.end():]); each
-      // line stripped and matched START-anchored — the reference's
-      // table_pattern.match(line.strip())
-      s"""WITH t AS (
-           SELECT conv_id, turn_idx,
-             CASE WHEN regexp_matches(text, 'CIS Controls[:\\s]*')
-                  THEN regexp_extract(text, '(?s)CIS Controls[:\\s]*(.*)', 1)
-                  ELSE '' END AS tail
-           FROM read_parquet('$FixtureDir/slim120/*.parquet')),
-         lines AS (
-           SELECT conv_id, turn_idx,
-             unnest(generate_series(0, LEN(string_split(tail, chr(10))) - 1)) AS line_idx,
-             unnest(string_split(tail, chr(10))) AS line
-           FROM t),
-         stripped AS (
-           SELECT conv_id, turn_idx, line_idx,
-             regexp_replace(line, '^\\s+|\\s+$$', '', 'g') AS line
-           FROM lines)
-         SELECT conv_id, turn_idx, line_idx,
-           regexp_extract(line, '^(?:(v\\d+)\\s+(\\d+\\.\\d+)\\s+(\\w.*))', 1) AS g1,
-           regexp_extract(line, '^(?:(v\\d+)\\s+(\\d+\\.\\d+)\\s+(\\w.*))', 2) AS g2,
-           SUBSTRING(regexp_extract(line, '^(?:(v\\d+)\\s+(\\d+\\.\\d+)\\s+(\\w.*))', 3), 1, 30) AS g3
-         FROM stripped WHERE regexp_matches(line, '^(?:(v\\d+)\\s+(\\d+\\.\\d+)\\s+(\\w.*))')""",
-    "q_keyword_windows" -> keywordWindowsOracleSql(s"$FixtureDir/slim150/*.parquet"),
-    "q_keyword_windows_fuzz" -> keywordWindowsOracleSql(s"$FixtureDir/soup160/*.parquet"),
-    "q_line_fsm" -> lineFsmOracleSql(s"$FixtureDir/slim150/*.parquet"),
-    "q_line_fsm_fuzz" -> lineFsmOracleSql(s"$FixtureDir/soup160/*.parquet"),
-    "q_table_blocks" -> tableBlocksCellsSql(
-      s"t AS (SELECT * FROM read_parquet('$FixtureDir/slim200/*.parquet'))"),
-    "q_table_blocks_gated" -> tableBlocksCellsSql(
-      s"""raw AS (SELECT conv_id, turn_idx, coalesce(text, '') AS text
-        FROM read_parquet('$FixtureDir/slim200/*.parquet')),
-g0 AS (SELECT conv_id, turn_idx, text,
-        MAX(CASE WHEN text LIKE '%CIS Controls:%' THEN 1 ELSE 0 END)
-          OVER (PARTITION BY conv_id ORDER BY turn_idx ROWS UNBOUNDED PRECEDING) AS mk,
-        lead(text) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS nxt
-       FROM raw),
-g1 AS (SELECT *, CASE WHEN mk = 1 AND nxt IS NOT NULL
-          AND regexp_matches(nxt, '^\\s*$$') THEN turn_idx END AS stop_cand FROM g0),
-g2 AS (SELECT *, MIN(stop_cand) OVER (PARTITION BY conv_id) AS stop FROM g1),
-t AS (SELECT conv_id, turn_idx, text FROM g2
-      WHERE mk = 1 AND (stop IS NULL OR turn_idx <= stop))"""),
-    "q_fingerprint" ->
-      """WITH h AS (
-  SELECT doc_id,
-    list_reduce(
-      list_prepend(0::HUGEINT,
-        list_transform(regexp_extract_all(text, '(?s).'), c -> ord(c)::HUGEINT)),
-      (a, b) -> (a * 257::HUGEINT + b) % 18446744073709551616::HUGEINT) AS h0
-  FROM documents),
-s1 AS (SELECT doc_id, (h0 + 11400714819323198485::HUGEINT) % 18446744073709551616::HUGEINT AS x FROM h),
-s2 AS (SELECT doc_id, ((xor(x, x // 1073741824::HUGEINT) * 484763065::HUGEINT + ((xor(x, x // 1073741824::HUGEINT) * 3210233709::HUGEINT) % 4294967296::HUGEINT) * 4294967296::HUGEINT) % 18446744073709551616::HUGEINT) AS x FROM s1),
-s3 AS (SELECT doc_id, ((xor(x, x // 134217728::HUGEINT) * 321982955::HUGEINT + ((xor(x, x // 134217728::HUGEINT) * 2496678331::HUGEINT) % 4294967296::HUGEINT) * 4294967296::HUGEINT) % 18446744073709551616::HUGEINT) AS x FROM s2),
-s4 AS (SELECT doc_id, xor(x, x // 2147483648::HUGEINT) AS x FROM s3)
-SELECT doc_id,
-  CAST(CASE WHEN x >= 9223372036854775808::HUGEINT THEN x - 18446744073709551616::HUGEINT ELSE x END AS BIGINT) AS fp
-FROM s4""",
-    "q_lemmatize" ->
-      """SELECT doc_id, array_to_string(list_transform(
-           string_split_regex(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+'),
-           w -> CASE
-             WHEN LENGTH(LOWER(w)) <= 3 THEN LOWER(w)
-             WHEN ends_with(LOWER(w), 'ies') THEN SUBSTRING(LOWER(w), 1, LENGTH(w)-3) || 'y'
-             WHEN ends_with(LOWER(w), 'sses') THEN SUBSTRING(LOWER(w), 1, LENGTH(w)-2)
-             WHEN ends_with(LOWER(w), 'ing') AND LENGTH(w) > 5 THEN SUBSTRING(LOWER(w), 1, LENGTH(w)-3)
-             WHEN ends_with(LOWER(w), 'ed') AND LENGTH(w) > 4 THEN SUBSTRING(LOWER(w), 1, LENGTH(w)-2)
-             WHEN LENGTH(w) > 4 AND (ends_with(LOWER(w), 'ches') OR ends_with(LOWER(w), 'shes')
-               OR ends_with(LOWER(w), 'xes') OR ends_with(LOWER(w), 'zes')) THEN SUBSTRING(LOWER(w), 1, LENGTH(w)-2)
-             WHEN ends_with(LOWER(w), 's') AND NOT ends_with(LOWER(w), 'ss') THEN SUBSTRING(LOWER(w), 1, LENGTH(w)-1)
-             ELSE LOWER(w) END), ' ') AS lemmas
-         FROM documents""",
-    "q_meanpool_by_label" ->
-      """SELECT label, CAST(dim AS INTEGER) AS dim,
-           SUM(CAST(FLOOR(CAST(v AS DOUBLE) * 1000000) AS BIGINT))::BIGINT AS sum_micro,
-           COUNT(*) AS cnt
-         FROM (SELECT label, unnest(embedding) AS v,
-                 unnest(generate_series(0, LEN(embedding) - 1)) AS dim
-               FROM embeddings)
-         GROUP BY label, dim""",
-    "q_scalar_query_scan" ->
-      """WITH q AS (SELECT embedding qv FROM embeddings WHERE vec_id = 0)
-         SELECT vec_id, CAST(FLOOR((
-           list_sum(list_transform(list_zip(embedding, qv), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))) /
-           (SQRT(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) *
-            SQRT(list_sum(list_transform(qv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))) * 1000000) AS BIGINT) AS score_ppm
-         FROM embeddings, q WHERE vec_id > 0
-         ORDER BY score_ppm DESC, vec_id LIMIT 20""",
-
-    // ---- training-data curation suite ----------------------------------
-    "q_pii_redact" ->
-      """WITH aug AS (
-  SELECT doc_id,
-    text || ' contact user' || doc_id || '@example.com ip 10.' || (doc_id % 256) ||
-    '.' || ((doc_id * 7) % 256) || '.4 ssn 123-45-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') ||
-    ' tel +1-555-' || lpad(CAST((doc_id * 31) % 10000 AS VARCHAR), 4, '0') AS raw
-  FROM documents)
-, stages AS (
-  SELECT doc_id, raw,
-    regexp_replace(raw, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g') AS after_email
-  FROM aug),
-stages2 AS (SELECT *, regexp_replace(after_email, '\b\d{3}-\d{2}-\d{4}\b', '<SSN>', 'g') AS after_ssn FROM stages),
-stages3 AS (SELECT *, regexp_replace(after_ssn, '\+\d{1,2}-\d{3}-\d{4}\b', '<PHONE>', 'g') AS after_phone FROM stages2)
-SELECT doc_id,
-  len(regexp_extract_all(raw, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))::BIGINT AS n_email,
-  len(regexp_extract_all(after_email, '\b\d{3}-\d{2}-\d{4}\b'))::BIGINT AS n_ssn,
-  len(regexp_extract_all(after_ssn, '\+\d{1,2}-\d{3}-\d{4}\b'))::BIGINT AS n_phone,
-  len(regexp_extract_all(after_phone, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b'))::BIGINT AS n_ip,
-  regexp_replace(after_phone, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g') AS redacted
-FROM stages3""",
-
-    "q_sliding_chunks" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-         n AS (SELECT doc_id, toks,
-                 CASE WHEN len(toks) > 32
-                      THEN CAST(ceil((len(toks) - 32) / 24.0) AS INT) + 1
-                      ELSE 1 END AS ns
-               FROM t),
-         c AS (SELECT doc_id, CAST(unnest(range(0, ns)) AS BIGINT) AS chunk_idx, toks FROM n)
-         SELECT doc_id, chunk_idx, chunk_idx * 24 AS token_start,
-                array_to_string(toks[CAST(chunk_idx*24+1 AS INT) : CAST(chunk_idx*24+32 AS INT)], ' ') AS chunk
-         FROM c""",
-    "q_chunk_dedup" ->
-      """WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id % 5 = 0),
-base AS (SELECT doc_id, string_split(text, ' ') AS toks FROM corpus),
-chunks AS (
-  SELECT doc_id, i AS chunk_idx,
-         md5(array_to_string(toks[(i*25+1):(i*25+25)], ' ')) AS chunk_hash
-  FROM base, unnest(generate_series(0, ((len(toks)+24)//25) - 1)) u(i)),
-ranked AS (SELECT doc_id, chunk_idx, chunk_hash,
-    row_number() OVER (PARTITION BY chunk_hash ORDER BY doc_id, chunk_idx) AS rn
-  FROM chunks)
-SELECT doc_id, chunk_idx, chunk_hash FROM ranked WHERE rn = 1""",
-
-    "q_contamination" ->
-      """WITH base AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-grams AS (
-  SELECT doc_id, list_distinct(CASE WHEN len(toks) < 8 THEN []
-    ELSE list_transform(generate_series(1, len(toks)-7), i -> array_to_string(toks[i:(i+7)], ' ')) END) AS gs
-  FROM base),
-flat AS (SELECT doc_id, unnest(gs) AS g FROM grams),
-bench AS (SELECT DISTINCT g FROM flat WHERE doc_id % 97 = 0)
-SELECT f.doc_id, count(DISTINCT f.g) AS n_contam
-FROM flat f JOIN bench b ON f.g = b.g
-GROUP BY f.doc_id""",
-
-    // Bloom replica: same gram plane, then the full filter arithmetic —
-    // poly-257 + splitmix fingerprint per DISTINCT gram, h1 = u mod m,
-    // h2 = ((u >> 32) mod m) | 1 (odd step ⇒ the k positions are distinct,
-    // so HAVING count = k is exact), bench positions unioned, a gram
-    // flagged iff ALL k of its positions are set — FPs replayed exactly
-    "q_contamination_bloom" ->
-      s"""WITH base AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-grams AS (
-  SELECT doc_id, list_distinct(CASE WHEN len(toks) < 8 THEN []
-    ELSE list_transform(generate_series(1, len(toks)-7), i -> array_to_string(toks[i:(i+7)], ' ')) END) AS gs
-  FROM base),
-flat AS (SELECT doc_id, unnest(gs) AS g FROM grams),
-cg AS (SELECT DISTINCT g FROM flat),
-f0 AS (SELECT g, list_reduce(list_prepend(0::HUGEINT,
-    list_transform(regexp_extract_all(g, '(?s).'), c -> ord(c)::HUGEINT)),
-  (a, b) -> (a * 257::HUGEINT + b) % ${Osql.Mod}) AS x FROM cg),
-${Osql.mixCtes("f", "x")},
-fh AS (SELECT g, x % 65536::HUGEINT AS h1,
-  ((x // 4294967296::HUGEINT) % 65536::HUGEINT) -
-    (((x // 4294967296::HUGEINT) % 65536::HUGEINT) % 2::HUGEINT) + 1::HUGEINT AS h2
-  FROM fd),
-pos AS (SELECT g, (h1 + i * h2) % 65536::HUGEINT AS p
-  FROM fh CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS i) ii),
-bpos AS (SELECT DISTINCT p.p FROM pos p
-  JOIN (SELECT DISTINCT g FROM flat WHERE doc_id % 97 = 0) b USING (g)),
-flagged AS (SELECT c.g FROM pos c LEFT JOIN bpos ON c.p = bpos.p
-  GROUP BY c.g HAVING count(bpos.p) = 4)
-SELECT f.doc_id, count(DISTINCT f.g) AS n_flagged
-FROM flat f JOIN flagged USING (g)
-GROUP BY f.doc_id""",
-
-    // independent LM retrain + rescore: unigram/bigram counts, top-20 vocab
-    // with the same (count desc, token) tie-break, Laplace smoothing, and
-    // the 1e-4 pre-sum quantization of each position's ln — all-integer out
-    "q_lm_score" ->
-      """WITH toks AS (SELECT doc_id,
-           CASE WHEN regexp_replace(text, '^\s+|\s+$', '', 'g') = ''
-                THEN []::VARCHAR[]
-                ELSE string_split_regex(regexp_replace(lower(text), '^\s+|\s+$', '', 'g'), '\s+') END AS ts
-         FROM documents),
-at AS (SELECT unnest(ts) AS tok FROM toks),
-uni AS (SELECT tok, COUNT(*)::BIGINT AS c FROM at GROUP BY tok),
-voc AS (SELECT tok, c FROM uni ORDER BY c DESC, tok LIMIT 20),
-vl AS (SELECT list(tok) AS vt, COUNT(*)::BIGINT AS nv FROM voc),
-m AS (SELECT doc_id,
-    list_transform(ts, t -> CASE WHEN list_contains(vl.vt, t) THEN t ELSE '<unk>' END) AS ms
-  FROM toks CROSS JOIN vl),
-u1 AS (SELECT tok, COUNT(*)::BIGINT AS c1 FROM (SELECT unnest(ms) AS tok FROM m) GROUP BY tok),
-bg AS (SELECT doc_id, ms[i] AS w1, ms[i+1] AS w2
-  FROM (SELECT doc_id, ms, unnest(generate_series(1, len(ms)-1)) AS i FROM m WHERE len(ms) >= 2)),
-b2 AS (SELECT w1, w2, COUNT(*)::BIGINT AS c12 FROM bg GROUP BY w1, w2),
-sc AS (SELECT bg.doc_id, COUNT(*)::BIGINT AS n_pos,
-    SUM(CAST(FLOOR(ln((b2.c12 + 1)::DOUBLE / (u1.c1 + vl.nv + 1)::DOUBLE) * 10000) AS BIGINT))::BIGINT AS lm_q4_sum
-  FROM bg JOIN b2 ON bg.w1 = b2.w1 AND bg.w2 = b2.w2
-  JOIN u1 ON u1.tok = bg.w1 CROSS JOIN vl
-  GROUP BY bg.doc_id)
-SELECT d.doc_id, COALESCE(sc.n_pos, 0)::BIGINT AS n_pos,
-  COALESCE(sc.lm_q4_sum, 0)::BIGINT AS lm_q4_sum
-FROM documents d LEFT JOIN sc ON d.doc_id = sc.doc_id""",
-
-    // fingerprint64(cast(doc_id)) replica (q_fingerprint technique) →
-    // signed pmod bucket → per-lang ppm rate
-    "q_stratified_sample" ->
-      s"""WITH $idBucketCtes
-SELECT doc_id, lang, bucket FROM b
-WHERE bucket < CASE lang WHEN 'en' THEN 500000 WHEN 'de' THEN 250000
-                         WHEN 'es' THEN 250000 WHEN 'fr' THEN 100000 ELSE 50000 END""",
-
-    // A-ES exponential race replica: same fingerprint bucket chain, −ln(u)
-    // floor-quantized to 1e-4 BEFORE the integer weight division, ties on
-    // (fp, doc_id) — the race key is a bigint both engines compute exactly
-    "q_weighted_sample" ->
-      s"""WITH $idBucketCtes,
-race AS (SELECT b.doc_id, d.n_chars::BIGINT AS w, b.fp,
-    (CAST(FLOOR(ln((b.bucket + 1)::DOUBLE / 1000000.0) * -10000.0) AS BIGINT)
-      * 1000000) // d.n_chars::BIGINT AS pri
-  FROM b JOIN documents d ON b.doc_id = d.doc_id
-  WHERE d.n_chars >= 1)
-SELECT doc_id, w, pri FROM race ORDER BY pri, w DESC, fp, doc_id LIMIT 50""",
-
-    // same bucket chain; rates derived from corpus counts via the
-    // correctly-rounded divide/sqrt/multiply/floor chain (bit-exact)
-    "q_temperature_sample" ->
-      s"""WITH $idBucketCtes,
-cnt AS (SELECT lang, COUNT(*)::BIGINT AS n_l FROM documents GROUP BY lang),
-mx AS (SELECT MAX(n_l) AS n_max FROM cnt),
-rates AS (SELECT lang,
-    least(1000000, CAST(FLOOR(300000.0 * SQRT(n_max::DOUBLE / n_l::DOUBLE)) AS BIGINT)) AS rate_ppm
-  FROM cnt, mx)
-SELECT b.doc_id, b.lang, b.bucket FROM b JOIN rates r ON b.lang = r.lang
-WHERE b.bucket < r.rate_ppm""",
-
-    // generic-plane replica over the MIXED real-blob fixture: magic sniff by
-    // hex prefix (exactly Multimodal.sniffMime), then per-container byte
-    // arithmetic — PNG IHDR big-endian dims, canonical WAV fmt/data little-
-    // endian fields, Y4M ASCII header + frame count from the C444 stride —
-    // plus the resize-plan double math (all proven-exact ops)
-    "q_multimodal_features" ->
-      s"""WITH hb AS (SELECT media_id, payload, octet_length(payload)::BIGINT AS byte_len,
-  upper(substr(hex(payload), 1, 24)) AS magic
-  FROM read_parquet('$FixtureDir/mime600/*.parquet')),
-mm AS (SELECT media_id, payload, byte_len,
-  CASE WHEN magic LIKE '89504E47%' THEN 'image/png'
-       WHEN magic LIKE '52494646%' AND substr(magic, 17, 8) = '57415645' THEN 'audio/x-wav'
-       WHEN magic LIKE '595556344D50454732%' THEN 'video/x-y4m'
-       WHEN magic LIKE '255044462D%' THEN 'application/pdf'
-       WHEN magic LIKE '3C21444F43%' OR magic LIKE '3C21646F63%'
-         OR magic LIKE '3C68746D6C%'
-         OR magic LIKE '3C48544D4C%' THEN 'text/html'
-       ELSE 'application/octet-stream' END AS mime
-  FROM hb),
-png AS (SELECT media_id, mime, byte_len,
-    (b[18]*65536 + b[19]*256 + b[20])::BIGINT AS width,
-    (b[23]*256 + b[24])::BIGINT AS height,
-    1::BIGINT AS n_frames, NULL::BIGINT AS sample_rate
-  FROM (SELECT media_id, mime, byte_len,
-      list_transform(regexp_extract_all(substr(hex(payload), 1, 48), '..'),
-        s -> (strpos('0123456789ABCDEF', substr(s,1,1))-1)*16 + strpos('0123456789ABCDEF', substr(s,2,1))-1) AS b
-    FROM mm WHERE mime = 'image/png')),
-wav AS (SELECT media_id, mime, byte_len,
-    NULL::BIGINT AS width, NULL::BIGINT AS height,
-    ((b[41] + b[42]*256 + b[43]*65536 + b[44]*16777216)
-      // (2 * (b[23] + b[24]*256)))::BIGINT AS n_frames,
-    (b[25] + b[26]*256 + b[27]*65536 + b[28]*16777216)::BIGINT AS sample_rate
-  FROM (SELECT media_id, mime, byte_len,
-      list_transform(regexp_extract_all(substr(hex(payload), 1, 88), '..'),
-        s -> (strpos('0123456789ABCDEF', substr(s,1,1))-1)*16 + strpos('0123456789ABCDEF', substr(s,2,1))-1) AS b
-    FROM mm WHERE mime = 'audio/x-wav')),
-y4m AS (SELECT media_id, mime, byte_len,
-    w::BIGINT AS width, h::BIGINT AS height,
-    ((byte_len - nl) // (6 + 3*w*h))::BIGINT AS n_frames, NULL::BIGINT AS sample_rate
-  FROM (SELECT media_id, mime, byte_len, list_position(b, 10) AS nl,
-      CAST(regexp_extract(array_to_string(list_transform(b[1:list_position(b,10)-1],
-        x -> chr(x::INTEGER)), ''), ' W(\\d+)', 1) AS BIGINT) AS w,
-      CAST(regexp_extract(array_to_string(list_transform(b[1:list_position(b,10)-1],
-        x -> chr(x::INTEGER)), ''), ' H(\\d+)', 1) AS BIGINT) AS h
-    FROM (SELECT media_id, mime, byte_len,
-        list_transform(regexp_extract_all(substr(hex(payload), 1, 160), '..'),
-          s -> (strpos('0123456789ABCDEF', substr(s,1,1))-1)*16 + strpos('0123456789ABCDEF', substr(s,2,1))-1) AS b
-      FROM mm WHERE mime = 'video/x-y4m'))),
-oth AS (SELECT media_id, mime, byte_len, NULL::BIGINT AS width, NULL::BIGINT AS height,
-    NULL::BIGINT AS n_frames, NULL::BIGINT AS sample_rate
-  FROM mm WHERE mime NOT IN ('image/png', 'audio/x-wav', 'video/x-y4m')),
-u AS (SELECT * FROM png UNION ALL SELECT * FROM wav
-  UNION ALL SELECT * FROM y4m UNION ALL SELECT * FROM oth),
-sc AS (SELECT *, CASE WHEN width IS NULL OR height IS NULL THEN NULL
-       WHEN greatest(width, height) <= 256 THEN 1.0::DOUBLE
-       ELSE 256::DOUBLE / greatest(width, height)::DOUBLE END AS scale FROM u)
-SELECT media_id, mime, byte_len, width, height, n_frames, sample_rate,
-  CASE WHEN scale IS NULL THEN NULL
-    ELSE GREATEST(1, CAST(ROUND(width::DOUBLE * scale) AS BIGINT)) END AS out_width,
-  CASE WHEN scale IS NULL THEN NULL
-    ELSE GREATEST(1, CAST(ROUND(height::DOUBLE * scale) AS BIGINT)) END AS out_height
-FROM sc""",
-
-    // full PNG re-decode in SQL (stored-deflate blobs): dims + exact pixel
-    // sums + perceptual aHash, then brute-force Hamming pairs
-    "q_image_features" ->
-      s"""WITH $imageCtes
-SELECT l.media_id, l.w AS width, l.ht AS height,
-  list_sum(l.rl)::BIGINT AS sum_r, list_sum(l.gl)::BIGINT AS sum_g,
-  list_sum(l.bl)::BIGINT AS sum_b, ah.ahash
-FROM lists l JOIN ah ON l.media_id = ah.media_id""",
-
-    "q_image_neardup" ->
-      s"""WITH $imageCtes
-SELECT l.media_id AS left_id, r.media_id AS right_id,
-  CAST(bit_count(xor(l.ahash, r.ahash)) AS INT) AS hamming
-FROM ah l JOIN ah r ON l.media_id < r.media_id
-WHERE bit_count(xor(l.ahash, r.ahash)) <= 4""",
-
-    // full WAV re-decode in SQL: header fields + int16 reconstruction +
-    // integer sample statistics
-    "q_audio_features" ->
-      s"""WITH $audioCtes
-SELECT media_id, sample_rate, channels, n_frames, sum_abs, sum_sq,
-  zero_crossings, peak FROM afeat""",
-
-    // full Y4M re-decode in SQL: ASCII header parse + frame walk
-    "q_video_features" ->
-      s"""WITH $videoCtes
-SELECT l.media_id, MIN(l.w)::BIGINT AS width, MIN(l.h)::BIGINT AS height,
-  MIN(l.fps_num)::BIGINT AS fps_num, MIN(l.n_frames)::BIGINT AS n_frames,
-  SUM(l.luma)::BIGINT AS luma_sum,
-  COALESCE(MIN(m.motion_sum), 0)::BIGINT AS motion_sum
-FROM vluma l LEFT JOIN vmot m ON l.media_id = m.media_id
-GROUP BY l.media_id""",
-
-    "q_video_frame_sample" ->
-      s"""WITH $videoCtes
-SELECT media_id, f::BIGINT AS frame_idx, luma AS frame_luma
-FROM vluma WHERE f % 2 = 0""",
-
-    // fingerprint-ranked per-source quota (unbiased deterministic shuffle)
-    "q_source_cap" ->
-      s"""WITH $idBucketCtes
-SELECT doc_id, source, rk FROM (
-  SELECT doc_id, source,
-    row_number() OVER (PARTITION BY source ORDER BY fp, doc_id) AS rk FROM b)
-WHERE rk <= 30""",
-
-    // global running token sum in (quality desc, id) order, budget prefix
-    "q_token_budget" ->
-      """WITH basew AS (SELECT doc_id, n_chars AS q,
-    len(string_split(text, ' '))::BIGINT AS w FROM documents),
-c AS (SELECT doc_id, q, w,
-    SUM(w) OVER (ORDER BY q DESC, doc_id ROWS UNBOUNDED PRECEDING)::BIGINT AS cum_tokens
-  FROM basew)
-SELECT doc_id, q, w, cum_tokens FROM c WHERE cum_tokens <= 10000""",
-
-    // Full DuckDB replica of Boilerplate.stripHtml (WSDM'10 block heuristic)
-    // over the materialized HTML fixture. RE2 has no backreferences, so the
-    // Scala side's `</\1\s*>` subtree/container patterns are expanded into
-    // per-tag literal regexes; `array_to_string([],sep)` is NULL in DuckDB,
-    // hence the COALESCE on the anchor concat.
-    "q_boilerplate" ->
-      s"""WITH t AS (SELECT conv_id, turn_idx, text
-  FROM read_parquet('$FixtureDir/html120/*.parquet') WHERE contains(text, '<html')),
-s1 AS (SELECT conv_id, turn_idx,
-    regexp_replace(text, '(?s)<!--.*?-->', ' ', 'g') AS s FROM t),
-s2 AS (SELECT conv_id, turn_idx,
-    regexp_replace(regexp_replace(regexp_replace(regexp_replace(s,
-      '(?is)<script\\b[^>]*>.*?</script\\s*>', ' ', 'g'),
-      '(?is)<style\\b[^>]*>.*?</style\\s*>', ' ', 'g'),
-      '(?is)<noscript\\b[^>]*>.*?</noscript\\s*>', ' ', 'g'),
-      '(?is)<template\\b[^>]*>.*?</template\\s*>', ' ', 'g') AS s FROM s1),
-s3 AS (SELECT conv_id, turn_idx,
-    regexp_replace(regexp_replace(regexp_replace(regexp_replace(s,
-      '(?is)<nav\\b[^>]*>.*?</nav\\s*>', ' ', 'g'),
-      '(?is)<header\\b[^>]*>.*?</header\\s*>', ' ', 'g'),
-      '(?is)<footer\\b[^>]*>.*?</footer\\s*>', ' ', 'g'),
-      '(?is)<aside\\b[^>]*>.*?</aside\\s*>', ' ', 'g') AS s FROM s2),
-blk AS (SELECT conv_id, turn_idx,
-    unnest(string_split_regex(s, '(?i)</?(?:p|div|h[1-6]|li|ul|ol|table|tr|section|article|main|br|blockquote|pre)\\b[^>]*>')) AS b,
-    unnest(generate_series(1, len(string_split_regex(s, '(?i)</?(?:p|div|h[1-6]|li|ul|ol|table|tr|section|article|main|br|blockquote|pre)\\b[^>]*>')))) AS bi
-  FROM s3),
-scored AS (SELECT conv_id, turn_idx, bi,
-    trim(regexp_replace(
-      replace(replace(replace(replace(replace(replace(
-        regexp_replace(b, '(?s)</?[A-Za-z][^>]*>|<!--.*?-->|<![^>]*>', ' ', 'g'),
-        '&lt;','<'),'&gt;','>'),'&quot;','"'),'&#39;',chr(39)),'&nbsp;',' '),'&amp;','&'),
-      '[ \\t\\x0B\\f\\r]+', ' ', 'g'), ' ' || chr(10) || chr(9) || chr(13) || chr(11) || chr(12)) AS txt,
-    length(trim(regexp_replace(
-      replace(replace(replace(replace(replace(replace(
-        COALESCE(array_to_string(list_transform(
-          regexp_extract_all(b, '(?is)<a\\b[^>]*>(.*?)</a\\s*>', 1),
-          x -> regexp_replace(x, '(?s)</?[A-Za-z][^>]*>|<!--.*?-->|<![^>]*>', ' ', 'g')), ''), ''),
-        '&lt;','<'),'&gt;','>'),'&quot;','"'),'&#39;',chr(39)),'&nbsp;',' '),'&amp;','&'),
-      '[ \\t\\x0B\\f\\r]+', ' ', 'g'), ' ' || chr(10) || chr(9) || chr(13) || chr(11) || chr(12))) AS alen
-  FROM blk),
-kept AS (SELECT * FROM scored
-  WHERE txt <> ''
-    AND (length(txt) >= 10 OR regexp_matches(txt, '[A-Za-z0-9]'))
-    AND alen::DOUBLE / greatest(length(txt), 1) <= 0.5),
-agg AS (SELECT conv_id, turn_idx, string_agg(txt, chr(10) ORDER BY bi) AS main_content
-  FROM kept GROUP BY conv_id, turn_idx)
-SELECT t.conv_id, t.turn_idx, COALESCE(a.main_content, '') AS main_content
-FROM t LEFT JOIN agg a ON a.conv_id = t.conv_id AND a.turn_idx = t.turn_idx""",
-
-    // greedy fold as a recursive CTE over the per-lang row_number chain
-    "q_seq_packing" ->
-      """WITH RECURSIVE base AS MATERIALIZED (
-  SELECT lang, doc_id, len(string_split(text, ' '))::BIGINT AS n_tok,
-         row_number() OVER (PARTITION BY lang ORDER BY doc_id) AS rn
-  FROM documents),
-pack AS (
-  SELECT lang, doc_id, n_tok, rn, 0::BIGINT AS bin_idx, n_tok AS used FROM base WHERE rn = 1
-  UNION ALL
-  SELECT b.lang, b.doc_id, b.n_tok, b.rn,
-    CASE WHEN p.used + b.n_tok > 256 THEN p.bin_idx + 1 ELSE p.bin_idx END,
-    CASE WHEN p.used + b.n_tok > 256 THEN b.n_tok ELSE p.used + b.n_tok END
-  FROM pack p JOIN base b ON b.lang = p.lang AND b.rn = p.rn + 1)
-SELECT lang, doc_id, n_tok, bin_idx FROM pack""",
-  )
 }

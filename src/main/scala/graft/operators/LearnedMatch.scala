@@ -274,7 +274,7 @@ object LearnedMatch {
   }
 
   /** Window readout over already-scored pairs — shared by the operator and
-    * by SparkEntry's export-then-rescore oracle query. */
+    * by q_learned_match's export-then-rescore oracle query. */
   def rankPairs(scored: DataFrame, k: Int): DataFrame =
     scored
       .withColumn("rn", row_number().over(

@@ -21,7 +21,7 @@ object TopicModel {
     * (unrolled CTE chain, one block per EM iteration).
     *
     * Arithmetic contract (mirrored exactly by the SQL builder in
-    * SparkEntry): vocab = distinct `\w\w+` tokens of the lowercased union,
+    * MatchingQueries): vocab = distinct `\w\w+` tokens of the lowercased union,
     * sorted ascending; doc order = id ascending;
     *   den(d,w)  = Σ_z θ(d,z)·φ(z,w)                      (z ascending)
     *   tN(d,z)   = Σ_w n(d,w)·θ(d,z)·φ(z,w)/den(d,w)      (w ascending)
@@ -237,7 +237,7 @@ object TopicModel {
 
   /** Shared scoring tail: broadcast cross-join on topic-space cosine,
     * per-left argmax with the (desc score, right_id) tie order. Kept
-    * `private[graft]` so SparkEntry's `q_topic_match` can re-score its
+    * `private[graft]` so MatchingQueries' `q_topic_match` can re-score its
     * EXPORTED topic vectors: the cosine loop is i-ascending left-assoc
     * (dot += a(i)*b(i)), so a k-fixed SQL chain `a[1]*b[1] + … + a[k]*b[k]`
     * replays it bit-identically and the ML-fit readout gets a real

@@ -1,0 +1,693 @@
+package graft.queries
+
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+import graft.FsmOracleSql
+import graft.core.FixtureGen
+import graft.functions.Clean
+import graft.operators.{Extraction, Matching, Transcripts}
+import QueryKit._
+
+/** The flagship section-header FSM on both extraction planes, the variant
+  * sectionizers (line FSM, keyword windows, table blocks, regex extracts),
+  * and the transcript-table checks: ordering, skew, salting,
+  * well-formedness, repair and branch detection. */
+private[graft] object FsmQueries {
+
+  private val FsmSpan100 = transcripts("fsmspan100",
+    FixtureGen.Profile(numConvs = 100, monsterEvery = 41, monsterTurns = 80, invalidEvery = 13))
+  private val Slim100 = slim(100)
+  private val Slim120 = slim(120)
+  private val Slim200 = slim(200)
+
+  private val BucketedTable = "graft_q_fsm_bucketed"
+  /** FsmRec60 written as [[BucketedTable]], once per JVM like every other
+    * constant fixture: an unconditional writeBucketed would pay the full
+    * DROP+sort+write per invocation (inflating the query's bench time) and
+    * its DROP TABLE could yank the table from under a concurrent Verify
+    * thread's read. */
+  private val FsmRec60Bucketed = new Fixture("fsmrec60_bucketed", (s, path) => {
+    import s.implicits._
+    Extraction.writeBucketed(s.read.parquet(FsmRec60(s)).as[graft.core.Turn],
+      BucketedTable, path, buckets = 8)
+  })
+
+  /** Transcript fixture with PLANTED well-formedness violations, keyed off
+    * the conversation number so every violation class appears in a known
+    * subset: index gaps (drop turn 2 where id%7=0), blank text (turn 1,
+    * id%11=0), timestamp regressions (turn 3 rewound, id%13=0), forced role
+    * repeats (turns 1-2 both 'assistant', id%3=0), duplicate turn_idx
+    * (turn 6 cloned with different text, id%5=0). The base data's natural
+    * u/a/t role cycle also means every 'tool' turn is an orphan (previous
+    * turn carries no tool call) — deliberate: the oracle must agree on the
+    * natural violations too, not just the planted ones. */
+  private val Messy60 = new Fixture("messy60", (s, path) => {
+    val base = s.read.parquet(FsmRec60(s))
+    val idn = substring(col("conv_id"), -2, 2).cast("int")
+    val mutated = base
+      .filter(!(idn % 7 === 0 && col("turn_idx") === 2))
+      .withColumn("text",
+        when(idn % 11 === 0 && col("turn_idx") === 1, lit("  "))
+          .otherwise(col("text")))
+      .withColumn("ts",
+        when(idn % 13 === 0 && col("turn_idx") === 3,
+          col("ts") - expr("INTERVAL 1000000 SECONDS"))
+          .otherwise(col("ts")))
+      .withColumn("role",
+        when(idn % 3 === 0 && col("turn_idx").isin(1, 2), lit("assistant"))
+          .otherwise(col("role")))
+    val dups = base.filter(idn % 5 === 0 && col("turn_idx") === 6)
+      .withColumn("text", concat(col("text"), lit(" [dup-idx clone]")))
+    mutated.unionByName(dups).repartition(8)
+      .write.mode("overwrite").parquet(path)
+  })
+
+  /** Transcript fixture with re-rolled conversations for branch detection:
+    * every 3rd conversation gets a clone diverging after turn 4 (suffix
+    * regenerated), every 6th an additional clone diverging after turn 2,
+    * every 10th an exact full duplicate — known prefix families of size
+    * 2-4 at known depths, plus untouched singleton conversations. */
+  private val Branch60 = new Fixture("branch60", (s, path) => {
+    val base = s.read.parquet(FsmRec60(s))
+    val idn = substring(col("conv_id"), -2, 2).cast("int")
+    def reroll(mod: Int, fromTurn: Int, tag: String) = base
+      .filter(idn % mod === 0)
+      .withColumn("text",
+        when(col("turn_idx") >= fromTurn,
+          concat(col("text"), lit(s" [$tag]"))).otherwise(col("text")))
+      .withColumn("conv_id", concat(col("conv_id"), lit(s"_$tag")))
+    val dup = base.filter(idn % 10 === 0)
+      .withColumn("conv_id", concat(col("conv_id"), lit("_dup")))
+    base.unionByName(reroll(3, 4, "r1")).unionByName(reroll(6, 2, "r2"))
+      .unionByName(dup).repartition(8)
+      .write.mode("overwrite").parquet(path)
+  })
+
+  /** Adversarial MARKER-SOUP fixture for the variant sectionizers (X4/X5
+    * fuzz, round-3 verdict #8): seeded compositions of header-soup lines —
+    * canonical and mangled section names, multi-keyword lines, colon soup,
+    * case flips (headers are case-SENSITIVE for the line FSM but
+    * case-INSENSITIVE for the keyword windows), unclosed/nested keyword
+    * windows, cis-control parens, pipes, empty and indented lines —
+    * deliberately far outside the well-formed fixture space. Line 0 of every
+    * page is non-empty: Java's split('\n') and SQL's string_split diverge
+    * only on ALL-newline pages (trailing-empty elision), a shape no PDF page
+    * loop emits, and the oracle's '\n+$' strip covers trailing runs. ASCII
+    * only; whitespace limited to space/tab/newline (PyStr.strip strips
+    * unicode whitespace the SQL trim set does not). */
+  private val Soup160 = new Fixture("soup160", (s, path) => {
+    import s.implicits._
+    val rnd = new java.util.Random(0x50DA5071L)
+    val names = Seq("Description", "Rationale", "Impact", "Audit",
+      "Remediation", "CIS Controls", "Impact Audit", "Pre Description",
+      "description", "AUDIT", "Audit Remediation", "CIS Controls Impact")
+    val tails = Seq("", ":", ": tail", ": a:b:c", " no colon here",
+      "::::", ":\t tabbed ", " rationale impact", " (v8)")
+    val fillers = Seq("ensure the daemon is masked", "see above",
+      "a:b:c", "x | y | z", "", "  indented tail  ",
+      "cis control (1.2) and more", "CIS  Control ( 3 )",
+      "remediation steps: do: twice", "impact:none", "::",
+      "description audit remediation", "tail without colon",
+      "audit impact audit", "cis control (unclosed", ")stray paren(",
+      "\tdescription rationale impact audit remediation cis control (x)")
+    val rows = (0 until 160).flatMap { c =>
+      val turns = 1 + rnd.nextInt(6)
+      (0 until turns).map { t =>
+        val nLines = 1 + rnd.nextInt(11)
+        val body = (0 until nLines).map { _ =>
+          rnd.nextInt(3) match {
+            case 0 => names(rnd.nextInt(names.size)) + tails(rnd.nextInt(tails.size))
+            case 1 => fillers(rnd.nextInt(fillers.size))
+            case _ => (if (rnd.nextBoolean()) "  " else "") +
+              names(rnd.nextInt(names.size)) + " " +
+              fillers(rnd.nextInt(fillers.size)) + tails(rnd.nextInt(tails.size))
+          }
+        }
+        val text = (s"soup page $c.$t" +: body).mkString("\n") +
+          (if (rnd.nextInt(4) == 0) "\n\n" else "")
+        (s"soup-$c", t, text)
+      }
+    }
+    rows.toDF("conv_id", "turn_idx", "text")
+      .repartition(8).write.mode("overwrite").parquet(path)
+  })
+
+  /** The records oracle over FsmRec60 (see FsmOracleSql scaladoc), shared by
+    * the three planes that extract it. */
+  private def fsmRecordsOracle: String =
+    FsmOracleSql.records.replace("__FIX__", s"${FsmRec60.path}/*.parquet")
+
+  /** X5 keyword-window replica, parameterized by fixture path (shared by
+    * the slim150 query and the marker-soup fuzz query). */
+  private def keywordWindowsOracleSql(path: String): String =
+    s"""WITH t AS (SELECT * FROM read_parquet('$path')),
+         m AS (SELECT conv_id, turn_idx,
+           -- Python split(newline, maxsplit 2)[:2] keeps a trailing empty
+           -- second element (text ending in a newline gains a trailing
+           -- space in the key)
+           array_to_string(list_transform(
+             (string_split(text, chr(10)))[1:2],
+             x -> trim(x, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))), ' ') AS key,
+           regexp_extract_all(text, '(?is)description(.*?)rationale', 1) v1,
+           regexp_extract_all(text, '(?is)rationale(.*?)impact', 1) v2,
+           regexp_extract_all(text, '(?is)impact(.*?)audit', 1) v3,
+           regexp_extract_all(text, '(?is)audit(.*?)remediation', 1) v4,
+           regexp_extract_all(text, '(?is)remediation(.*?)cis control', 1) v5,
+           regexp_extract_all(text, '(?is)cis\\s*control\\s*\\((.*?)\\)', 1) v6
+          FROM t),
+         e AS (SELECT conv_id, turn_idx, key, v1,v2,v3,v4,v5,v6,
+            unnest(generate_series(0, greatest(len(v1),len(v2),len(v3),len(v4),len(v5),len(v6))-1)) AS row
+          FROM m)
+         SELECT conv_id, turn_idx, key, CAST(row AS INT) AS row,
+           trim(coalesce(v1[row+1], ''), ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)) AS description,
+           trim(coalesce(v2[row+1], ''), ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)) AS rationale,
+           trim(coalesce(v3[row+1], ''), ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)) AS impact,
+           trim(coalesce(v4[row+1], ''), ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)) AS audit,
+           trim(coalesce(v5[row+1], ''), ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)) AS remediation,
+           trim(coalesce(v6[row+1], ''), ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)) AS cis_control
+         FROM e"""
+
+  /** Long-form pipe-table cell replica, parameterized by the page CTE so the
+    * plain and capture-gated variants share one block/uniquify/arity chain.
+    * `pagesCte` must define CTE `t(conv_id, turn_idx, text)`. */
+  private def tableBlocksCellsSql(pagesCte: String): String =
+    s"""WITH $pagesCte,
+pl AS (SELECT conv_id, turn_idx,
+         unnest(string_split(regexp_replace(text, '\\n+$$', ''), chr(10))) AS line,
+         unnest(generate_series(0, len(string_split(regexp_replace(text, '\\n+$$', ''), chr(10))) - 1)) AS li
+       FROM t),
+tl AS (SELECT conv_id, turn_idx, line, li,
+         li - ROW_NUMBER() OVER (PARTITION BY conv_id, turn_idx ORDER BY li) AS grp
+       FROM pl WHERE line LIKE '%|%'),
+blocks AS (SELECT conv_id, turn_idx, grp, MIN(li) AS hdr_li, COUNT(*) AS n
+           FROM tl GROUP BY conv_id, turn_idx, grp HAVING COUNT(*) >= 2),
+bidx AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY conv_id, turn_idx ORDER BY hdr_li) - 1 AS INT) AS table_idx
+         FROM blocks),
+hdr AS (SELECT b.conv_id, b.turn_idx, b.grp, b.table_idx,
+          list_transform(string_split(l.line, '|'), x -> trim(x, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) AS rawnames
+        FROM bidx b JOIN tl l ON l.conv_id = b.conv_id AND l.turn_idx = b.turn_idx AND l.li = b.hdr_li),
+hcells AS (SELECT conv_id, turn_idx, grp, table_idx,
+             unnest(rawnames) AS rawname,
+             unnest(generate_series(0, len(rawnames)-1)) AS pos,
+             len(rawnames) AS arity
+           FROM hdr),
+uniq AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY conv_id, turn_idx, grp, rawname ORDER BY pos) - 1 AS INT) AS occ
+         FROM hcells),
+hnames AS (SELECT conv_id, turn_idx, grp, table_idx, pos, arity,
+             CASE WHEN occ = 0 THEN rawname ELSE rawname || '_' || occ END AS column
+           FROM uniq),
+drows AS (SELECT l.conv_id, l.turn_idx, l.grp, b.table_idx,
+            list_transform(string_split(l.line, '|'), x -> trim(x, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12))) AS cells, l.li
+          FROM tl l JOIN bidx b ON l.conv_id = b.conv_id AND l.turn_idx = b.turn_idx AND l.grp = b.grp
+          WHERE l.li > b.hdr_li),
+dkept AS (SELECT d.*, h.arity FROM drows d
+          JOIN (SELECT DISTINCT conv_id, turn_idx, grp, arity FROM hnames) h
+            ON d.conv_id = h.conv_id AND d.turn_idx = h.turn_idx AND d.grp = h.grp
+          WHERE len(d.cells) = h.arity),
+dnum AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY conv_id, turn_idx, grp ORDER BY li) - 1 AS INT) AS row_idx
+         FROM dkept),
+dcells AS (SELECT conv_id, turn_idx, grp, table_idx, row_idx,
+             unnest(cells) AS value,
+             unnest(generate_series(0, len(cells)-1)) AS pos
+           FROM dnum)
+SELECT d.conv_id, d.turn_idx, d.table_idx, d.row_idx, h.column, d.value
+FROM dcells d JOIN hnames h
+  ON d.conv_id = h.conv_id AND d.turn_idx = h.turn_idx AND d.grp = h.grp AND d.pos = h.pos"""
+
+  /** X4 line-FSM replica (groups + occ re-derivation), parameterized by
+    * fixture path — shared like the keyword-window replica. */
+  private def lineFsmOracleSql(path: String): String =
+    s"""WITH t AS (SELECT * FROM read_parquet('$path')),
+-- trailing empty lines are KEPT (Python split on newline): each appends a
+-- space to the open section, so a page ending in a newline leaves a
+-- trailing space
+pl AS (SELECT conv_id, turn_idx,
+         unnest(string_split(text, chr(10))) AS line,
+         unnest(generate_series(0, len(string_split(text, chr(10))) - 1)) AS li
+       FROM t),
+l AS (SELECT conv_id, line,
+        ROW_NUMBER() OVER (PARTITION BY conv_id ORDER BY turn_idx, li) AS ord,
+        (line LIKE '%Description%' OR line LIKE '%Rationale%' OR line LIKE '%Impact%'
+         OR line LIKE '%Audit%' OR line LIKE '%Remediation%' OR line LIKE '%CIS Controls%') AS is_hdr
+      FROM pl),
+g AS (SELECT *, SUM(CASE WHEN is_hdr THEN 1 ELSE 0 END)
+        OVER (PARTITION BY conv_id ORDER BY ord ROWS UNBOUNDED PRECEDING) AS grp
+      FROM l),
+sec AS (
+  SELECT conv_id, grp,
+    MAX(CASE WHEN is_hdr THEN trim(split_part(line, ':', 1), ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)) END) AS name,
+    MAX(CASE WHEN is_hdr THEN trim(split_part(line, ':', 2), ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)) END)
+      || coalesce(string_agg(CASE WHEN NOT is_hdr THEN ' ' || trim(line, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)) END, '' ORDER BY ord), '') AS value,
+    MIN(ord) AS first_ord
+  FROM g WHERE grp > 0
+  GROUP BY conv_id, grp),
+numbered AS (
+  SELECT conv_id, name, value,
+    ROW_NUMBER() OVER (PARTITION BY conv_id, name ORDER BY first_ord) - 1 AS occ
+  FROM sec),
+maxlen AS (SELECT conv_id, MAX(cnt) AS maxlen FROM
+  (SELECT conv_id, name, COUNT(*) cnt FROM numbered GROUP BY conv_id, name) GROUP BY conv_id),
+-- the synthesized Title REPLACES any FSM-opened 'Title' section (the
+-- reference overwrites parsed_data['Title']); its rows still counted in maxlen
+names AS (SELECT DISTINCT conv_id, name FROM numbered WHERE name <> 'Title'),
+expanded AS (
+  SELECT n.conv_id, n.name AS section, unnest(generate_series(0, m.maxlen - 1)) AS row
+  FROM names n JOIN maxlen m ON n.conv_id = m.conv_id),
+title AS (
+  SELECT t.conv_id, 'Title' AS section, unnest(generate_series(0, m.maxlen - 1)) AS row,
+    split_part(t.text, chr(10), 1) AS value
+  FROM t JOIN maxlen m ON t.conv_id = m.conv_id WHERE t.turn_idx = 0)
+SELECT e.conv_id, e.section, CAST(e.row AS INT) AS row, v.value
+FROM expanded e LEFT JOIN numbered v
+  ON e.conv_id = v.conv_id AND e.section = v.name AND e.row = v.occ
+UNION ALL
+SELECT conv_id, section, CAST(row AS INT) AS row, value FROM title"""
+
+  def specs: Seq[QuerySpec] = Seq(
+
+    // flagship FSM, both planes, reading MATERIALIZED fixture transcripts so
+    // the DuckDB oracle replays the same rows (fixed profiles — the oracle
+    // SQL embeds the fixture path, so the input must not vary with sf)
+    QuerySpec("q_fsm_records", (s, d) => {
+      import s.implicits._
+      val turns = s.read.parquet(FsmRec60(s)).as[graft.core.Turn]
+      Extraction.records(Extraction.extractSkewAware(turns,
+        Extraction.Config(numPartitions = 16, monsterThreshold = 200))).toDF
+    },
+      fsmRecordsOracle),
+
+    // adversarial routing config: threshold 1 makes (nearly) every
+    // conversation a "monster", maxMonsters 2 lets only the two heaviest
+    // take dedicated partitions — the driver map stays 2 entries on ANY
+    // corpus, and the oracle (identical to q_fsm_records) proves the cap
+    // is output-invisible at the driver gate, not just in a unit test
+    QuerySpec("q_fsm_capped_route", (s, d) => {
+      import s.implicits._
+      val turns = s.read.parquet(FsmRec60(s)).as[graft.core.Turn]
+      Extraction.records(Extraction.extractSkewAware(turns,
+        Extraction.Config(numPartitions = 16, monsterThreshold = 1,
+          maxMonsters = 2))).toDF
+    },
+      fsmRecordsOracle),
+
+    // same records through the bucketed plane: the FSM's
+    // ClusteredDistribution(conv_id) is satisfied by the bucketed scan, so
+    // the plan has NO shuffle exchange (ExtractionSpec asserts) — the layout
+    // that makes 100 TB re-extraction shuffle-free. Same oracle as
+    // q_fsm_records (content-identical input, plan-different execution).
+    QuerySpec("q_fsm_bucketed", (s, d) => {
+      FsmRec60Bucketed(s)
+      Extraction.records(Extraction.extractBucketed(s, BucketedTable,
+        Extraction.Config())).toDF
+    },
+      fsmRecordsOracle),
+
+    // turns -> per-conversation document view (stable turn order), the
+    // bridge from the transcript table to every document-level operator
+    QuerySpec("q_conv_docs", (s, d) => {
+      import s.implicits._
+      Extraction.conversationDocs(s.read.parquet(FsmRec60(s)).as[graft.core.Turn])
+    },
+      s"""SELECT conv_id, string_agg(text, chr(10) ORDER BY turn_idx) AS doc_text,
+            COUNT(*) AS n_turns
+          FROM read_parquet('${FsmRec60.path}/*.parquet')
+          GROUP BY conv_id"""),
+
+    // loss-mask spans: per-turn [start,end) offsets inside the
+    // conversation-doc concatenation + assistant-loss flag — one
+    // cumulative-sum window on the stable (conv_id, turn_idx) order
+    QuerySpec("q_loss_mask", (s, d) => {
+      import s.implicits._
+      Extraction.lossMaskSpans(s.read.parquet(FsmRec60(s)).as[graft.core.Turn])
+    },
+      s"""WITH t AS (
+            SELECT conv_id, turn_idx, role, text,
+              CAST(COALESCE(SUM(LENGTH(text) + 1) OVER (
+                PARTITION BY conv_id ORDER BY turn_idx, text
+                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
+                AS start_off
+            FROM read_parquet('${FsmRec60.path}/*.parquet')
+            WHERE text IS NOT NULL)
+          SELECT conv_id, turn_idx, start_off,
+            start_off + LENGTH(text) AS end_off,
+            COALESCE(role = 'assistant', FALSE) AS loss
+          FROM t"""),
+
+    // salted equi-join on the skewed conv_id key (the remedy q_skew_profile
+    // decides on): right side replicated saltFactor×, hot keys split across
+    // tasks; output row-identical to the plain join, which IS the oracle
+    QuerySpec("q_salted_join", (s, d) => {
+      val turns = s.read.parquet(FsmRec60(s))
+      val dim = turns.groupBy("conv_id").agg(count(lit(1)).as("conv_turns"))
+      Matching.saltedJoin(turns.select("conv_id", "turn_idx", "role"), dim,
+        "conv_id", saltFactor = 8,
+        uniqueCol = concat(col("conv_id"), lit("#"), col("turn_idx")))
+    },
+      // salted-join oracle: the PLAIN inner join — salting must be invisible
+      // in the output
+      s"""WITH t AS (SELECT conv_id, turn_idx, role
+            FROM read_parquet('${FsmRec60.path}/*.parquet')),
+          d AS (SELECT conv_id, COUNT(*) AS conv_turns
+            FROM read_parquet('${FsmRec60.path}/*.parquet') GROUP BY 1)
+          SELECT t.conv_id, t.turn_idx, t.role, d.conv_turns
+          FROM t JOIN d USING (conv_id)"""),
+
+    // key-skew profile of the heavy-tailed transcript fixture on conv_id —
+    // the salt-factor decision input; count-of-counts histogram, no global
+    // key sort anywhere
+    QuerySpec("q_skew_profile", (s, d) =>
+      graft.operators.Diagnostics.keySkewProfile(s.read.parquet(FsmRec60(s)), "conv_id"),
+      // skew-profile replica: identical count-of-counts chain; sums cast back
+      // from DuckDB's HUGEINT to BIGINT; heaviest key via ORDER BY c, k DESC
+      s"""WITH counts AS (SELECT conv_id AS k, COUNT(*) AS c
+            FROM read_parquet('${FsmRec60.path}/*.parquet') GROUP BY 1),
+          hist AS (SELECT c, COUNT(*) AS nk FROM counts GROUP BY 1),
+          cum AS (SELECT c, nk,
+              CAST(SUM(nk) OVER (ORDER BY c ROWS BETWEEN UNBOUNDED PRECEDING
+                AND CURRENT ROW) AS BIGINT) AS cum,
+              CAST(SUM(nk) OVER () AS BIGINT) AS n_keys,
+              CAST(SUM(c * nk) OVER () AS BIGINT) AS n_rows
+            FROM hist),
+          dist AS (SELECT MAX(n_keys) AS n_keys, MAX(n_rows) AS n_rows,
+              MAX(c) AS max_key_rows,
+              MIN(CASE WHEN cum * 1000000 >= n_keys * 500000 THEN c END)
+                AS p50_key_rows,
+              MIN(CASE WHEN cum * 1000000 >= n_keys * 990000 THEN c END)
+                AS p99_key_rows
+            FROM cum),
+          top AS (SELECT k AS top_key, c AS top_key_rows FROM counts
+            ORDER BY c DESC, k DESC LIMIT 1)
+          SELECT n_keys, n_rows, max_key_rows, p50_key_rows, p99_key_rows,
+            top_key, top_key_rows,
+            (max_key_rows * 1000000) // p50_key_rows AS skew_ppm
+          FROM dist CROSS JOIN top"""),
+
+    // per-conversation well-formedness profile over a fixture with PLANTED
+    // violations (dup turn_idx, index gaps, blank turns, role repeats,
+    // timestamp regressions, orphan tool turns) — one window + one hash-agg
+    QuerySpec("q_conv_wellformed", (s, d) =>
+      Transcripts.wellFormed(s.read.parquet(Messy60(s))),
+      // well-formedness replica: identical window (same deterministic tie
+      // order) + conditional sums; NULLS FIRST pins DuckDB's default NULLS
+      // LAST to Spark's asc-nulls-first (no sort-key nulls in the fixture,
+      // but the order spec should not rely on that)
+      s"""WITH wf0 AS (
+            SELECT conv_id, turn_idx, role, tool, ts,
+              (text IS NULL) AS tnull,
+              (text IS NULL OR trim(text, ' ' || chr(9) || chr(13) || chr(10) || chr(11) || chr(12)) = '') AS is_empty,
+              (ts IS NULL) AS ts_null,
+              (turn_idx IS NULL) AS idx_null,
+              list_reduce(list_prepend(0::HUGEINT,
+                list_transform(regexp_extract_all(coalesce(text, ''), '(?s).'),
+                  c -> ord(c)::HUGEINT)),
+                (a, b) -> (a * 257::HUGEINT + b) % ${Osql.Mod}) AS x
+            FROM read_parquet('${Messy60.path}/*.parquet')),
+          ${Osql.mixCtes("wf", "x")},
+          st AS (
+            SELECT conv_id, turn_idx, role, tool, ts, is_empty, ts_null, idx_null,
+              lag(role) OVER w AS prev_role,
+              lag(tool) OVER w AS prev_tool,
+              lag(ts) OVER w AS prev_ts
+            FROM (SELECT *, CAST(${Osql.signed("x")} AS BIGINT) AS fp FROM wfd)
+            WINDOW w AS (PARTITION BY conv_id
+              ORDER BY turn_idx NULLS FIRST, fp NULLS FIRST,
+                tnull NULLS FIRST, role NULLS FIRST,
+                tool NULLS FIRST, ts NULLS FIRST)),
+          agg AS (
+            SELECT conv_id,
+              COUNT(*) AS n_turns,
+              COUNT(*) - COUNT(DISTINCT turn_idx) AS dup_idx,
+              CAST(MAX(turn_idx) - MIN(turn_idx) + 1 AS BIGINT)
+                - COUNT(DISTINCT turn_idx) AS idx_gaps,
+              CAST(MIN(turn_idx) AS BIGINT) AS min_idx,
+              CAST(SUM(CASE WHEN is_empty THEN 1 ELSE 0 END) AS BIGINT) AS empty_turns,
+              CAST(SUM(CASE WHEN prev_role IS NOT NULL AND prev_role = role
+                THEN 1 ELSE 0 END) AS BIGINT) AS role_repeats,
+              CAST(SUM(CASE WHEN prev_ts IS NOT NULL AND ts < prev_ts
+                THEN 1 ELSE 0 END) AS BIGINT) AS ts_regressions,
+              CAST(SUM(CASE WHEN role = 'tool'
+                AND (prev_tool IS NULL OR prev_tool = '')
+                THEN 1 ELSE 0 END) AS BIGINT) AS orphan_tool_turns,
+              CAST(SUM(CASE WHEN ts_null THEN 1 ELSE 0 END) AS BIGINT) AS null_ts,
+              CAST(SUM(CASE WHEN idx_null THEN 1 ELSE 0 END) AS BIGINT) AS null_idx
+            FROM st GROUP BY conv_id)
+          SELECT *, (dup_idx = 0 AND idx_gaps = 0 AND min_idx = 0
+            AND empty_turns = 0 AND role_repeats = 0 AND ts_regressions = 0
+            AND orphan_tool_turns = 0 AND null_ts = 0 AND null_idx = 0) AS well_formed
+          FROM agg"""),
+
+    // repair side of the validator: blank turns dropped, duplicate indexes
+    // resolved by keep-min struct, indexes re-sequenced contiguously from 0
+    QuerySpec("q_conv_repair", (s, d) =>
+      Transcripts.repair(s.read.parquet(Messy60(s)))
+        .select(col("conv_id"), col("turn_idx"), col("orig_turn_idx"),
+          col("role"), col("ts").cast("long").as("ts_epoch"),
+          graft.expressions.TextHashExpressions.fingerprint64(col("text")).as("fp")),
+      // repair replica: same keep-min struct dedup (field-lexicographic,
+      // NULLS FIRST pins DuckDB to Spark's asc-nulls-first) + re-sequencing
+      s"""WITH kept AS (
+            SELECT conv_id, turn_idx AS orig_turn_idx, role, text, ts,
+              row_number() OVER (PARTITION BY conv_id, turn_idx
+                ORDER BY ts NULLS FIRST, text NULLS FIRST, role NULLS FIRST,
+                  tool NULLS FIRST) AS dup_rn
+            FROM read_parquet('${Messy60.path}/*.parquet')
+            WHERE text IS NOT NULL AND trim(text, ' ' || chr(9) || chr(13) || chr(10) || chr(11) || chr(12)) <> ''
+              AND turn_idx IS NOT NULL),
+          rs AS (SELECT conv_id, orig_turn_idx, role, text, ts,
+              row_number() OVER (PARTITION BY conv_id
+                ORDER BY orig_turn_idx, ts NULLS FIRST, text) - 1 AS turn_idx
+            FROM kept WHERE dup_rn = 1),
+          r0 AS (SELECT conv_id, turn_idx, orig_turn_idx, role,
+            epoch_us(ts) // 1000000 AS ts_epoch,
+            list_reduce(list_prepend(0::HUGEINT,
+              list_transform(regexp_extract_all(text, '(?s).'),
+                c -> ord(c)::HUGEINT)),
+              (a, b) -> (a * 257::HUGEINT + b) % ${Osql.Mod}) AS x
+          FROM rs),
+          ${Osql.mixCtes("r", "x")}
+          SELECT conv_id, turn_idx, orig_turn_idx, role, ts_epoch,
+            CAST(${Osql.signed("x")} AS BIGINT) AS fp
+          FROM rd"""),
+
+    // shared-prefix branch detection (re-rolled/regenerated conversations):
+    // per-turn codegen hash → per-conv prefix-hash chain → (depth, hash)
+    // family agg — only 8-byte hashes shuffle, no pairwise blocking
+    QuerySpec("q_branch_prefixes", (s, d) =>
+      Transcripts.branchPrefixes(s.read.parquet(Branch60(s))),
+      // branch-prefix replica: fingerprint64 per (role, text) turn
+      // (q_fingerprint technique), prefix chain re-derived by a RECURSIVE CTE
+      // with the same FNV-prime split multiply mod 2^64, then family sizes
+      // and the per-conversation deepest shared depth. `rn` (and the hash
+      // chain feeding it) MUST be MATERIALIZED: the recursive `chain` CTE
+      // joins it once per depth level, and without the hint DuckDB re-runs
+      // the whole per-char fingerprint scan on every iteration — minutes
+      // instead of ~2 s on the fixed 96-conv fixture
+      s"""WITH RECURSIVE tx AS MATERIALIZED (
+            SELECT conv_id, turn_idx,
+              coalesce(role, '') || chr(31) || coalesce(text, '') AS kt
+            FROM read_parquet('${Branch60.path}/*.parquet')),
+          bp0 AS MATERIALIZED (
+            SELECT conv_id, turn_idx,
+              list_reduce(list_prepend(0::HUGEINT,
+                list_transform(regexp_extract_all(kt, '(?s).'),
+                  c -> ord(c)::HUGEINT)),
+                (a, b) -> (a * 257::HUGEINT + b) % ${Osql.Mod}) AS x
+            FROM tx),
+          ${Osql.mixCtes("bp", "x")},
+          rn AS MATERIALIZED (SELECT conv_id, row_number() OVER (
+              PARTITION BY conv_id ORDER BY turn_idx,
+                CAST(${Osql.signed("x")} AS BIGINT)) AS pos, x FROM bpd),
+          chain AS (
+            SELECT conv_id, 1::BIGINT AS depth, x AS pref FROM rn WHERE pos = 1
+            UNION ALL
+            SELECT r.conv_id, c.depth + 1,
+              ((c.pref * 435::HUGEINT
+                + ((c.pref * 256::HUGEINT) % 4294967296::HUGEINT)
+                  * 4294967296::HUGEINT) % ${Osql.Mod} + r.x) % ${Osql.Mod}
+            FROM chain c JOIN rn r
+              ON r.conv_id = c.conv_id AND r.pos = c.depth + 1),
+          fams AS (SELECT depth, pref, CAST(COUNT(*) AS BIGINT) AS n_siblings
+            FROM chain GROUP BY 1, 2 HAVING COUNT(*) >= 2),
+          deep AS (SELECT c.conv_id, c.depth, c.pref, f.n_siblings,
+              row_number() OVER (PARTITION BY c.conv_id
+                ORDER BY c.depth DESC) AS rk
+            FROM chain c JOIN fams f
+              ON f.depth = c.depth AND f.pref = c.pref)
+          SELECT t.conv_id,
+            COALESCE(d.depth, 0) AS branch_depth,
+            COALESCE(CAST(CASE WHEN d.pref >= 9223372036854775808::HUGEINT
+              THEN d.pref - ${Osql.Mod} ELSE d.pref END AS BIGINT), 0)
+              AS family_hash,
+            COALESCE(d.n_siblings, 0) AS n_siblings
+          FROM (SELECT DISTINCT conv_id FROM tx) t
+          LEFT JOIN (SELECT * FROM deep WHERE rk = 1) d
+            ON d.conv_id = t.conv_id"""),
+
+    QuerySpec("q_fsm_spans", (s, d) => {
+      import s.implicits._
+      val turns = s.read.parquet(FsmSpan100(s)).as[graft.core.Turn]
+      Extraction.spansLong(Extraction.extract(turns, Extraction.Config(numPartitions = 8)))
+    },
+      // flagship FSM replicas (see FsmOracleSql scaladoc)
+      FsmOracleSql.spans.replace("__FIX__", s"${FsmSpan100.path}/*.parquet")),
+
+    // X4: per-conversation line-FSM (variant B sectionizer)
+    QuerySpec("q_line_fsm", (s, d) => {
+      import s.implicits._
+      graft.operators.LineSections.lineFsm(
+        slimTable(s, Slim150).as[graft.core.TurnSlim], 16).toDF
+    },
+      lineFsmOracleSql(s"${Slim150.path}/*.parquet")),
+
+    // X5: keyword-pair window extraction (variant C)
+    QuerySpec("q_keyword_windows", (s, d) => {
+      import s.implicits._
+      graft.operators.LineSections.keywordWindows(
+        slimTable(s, Slim150).as[graft.core.TurnSlim]).toDF
+    },
+      keywordWindowsOracleSql(s"${Slim150.path}/*.parquet")),
+
+    // X4/X5 adversarial fuzz: the SAME operators over the marker-soup
+    // fixture, checked by the SAME DuckDB replicas pointed at it — the
+    // cross-engine pin holds far outside the well-formed fixture space
+    QuerySpec("q_line_fsm_fuzz", (s, d) => {
+      import s.implicits._
+      graft.operators.LineSections.lineFsm(
+        s.read.parquet(Soup160(s))
+          .as[graft.core.TurnSlim], 16).toDF
+    },
+      lineFsmOracleSql(s"${Soup160.path}/*.parquet")),
+
+    QuerySpec("q_keyword_windows_fuzz", (s, d) => {
+      import s.implicits._
+      graft.operators.LineSections.keywordWindows(
+        s.read.parquet(Soup160(s))
+          .as[graft.core.TurnSlim]).toDF
+    },
+      keywordWindowsOracleSql(s"${Soup160.path}/*.parquet")),
+
+    // S3/P5/X12: in-payload table blocks → long-form cells
+    QuerySpec("q_table_blocks", (s, d) => {
+      import s.implicits._
+      graft.operators.TableBlocks.extract(
+        slimTable(s, Slim200).as[graft.core.TurnSlim]).toDF
+    },
+      tableBlocksCellsSql(
+      s"t AS (SELECT * FROM read_parquet('${Slim200.path}/*.parquet'))")),
+
+    // S3 with the reference's capture gate: tables only from the first
+    // 'CIS Controls:' page onward, stopping after the first captured page
+    // whose next page is blank (Mutiple_CIS_Pdfs.py:20-47)
+    QuerySpec("q_table_blocks_gated", (s, d) => {
+      import s.implicits._
+      graft.operators.TableBlocks.extractGated(
+        slimTable(s, Slim200).as[graft.core.TurnSlim]).toDF
+    },
+      tableBlocksCellsSql(
+      s"""raw AS (SELECT conv_id, turn_idx, coalesce(text, '') AS text
+        FROM read_parquet('${Slim200.path}/*.parquet')),
+g0 AS (SELECT conv_id, turn_idx, text,
+        MAX(CASE WHEN text LIKE '%CIS Controls:%' THEN 1 ELSE 0 END)
+          OVER (PARTITION BY conv_id ORDER BY turn_idx ROWS UNBOUNDED PRECEDING) AS mk,
+        lead(text) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS nxt
+       FROM raw),
+g1 AS (SELECT *, CASE WHEN mk = 1 AND nxt IS NOT NULL
+          AND regexp_matches(nxt, '^\\s*$$') THEN turn_idx END AS stop_cand FROM g0),
+g2 AS (SELECT *, MIN(stop_cand) OVER (PARTITION BY conv_id) AS stop FROM g1),
+t AS (SELECT conv_id, turn_idx, text FROM g2
+      WHERE mk = 1 AND (stop IS NULL OR turn_idx <= stop))""")),
+
+    // F4: 'Ensure'-anchored cleaning over rule-bearing transcript turns
+    QuerySpec("q_ensure_anchored", (s, d) => slimTable(s, Slim100)
+      .select(col("conv_id"), col("turn_idx"),
+        substring(Clean.ensureAnchored(col("text")), 1, 60).as("anchored"))
+      .filter(length(col("anchored")) > 0),
+      s"""SELECT conv_id, turn_idx, anchored FROM (
+           SELECT conv_id, turn_idx, SUBSTRING(
+             CASE WHEN regexp_matches(text, '(?i)\\bEnsure\\b')
+                  THEN regexp_extract(text, '(?is)(\\bEnsure\\b.*)', 1)
+                  ELSE regexp_replace(text, '^\\.?\\d+(?:\\.\\d+)*\\s*', '')
+             END, 1, 60) AS anchored
+           FROM read_parquet('${Slim100.path}/*.parquet'))
+         WHERE LENGTH(anchored) > 0"""),
+
+    // stable-ordering audit: window over (conv_id ORDER BY turn_idx) must
+    // assign row_number-1 == turn_idx on the generated table (north rule)
+    QuerySpec("q_ordering_audit", (s, d) => slimTable(s, Slim200)
+      .withColumn("rn", row_number().over(
+          Window.partitionBy(col("conv_id")).orderBy(col("turn_idx"))))
+      .groupBy(col("conv_id"))
+      .agg(sum(when(col("rn") - 1 =!= col("turn_idx"), 1).otherwise(0)).as("violations"))
+      .filter(col("violations") === 0),
+      s"""SELECT conv_id, violations FROM (
+           SELECT conv_id, SUM(CASE WHEN rn - 1 <> turn_idx THEN 1 ELSE 0 END)::BIGINT AS violations
+           FROM (SELECT conv_id, turn_idx,
+                   ROW_NUMBER() OVER (PARTITION BY conv_id ORDER BY turn_idx) rn
+                 FROM read_parquet('${Slim200.path}/*.parquet'))
+           GROUP BY conv_id) WHERE violations = 0"""),
+
+    // X7: paragraph-bounded extraction (anchor → blank line / end-of-text)
+    QuerySpec("q_paragraph_bounded", (s, d) => slimTable(s, Slim120)
+      .select(col("conv_id"), col("turn_idx"),
+          graft.operators.RegexExtracts.paragraphBounded(col("text"), "CIS Controls:")
+            .as("paras"))
+      .filter(size(col("paras")) > 0)
+      .select(col("conv_id"), col("turn_idx"), size(col("paras")).as("n"),
+        length(element_at(col("paras"), 1)).as("first_len")),
+      // leading \b only (anchor ends in ':'); per-match strip mirrors the
+      // reference's .strip() on every span
+      s"""SELECT conv_id, turn_idx, LEN(paras) AS n, LENGTH(paras[1]) AS first_len
+         FROM (SELECT conv_id, turn_idx,
+                 list_transform(
+                   regexp_extract_all(text, '(?s)(\\bCIS Controls:.*?)(?:\\n\\n|$$)', 1),
+                   p -> regexp_replace(p, '^\\s+|\\s+$$', '', 'g')) AS paras
+               FROM read_parquet('${Slim120.path}/*.parquet'))
+         WHERE LEN(paras) > 0"""),
+
+    // X8: section-anchored tail slice + line-wise columnar row regex
+    QuerySpec("q_anchored_rows", (s, d) =>
+      graft.operators.RegexExtracts.anchoredRows(
+          slimTable(s, Slim120).select(col("conv_id"), col("turn_idx"), col("text")),
+          "text", "CIS Controls[:\\s]*", "(v\\d+)\\s+(\\d+\\.\\d+)\\s+(\\w.*)", 3)
+        .select(col("conv_id"), col("turn_idx"), col("line_idx"),
+          col("g1"), col("g2"), substring(col("g3"), 1, 30).as("g3")),
+      // tail = text AFTER the greedy anchor match (text[match.end():]); each
+      // line stripped and matched START-anchored — the reference's
+      // table_pattern.match(line.strip())
+      s"""WITH t AS (
+           SELECT conv_id, turn_idx,
+             CASE WHEN regexp_matches(text, 'CIS Controls[:\\s]*')
+                  THEN regexp_extract(text, '(?s)CIS Controls[:\\s]*(.*)', 1)
+                  ELSE '' END AS tail
+           FROM read_parquet('${Slim120.path}/*.parquet')),
+         lines AS (
+           SELECT conv_id, turn_idx,
+             unnest(generate_series(0, LEN(string_split(tail, chr(10))) - 1)) AS line_idx,
+             unnest(string_split(tail, chr(10))) AS line
+           FROM t),
+         stripped AS (
+           SELECT conv_id, turn_idx, line_idx,
+             regexp_replace(line, '^\\s+|\\s+$$', '', 'g') AS line
+           FROM lines)
+         SELECT conv_id, turn_idx, line_idx,
+           regexp_extract(line, '^(?:(v\\d+)\\s+(\\d+\\.\\d+)\\s+(\\w.*))', 1) AS g1,
+           regexp_extract(line, '^(?:(v\\d+)\\s+(\\d+\\.\\d+)\\s+(\\w.*))', 2) AS g2,
+           SUBSTRING(regexp_extract(line, '^(?:(v\\d+)\\s+(\\d+\\.\\d+)\\s+(\\w.*))', 3), 1, 30) AS g3
+         FROM stripped WHERE regexp_matches(line, '^(?:(v\\d+)\\s+(\\d+\\.\\d+)\\s+(\\w.*))')"""),
+
+    // X9: first-match-and-stop per conversation
+    QuerySpec("q_first_match_per_doc", (s, d) =>
+      graft.operators.RegexExtracts.firstMatchPerDoc(
+        slimTable(s, Slim150).select(col("conv_id"), col("turn_idx"), col("text")),
+        "conv_id", "turn_idx", "text", "(\\d+)\\.(\\d+)\\.(\\d+)", 3),
+      s"""SELECT conv_id, turn_idx,
+           regexp_extract(text, '(\\d+)\\.(\\d+)\\.(\\d+)', 1) AS g1,
+           regexp_extract(text, '(\\d+)\\.(\\d+)\\.(\\d+)', 2) AS g2,
+           regexp_extract(text, '(\\d+)\\.(\\d+)\\.(\\d+)', 3) AS g3
+         FROM (SELECT conv_id, turn_idx, text,
+                 ROW_NUMBER() OVER (PARTITION BY conv_id ORDER BY turn_idx) rn
+               FROM read_parquet('${Slim150.path}/*.parquet')
+               WHERE regexp_matches(text, '(\\d+)\\.(\\d+)\\.(\\d+)'))
+         WHERE rn = 1"""),
+  )
+}

@@ -480,21 +480,21 @@ object Snapshot {
     * manifest verbatim.
     *
     * Rows and stats come from parquet FOOTERS, never a data scan — and a
-    * file already present in the parent manifest (hard-linked by append /
-    * copy-on-write, same `<chunk>/<name>` key: names are version-prefixed
-    * so a reused name is the same inode) re-renders its parent entries
-    * without touching the file at all. A delta append to an arbitrarily
-    * large table therefore costs footer reads for its NEW files only. */
+    * file present in `parentStats` (hard-linked by append / copy-on-write,
+    * same `<chunk>/<name>` key: names are version-prefixed so a reused name
+    * is the same inode) re-renders its parent entries without touching the
+    * file at all. A delta append to an arbitrarily large table therefore
+    * costs footer reads for its NEW files only. A full write links no
+    * parent file (its staged names carry a fresh job id), so it passes no
+    * parent stats and never parses the parent manifest body. */
   private def commitManifest(table: Path, k: Int,
                              parent: Int, chunkKey: String, numChunks: Int,
                              observed: Map[String, Long],
                              tag: String,
-                             extraFields: Seq[(String, String)]): Unit = {
+                             extraFields: Seq[(String, String)],
+                             parentStats: Map[String, Seq[Map[String, String]]]): Unit = {
     requireSafeMetricKeys(observed) // fail-loud before any framing
     val dataDir = table.resolve(s"v$k")
-    val parentStats =
-      if (parent >= 0) manifest(table, parent).fileStats
-      else Map.empty[String, Seq[Map[String, String]]]
     val statEntryOrder = Seq("file", "rows", "col", "t", "pt", "lk", "min", "max", "nulls", "nn", "ap")
     val chunkFiles: Seq[(Long, Seq[String])] = chunkDirs(dataDir).map(chunkId).sorted
       .map(c => c -> parquetFiles(dataDir.resolve(s"_chunk=$c")).map(_.getFileName.toString).sorted)
@@ -664,7 +664,7 @@ object Snapshot {
     // 3+4. manifest (= the commit, per-chunk lineage from parquet footers
     // only), pointer swap, staging cleanup
     commitManifest(table, k, parentOf(table, k),
-      chunkKey, numChunks, observed, tag, Nil)
+      chunkKey, numChunks, observed, tag, Nil, Map.empty)
     observed
   }
 
@@ -1251,7 +1251,7 @@ object Snapshot {
     // every parent file is reused; staged files land as s<k>-<name>
     linkAndPromote(table, parentVersion, k, "s", _ => true)
     commitManifest(table, k, parentVersion, chunkKey, numChunks,
-      observed, tag, Seq("append" -> "true"))
+      observed, tag, Seq("append" -> "true"), manifest(table, parentVersion).fileStats)
     observed
   }
 
@@ -1374,7 +1374,8 @@ object Snapshot {
     val dataDir = linkAndPromote(table, parentVersion, k, "u", c => !touched.contains(c))
     commitManifest(table, k, parentVersion, chunkKey, numChunks,
       Map.empty, tag, Seq(opName -> "true",
-        "rewritten_chunks" -> Json.arr(touched.toSeq.sorted.map(_.toString))))
+        "rewritten_chunks" -> Json.arr(touched.toSeq.sorted.map(_.toString))),
+      manifest(table, parentVersion).fileStats)
     Map("rewritten_chunks" -> touched.size.toLong,
       "total_chunks" -> chunkDirs(dataDir).size.toLong)
   }

@@ -438,8 +438,10 @@ class SnapshotSpec extends AnyFunSuite {
     assert(expired.toSet == Set(0, 1), expired.toString)
     assert(Files.exists(Paths.get(table).resolve("manifest-v2.json")))
     assert(Snapshot.read(spark, table).count() == 14)
-    assert(Snapshot.manifestJson(table).contains("\"version\": 2") ||
-      Snapshot.manifestJson(table).nonEmpty)
+    // the default manifest is compaction's snapshot, not the wedged pointer's
+    assert(Snapshot.manifestJson(table) == Snapshot.manifestJson(table, 2))
+    assert(graft.core.Json.parse(Snapshot.manifestJson(table))
+      .asInstanceOf[Map[String, Any]]("snapshot") == "2")
   }
 
   test("upsert preserves delta-evolved columns in rewritten chunks") {
@@ -1071,12 +1073,15 @@ class SnapshotSpec extends AnyFunSuite {
       Snapshot.append(df, table, "conv_id", 2, observation = Some(obs), tag = s"b$n")
     }
     commit(5); commit(6); commit(7) // v0..v2
-    // everything after v1's "filestats":[ becomes bytes that do not parse
-    val mf = Paths.get(table, "manifest-v1.json")
-    val txt = Files.readString(mf)
-    val body = txt.indexOf("\"filestats\":[")
-    assert(body > 0)
-    Files.writeString(mf, txt.substring(0, body + "\"filestats\":[".length) + "{not json\u0000")
+    // everything after a manifest's "filestats":[ becomes bytes that do not parse
+    def tear(v: Int): Unit = {
+      val mf = Paths.get(table, s"manifest-v$v.json")
+      val txt = Files.readString(mf)
+      val body = txt.indexOf("\"filestats\":[")
+      assert(body > 0)
+      Files.writeString(mf, txt.substring(0, body + "\"filestats\":[".length) + "{not json\u0000")
+    }
+    tear(1)
     intercept[IllegalArgumentException] { Snapshot.tableStats(table, 1) }
     assert(Snapshot.committedTags(table) == Set("b5", "b6", "b7"))
     assert(Snapshot.metricsOfTag(table, "b6") == Some(Map("rows_in" -> 6L)))
@@ -1086,6 +1091,13 @@ class SnapshotSpec extends AnyFunSuite {
     // v1 is interior to (0, 2]: only its head is probed for the append flag
     assert(Snapshot.readAppended(spark, table, 0, 2).select("conv_id").as[String]
       .collect().toSet == ((0 until 6).map(i => s"c6-$i") ++ (0 until 7).map(i => s"c7-$i")).toSet)
+    // a full write links no parent file, so a torn tip body cannot stop it
+    tear(2)
+    Snapshot.write((0 until 4).map(i => (s"w-$i", i.toLong)).toDF("conv_id", "v"),
+      table, "conv_id", 2)
+    assert(Snapshot.committedVersion(table).contains(3))
+    assert(Snapshot.read(spark, table).select("conv_id").as[String].collect().toSet ==
+      (0 until 4).map(i => s"w-$i").toSet)
   }
 
   test("stat soundness: parquet-omitted large-binary bounds never read as all-null") {
