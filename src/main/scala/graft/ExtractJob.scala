@@ -7,7 +7,8 @@ import graft.sources.{Snapshot, TranscriptGen}
 
 /** spark-submit-style entry for the full north-rule pipeline:
   * synthesize (or read) the transcript table → salted/skew-aware extraction →
-  * checkpointed snapshot write with per-chunk lineage + extraction metrics.
+  * checkpointed, chunk-aligned snapshot write with per-chunk lineage +
+  * extraction metrics.
   *
   * Usage: ExtractJob <workDir> [numConvs] [cores] [numChunks]; `cores`
   * defaults to the available processors.
@@ -41,13 +42,11 @@ object ExtractJob {
     // monsterTurns = 1200 < Config's default 2000): with the default
     // threshold the skew routing this job exists to demonstrate would
     // silently never trigger and every monster would straggle a normal
-    // hash partition
-    val cfg = Extraction.Config(numPartitions = cores.toInt,
-      monsterThreshold = 1000L)
-    val results = Extraction.extractSkewAware(turns, cfg)
-    val (observedDf, obs) = Extraction.observed(results)
-    val metrics = Snapshot.write(observedDf,
-      s"$workDir/extracted", "conv_id", numChunks, observation = Some(obs))
+    // hash partition. Normal conversations route into numChunks partitions
+    // (the snapshot's chunks), so the staged write needs no exchange.
+    val cfg = Extraction.Config(monsterThreshold = 1000L)
+    val metrics = Extraction.commit(turns, s"$workDir/extracted", cfg, numChunks,
+      tag = "", append = false)
     println(s"committed snapshot with metrics: $metrics")
     println(Snapshot.manifestJson(s"$workDir/extracted").take(600))
     spark.stop()

@@ -33,12 +33,14 @@ object SparkEntry {
 
   def oracleSql: Map[String, String] = specs.map(q => q.name -> q.oracle).toMap
 
-  /** Deterministic fixture table materialized to parquet at a FIXED absolute
-    * path, so the DuckDB oracle can `read_parquet` the very same input the
-    * Spark query consumed (VERDICT r1 #3: fixture-based queries were
-    * rows-only merely because the oracle could not see their input).
-    * Each fixture is written once per JVM (see [[graft.queries.Fixture]]). */
-  val FixtureDir = "/root/repo/target/qfix"
+  /** Deterministic fixture tables materialized to parquet under an
+    * ABSOLUTE path, so the DuckDB oracle can `read_parquet` the very same
+    * input the Spark query consumed (VERDICT r1 #3: fixture-based queries
+    * were rows-only merely because the oracle could not see their input).
+    * The path is `target/qfix` under the working directory, so every
+    * checkout keeps its own fixtures. Each fixture is written once per JVM
+    * (see [[graft.queries.Fixture]]). */
+  val FixtureDir: String = java.nio.file.Paths.get("target", "qfix").toAbsolutePath.toString
 
   /** Scratch root for the snapshot TABLES the table-format queries rebuild
     * from scratch on every run (upsert/delete/prune/incr/stream/zorder/

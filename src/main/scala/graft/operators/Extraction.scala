@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Dataset, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core._
+import graft.sources.Snapshot
 
 /** The north-rule operator: distributed per-conversation section extraction.
   *
@@ -12,10 +13,12 @@ import graft.core._
   * `Dataset[TurnResult]`.
   *
   * Scale design:
-  *  - ONE data shuffle total; the sort rides the shuffle
-  *    (sortWithinPartitions after the repartition) — no extra exchange for
-  *    ordering. The skew-aware plane adds a count pre-pass and a broadcast
-  *    of the monster-id table, neither of which moves turn text.
+  *  - ONE routing step for every exchange plane ([[route]]): a single
+  *    `repartitionById` on an EXACT partition id — `pmod(xxhash64(conv_id),
+  *    normal)` for a normal conversation, `normal + i` for the i-th
+  *    monster. The sort rides it (sortWithinPartitions), so there is no
+  *    extra exchange for ordering and no sampled range bounds: every
+  *    monster owns its partition by identity, not by best effort.
   *  - A conversation NEVER splits across tasks (FSM state is sequential);
   *    skew from heavy-tail conversation lengths is handled by routing each
   *    "monster" conversation to its own dedicated partition while normal
@@ -23,6 +26,14 @@ import graft.core._
   *    hitters are collected to the driver, and at most `maxMonsters` of them
   *    (top-M by turn count via TakeOrdered) — bounded even when a low
   *    threshold meets a 10^12-turn table; the uncapped tail hashes normally.
+  *    The count pre-pass that finds them is skipped when a row bound known
+  *    before execution ([[rowBound]]: parquet footers, or the plan's
+  *    `maxRows`) is ≤ `monsterThreshold` — then no conversation can be a
+  *    monster, so the skip is exact.
+  *  - Commits route normal conversations into the snapshot's `numChunks`
+  *    partitions with the same `pmod(xxhash64(conv_id), numChunks)` that
+  *    defines the table's `_chunk`, so each FSM task already holds one
+  *    chunk and the staged write needs no second exchange ([[commit]]).
   *  - Memory per task is bounded by the largest single conversation (the P8
   *    front-matter gate needs one look-ahead pass over the conversation,
   *    cis_pdf_parser.py:85-90), not by partition size: the group iterator
@@ -31,6 +42,10 @@ import graft.core._
 object Extraction {
 
   case class Config(
+      /** FSM partitions for normal conversations. Commits
+        * (`incrementalCommit`, `ExtractJob`) route them into the table's
+        * `numChunks` partitions instead — as many tasks as their staged
+        * write already ran. */
       numPartitions: Int = 32,
       /** conversations with more turns than this get dedicated partitions */
       monsterThreshold: Long = 2000L,
@@ -72,66 +87,92 @@ object Extraction {
       ConvParser.parse(cid, cleaned)
     }
 
-  /** Default path: declarative exchange on conv_id; the FSM is the single
+  /** Default path: one exchange on conv_id; the FSM is the single
     * non-codegen stage in the middle. The partition count is EXPLICIT
     * (cfg.numPartitions) — AQE does not coalesce a user-specified
     * repartition, so size it for the target scale. */
-  def extract(turns: Dataset[Turn], cfg: Config = Config()): Dataset[TurnResult] = {
+  def extract(turns: Dataset[Turn], cfg: Config = Config()): Dataset[TurnResult] =
+    route(turns, cfg, cfg.numPartitions, Array.empty)
+
+  /** Skew-aware path: a cheap count pre-pass finds heavy-tail conversations
+    * (partial map-side aggregation — the count shuffle moves one row per
+    * conversation), then the one routing step gives every monster its own
+    * partition after the `numPartitions` normal ones. The pre-pass is
+    * skipped when [[rowBound]] proves the input holds at most
+    * `monsterThreshold` rows. */
+  def extractSkewAware(turns: Dataset[Turn], cfg: Config = Config()): Dataset[TurnResult] =
+    skewRouted(turns, cfg, cfg.numPartitions)
+
+  private def skewRouted(turns: Dataset[Turn], cfg: Config, normal: Int): Dataset[TurnResult] = {
     val spark = turns.sparkSession
     import spark.implicits._
-    turns
-      .select(col("conv_id"), col("turn_idx"), col("text")) // prune pre-shuffle
-      .repartition(cfg.numPartitions, col("conv_id"))
+    val monsterIds: Array[String] =
+      if (rowBound(turns, cfg.monsterThreshold).exists(_ <= cfg.monsterThreshold)) Array.empty
+      else turns
+        .filter(col("conv_id").isNotNull) // null convs hash normally (a null map key would NPE the driver sort)
+        .groupBy(col("conv_id")).agg(count(lit(1)).as("n"))
+        .filter(col("n") > cfg.monsterThreshold)
+        .orderBy(col("n").desc, col("conv_id"))   // TakeOrderedAndProject: ≤ maxMonsters rows reach the driver
+        .limit(cfg.maxMonsters)
+        .select("conv_id").as[String].collect().sorted
+    route(turns, cfg, normal, monsterIds)
+  }
+
+  /** The one routing step: `repartitionById` on `pmod(xxhash64(conv_id),
+    * normal)`, or `normal + i` for `monsterIds(i)`, then the within-
+    * partition (conv_id, turn_idx) sort and the FSM. The monster lookup is
+    * a BROADCAST HASH JOIN, not a typedLit map: GetMapValue walks the
+    * literal's key array per row (O(maxMonsters) string compares on every
+    * input row of a 10^12-turn scan). */
+  private def route(turns: Dataset[Turn], cfg: Config, normal: Int,
+                    monsterIds: Array[String]): Dataset[TurnResult] = {
+    val spark = turns.sparkSession
+    import spark.implicits._
+    val pruned = turns.select(col("conv_id"), col("turn_idx"), col("text")) // prune pre-shuffle
+    val hashed = pmod(xxhash64(col("conv_id")), lit(normal)).cast("int")
+    val routed =
+      if (monsterIds.isEmpty) pruned.repartitionById(normal, hashed)
+      else pruned
+        .join(broadcast(spark.createDataFrame(monsterIds.zipWithIndex.toSeq).toDF("conv_id", "_midx")),
+          Seq("conv_id"), "left")
+        .repartitionById(normal + monsterIds.length, coalesce(col("_midx") + normal, hashed))
+        .drop("_midx")
+    routed
       .sortWithinPartitions(col("conv_id"), col("turn_idx"))
       .as[TurnSlim]
       .mapPartitions(parsePartition(cfg) _)
   }
 
-  /** Skew-aware path: a cheap count pre-pass finds heavy-tail conversations
-    * (partial map-side aggregation — the count shuffle moves one row per
-    * conversation), then ONE range exchange routes turns: every monster
-    * conversation gets its own partition id at the top of the key space,
-    * normal conversations hash into the remainder. `repartitionByRange` on
-    * the dense integer key stays on the DataFrame plane (Tungsten UnsafeRow
-    * shuffle — no Java serialization), and the within-partition sort rides
-    * `sortWithinPartitions`. Honest caveats of the range exchange: Spark
-    * SAMPLES the child to pick bounds (one extra evaluation of the pruned
-    * projection), and sampled bounds may co-locate two adjacent monster
-    * keys in one task — equal keys always stay together (correctness
-    * holds), but isolation is best-effort, not identity placement. */
-  def extractSkewAware(turns: Dataset[Turn], cfg: Config = Config()): Dataset[TurnResult] = {
-    val spark = turns.sparkSession
-    import spark.implicits._
-
-    val monsterIds: Array[String] = turns
-      .filter(col("conv_id").isNotNull) // null convs hash normally (a null map key would NPE the driver sort)
-      .groupBy(col("conv_id")).agg(count(lit(1)).as("n"))
-      .filter(col("n") > cfg.monsterThreshold)
-      .orderBy(col("n").desc, col("conv_id"))   // TakeOrderedAndProject: ≤ maxMonsters rows reach the driver
-      .limit(cfg.maxMonsters)
-      .select("conv_id").as[String].collect().sorted
-
-    if (monsterIds.isEmpty) return extract(turns, cfg)
-
-    // monster lookup via BROADCAST HASH JOIN, not a typedLit map:
-    // GetMapValue walks the literal's key array per row (O(maxMonsters)
-    // string compares on every input row of a 10^12-turn scan)
-    val normal = cfg.numPartitions
-    val total = normal + monsterIds.length
-    val midx = spark.createDataFrame(
-      monsterIds.zipWithIndex.toSeq).toDF("conv_id", "_midx")
-    val pkey = coalesce(col("_midx") + normal,
-      pmod(xxhash64(col("conv_id")), lit(normal)).cast("int"))
-
-    turns
-      .select(col("conv_id"), col("turn_idx"), col("text"))
-      .join(broadcast(midx), Seq("conv_id"), "left")
-      .select(col("conv_id"), col("turn_idx"), col("text"), pkey.as("_pkey"))
-      .repartitionByRange(total, col("_pkey"))
-      .sortWithinPartitions(col("conv_id"), col("turn_idx"))
-      .drop("_pkey")
-      .as[TurnSlim]
-      .mapPartitions(parsePartition(cfg) _)
+  /** An upper bound on the rows of `turns`, found without a Spark job: the
+    * parquet footer row counts of the files under an analyzed plan made
+    * only of `Project`/`Filter` over a parquet relation, otherwise the
+    * plan's `maxRows`. Footers are read in file order and the reading stops
+    * once the sum passes `stopAbove`, so a returned value above `stopAbove`
+    * only proves the bound exceeds it. None when neither source applies. */
+  private[graft] def rowBound(turns: Dataset[_], stopAbove: Long,
+                              footerRows: String => Long = Snapshot.footerRows): Option[Long] = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    def files(p: LogicalPlan): Option[Array[String]] = p match {
+      case Project(_, child) => files(child)
+      case Filter(_, child) => files(child)
+      case r: LogicalRelation => r.relation match {
+        case fs: HadoopFsRelation if fs.fileFormat.isInstanceOf[ParquetFileFormat] =>
+          Some(fs.location.inputFiles)
+        case _ => None
+      }
+      case _ => None
+    }
+    val plan = turns.queryExecution.analyzed
+    files(plan) match {
+      case Some(fs) =>
+        var sum = 0L
+        val it = fs.iterator
+        while (it.hasNext && sum <= stopAbove) sum += footerRows(it.next())
+        Some(sum)
+      case None => plan.maxRows
+    }
   }
 
   /** Bucketed-layout plane: co-located, exchange-free extraction.
@@ -242,13 +283,23 @@ object Extraction {
       // contract on THIS path too (Snapshot.write/append already do on
       // theirs) — callers must not have to distinguish 'no-op replay'
       // from 'committed with zero metrics'
-      val replayed = graft.sources.Snapshot.metricsOfTag(tablePath, batchTag)
+      val replayed = Snapshot.metricsOfTag(tablePath, batchTag)
       if (replayed.isDefined) return replayed.get
     }
-    val results = extractSkewAware(newTurns, cfg)
-    val (observedDf, obs) = observed(results)
-    graft.sources.Snapshot.append(observedDf, tablePath, "conv_id", numChunks,
-      observation = Some(obs), tag = batchTag)
+    commit(newTurns, tablePath, cfg, numChunks, batchTag, append = true)
+  }
+
+  /** Chunk-aligned commit of `turns`' extraction results (an append, or a
+    * full write when `append` is false): normal conversations route into
+    * `numChunks` partitions by the table's own chunk function, so each FSM
+    * task holds one chunk (plus one partition per monster), and
+    * `Snapshot.commitAligned` stages them without another exchange. A
+    * below-threshold batch commits in two Spark jobs: the routing shuffle
+    * and the FSM + staged write. */
+  private[graft] def commit(turns: Dataset[Turn], tablePath: String, cfg: Config,
+                            numChunks: Int, tag: String, append: Boolean): Map[String, Long] = {
+    val (df, obs) = observed(skewRouted(turns, cfg, numChunks))
+    Snapshot.commitAligned(df, tablePath, "conv_id", numChunks, obs, tag, append)
   }
 
   def records(results: Dataset[TurnResult]): Dataset[RecordRow] = {

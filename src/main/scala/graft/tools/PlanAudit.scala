@@ -116,12 +116,13 @@ object PlanAudit {
       occurrences("BroadcastExchange") - occurrences("ReusedExchange")
     require(shuffles == 2,
       s"extraction plan decomposition changed: expected 2 shuffle exchanges " +
-        s"(generator scramble + conv_id repartition), found $shuffles — " +
+        s"(generator scramble + the exact-id conv_id routing exchange), found $shuffles — " +
         "update the PLANS.md narrative to match the real plan")
     sb.append(s"\n## extraction pipeline\n\nShuffle-exchange count in executed plan: " +
       s"$shuffles (one is the synthetic generator's deterministic scramble; " +
-      s"the extraction itself adds exactly ONE exchange - repartition on " +
-      s"conv_id, with the sort riding it)\n\n```\n")
+      s"the extraction itself adds exactly ONE exchange - repartitionById on " +
+      s"the exact partition id pmod(xxhash64(conv_id), numPartitions), with " +
+      s"the sort riding it; no sampled range bounds)\n\n```\n")
     sb.append(ext.queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode))
     sb.append("```\n")

@@ -21,6 +21,46 @@ class ExtractionSpec extends AnyFunSuite {
   private def sortedResults(ds: org.apache.spark.sql.Dataset[TurnResult]): Seq[TurnResult] =
     ds.collect().toSeq.sortBy(t => (t.conv_id, t.turn_idx))
 
+  /** The Spark jobs started while `body` runs. A marker job after it
+    * flushes the listener bus: its events arrive after every earlier one. */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val marker = s"jobs-of-marker-${System.nanoTime}"
+    val started = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.put(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobGroup(marker, "listener flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      var jobs = 0
+      var group = started.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      while (group != null && group != marker) {
+        jobs += 1
+        group = started.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      }
+      assert(group == marker, "the listener never saw the marker job")
+      jobs
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** `profile`'s turns as a parquet directory of `files` files. */
+  private def parquetTurns(p: FixtureGen.Profile, files: Int): String = {
+    val dir = java.nio.file.Files.createTempDirectory("turns-parquet").resolve("t").toString
+    TranscriptGen.materialize(spark, p, dir, files)
+    dir
+  }
+
+  private def readTurns(dir: String): org.apache.spark.sql.Dataset[Turn] = {
+    import spark.implicits._
+    spark.read.schema(org.apache.spark.sql.Encoders.product[Turn].schema).parquet(dir).as[Turn]
+  }
+
   test("distributed extraction == oracle (scrambled input, default path)") {
     val turns = TranscriptGen.generate(spark, profile, parallelism = 8)
     val got = sortedResults(Extraction.extract(turns, Extraction.Config(numPartitions = 8)))
@@ -41,6 +81,80 @@ class ExtractionSpec extends AnyFunSuite {
     val got = sortedResults(Extraction.extractSkewAware(turns,
       Extraction.Config(numPartitions = 8, monsterThreshold = 60)))
     assert(got == oracle)
+  }
+
+  test("skew routing: exact partition ids, no range exchange, each monster alone") {
+    import org.apache.spark.sql.functions.{col, spark_partition_id}
+    val turns = TranscriptGen.generate(spark, profile, parallelism = 8)
+    val cfg = Extraction.Config(numPartitions = 8, monsterThreshold = 60)
+    val results = Extraction.extractSkewAware(turns, cfg)
+    val placed = results.toDF.select(col("conv_id"), spark_partition_id().as("pid"))
+    val convsOf = placed.distinct().collect()
+      .groupBy(_.getInt(1)).map { case (pid, rs) => pid -> rs.map(_.getString(0)).toSet }
+    val plan = placed.queryExecution.executedPlan.toString.toLowerCase
+    assert(!plan.contains("rangepartitioning"), s"range exchange in plan:\n$plan")
+    assert(plan.contains("shufflepartitionidpassthrough"), s"no exact-id exchange in plan:\n$plan")
+    val monsters = FixtureGen.turns(profile).groupBy(_.conv_id)
+      .collect { case (c, ts) if ts.size > cfg.monsterThreshold => c }.toSet
+    assert(monsters.nonEmpty)
+    monsters.foreach { m =>
+      val (pid, convs) = convsOf.find(_._2.contains(m)).get
+      assert(pid >= cfg.numPartitions && convs == Set(m),
+        s"monster $m shares partition $pid with ${convs - m}")
+    }
+    assert(convsOf.keySet.filter(_ >= cfg.numPartitions).size == monsters.size)
+    assert(sortedResults(results) == oracle)
+  }
+
+  test("rowBound: parquet footers read until the bound passes; maxRows; None for a LogicalRDD") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val dir = parquetTurns(profile, files = 4)
+    val all = readTurns(dir)
+    val kept = all.filter(col("turn_idx") >= 0).select("*").as[Turn]
+    assert(Extraction.rowBound(kept, Long.MaxValue) == Some(kept.count()))
+    val narrowed = all.filter(col("conv_id") === "conv00000003")
+    assert(Extraction.rowBound(narrowed, Long.MaxValue).exists(_ >= narrowed.count()))
+    // footers are read lazily: no more than it takes to pass the threshold
+    val perFile = all.inputFiles.map(graft.sources.Snapshot.footerRows)
+    assert(perFile.length == 4 && perFile.sum == kept.count())
+    for (stopAbove <- Seq(0L, perFile.head, perFile.take(2).sum + 1, perFile.sum)) {
+      val read = scala.collection.mutable.ArrayBuffer[Long]()
+      val bound = Extraction.rowBound(kept, stopAbove,
+        f => { val r = graft.sources.Snapshot.footerRows(f); read += r; r })
+      assert(bound.contains(read.sum))
+      assert(read.init.sum <= stopAbove && (read.sum > stopAbove || read.length == perFile.length),
+        s"stopAbove $stopAbove read footers ${read.mkString(",")}")
+    }
+    // a local relation: its maxRows
+    val local = FixtureGen.turns(profile).take(7).toDS()
+    assert(Extraction.rowBound(local, Long.MaxValue) == Some(7L))
+    // a generated LogicalRDD has no bound, and its skew path runs the
+    // count pre-pass when the Dataset is built; a bounded parquet batch does not
+    val generated = TranscriptGen.generate(spark, profile, parallelism = 4)
+    val lrdd = spark.createDataFrame(generated.toDF.rdd, generated.schema).as[Turn]
+    assert(Extraction.rowBound(lrdd, Long.MaxValue).isEmpty)
+    val cfg = Extraction.Config(numPartitions = 4, monsterThreshold = perFile.sum)
+    assert(jobsOf(Extraction.extractSkewAware(lrdd, cfg)) > 0)
+    assert(jobsOf(Extraction.extractSkewAware(kept, cfg)) == 0)
+    assert(sortedResults(Extraction.extractSkewAware(kept, cfg)) == oracle)
+  }
+
+  test("incrementalCommit of a below-threshold parquet batch runs two Spark jobs") {
+    import org.apache.spark.sql.functions.col
+    val p = FixtureGen.Profile(numConvs = 24, monsterEvery = 0, invalidEvery = 5)
+    val dir = parquetTurns(p, files = 2)
+    val table = java.nio.file.Files.createTempDirectory("inc-jobs").resolve("t").toString
+    val cfg = Extraction.Config(numPartitions = 4)
+    val day1 = readTurns(dir).filter(col("conv_id") < "conv00000012")
+    val day2 = readTurns(dir).filter(col("conv_id") >= "conv00000012")
+    assert(Extraction.rowBound(day2, cfg.monsterThreshold).exists(_ <= cfg.monsterThreshold))
+    // the first commit writes the table, the second appends to it: both
+    // run the routing shuffle and the FSM + staged write, nothing else
+    assert(jobsOf(Extraction.incrementalCommit(day1, table, cfg, numChunks = 4)) == 2)
+    assert(jobsOf(Extraction.incrementalCommit(day2, table, cfg, numChunks = 4,
+      batchTag = "day2")) == 2)
+    assert(graft.sources.Snapshot.read(spark, table).count() == readTurns(dir).count())
   }
 
   test("null-text turns parse as empty pages (no NPE) on every plane") {
@@ -140,17 +254,19 @@ class ExtractionSpec extends AnyFunSuite {
   }
 
   test("incrementalCommit: two delta appends == one full recompute; files reused") {
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
     val p = FixtureGen.Profile(numConvs = 40, monsterEvery = 19,
       monsterTurns = 60, invalidEvery = 11)
     val all = TranscriptGen.generate(spark, p, parallelism = 4)
     val table = java.nio.file.Files.createTempDirectory("inc-extract").toString
     val cfg = Extraction.Config(numPartitions = 4)
-    // day 1: first 20 conversations; day 2: the remaining 20
-    Extraction.incrementalCommit(
-      all.filter(col("conv_id") < "conv00000020"), table, cfg, numChunks = 4)
-    Extraction.incrementalCommit(
-      all.filter(col("conv_id") >= "conv00000020"), table, cfg, numChunks = 4)
+    // day 1: first 20 conversations; day 2: the remaining 20, with its
+    // monsters isolated (a tiny threshold) — still one full recompute
+    val tiny = cfg.copy(monsterThreshold = 30)
+    val batch1 = all.filter(col("conv_id") < "conv00000020")
+    val batch2 = all.filter(col("conv_id") >= "conv00000020")
+    Extraction.incrementalCommit(batch1, table, cfg, numChunks = 4)
+    Extraction.incrementalCommit(batch2, table, tiny, numChunks = 4)
     val incremental = graft.sources.Snapshot.read(spark, table)
       .collect().map(_.toString).sorted.toSeq
     val full = {
@@ -167,6 +283,19 @@ class ExtractionSpec extends AnyFunSuite {
     val (v0, v1) = (names(0), names(1))
     assert(v0.subsetOf(v1), "append must reuse every parent data file")
     assert((v1 -- v0).nonEmpty && (v1 -- v0).forall(_.startsWith("s1-")))
+    // each commit staged one file per chunk its normal conversations
+    // touch, plus one per isolated monster
+    def staged(batch: org.apache.spark.sql.Dataset[Turn], threshold: Long): Int = {
+      val sizes = batch.groupBy("conv_id").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      val monsters = sizes.filter(_._2 > threshold).keySet
+      val chunks = batch.filter(!col("conv_id").isin(monsters.toSeq: _*))
+        .select(pmod(xxhash64(col("conv_id")), lit(4))).distinct().count().toInt
+      chunks + monsters.size
+    }
+    assert(batch2.groupBy("conv_id").count().filter(col("count") > tiny.monsterThreshold).count() > 0)
+    assert(v0.size == staged(batch1, cfg.monsterThreshold))
+    assert((v1 -- v0).size == staged(batch2, tiny.monsterThreshold))
     // time travel: v0 holds only day-1 conversations
     val day1 = graft.sources.Snapshot.read(spark, table, version = 0)
       .select("conv_id").distinct().collect().map(_.getString(0)).toSet

@@ -18,9 +18,10 @@ class RegistrySpec extends AnyFunSuite {
 
   /** `golden/oracle_sql.sha256` holds one `name sha256(oracleSql(name))`
     * line per query (UTF-8, before Verify's `__SFHASH__` substitution, with
-    * the default `SparkEntry.FixtureDir`). A refactor of the query modules
-    * must leave every digest as it is; an intended oracle change regenerates
-    * the file and says so. */
+    * every `SparkEntry.FixtureDir` replaced by `__FIXTUREDIR__`, so the
+    * digests do not depend on where the checkout lies). A refactor of the
+    * query modules must leave every digest as it is; an intended oracle
+    * change regenerates the file and says so. */
   test("oracle SQL text matches the pinned SHA-256 digests") {
     val in = getClass.getResourceAsStream("/golden/oracle_sql.sha256")
     assert(in != null, "missing golden resource oracle_sql.sha256")
@@ -31,7 +32,8 @@ class RegistrySpec extends AnyFunSuite {
       }.toMap
     val actual = SparkEntry.oracleSql.map { case (name, sql) =>
       val md = java.security.MessageDigest.getInstance("SHA-256")
-      name -> md.digest(sql.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      name -> md.digest(sql.replace(SparkEntry.FixtureDir, "__FIXTUREDIR__")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
         .map("%02x".format(_)).mkString
     }
     val differ = (pinned.keySet ++ actual.keySet).toSeq.sorted
