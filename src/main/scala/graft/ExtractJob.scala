@@ -42,9 +42,10 @@ object ExtractJob {
     // monsterTurns = 1200 < Config's default 2000): with the default
     // threshold the skew routing this job exists to demonstrate would
     // silently never trigger and every monster would straggle a normal
-    // hash partition. Normal conversations route into numChunks partitions
-    // (the snapshot's chunks), so the staged write needs no exchange.
-    val cfg = Extraction.Config(monsterThreshold = 1000L)
+    // hash partition. The commit aligns the FSM partitions with the
+    // snapshot's chunks, so the staged write needs no exchange.
+    val cfg = Extraction.Config(numPartitions = cores.toInt,
+      monsterThreshold = 1000L)
     val metrics = Extraction.commit(turns, s"$workDir/extracted", cfg, numChunks,
       tag = "", append = false)
     println(s"committed snapshot with metrics: $metrics")

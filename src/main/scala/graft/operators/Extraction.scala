@@ -30,10 +30,12 @@ import graft.sources.Snapshot
   *    before execution ([[rowBound]]: parquet footers, or the plan's
   *    `maxRows`) is ≤ `monsterThreshold` — then no conversation can be a
   *    monster, so the skip is exact.
-  *  - Commits route normal conversations into the snapshot's `numChunks`
-  *    partitions with the same `pmod(xxhash64(conv_id), numChunks)` that
-  *    defines the table's `_chunk`, so each FSM task already holds one
-  *    chunk and the staged write needs no second exchange ([[commit]]).
+  *  - Commits route normal conversations into the smallest divisor or
+  *    multiple of the snapshot's `numChunks` not below `numPartitions`.
+  *    Either way the routing hash agrees with the table's own `_chunk`
+  *    function (`pmod(xxhash64(conv_id), numChunks)`): each FSM task holds
+  *    whole chunks, or rows of one chunk, and the staged write needs no
+  *    second exchange ([[commit]]).
   *  - Memory per task is bounded by the largest single conversation (the P8
   *    front-matter gate needs one look-ahead pass over the conversation,
   *    cis_pdf_parser.py:85-90), not by partition size: the group iterator
@@ -43,9 +45,9 @@ object Extraction {
 
   case class Config(
       /** FSM partitions for normal conversations. Commits
-        * (`incrementalCommit`, `ExtractJob`) route them into the table's
-        * `numChunks` partitions instead — as many tasks as their staged
-        * write already ran. */
+        * (`incrementalCommit`, `ExtractJob`) round this up to the nearest
+        * divisor or multiple of the table's `numChunks`, so that their
+        * routing agrees with the table's chunks. */
       numPartitions: Int = 32,
       /** conversations with more turns than this get dedicated partitions */
       monsterThreshold: Long = 2000L,
@@ -146,31 +148,37 @@ object Extraction {
   /** An upper bound on the rows of `turns`, found without a Spark job: the
     * parquet footer row counts of the files under an analyzed plan made
     * only of `Project`/`Filter` over a parquet relation, otherwise the
-    * plan's `maxRows`. Footers are read in file order and the reading stops
-    * once the sum passes `stopAbove`, so a returned value above `stopAbove`
-    * only proves the bound exceeds it. None when neither source applies. */
+    * plan's `maxRows`. Footers are read in file order, through the
+    * session's Hadoop settings and the relation's options, and the reading
+    * stops once the sum passes `stopAbove`, so a returned value above
+    * `stopAbove` only proves the bound exceeds it. None when neither source
+    * applies, or when a footer cannot be read (a truncated, encrypted or
+    * foreign file): the caller then counts instead. */
   private[graft] def rowBound(turns: Dataset[_], stopAbove: Long,
-                              footerRows: String => Long = Snapshot.footerRows): Option[Long] = {
+                              footerRows: org.apache.hadoop.conf.Configuration => String => Long =
+                                Snapshot.footerRows): Option[Long] = {
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-    def files(p: LogicalPlan): Option[Array[String]] = p match {
-      case Project(_, child) => files(child)
-      case Filter(_, child) => files(child)
+    def parquet(p: LogicalPlan): Option[HadoopFsRelation] = p match {
+      case Project(_, child) => parquet(child)
+      case Filter(_, child) => parquet(child)
       case r: LogicalRelation => r.relation match {
-        case fs: HadoopFsRelation if fs.fileFormat.isInstanceOf[ParquetFileFormat] =>
-          Some(fs.location.inputFiles)
+        case fs: HadoopFsRelation if fs.fileFormat.isInstanceOf[ParquetFileFormat] => Some(fs)
         case _ => None
       }
       case _ => None
     }
     val plan = turns.queryExecution.analyzed
-    files(plan) match {
+    parquet(plan) match {
       case Some(fs) =>
-        var sum = 0L
-        val it = fs.iterator
-        while (it.hasNext && sum <= stopAbove) sum += footerRows(it.next())
-        Some(sum)
+        try {
+          val rows = footerRows(fs.sparkSession.sessionState.newHadoopConfWithOptions(fs.options))
+          var sum = 0L
+          val it = fs.location.inputFiles.iterator
+          while (it.hasNext && sum <= stopAbove) sum += rows(it.next())
+          Some(sum)
+        } catch { case scala.util.control.NonFatal(_) => None }
       case None => plan.maxRows
     }
   }
@@ -291,14 +299,21 @@ object Extraction {
 
   /** Chunk-aligned commit of `turns`' extraction results (an append, or a
     * full write when `append` is false): normal conversations route into
-    * `numChunks` partitions by the table's own chunk function, so each FSM
-    * task holds one chunk (plus one partition per monster), and
-    * `Snapshot.commitAligned` stages them without another exchange. A
+    * `n` partitions, the smallest divisor or multiple of `numChunks` not
+    * below `numPartitions`. The table's chunk of a conversation,
+    * `pmod(h, numChunks)`, then fixes its partition `pmod(h, n)` (n divides
+    * numChunks: each task holds whole chunks) or is fixed by it (n is a
+    * multiple: each task holds rows of one chunk). Monsters get one
+    * partition each. `Snapshot.commitAligned` stages the tasks' output
+    * without another exchange, one file per chunk a task holds. A
     * below-threshold batch commits in two Spark jobs: the routing shuffle
     * and the FSM + staged write. */
   private[graft] def commit(turns: Dataset[Turn], tablePath: String, cfg: Config,
                             numChunks: Int, tag: String, append: Boolean): Map[String, Long] = {
-    val (df, obs) = observed(skewRouted(turns, cfg, numChunks))
+    val normal =
+      if (cfg.numPartitions >= numChunks) numChunks * ((cfg.numPartitions + numChunks - 1) / numChunks)
+      else (1 to numChunks).find(d => d >= cfg.numPartitions && numChunks % d == 0).get
+    val (df, obs) = observed(skewRouted(turns, cfg, normal))
     Snapshot.commitAligned(df, tablePath, "conv_id", numChunks, obs, tag, append)
   }
 

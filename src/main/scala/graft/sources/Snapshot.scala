@@ -22,8 +22,10 @@ import graft.core.Json
   *     `_STAGED` marker — restartable from scratch, invisible to readers.
   *     The public `write`/`append` exchange on the chunk id first, so each
   *     chunk lands as one file; the internal entry [[commitAligned]] takes
-  *     a frame whose partitions already each hold one chunk (extraction
-  *     routes by the same chunk function) and stages it with no exchange;
+  *     a frame whose partitioning agrees with the chunk function
+  *     (extraction routes by a modulus that divides or is a multiple of
+  *     `numChunks`) and stages it with no exchange, one file per chunk a
+  *     partition holds;
   *  2. promote: per-chunk directory rename into `v<k>` — idempotent (already-
   *     promoted chunks are skipped on rerun);
   *  3. manifest: written to a temp name, atomically moved — the manifest IS the
@@ -302,55 +304,41 @@ object Snapshot {
     else Some(java.util.Arrays.copyOf(p, i + 1).updated(i, (p(i) + 1).toByte))
   }
 
-  private lazy val hadoopConf = new org.apache.hadoop.conf.Configuration()
-
-  /** One metadata converter for every footer read. `ParquetFileReader.open`
-    * builds a fresh options-configured converter per file, which measured
-    * ~10 ms a file on a 4-core VM against ~0.5 ms for the read below — the
-    * bulk of a small commit's footer work. */
-  private lazy val footerConverter =
-    new org.apache.parquet.format.converter.ParquetMetadataConverter()
-
-  /** The one parquet footer reader: the row groups of `file`'s footer,
-    * read from the file's tail (`<footer><4-byte length>PAR1`) and decoded
-    * without touching a data page. Encrypted footers are not read. */
-  private def footerBlocks(file: org.apache.hadoop.fs.Path)
-      : Seq[org.apache.parquet.hadoop.metadata.BlockMetaData] = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, hadoopConf)
-    val st = in.newStream()
-    try {
-      val size = in.getLength
-      val tail = new Array[Byte](8)
-      st.seek(size - 8)
-      st.readFully(tail)
-      val len = java.nio.ByteBuffer.wrap(tail).order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
-      require(new String(tail, 4, 4, "US-ASCII") == "PAR1" && len > 0 && len <= size - 12,
-        s"not a plain-footer parquet file: $file")
-      val footer = new Array[Byte](len)
-      st.seek(size - 8 - len)
-      st.readFully(footer)
-      footerConverter.readParquetMetadata(new java.io.ByteArrayInputStream(footer),
-        org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
-        .getBlocks.asScala.toSeq
-    } finally st.close()
-  }
-
-  /** Row count of one parquet file (a URI string, as a file index lists
-    * it), from its footer alone — no Spark job, no data page. */
-  private[graft] def footerRows(file: String): Long =
-    footerBlocks(new org.apache.hadoop.fs.Path(new java.net.URI(file))).map(_.getRowCount).sum
-
   /** Footer scan of one parquet file: (row count, per-column stats).
     * Columns whose physical type has no byte-comparable stat mapping —
     * or whose footer carries no usable statistics — are simply absent
     * (absent = unpruneable, never unsafe). */
+  private lazy val hadoopConf = new org.apache.hadoop.conf.Configuration()
+
   private def footerFileStats(file: Path): (Long, Seq[(String, ColStat)]) = {
-    val blocks = footerBlocks(new org.apache.hadoop.fs.Path(file.toUri))
-    val rows = blocks.map(_.getRowCount).sum
-    val byCol = blocks.flatMap(_.getColumns.asScala).groupBy(_.getPath.toDotString)
-    (rows, byCol.toSeq.sortBy(_._1).flatMap { case (name, chunks) =>
-      colStatOf(chunks).map(name -> _)
-    })
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val rd = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(file.toUri), hadoopConf))
+    try {
+      val blocks = rd.getFooter.getBlocks.asScala.toSeq
+      val rows = blocks.map(_.getRowCount).sum
+      val byCol = blocks.flatMap(_.getColumns.asScala).groupBy(_.getPath.toDotString)
+      (rows, byCol.toSeq.sortBy(_._1).flatMap { case (name, chunks) =>
+        colStatOf(chunks).map(name -> _)
+      })
+    } finally rd.close()
+  }
+
+  /** Footer row counts of parquet files (URI strings, as a file index
+    * lists them) — no Spark job, no data page — read through `conf`, so
+    * the file system settings of the caller's session apply. The read
+    * options are built once for every file the returned reader opens. */
+  private[graft] def footerRows(conf: org.apache.hadoop.conf.Configuration): String => Long = {
+    import org.apache.parquet.HadoopReadOptions
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val options = HadoopReadOptions.builder(conf).build()
+    file => {
+      val rd = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(new java.net.URI(file)), conf), options)
+      try rd.getRecordCount finally rd.close()
+    }
   }
 
   private def colStatOf(
@@ -721,8 +709,8 @@ object Snapshot {
 
   /** How [[stage]] lays out the `_chunk`-tagged frame before its
     * partitioned write: through [[stageClustered]]'s exchange (every public
-    * commit), or as it stands when `aligned` — the frame's partitions
-    * already each hold rows of one chunk ([[commitAligned]]). */
+    * commit), or as it stands when `aligned` — the frame's partitioning
+    * already agrees with the chunk function ([[commitAligned]]). */
   private case class Layout(clusterBy: Seq[String] = Nil, rowsPerFile: Long = 0,
                             aligned: Boolean = false)
 
@@ -1307,14 +1295,15 @@ object Snapshot {
     observed
   }
 
-  /** Internal staging entry for a frame whose partitions are already
-    * chunk-aligned: every partition holds rows of ONE chunk
-    * (`pmod(xxhash64(chunkKey), numChunks)`), as `Extraction.commit`'s
-    * routing guarantees. `_chunk` is added and the frame is staged WITHOUT
-    * [[stageClustered]]'s exchange — one file per partition — then
-    * committed as an append (`append`) or a full write, through the same
-    * protocol as [[append]]/[[write]]. A frame that is not aligned still
-    * commits correctly, only into more files. */
+  /** Internal staging entry for a frame whose partitioning already agrees
+    * with the chunk function (`pmod(xxhash64(chunkKey), numChunks)`): each
+    * partition holds whole chunks, or rows of one chunk, as
+    * `Extraction.commit`'s routing guarantees. `_chunk` is added and the
+    * frame is staged WITHOUT [[stageClustered]]'s exchange — one file per
+    * chunk a partition holds — then committed as an append (`append`) or a
+    * full write, through the same protocol as [[append]]/[[write]]. A
+    * frame that is not aligned still commits correctly, only into more
+    * files. */
   private[graft] def commitAligned(df: DataFrame, tablePath: String, chunkKey: String,
                                    numChunks: Int,
                                    observation: org.apache.spark.sql.Observation,

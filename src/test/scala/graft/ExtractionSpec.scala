@@ -116,12 +116,14 @@ class ExtractionSpec extends AnyFunSuite {
     val narrowed = all.filter(col("conv_id") === "conv00000003")
     assert(Extraction.rowBound(narrowed, Long.MaxValue).exists(_ >= narrowed.count()))
     // footers are read lazily: no more than it takes to pass the threshold
-    val perFile = all.inputFiles.map(graft.sources.Snapshot.footerRows)
+    val rows = graft.sources.Snapshot.footerRows(spark.sessionState.newHadoopConf())
+    val perFile = all.inputFiles.map(rows)
     assert(perFile.length == 4 && perFile.sum == kept.count())
     for (stopAbove <- Seq(0L, perFile.head, perFile.take(2).sum + 1, perFile.sum)) {
       val read = scala.collection.mutable.ArrayBuffer[Long]()
       val bound = Extraction.rowBound(kept, stopAbove,
-        f => { val r = graft.sources.Snapshot.footerRows(f); read += r; r })
+        conf => { val rs = graft.sources.Snapshot.footerRows(conf)
+          f => { val r = rs(f); read += r; r } })
       assert(bound.contains(read.sum))
       assert(read.init.sum <= stopAbove && (read.sum > stopAbove || read.length == perFile.length),
         s"stopAbove $stopAbove read footers ${read.mkString(",")}")
@@ -140,6 +142,30 @@ class ExtractionSpec extends AnyFunSuite {
     assert(sortedResults(Extraction.extractSkewAware(kept, cfg)) == oracle)
   }
 
+  test("rowBound: an unreadable footer keeps the count pre-pass; results still == oracle") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val dir = parquetTurns(profile, files = 2)
+    val first = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet")).minBy(_.getName)
+    val bytes = java.nio.file.Files.readAllBytes(first.toPath)
+    // a truncated copy: Spark skips it as corrupt, the footer read throws
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "part-zz-truncated.parquet"),
+      java.util.Arrays.copyOf(bytes, bytes.length / 2))
+    val key = "spark.sql.files.ignoreCorruptFiles"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "true")
+    try {
+      val turns = readTurns(dir).filter(col("turn_idx") >= 0).as[Turn]
+      assert(Extraction.rowBound(turns, Long.MaxValue).isEmpty)
+      val cfg = Extraction.Config(numPartitions = 4, monsterThreshold = 60)
+      assert(jobsOf(Extraction.extractSkewAware(turns, cfg)) > 0)
+      assert(sortedResults(Extraction.extractSkewAware(turns, cfg)) == oracle)
+    } finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("incrementalCommit of a below-threshold parquet batch runs two Spark jobs") {
     import org.apache.spark.sql.functions.col
     val p = FixtureGen.Profile(numConvs = 24, monsterEvery = 0, invalidEvery = 5)
@@ -155,6 +181,33 @@ class ExtractionSpec extends AnyFunSuite {
     assert(jobsOf(Extraction.incrementalCommit(day2, table, cfg, numChunks = 4,
       batchTag = "day2")) == 2)
     assert(graft.sources.Snapshot.read(spark, table).count() == readTurns(dir).count())
+  }
+
+  test("commit routing agrees with the chunks when numPartitions != numChunks") {
+    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+    import scala.jdk.CollectionConverters._
+    val p = FixtureGen.Profile(numConvs = 30, monsterEvery = 0, invalidEvery = 7)
+    val turns = TranscriptGen.generate(spark, p, parallelism = 4)
+    val want = ConvParser.parseAll(FixtureGen.turns(p)).map(t => (t.conv_id, t.turn_idx)).sorted
+    def distinctMod(m: Int): Int =
+      turns.select(pmod(xxhash64(col("conv_id")), lit(m))).distinct().count().toInt
+    // (numPartitions, numChunks) -> FSM partitions: a divisor of the chunk
+    // count (each task holds whole chunks) or a multiple (one chunk a task)
+    for ((parts, chunks, tasks) <- Seq((3, 8, 4), (6, 4, 8))) {
+      val table = java.nio.file.Files.createTempDirectory("aligned").resolve("t").toString
+      Extraction.incrementalCommit(turns, table, Extraction.Config(numPartitions = parts),
+        numChunks = chunks)
+      val got = graft.sources.Snapshot.read(spark, table).select("conv_id", "turn_idx")
+        .collect().map(r => (r.getString(0), r.getInt(1))).sorted.toSeq
+      assert(got == want)
+      val perChunk = java.nio.file.Files.list(java.nio.file.Paths.get(table, "v0")).iterator().asScala
+        .filter(_.getFileName.toString.startsWith("_chunk="))
+        .map(d => java.nio.file.Files.list(d).iterator().asScala
+          .count(_.getFileName.toString.endsWith(".parquet"))).toSeq
+      assert(perChunk.size == distinctMod(chunks))
+      assert(perChunk.sum == (if (tasks < chunks) distinctMod(chunks) else distinctMod(tasks)),
+        s"numPartitions $parts, numChunks $chunks: files per chunk ${perChunk.mkString(",")}")
+    }
   }
 
   test("null-text turns parse as empty pages (no NPE) on every plane") {
