@@ -38,11 +38,10 @@ object ExtractJob {
       TranscriptGen.materialize(spark, profile, rawPath, cores.toInt)
 
     val turns = spark.read.parquet(rawPath).as[graft.core.Turn]
-    // monsterThreshold BELOW the fixture's monster size (default
-    // monsterTurns = 1200 < Config's default 2000): with the default
-    // threshold the skew routing this job exists to demonstrate would
-    // silently never trigger and every monster would straggle a normal
-    // hash partition. The commit aligns the FSM partitions with the
+    // monsterThreshold BELOW the fixture's heavy conversation size (default
+    // monsterTurns = 1200 < Config's default 2000), so that an input small
+    // enough to hold no heavy conversation skips the spread. The commit
+    // spreads over at most numChunks tasks and aligns them with the
     // snapshot's chunks, so the staged write needs no exchange.
     val cfg = Extraction.Config(numPartitions = cores.toInt,
       monsterThreshold = 1000L)

@@ -14,24 +14,29 @@ import graft.sources.Snapshot
   *
   * Scale design:
   *  - ONE routing step for every exchange plane ([[route]]): a single
-  *    `repartitionById` on an EXACT partition id — `pmod(xxhash64(conv_id),
-  *    normal)` for a normal conversation, `normal + i` for the i-th
-  *    monster. The sort rides it (sortWithinPartitions), so there is no
-  *    extra exchange for ordering and no sampled range bounds: every
-  *    monster owns its partition by identity, not by best effort.
-  *  - A conversation NEVER splits across tasks (FSM state is sequential);
-  *    skew from heavy-tail conversation lengths is handled by routing each
-  *    "monster" conversation to its own dedicated partition while normal
-  *    conversations hash into the rest (`extractSkewAware`). Only the heavy
-  *    hitters are collected to the driver, and at most `maxMonsters` of them
-  *    (top-M by turn count via TakeOrdered) — bounded even when a low
-  *    threshold meets a 10^12-turn table; the uncapped tail hashes normally.
-  *    The count pre-pass that finds them is skipped when a row bound known
-  *    before execution ([[rowBound]]: parquet footers, or the plan's
-  *    `maxRows`) is ≤ `monsterThreshold` — then no conversation can be a
-  *    monster, so the skip is exact.
-  *  - Commits route normal conversations into the smallest divisor or
-  *    multiple of the snapshot's `numChunks` not below `numPartitions`.
+  *    `repartitionById` on the EXACT partition id `pmod(xxhash64(conv_id),
+  *    P)`. The sort rides it (sortWithinPartitions), so there is no extra
+  *    exchange for ordering and no sampled range bounds.
+  *  - A conversation NEVER splits across tasks (FSM state is sequential),
+  *    so a heavy-tail conversation sets the length of its task. The skew
+  *    path (`extractSkewAware`) spreads the input instead of isolating
+  *    heavy conversations: P = max(numPartitions, 4 × defaultParallelism),
+  *    at least four tasks per core. A heavy conversation then shares its
+  *    task with about a quarter of one core's fair share of other turns,
+  *    and the scheduler balances the rest. The spread is chosen from a
+  *    size fact known before execution, a row bound ([[rowBound]]: parquet
+  *    footers, or the plan's `maxRows`): when it proves the input holds at
+  *    most `monsterThreshold` rows, no conversation can be heavy and
+  *    P = numPartitions. No Spark job runs before the extraction job.
+  *  - Isolating each heavy conversation in its own partition was measured
+  *    and dropped. It needed a count pre-pass job and a join of every row
+  *    against the heavy ids. On a 4-core host the pre-pass alone took
+  *    105-114 ms of a 554-621 ms skewed extraction, while the spread plan
+  *    took 394-436 ms in the same JVM, and the slowest FSM task fell from
+  *    4.9-5.7× the median task to 1.7-1.8×.
+  *  - Commits spread only up to the snapshot's `numChunks` (more tasks than
+  *    chunks would write more files per version), then route into the
+  *    smallest divisor or multiple of `numChunks` not below that count.
   *    Either way the routing hash agrees with the table's own `_chunk`
   *    function (`pmod(xxhash64(conv_id), numChunks)`): each FSM task holds
   *    whole chunks, or rows of one chunk, and the staged write needs no
@@ -44,19 +49,17 @@ import graft.sources.Snapshot
 object Extraction {
 
   case class Config(
-      /** FSM partitions for normal conversations. Commits
-        * (`incrementalCommit`, `ExtractJob`) round this up to the nearest
-        * divisor or multiple of the table's `numChunks`, so that their
-        * routing agrees with the table's chunks. */
+      /** FSM partitions, the least the skew path uses. Commits
+        * (`incrementalCommit`, `ExtractJob`) round the skew path's count up
+        * to the nearest divisor or multiple of the table's `numChunks`, so
+        * that their routing agrees with the table's chunks. */
       numPartitions: Int = 32,
-      /** conversations with more turns than this get dedicated partitions */
+      /** the turn count above which a conversation is heavy. The skew path
+        * spreads an input over at least four tasks per core unless its row
+        * bound proves it holds at most this many rows, so that no
+        * conversation in it can be heavy. Placement-only: the output never
+        * depends on it. */
       monsterThreshold: Long = 2000L,
-      /** hard cap on dedicated monster partitions: only the `maxMonsters`
-        * HEAVIEST over-threshold conversations are isolated (TakeOrdered —
-        * the driver sees at most this many ids, whatever the threshold or
-        * table size); the remainder hash with the normal population.
-        * Placement-only, so the cap is output-invisible. */
-      maxMonsters: Int = 4096,
       /** strip HTML boilerplate from turn text before the FSM (north-rule
         * DOM-heuristic stage; off for reference-exact golden comparison) */
       stripHtml: Boolean = false)
@@ -94,52 +97,30 @@ object Extraction {
     * (cfg.numPartitions) — AQE does not coalesce a user-specified
     * repartition, so size it for the target scale. */
   def extract(turns: Dataset[Turn], cfg: Config = Config()): Dataset[TurnResult] =
-    route(turns, cfg, cfg.numPartitions, Array.empty)
+    route(turns, cfg, cfg.numPartitions)
 
-  /** Skew-aware path: a cheap count pre-pass finds heavy-tail conversations
-    * (partial map-side aggregation — the count shuffle moves one row per
-    * conversation), then the one routing step gives every monster its own
-    * partition after the `numPartitions` normal ones. The pre-pass is
-    * skipped when [[rowBound]] proves the input holds at most
-    * `monsterThreshold` rows. */
+  /** Skew-aware path: the default path's one exchange, into
+    * max(numPartitions, 4 × defaultParallelism) partitions unless
+    * [[rowBound]] proves the input holds at most `monsterThreshold` rows. */
   def extractSkewAware(turns: Dataset[Turn], cfg: Config = Config()): Dataset[TurnResult] =
-    skewRouted(turns, cfg, cfg.numPartitions)
+    route(turns, cfg, spread(turns, cfg, Int.MaxValue))
 
-  private def skewRouted(turns: Dataset[Turn], cfg: Config, normal: Int): Dataset[TurnResult] = {
-    val spark = turns.sparkSession
-    import spark.implicits._
-    val monsterIds: Array[String] =
-      if (rowBound(turns, cfg.monsterThreshold).exists(_ <= cfg.monsterThreshold)) Array.empty
-      else turns
-        .filter(col("conv_id").isNotNull) // null convs hash normally (a null map key would NPE the driver sort)
-        .groupBy(col("conv_id")).agg(count(lit(1)).as("n"))
-        .filter(col("n") > cfg.monsterThreshold)
-        .orderBy(col("n").desc, col("conv_id"))   // TakeOrderedAndProject: ≤ maxMonsters rows reach the driver
-        .limit(cfg.maxMonsters)
-        .select("conv_id").as[String].collect().sorted
-    route(turns, cfg, normal, monsterIds)
-  }
+  /** Partitions for the skew path: `numPartitions` when the row bound rules
+    * out a heavy conversation, otherwise at least four tasks per core, the
+    * increase capped at `cap`. The factor is a constant: more tasks per core
+    * shrink the turns a heavy conversation's task shares, and add per-task
+    * cost on every input. */
+  private def spread(turns: Dataset[Turn], cfg: Config, cap: Int): Int =
+    if (rowBound(turns, cfg.monsterThreshold).exists(_ <= cfg.monsterThreshold)) cfg.numPartitions
+    else cfg.numPartitions max (cap min 4 * turns.sparkSession.sparkContext.defaultParallelism)
 
   /** The one routing step: `repartitionById` on `pmod(xxhash64(conv_id),
-    * normal)`, or `normal + i` for `monsterIds(i)`, then the within-
-    * partition (conv_id, turn_idx) sort and the FSM. The monster lookup is
-    * a BROADCAST HASH JOIN, not a typedLit map: GetMapValue walks the
-    * literal's key array per row (O(maxMonsters) string compares on every
-    * input row of a 10^12-turn scan). */
-  private def route(turns: Dataset[Turn], cfg: Config, normal: Int,
-                    monsterIds: Array[String]): Dataset[TurnResult] = {
+    * n)`, then the within-partition (conv_id, turn_idx) sort and the FSM. */
+  private def route(turns: Dataset[Turn], cfg: Config, n: Int): Dataset[TurnResult] = {
     val spark = turns.sparkSession
     import spark.implicits._
-    val pruned = turns.select(col("conv_id"), col("turn_idx"), col("text")) // prune pre-shuffle
-    val hashed = pmod(xxhash64(col("conv_id")), lit(normal)).cast("int")
-    val routed =
-      if (monsterIds.isEmpty) pruned.repartitionById(normal, hashed)
-      else pruned
-        .join(broadcast(spark.createDataFrame(monsterIds.zipWithIndex.toSeq).toDF("conv_id", "_midx")),
-          Seq("conv_id"), "left")
-        .repartitionById(normal + monsterIds.length, coalesce(col("_midx") + normal, hashed))
-        .drop("_midx")
-    routed
+    turns.select(col("conv_id"), col("turn_idx"), col("text")) // prune pre-shuffle
+      .repartitionById(n, pmod(xxhash64(col("conv_id")), lit(n)).cast("int"))
       .sortWithinPartitions(col("conv_id"), col("turn_idx"))
       .as[TurnSlim]
       .mapPartitions(parsePartition(cfg) _)
@@ -298,22 +279,22 @@ object Extraction {
   }
 
   /** Chunk-aligned commit of `turns`' extraction results (an append, or a
-    * full write when `append` is false): normal conversations route into
-    * `n` partitions, the smallest divisor or multiple of `numChunks` not
-    * below `numPartitions`. The table's chunk of a conversation,
-    * `pmod(h, numChunks)`, then fixes its partition `pmod(h, n)` (n divides
-    * numChunks: each task holds whole chunks) or is fixed by it (n is a
-    * multiple: each task holds rows of one chunk). Monsters get one
-    * partition each. `Snapshot.commitAligned` stages the tasks' output
-    * without another exchange, one file per chunk a task holds. A
-    * below-threshold batch commits in two Spark jobs: the routing shuffle
-    * and the FSM + staged write. */
+    * full write when `append` is false). The skew path's partition count,
+    * its spread capped at `numChunks`, is rounded to `n`, the smallest
+    * divisor or multiple of `numChunks` not below it. The table's chunk of
+    * a conversation, `pmod(h, numChunks)`, then fixes its partition
+    * `pmod(h, n)` (n divides numChunks: each task holds whole chunks) or is
+    * fixed by it (n is a multiple: each task holds rows of one chunk).
+    * `Snapshot.commitAligned` stages the tasks' output without another
+    * exchange, one file per chunk a task holds. A batch commits in two
+    * Spark jobs: the routing shuffle and the FSM + staged write. */
   private[graft] def commit(turns: Dataset[Turn], tablePath: String, cfg: Config,
                             numChunks: Int, tag: String, append: Boolean): Map[String, Long] = {
-    val normal =
-      if (cfg.numPartitions >= numChunks) numChunks * ((cfg.numPartitions + numChunks - 1) / numChunks)
-      else (1 to numChunks).find(d => d >= cfg.numPartitions && numChunks % d == 0).get
-    val (df, obs) = observed(skewRouted(turns, cfg, normal))
+    val p = spread(turns, cfg, numChunks)
+    val n =
+      if (p >= numChunks) numChunks * ((p + numChunks - 1) / numChunks)
+      else (1 to numChunks).find(d => d >= p && numChunks % d == 0).get
+    val (df, obs) = observed(route(turns, cfg, n))
     Snapshot.commitAligned(df, tablePath, "conv_id", numChunks, obs, tag, append)
   }
 

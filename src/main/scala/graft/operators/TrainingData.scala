@@ -430,7 +430,7 @@ object TrainingData {
     * BOUNDED frame (ROWS BETWEEN K PRECEDING AND 1 PRECEDING) keeps per-row
     * window state O(K) regardless of conversation length — an
     * unbounded-prefix prompt would be O(n²) bytes on the heavy-tail
-    * "monster" conversations the extraction plane routes around. Turn order
+    * "monster" conversations the extraction plane spreads its tasks for. Turn order
     * inside the prompt is the north rule's stable (conv_id, turn_idx)
     * ordering. `concat` (not concat_ws) renders each context turn so a NULL
     * text propagates to NULL and is skipped by collect_list in both engines. */

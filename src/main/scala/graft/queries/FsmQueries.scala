@@ -276,17 +276,16 @@ SELECT conv_id, section, CAST(row AS INT) AS row, value FROM title"""
     },
       fsmRecordsOracle),
 
-    // adversarial routing config: threshold 1 makes (nearly) every
-    // conversation a "monster", maxMonsters 2 lets only the two heaviest
-    // take dedicated partitions — the driver map stays 2 entries on ANY
-    // corpus, and the oracle (identical to q_fsm_records) proves the cap
-    // is output-invisible at the driver gate, not just in a unit test
+    // adversarial routing config: threshold 1 means the footer row bound
+    // always admits a heavy conversation, so the skew path takes the spread
+    // plan (at least four tasks per core); the oracle (identical to
+    // q_fsm_records) proves the spread is output-invisible at the driver
+    // gate, not just in a unit test
     QuerySpec("q_fsm_capped_route", (s, d) => {
       import s.implicits._
       val turns = s.read.parquet(FsmRec60(s)).as[graft.core.Turn]
       Extraction.records(Extraction.extractSkewAware(turns,
-        Extraction.Config(numPartitions = 16, monsterThreshold = 1,
-          maxMonsters = 2))).toDF
+        Extraction.Config(numPartitions = 16, monsterThreshold = 1))).toDF
     },
       fsmRecordsOracle),
 

@@ -8,7 +8,8 @@ import graft.SparkEntry
   * the evidence that filters reach the parquet scan (PushedFilters/ReadSchema),
   * the small join sides broadcast, the extraction pipeline has exactly one
   * exchange, and expression stages stay inside WholeStageCodegen.
-  * Run: sbt "runMain graft.tools.PlanAudit" */
+  * Run from the repository root: sbt "runMain graft.tools.PlanAudit <sfDir>",
+  * where `<sfDir>` holds the sf tables (e.g. an sf0.001 directory). */
 object PlanAudit {
 
   private val Audited = Seq(
@@ -76,12 +77,13 @@ object PlanAudit {
     "q_stream_commits")   // snapshot read after streaming commits: plain pruned file scan
 
   def main(args: Array[String]): Unit = {
+    require(args.nonEmpty, "usage: PlanAudit <sfDir> (the directory of the sf tables to plan over)")
+    val d = args(0)
     val spark = SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val d = "/root/testdata/sf0.001"
 
     val sb = new StringBuilder
     sb.append("# PLANS — physical-plan audit (auto-generated by graft.tools.PlanAudit)\n\n")

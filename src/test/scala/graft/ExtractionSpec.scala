@@ -21,33 +21,37 @@ class ExtractionSpec extends AnyFunSuite {
   private def sortedResults(ds: org.apache.spark.sql.Dataset[TurnResult]): Seq[TurnResult] =
     ds.collect().toSeq.sortBy(t => (t.conv_id, t.turn_idx))
 
-  /** The Spark jobs started while `body` runs. A marker job after it
-    * flushes the listener bus: its events arrive after every earlier one. */
-  private def jobsOf(body: => Unit): Int = {
+  /** The tasks of each Spark job's result stage, for the jobs started while
+    * `body` runs, in start order. A marker job after it flushes the
+    * listener bus: its events arrive after every earlier one. */
+  private def jobTasksOf(body: => Unit): Seq[Int] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
     val marker = s"jobs-of-marker-${System.nanoTime}"
-    val started = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val started = new java.util.concurrent.LinkedBlockingQueue[(String, Int)]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        started.put(Option(e.properties).flatMap(p =>
-          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+        started.put((Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""),
+          e.stageInfos.maxBy(_.stageId).numTasks))
     }
     sc.addSparkListener(listener)
     try {
       body
       sc.setJobGroup(marker, "listener flush")
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      var jobs = 0
-      var group = started.poll(60, java.util.concurrent.TimeUnit.SECONDS)
-      while (group != null && group != marker) {
-        jobs += 1
-        group = started.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      val tasks = Seq.newBuilder[Int]
+      var job = started.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      while (job != null && job._1 != marker) {
+        tasks += job._2
+        job = started.poll(60, java.util.concurrent.TimeUnit.SECONDS)
       }
-      assert(group == marker, "the listener never saw the marker job")
-      jobs
+      assert(job != null, "the listener never saw the marker job")
+      tasks.result()
     } finally sc.removeSparkListener(listener)
   }
+
+  private def jobsOf(body: => Unit): Int = jobTasksOf(body).size
 
   /** `profile`'s turns as a parquet directory of `files` files. */
   private def parquetTurns(p: FixtureGen.Profile, files: Int): String = {
@@ -83,27 +87,22 @@ class ExtractionSpec extends AnyFunSuite {
     assert(got == oracle)
   }
 
-  test("skew routing: exact partition ids, no range exchange, each monster alone") {
-    import org.apache.spark.sql.functions.{col, spark_partition_id}
-    val turns = TranscriptGen.generate(spark, profile, parallelism = 8)
-    val cfg = Extraction.Config(numPartitions = 8, monsterThreshold = 60)
-    val results = Extraction.extractSkewAware(turns, cfg)
-    val placed = results.toDF.select(col("conv_id"), spark_partition_id().as("pid"))
-    val convsOf = placed.distinct().collect()
-      .groupBy(_.getInt(1)).map { case (pid, rs) => pid -> rs.map(_.getString(0)).toSet }
-    val plan = placed.queryExecution.executedPlan.toString.toLowerCase
-    assert(!plan.contains("rangepartitioning"), s"range exchange in plan:\n$plan")
-    assert(plan.contains("shufflepartitionidpassthrough"), s"no exact-id exchange in plan:\n$plan")
-    val monsters = FixtureGen.turns(profile).groupBy(_.conv_id)
-      .collect { case (c, ts) if ts.size > cfg.monsterThreshold => c }.toSet
-    assert(monsters.nonEmpty)
-    monsters.foreach { m =>
-      val (pid, convs) = convsOf.find(_._2.contains(m)).get
-      assert(pid >= cfg.numPartitions && convs == Set(m),
-        s"monster $m shares partition $pid with ${convs - m}")
+  test("skew spread: one exact-id exchange into four tasks per core unless the bound rules out a heavy conversation") {
+    val turns = readTurns(parquetTurns(profile, files = 2))
+    val spread = math.max(8, 4 * spark.sparkContext.defaultParallelism)
+    // threshold 60: the footer bound admits a heavy conversation (the
+    // profile has 150-rule ones); Long.MaxValue: the bound rules one out
+    for ((threshold, partitions) <- Seq((60L, spread), (Long.MaxValue, 8))) {
+      val results = Extraction.extractSkewAware(turns,
+        Extraction.Config(numPartitions = 8, monsterThreshold = threshold))
+      val plan = results.queryExecution.executedPlan.toString.toLowerCase
+      assert("exchange".r.findAllIn(plan).length == 1 &&
+        plan.contains("exchange shufflepartitionidpassthrough"), s"not one exact-id exchange:\n$plan")
+      Seq("rangepartitioning", "aggregate", "broadcasthashjoin").foreach(op =>
+        assert(!plan.contains(op), s"$op in plan:\n$plan"))
+      assert(results.rdd.getNumPartitions == partitions, s"threshold $threshold")
+      assert(sortedResults(results) == oracle)
     }
-    assert(convsOf.keySet.filter(_ >= cfg.numPartitions).size == monsters.size)
-    assert(sortedResults(results) == oracle)
   }
 
   test("rowBound: parquet footers read until the bound passes; maxRows; None for a LogicalRDD") {
@@ -131,18 +130,18 @@ class ExtractionSpec extends AnyFunSuite {
     // a local relation: its maxRows
     val local = FixtureGen.turns(profile).take(7).toDS()
     assert(Extraction.rowBound(local, Long.MaxValue) == Some(7L))
-    // a generated LogicalRDD has no bound, and its skew path runs the
-    // count pre-pass when the Dataset is built; a bounded parquet batch does not
+    // a generated LogicalRDD has no bound; building the skew path runs no
+    // Spark job for it, nor for a bounded parquet batch
     val generated = TranscriptGen.generate(spark, profile, parallelism = 4)
     val lrdd = spark.createDataFrame(generated.toDF.rdd, generated.schema).as[Turn]
     assert(Extraction.rowBound(lrdd, Long.MaxValue).isEmpty)
     val cfg = Extraction.Config(numPartitions = 4, monsterThreshold = perFile.sum)
-    assert(jobsOf(Extraction.extractSkewAware(lrdd, cfg)) > 0)
+    assert(jobsOf(Extraction.extractSkewAware(lrdd, cfg)) == 0)
     assert(jobsOf(Extraction.extractSkewAware(kept, cfg)) == 0)
     assert(sortedResults(Extraction.extractSkewAware(kept, cfg)) == oracle)
   }
 
-  test("rowBound: an unreadable footer keeps the count pre-pass; results still == oracle") {
+  test("rowBound: an unreadable footer gives no bound, so the skew path spreads; results still == oracle") {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     val dir = parquetTurns(profile, files = 2)
@@ -157,9 +156,12 @@ class ExtractionSpec extends AnyFunSuite {
     try {
       val turns = readTurns(dir).filter(col("turn_idx") >= 0).as[Turn]
       assert(Extraction.rowBound(turns, Long.MaxValue).isEmpty)
-      val cfg = Extraction.Config(numPartitions = 4, monsterThreshold = 60)
-      assert(jobsOf(Extraction.extractSkewAware(turns, cfg)) > 0)
-      assert(sortedResults(Extraction.extractSkewAware(turns, cfg)) == oracle)
+      // the bound is unknown, so even a threshold above the table's size spreads
+      val cfg = Extraction.Config(numPartitions = 4, monsterThreshold = Long.MaxValue)
+      assert(jobsOf(Extraction.extractSkewAware(turns, cfg)) == 0)
+      val results = Extraction.extractSkewAware(turns, cfg)
+      assert(results.rdd.getNumPartitions == math.max(4, 4 * spark.sparkContext.defaultParallelism))
+      assert(sortedResults(results) == oracle)
     } finally before match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
@@ -187,16 +189,23 @@ class ExtractionSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
     import scala.jdk.CollectionConverters._
     val p = FixtureGen.Profile(numConvs = 30, monsterEvery = 0, invalidEvery = 7)
-    val turns = TranscriptGen.generate(spark, p, parallelism = 4)
+    val turns = readTurns(parquetTurns(p, files = 2))
     val want = ConvParser.parseAll(FixtureGen.turns(p)).map(t => (t.conv_id, t.turn_idx)).sorted
     def distinctMod(m: Int): Int =
       turns.select(pmod(xxhash64(col("conv_id")), lit(m))).distinct().count().toInt
-    // (numPartitions, numChunks) -> FSM partitions: a divisor of the chunk
-    // count (each task holds whole chunks) or a multiple (one chunk a task)
-    for ((parts, chunks, tasks) <- Seq((3, 8, 4), (6, 4, 8))) {
+    val light = Extraction.Config().monsterThreshold
+    assert(Extraction.rowBound(turns, light).exists(_ <= light))
+    // (numPartitions, numChunks, monsterThreshold) -> FSM tasks: a divisor
+    // of the chunk count (each task holds whole chunks) or a multiple (one
+    // chunk a task). Threshold 1 admits a heavy conversation: the spread
+    // (four tasks per core) is capped at numChunks, so one file per chunk
+    for ((parts, chunks, threshold, tasks) <- Seq((3, 8, light, 4), (6, 4, light, 8),
+                                                  (4, 4, 1L, 4), (3, 8, 1L, 8))) {
       val table = java.nio.file.Files.createTempDirectory("aligned").resolve("t").toString
-      Extraction.incrementalCommit(turns, table, Extraction.Config(numPartitions = parts),
-        numChunks = chunks)
+      val jobTasks = jobTasksOf(Extraction.incrementalCommit(turns, table,
+        Extraction.Config(numPartitions = parts, monsterThreshold = threshold), numChunks = chunks))
+      assert(jobTasks.size == 2 && jobTasks.last == tasks,
+        s"numPartitions $parts, numChunks $chunks, threshold $threshold: result-stage tasks per job $jobTasks")
       val got = graft.sources.Snapshot.read(spark, table).select("conv_id", "turn_idx")
         .collect().map(r => (r.getString(0), r.getInt(1))).sorted.toSeq
       assert(got == want)
@@ -205,7 +214,7 @@ class ExtractionSpec extends AnyFunSuite {
         .map(d => java.nio.file.Files.list(d).iterator().asScala
           .count(_.getFileName.toString.endsWith(".parquet"))).toSeq
       assert(perChunk.size == distinctMod(chunks))
-      assert(perChunk.sum == (if (tasks < chunks) distinctMod(chunks) else distinctMod(tasks)),
+      assert(perChunk.sum == (if (tasks <= chunks) distinctMod(chunks) else distinctMod(tasks)),
         s"numPartitions $parts, numChunks $chunks: files per chunk ${perChunk.mkString(",")}")
     }
   }
@@ -219,7 +228,7 @@ class ExtractionSpec extends AnyFunSuite {
       .collect().sortBy(_.turn_idx)
     assert(viaExtract.length == 2)
     val viaSkew = Extraction.extractSkewAware(turns,
-      Extraction.Config(numPartitions = 2, monsterThreshold = 0, maxMonsters = 1))
+      Extraction.Config(numPartitions = 2, monsterThreshold = 0))
       .collect().sortBy(_.turn_idx)
     assert(viaSkew.toSeq == viaExtract.toSeq)
     // null text == empty text, the defined degradation
@@ -237,16 +246,17 @@ class ExtractionSpec extends AnyFunSuite {
   }
 
   test("maxMonsters cap is output-invisible (placement-only)") {
-    val turns = TranscriptGen.generate(spark, profile, parallelism = 8)
-    // threshold 1 makes (nearly) EVERY conversation a "monster"; the cap
-    // must keep the driver-side map at ≤ 2 entries while results stay exact
-    val got = sortedResults(Extraction.extractSkewAware(turns,
-      Extraction.Config(numPartitions = 8, monsterThreshold = 1, maxMonsters = 2)))
+    // the spread is placement-only: threshold 1 turns it on (the footer
+    // bound admits a heavy conversation), Long.MaxValue turns it off
+    val turns = readTurns(parquetTurns(profile, files = 2))
+    val on = Extraction.extractSkewAware(turns,
+      Extraction.Config(numPartitions = 8, monsterThreshold = 1))
+    val off = Extraction.extractSkewAware(turns,
+      Extraction.Config(numPartitions = 8, monsterThreshold = Long.MaxValue))
+    assert(on.rdd.getNumPartitions > off.rdd.getNumPartitions)
+    val got = sortedResults(on)
+    assert(got == sortedResults(off))
     assert(got == oracle)
-    // cap 0: no conversation is isolated — pure hash routing, still exact
-    val uncapped = sortedResults(Extraction.extractSkewAware(turns,
-      Extraction.Config(numPartitions = 8, monsterThreshold = 1, maxMonsters = 0)))
-    assert(uncapped == oracle)
   }
 
   test("bucketed plane: extractBucketed == oracle AND plans no exchange") {
@@ -313,8 +323,8 @@ class ExtractionSpec extends AnyFunSuite {
     val all = TranscriptGen.generate(spark, p, parallelism = 4)
     val table = java.nio.file.Files.createTempDirectory("inc-extract").toString
     val cfg = Extraction.Config(numPartitions = 4)
-    // day 1: first 20 conversations; day 2: the remaining 20, with its
-    // monsters isolated (a tiny threshold) — still one full recompute
+    // day 1: first 20 conversations; day 2: the remaining 20, with a tiny
+    // threshold that its heavy conversations pass — still one full recompute
     val tiny = cfg.copy(monsterThreshold = 30)
     val batch1 = all.filter(col("conv_id") < "conv00000020")
     val batch2 = all.filter(col("conv_id") >= "conv00000020")
@@ -336,19 +346,13 @@ class ExtractionSpec extends AnyFunSuite {
     val (v0, v1) = (names(0), names(1))
     assert(v0.subsetOf(v1), "append must reuse every parent data file")
     assert((v1 -- v0).nonEmpty && (v1 -- v0).forall(_.startsWith("s1-")))
-    // each commit staged one file per chunk its normal conversations
-    // touch, plus one per isolated monster
-    def staged(batch: org.apache.spark.sql.Dataset[Turn], threshold: Long): Int = {
-      val sizes = batch.groupBy("conv_id").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val monsters = sizes.filter(_._2 > threshold).keySet
-      val chunks = batch.filter(!col("conv_id").isin(monsters.toSeq: _*))
-        .select(pmod(xxhash64(col("conv_id")), lit(4))).distinct().count().toInt
-      chunks + monsters.size
-    }
+    // each commit staged exactly one file per chunk its conversations
+    // touch: the spread stops at numChunks
+    def staged(batch: org.apache.spark.sql.Dataset[Turn]): Int =
+      batch.select(pmod(xxhash64(col("conv_id")), lit(4))).distinct().count().toInt
     assert(batch2.groupBy("conv_id").count().filter(col("count") > tiny.monsterThreshold).count() > 0)
-    assert(v0.size == staged(batch1, cfg.monsterThreshold))
-    assert((v1 -- v0).size == staged(batch2, tiny.monsterThreshold))
+    assert(v0.size == staged(batch1))
+    assert((v1 -- v0).size == staged(batch2))
     // time travel: v0 holds only day-1 conversations
     val day1 = graft.sources.Snapshot.read(spark, table, version = 0)
       .select("conv_id").distinct().collect().map(_.getString(0)).toSet
