@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.operators.Extraction
 
 /** One extraction measurement in a dedicated JVM (spawned by ScalingHarness
@@ -11,26 +10,6 @@ import graft.operators.Extraction
   *        bucketed = exchange-free extraction over a bucketed table
   * Prints: BENCHONE <samples-csv> */
 object BenchOne {
-  /** The `local[cores]` extraction session of the scaling children (this
-    * and [[BenchShard]]), quiet at ERROR level. */
-  private[graft] def session(cores: String, appName: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.local.dir", "/dev/shm/spark-local")
-      .config("spark.shuffle.file.buffer", "1m")
-      .config("spark.shuffle.unsafe.file.output.buffer", "1m")
-      .config("spark.shuffle.spill.diskWriteBufferSize", "1m")
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark
-  }
-
   def main(args: Array[String]): Unit = {
     val cores = args(0)
     val rawPath = args(1)
@@ -38,7 +17,7 @@ object BenchOne {
     val samples = args(3).toInt
     val mode = if (args.length > 4) args(4) else "full"
     val parts = if (args.length > 5) args(5).toInt else 128
-    val spark = session(cores, s"graft-benchone-$cores")
+    val spark = Sessions.local(s"graft-benchone-$cores", cores.toInt, harnessScratch = true)
     import spark.implicits._
     def jobOn(path: String): Unit = mode match {
       case "full" =>

@@ -15,7 +15,8 @@ object BenchShard {
   def main(args: Array[String]): Unit = {
     val Array(cores, rawPath, warmupPath, shardIdxS, shardCountS, partsS) = args
     val (shardIdx, shardCount, parts) = (shardIdxS.toInt, shardCountS.toInt, partsS.toInt)
-    val spark = BenchOne.session(cores, s"graft-shard-$shardIdx-of-$shardCount")
+    val spark = Sessions.local(s"graft-shard-$shardIdx-of-$shardCount", cores.toInt,
+      harnessScratch = true)
     import spark.implicits._
 
     def shardFiles(path: String): Seq[String] = {

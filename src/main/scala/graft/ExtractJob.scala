@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.core.FixtureGen
 import graft.operators.Extraction
 import graft.sources.{Snapshot, TranscriptGen}
@@ -17,25 +16,16 @@ object ExtractJob {
   def main(args: Array[String]): Unit = {
     val workDir = if (args.length > 0) args(0) else "target/extract-job"
     val numConvs = if (args.length > 1) args(1).toInt else 2000
-    val cores = if (args.length > 2) args(2)
-                else Runtime.getRuntime.availableProcessors.toString
+    val cores = if (args.length > 2) args(2).toInt else Sessions.machineCores
     val numChunks = if (args.length > 3) args(3).toInt else 32
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft-extract")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-extract", cores)
     import spark.implicits._
 
     val rawPath = s"$workDir/raw"
     val profile = FixtureGen.Profile(numConvs = numConvs)
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(rawPath)))
-      TranscriptGen.materialize(spark, profile, rawPath, cores.toInt)
+      TranscriptGen.materialize(spark, profile, rawPath, cores)
 
     val turns = spark.read.parquet(rawPath).as[graft.core.Turn]
     // monsterThreshold BELOW the fixture's heavy conversation size (default
@@ -43,7 +33,7 @@ object ExtractJob {
     // enough to hold no heavy conversation skips the spread. The commit
     // spreads over at most numChunks tasks and aligns them with the
     // snapshot's chunks, so the staged write needs no exchange.
-    val cfg = Extraction.Config(numPartitions = cores.toInt,
+    val cfg = Extraction.Config(numPartitions = cores,
       monsterThreshold = 1000L)
     val metrics = Extraction.commit(turns, s"$workDir/extracted", cfg, numChunks,
       tag = "", append = false)

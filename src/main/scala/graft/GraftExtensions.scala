@@ -9,7 +9,7 @@ import graft.expressions.VectorExpressions._
 /** Session extensions: registers graft's custom Catalyst expressions as SQL
   * functions so `spark.sql(...)` users get the codegen'd fast paths too.
   *
-  * Use: SparkSession.builder().withExtensions(new GraftExtensions), or
+  * Use: `withExtensions(new GraftExtensions)` on a session builder, or
   * `--conf spark.sql.extensions=graft.GraftExtensions` on spark-submit, or
   * `GraftExtensions.registerOn(spark)` for a session that already exists
   * (builder extensions only apply at session creation).

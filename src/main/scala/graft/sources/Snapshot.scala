@@ -20,9 +20,11 @@ import graft.core.Json
   * Commit protocol (atomic + resumable):
   *  1. stage: one Spark job writes all chunks under `_staging-v<k>` and drops a
   *     `_STAGED` marker — restartable from scratch, invisible to readers.
-  *     The public `write`/`append` exchange on the chunk id first, so each
-  *     chunk lands as one file; the internal entry [[commitAligned]] takes
-  *     a frame whose partitioning agrees with the chunk function
+  *     Every commit stages through one write ([[writeChunks]]) after one
+  *     layout step: `write`/`append` and the copy-on-write rewrite exchange
+  *     by the exact chunk id ([[byChunk]]), so each chunk lands in the task
+  *     of its own index as one file; the internal entry [[commitAligned]]
+  *     takes a frame whose partitioning agrees with the chunk function
   *     (extraction routes by a modulus that divides or is a multiple of
   *     `numChunks`) and stages it with no exchange, one file per chunk a
   *     partition holds;
@@ -592,48 +594,40 @@ object Snapshot {
     deleteRecursively(table.resolve(s"_staging-v$k"))
   }
 
-  /** Clustered staging plan (Iceberg write-ordered-by): one exchange ON the
-    * chunk id (each chunk lands in exactly one task), rows sorted by
-    * (chunk, clusterBy…) within it, and `maxRecordsPerFile` splitting the
-    * sorted run into sequential files — so every file covers a DISJOINT
-    * clusterBy range and the manifest stats make [[readWhere]] range
-    * predicates prune inside every chunk, at no file-count explosion (file
-    * count still tracks rows/rowsPerFile, not buckets × chunks). */
-  private def stageClustered(chunked: DataFrame, numChunks: Int,
-                             clusterBy: Seq[String],
-                             rowsPerFile: Long = 0): DataFrame = {
-    // ALWAYS repartition on the chunk id before the partitionBy write (the
-    // Iceberg write.distribution-mode=hash shape, opt guide §6): every
-    // chunk then lives in exactly one task and lands as one file (plus
-    // rowsPerFile splits). Without it the staged file count is
-    // input-partitions × chunks-touched — a wide upstream (e.g. a
-    // machine-width scan spread) turned a 16-chunk write into ~500 tiny
-    // files, and every later footer read/link/scan pays per file.
-    //
-    // Clustered + rowsPerFile writes (the z-order layout) asked for
-    // many files per chunk anyway, so their staging RANGE-partitions on
-    // (_chunk, clusterBy…) across the session's width instead (Iceberg
-    // write.distribution-mode=range): disjoint ordered key ranges per
-    // task keep every file's clusterBy min/max tight and
-    // non-overlapping — the pruning property is identical — while the
-    // file-cutting work parallelizes machine-wide (one task per chunk
-    // serialized ~100 sequential tiny-file writes; measured 2.3 s of the
-    // 2.9 s q_snapshot_zorder line).
-    // expr, not col: cluster keys may be computed (`zorder2(user_id, ts)`
-    // sorts by the Morton key without storing it) or plain column names
-    if (clusterBy.isEmpty) chunked.repartition(numChunks, col("_chunk"))
+  /** The one chunk exchange of every staged commit. `_chunk` is
+    * `pmod(xxhash64(chunkKey), numChunks)`, never null, so it already is a
+    * partition id: each chunk goes to the task of its own index and lands
+    * as one file, whatever the upstream width. A hash exchange on `_chunk`
+    * would Murmur3 the id again and fold chunks together (32 into 20 tasks). */
+  private def byChunk(numChunks: Int)(chunked: DataFrame): DataFrame =
+    chunked.repartitionById(numChunks, col("_chunk").cast("int"))
+
+  /** Layout of the public `write`/`append` (Iceberg write-ordered-by):
+    * [[byChunk]], rows sorted by (chunk, clusterBy…) within each task, and
+    * `rowsPerFile` cutting the sorted run into sequential files — every
+    * file covers a DISJOINT clusterBy range, so the manifest stats make
+    * [[readWhere]] range predicates prune inside every chunk, and the file
+    * count tracks rows/rowsPerFile, not buckets × chunks.
+    *
+    * A clustered write that asks for many files per chunk (`rowsPerFile >
+    * 0`, the z-order layout) on a session wider than `numChunks`
+    * range-partitions on (_chunk, clusterBy…) across that width instead
+    * (Iceberg write.distribution-mode=range): the same disjoint key ranges,
+    * with the file cutting spread machine-wide (one task per chunk
+    * serialized ~100 tiny-file writes: 2.3 s of the 2.9 s
+    * q_snapshot_zorder line). With `rowsPerFile` 0 no range exchange runs. */
+  private def clustered(numChunks: Int, clusterBy: Seq[String], rowsPerFile: Long)
+                       (chunked: DataFrame): DataFrame =
+    if (clusterBy.isEmpty) byChunk(numChunks)(chunked)
     else {
+      // expr, not col: cluster keys may be computed (`zorder2(user_id, ts)`
+      // sorts by the Morton key without storing it) or plain column names
       val keys = col("_chunk") +: clusterBy.map(expr)
-      val parts =
-        if (rowsPerFile > 0)
-          math.max(numChunks,
-            chunked.sparkSession.sparkContext.defaultParallelism)
-        else numChunks
-      (if (parts > numChunks) chunked.repartitionByRange(parts, keys: _*)
-       else chunked.repartition(numChunks, col("_chunk")))
+      lazy val width = chunked.sparkSession.sparkContext.defaultParallelism
+      (if (rowsPerFile > 0 && width > numChunks) chunked.repartitionByRange(width, keys: _*)
+       else byChunk(numChunks)(chunked))
         .sortWithinPartitions(keys: _*)
     }
-  }
 
   /** Write `df` as snapshot `snapshotId` of `tablePath`, chunked by
     * `pmod(xxhash64(chunkKey), numChunks)`. Safe to re-invoke after a kill at
@@ -659,12 +653,13 @@ object Snapshot {
             tag: String = "", clusterBy: Seq[String] = Nil,
             rowsPerFile: Long = 0): Map[String, Long] =
     writeStaged(df, tablePath, chunkKey, numChunks, snapshotId, observation, tag,
-      Layout(clusterBy, rowsPerFile))
+      clustered(numChunks, clusterBy, rowsPerFile), rowsPerFile)
 
   private def writeStaged(df: DataFrame, tablePath: String, chunkKey: String,
                           numChunks: Int, snapshotId: Int,
                           observation: Option[org.apache.spark.sql.Observation],
-                          tag: String, layout: Layout): Map[String, Long] = {
+                          tag: String, layout: DataFrame => DataFrame,
+                          rowsPerFile: Long): Map[String, Long] = {
     requireCommittable(df, tag)
     val table = Paths.get(tablePath)
     Files.createDirectories(table)
@@ -678,7 +673,8 @@ object Snapshot {
     if (finishCommitted(table, k)) return head(table, k).metrics
 
     // 1. stage
-    val observed = stage(df, table, k, chunkKey, numChunks, observation, layout)
+    val observed = stage(df, table, k, chunkKey, numChunks, observation, layout,
+      rowsPerFile)
 
     // 2. promote chunk dirs (idempotent)
     val dataDir = table.resolve(s"v$k")
@@ -707,15 +703,8 @@ object Snapshot {
   private def stagedData(table: Path, k: Int): Path =
     table.resolve(s"_staging-v$k").resolve("data")
 
-  /** How [[stage]] lays out the `_chunk`-tagged frame before its
-    * partitioned write: through [[stageClustered]]'s exchange (every public
-    * commit), or as it stands when `aligned` — the frame's partitioning
-    * already agrees with the chunk function ([[commitAligned]]). */
-  private case class Layout(clusterBy: Seq[String] = Nil, rowsPerFile: Long = 0,
-                            aligned: Boolean = false)
-
-  /** Stage step of write/append: one Spark job writes every chunk of `df`
-    * under `_staging-v<k>/data`, then the `_STAGED` marker lands carrying
+  /** Stage step of write/append: [[writeChunks]] writes every chunk of
+    * `df` in one Spark job, then the `_STAGED` marker lands carrying
     * the observed metrics — restarted from scratch if the marker never
     * landed. Returns the metrics from the marker, not the Observation: on a
     * resumed commit the write job never re-runs, so only the marker still
@@ -723,18 +712,13 @@ object Snapshot {
   private def stage(df: DataFrame, table: Path, k: Int, chunkKey: String,
                     numChunks: Int,
                     observation: Option[org.apache.spark.sql.Observation],
-                    layout: Layout): Map[String, Long] = {
+                    layout: DataFrame => DataFrame,
+                    rowsPerFile: Long): Map[String, Long] = {
     val staging = table.resolve(s"_staging-v$k")
     val stagedMarker = staging.resolve("_STAGED")
     if (!Files.exists(stagedMarker)) {
       if (Files.exists(staging)) deleteRecursively(staging)
-      val chunked = df.withColumn("_chunk", pmod(xxhash64(col(chunkKey)), lit(numChunks)))
-      val staged =
-        if (layout.aligned) chunked
-        else stageClustered(chunked, numChunks, layout.clusterBy, layout.rowsPerFile)
-      val w = staged.write.partitionBy("_chunk").mode("overwrite")
-      (if (layout.rowsPerFile > 0) w.option("maxRecordsPerFile", layout.rowsPerFile) else w)
-        .parquet(stagedData(table, k).toString)
+      writeChunks(df, table, k, chunkKey, numChunks, layout, rowsPerFile)
       val m = observation.map(_.get.collect {
         case (key, v: Long) => key -> v
         case (key, v: Int) => key -> v.toLong
@@ -742,6 +726,20 @@ object Snapshot {
       atomicWrite(stagedMarker, metricsMarker(m))
     }
     markerMetrics(stagedMarker)
+  }
+
+  /** The one staged write of every commit: tag each row of `df` with its
+    * chunk, apply `layout` ([[clustered]] for `write`/`append`, [[byChunk]]
+    * for the copy-on-write rewrite, `identity` for [[commitAligned]]'s
+    * already-routed frame), and write it partitioned by `_chunk` under
+    * `_staging-v<k>/data`. */
+  private def writeChunks(df: DataFrame, table: Path, k: Int, chunkKey: String,
+                          numChunks: Int, layout: DataFrame => DataFrame,
+                          rowsPerFile: Long = 0): Unit = {
+    val w = layout(df.withColumn("_chunk", pmod(xxhash64(col(chunkKey)), lit(numChunks))))
+      .write.partitionBy("_chunk").mode("overwrite")
+    (if (rowsPerFile > 0) w.option("maxRecordsPerFile", rowsPerFile) else w)
+      .parquet(stagedData(table, k).toString)
   }
 
   /** Promote step of append and copy-on-write: hard-link the parquet files
@@ -1235,7 +1233,7 @@ object Snapshot {
     // DROP the evolved ones from the table forever
     val full = read(spark, tablePath, k, mergeSchema = true)
     // one-file-per-chunk layout is re-established by the staging path
-    // itself (stageClustered always repartitions on the chunk id now);
+    // itself (write exchanges by the exact chunk id, `byChunk`);
     // repartitioning here too would shuffle the whole table twice
     write(full, tablePath, chunkKey, numChunks, snapshotId = k + 1,
       clusterBy = clusterBy, rowsPerFile = rowsPerFile)
@@ -1265,18 +1263,20 @@ object Snapshot {
              tag: String = "", clusterBy: Seq[String] = Nil,
              rowsPerFile: Long = 0): Map[String, Long] =
     appendStaged(df, tablePath, chunkKey, numChunks, observation, tag,
-      Layout(clusterBy, rowsPerFile))
+      clustered(numChunks, clusterBy, rowsPerFile), rowsPerFile)
 
   private def appendStaged(df: DataFrame, tablePath: String, chunkKey: String,
                            numChunks: Int,
                            observation: Option[org.apache.spark.sql.Observation],
-                           tag: String, layout: Layout): Map[String, Long] = {
+                           tag: String, layout: DataFrame => DataFrame,
+                           rowsPerFile: Long): Map[String, Long] = {
     requireCommittable(df, tag)
     val table = Paths.get(tablePath)
     // committed tip from manifests (repairing a wedged CURRENT): falling
     // through to write() is only correct when NOTHING has ever committed
     val parentVersion = recoverCommitted(table).getOrElse(
-      return writeStaged(df, tablePath, chunkKey, numChunks, -1, observation, tag, layout))
+      return writeStaged(df, tablePath, chunkKey, numChunks, -1, observation, tag,
+        layout, rowsPerFile))
     // chunking is a TABLE property: an append under a different key/modulus
     // would hard-link parent files into dirs the new scheme disagrees with,
     // and chunk-hash pruning would then silently drop their rows
@@ -1287,7 +1287,8 @@ object Snapshot {
     val k = parentVersion + 1
     if (finishCommitted(table, k)) return head(table, k).metrics
 
-    val observed = stage(df, table, k, chunkKey, numChunks, observation, layout)
+    val observed = stage(df, table, k, chunkKey, numChunks, observation, layout,
+      rowsPerFile)
     // every parent file is reused; staged files land as s<k>-<name>
     linkAndPromote(table, parentVersion, k, "s", _ => true)
     commitManifest(table, k, parentVersion, chunkKey, numChunks,
@@ -1298,8 +1299,8 @@ object Snapshot {
   /** Internal staging entry for a frame whose partitioning already agrees
     * with the chunk function (`pmod(xxhash64(chunkKey), numChunks)`): each
     * partition holds whole chunks, or rows of one chunk, as
-    * `Extraction.commit`'s routing guarantees. `_chunk` is added and the
-    * frame is staged WITHOUT [[stageClustered]]'s exchange — one file per
+    * `Extraction.commit`'s routing guarantees. The frame is staged with
+    * the `identity` layout, WITHOUT [[byChunk]]'s exchange — one file per
     * chunk a partition holds — then committed as an append (`append`) or a
     * full write, through the same protocol as [[append]]/[[write]]. A
     * frame that is not aligned still commits correctly, only into more
@@ -1308,9 +1309,8 @@ object Snapshot {
                                    numChunks: Int,
                                    observation: org.apache.spark.sql.Observation,
                                    tag: String, append: Boolean): Map[String, Long] = {
-    val aligned = Layout(aligned = true)
-    if (append) appendStaged(df, tablePath, chunkKey, numChunks, Some(observation), tag, aligned)
-    else writeStaged(df, tablePath, chunkKey, numChunks, -1, Some(observation), tag, aligned)
+    if (append) appendStaged(df, tablePath, chunkKey, numChunks, Some(observation), tag, identity, 0)
+    else writeStaged(df, tablePath, chunkKey, numChunks, -1, Some(observation), tag, identity, 0)
   }
 
   /** Keyed MERGE / upsert (Iceberg copy-on-write MERGE at chunk
@@ -1362,7 +1362,6 @@ object Snapshot {
     }
 
     val (chunkKey, numChunks) = head(table, parentVersion).chunking
-    def chunkOf(c: org.apache.spark.sql.Column) = pmod(xxhash64(c), lit(numChunks))
 
     val staging = table.resolve(s"_staging-v$k")
     val stagedMarker = staging.resolve("_STAGED")
@@ -1377,22 +1376,21 @@ object Snapshot {
       // and even a deterministic one pays three full computations
       val batchDf = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        val batch = batchDf.withColumn("_chunk", chunkOf(col(chunkKey)))
         // touched chunks from the batch — at most numChunks values, driver-safe
-        val touched = batch.select("_chunk").distinct()
-          .collect().map(_.getLong(0)).sorted
+        val touched = batchDf.select(pmod(xxhash64(col(chunkKey)), lit(numChunks)))
+          .distinct().collect().map(_.getLong(0)).sorted
         // file-level pruning: read ONLY the touched parent chunk dirs
         val parentDir = table.resolve(s"v$parentVersion")
         val touchedDirs = touched.map(c => parentDir.resolve(s"_chunk=$c"))
           .filter(Files.exists(_)).map(_.toString)
         // mergeSchema: a delta append may have added columns — a single-footer
-        // schema pick would silently drop them from the rewritten chunks
-        val tableSchema =
-          read(spark, tablePath, parentVersion, mergeSchema = true).schema
+        // schema pick would silently drop them from the rewritten chunks.
+        // One read: its footer pass gives both the schema and the empty
+        // survivors of a batch that touches no existing chunk
+        val parent = read(spark, tablePath, parentVersion, mergeSchema = true)
+        val tableSchema = parent.schema
         val survivors =
-          if (touchedDirs.isEmpty)
-            read(spark, tablePath, parentVersion, mergeSchema = true)
-              .filter(lit(false))
+          if (touchedDirs.isEmpty) parent.filter(lit(false))
           else spark.read.option("basePath", parentDir.toString)
             .option("mergeSchema", "true")
             .parquet(touchedDirs: _*).drop("_chunk")
@@ -1411,13 +1409,7 @@ object Snapshot {
         val staged =
           if (keepBatch) filled.unionByName(batchDf, allowMissingColumns = true)
           else filled.select(tableSchema.fieldNames.map(col): _*)
-        staged
-          .withColumn("_chunk", chunkOf(col(chunkKey)))
-          // same hash-distribution shape as stageClustered: one task (and
-          // one file) per rewritten chunk regardless of upstream width
-          .repartition(numChunks, col("_chunk"))
-          .write.partitionBy("_chunk").mode("overwrite")
-          .parquet(stagedData(table, k).toString)
+        writeChunks(staged, table, k, chunkKey, numChunks, byChunk(numChunks))
         Files.writeString(touchedFile, touched.mkString(","))
         // marker lands atomically and strictly after _TOUCHED: a kill at any
         // point either leaves no marker (rerun restages from scratch) or a

@@ -1,8 +1,7 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
-import graft.SparkEntry
+import graft.{Sessions, SparkEntry}
 
 /** Dumps the formatted physical plans of representative queries to PLANS.md —
   * the evidence that filters reach the parquet scan (PushedFilters/ReadSchema),
@@ -79,11 +78,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: PlanAudit <sfDir> (the directory of the sf tables to plan over)")
     val d = args(0)
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local("graft-plan-audit")
 
     val sb = new StringBuilder
     sb.append("# PLANS — physical-plan audit (auto-generated by graft.tools.PlanAudit)\n\n")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Sessions
 import graft.core.FixtureGen
 import graft.sources.TranscriptGen
 
@@ -16,11 +16,7 @@ object RegenBenchData {
   // have its blockmgr dir swept mid-run by a concurrent lock holder (the
   // no-open-fd + mtime guard is not an invariant of a live session).
   def main(args: Array[String]): Unit = ScalingHarness.withHarnessLock {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.local.dir", "/dev/shm/spark-local")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local("graft-regen-bench-data", harnessScratch = true)
     try {
       TranscriptGen.materialize(spark,
         FixtureGen.Profile(numConvs = ScalingHarness.ScalingConvs),

@@ -10,6 +10,7 @@ import graft.sources.TranscriptGen
   * (conv_id, turn_idx) ordering — for any partitioning / skew routing. */
 class ExtractionSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
+  import TestSpark.{jobTasksOf, jobsOf}
 
   private lazy val profile =
     FixtureGen.Profile(numConvs = 120, monsterEvery = 29, monsterTurns = 150,
@@ -20,38 +21,6 @@ class ExtractionSpec extends AnyFunSuite {
 
   private def sortedResults(ds: org.apache.spark.sql.Dataset[TurnResult]): Seq[TurnResult] =
     ds.collect().toSeq.sortBy(t => (t.conv_id, t.turn_idx))
-
-  /** The tasks of each Spark job's result stage, for the jobs started while
-    * `body` runs, in start order. A marker job after it flushes the
-    * listener bus: its events arrive after every earlier one. */
-  private def jobTasksOf(body: => Unit): Seq[Int] = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val marker = s"jobs-of-marker-${System.nanoTime}"
-    val started = new java.util.concurrent.LinkedBlockingQueue[(String, Int)]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        started.put((Option(e.properties).flatMap(p =>
-          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""),
-          e.stageInfos.maxBy(_.stageId).numTasks))
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobGroup(marker, "listener flush")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val tasks = Seq.newBuilder[Int]
-      var job = started.poll(60, java.util.concurrent.TimeUnit.SECONDS)
-      while (job != null && job._1 != marker) {
-        tasks += job._2
-        job = started.poll(60, java.util.concurrent.TimeUnit.SECONDS)
-      }
-      assert(job != null, "the listener never saw the marker job")
-      tasks.result()
-    } finally sc.removeSparkListener(listener)
-  }
-
-  private def jobsOf(body: => Unit): Int = jobTasksOf(body).size
 
   /** `profile`'s turns as a parquet directory of `files` files. */
   private def parquetTurns(p: FixtureGen.Profile, files: Int): String = {

@@ -48,30 +48,71 @@ class SnapshotSpec extends AnyFunSuite {
       java.nio.file.Paths.get(table, "manifest-v7.json")))
   }
 
+  /** Chunk id → names of the parquet files in each `_chunk=<id>` of `dir`. */
+  private def chunkFiles(dir: java.nio.file.Path): Map[Long, Seq[String]] = {
+    import scala.jdk.CollectionConverters._
+    Files.list(dir).iterator().asScala.toSeq
+      .filter(_.getFileName.toString.startsWith("_chunk=")).map { cd =>
+        cd.getFileName.toString.stripPrefix("_chunk=").toLong ->
+          Files.list(cd).iterator().asScala.map(_.getFileName.toString)
+            .filter(_.endsWith(".parquet")).toSeq
+      }.toMap
+  }
+
+  /** The index of the task that wrote a data file: Spark names it
+    * `part-<index>-…`, and promotion may prefix `s<k>-`/`u<k>-`. */
+  private def taskOf(file: String): Long =
+    file.substring(file.indexOf("part-") + 5).takeWhile(_ != '-').toLong
+
+  /** One file a chunk, written by the task of the chunk's own index — so
+    * no two chunks shared a task. */
+  private def assertOneTaskPerChunk(files: Map[Long, Seq[String]]): Unit =
+    files.foreach { case (c, names) =>
+      assert(names.size == 1, s"expected 1 file in _chunk=$c, got $names")
+      assert(taskOf(names.head) == c, s"_chunk=$c was written by task ${names.head}")
+    }
+
   test("write: staging hash-distributes — one file per chunk from a wide upstream") {
     import spark.implicits._
-    val table = freshDir("snap-onefile")
-    // 16 upstream partitions: pre-r6 staging wrote up to 16 files PER chunk
-    val df = (0 until 2000).map(i => (s"c${i % 11}", i)).toDF("conv_id", "n")
-      .repartition(16)
-    Snapshot.write(df, table, "conv_id", numChunks = 4)
-    import scala.jdk.CollectionConverters._
-    val chunkDirs = Files.list(Paths.get(table, "v0")).iterator().asScala
-      .filter(_.getFileName.toString.startsWith("_chunk=")).toSeq
-    assert(chunkDirs.nonEmpty)
-    chunkDirs.foreach { cd =>
-      val parts = Files.list(cd).iterator().asScala
-        .count(_.toString.endsWith(".parquet"))
-      assert(parts == 1, s"expected 1 file in ${cd.getFileName}, got $parts")
+    // 16 upstream partitions: pre-r6 staging wrote up to 16 files PER chunk.
+    // A Murmur3 exchange on the chunk id folds chunks into shared tasks
+    // (4 → 3, 16 → 10, 32 → 20); the exact-id exchange gives every chunk
+    // the task of its own index
+    val rows = (0 until 2000).map(i => (s"c${i % 257}", i))
+    val df = rows.toDF("conv_id", "n").repartition(16)
+    Seq(4, 16, 32).foreach { numChunks =>
+      val table = freshDir(s"snap-onefile-$numChunks")
+      val jobTasks = TestSpark.jobTasksOf(Snapshot.write(df, table, "conv_id", numChunks))
+      assert(jobTasks.last == numChunks, s"staging job tasks: $jobTasks")
+      val files = chunkFiles(Paths.get(table, "v0"))
+      assert(files.keySet == (0L until numChunks).toSet)
+      assertOneTaskPerChunk(files)
+      val back = Snapshot.read(spark, table).as[(String, Int)].collect().sorted.toSeq
+      assert(back == rows.sorted)
     }
-    val back = Snapshot.read(spark, table).as[(String, Int)].collect().sorted.toSeq
-    assert(back == (0 until 2000).map(i => (s"c${i % 11}", i)).sorted)
+  }
+
+  test("upsert: every rewritten chunk's u<k>- file comes from its own task") {
+    import spark.implicits._
+    val table = freshDir("snap-upsert-tasks")
+    val rows = (0 until 2000).map(i => (s"c${i % 257}", i))
+    Snapshot.write(rows.toDF("conv_id", "n"), table, "conv_id", numChunks = 16)
+    // every 5th key, from a wide batch: most chunks are rewritten
+    val batch = (0 until 257 by 5).map(i => (s"c$i", -i))
+    val got = Snapshot.upsert(batch.toDF("conv_id", "n").repartition(8), table)
+    val rewritten = chunkFiles(Paths.get(table, "v1"))
+      .filter { case (_, names) => names.exists(_.startsWith("u1-")) }
+    assert(rewritten.size == got("rewritten_chunks") && rewritten.size > 4)
+    assertOneTaskPerChunk(rewritten)
+    val upserted = batch.map(_._1).toSet
+    val want = rows.filterNot(r => upserted(r._1)) ++ batch
+    assert(Snapshot.read(spark, table).as[(String, Int)].collect().sorted.toSeq == want.sorted)
   }
 
   test("compact: one file per chunk, identical content, expiry keeps CURRENT readable") {
     import spark.implicits._
     val table = freshDir("snap-compact")
-    // fragmented ingestion: the staging path now hash-distributes on the
+    // fragmented ingestion: the staging path exchanges by the exact
     // chunk id (one file per chunk regardless of upstream width — the r6
     // writer change), so fragmentation comes the way it does in production:
     // incremental APPENDS each adding per-chunk s<k>- part files
